@@ -5445,7 +5445,7 @@ object PipelineQueries {
 
   /** Index UPSERT without rebuild
     * ([[graft.search.IvfIndex.upsertBatch]]/[[graft.search.IvfIndex
-    * .searchLatest]]): the base index is built over a corpus whose
+    * .search]]): the base index is built over a corpus whose
     * `vec_id % 10 = 1` vectors are WRONG (reversed) — the state an
     * upsert must repair — then the true vectors arrive as a versioned
     * batch (appended with their OWN cluster assignments; the stale rows
@@ -5472,7 +5472,7 @@ object PipelineQueries {
         "embedding", model, "vec_id", ver = 1)
       val query = e.where(col("vec_id") === 0).select("embedding")
         .collect()(0).getSeq[Float](0).toArray
-      IvfIndex.searchLatest(s, model, "embedding", "vec_id", query,
+      IvfIndex.search(s, model, "embedding", "vec_id", query,
           k = 5, nprobe = model.nlist)
         .select("vec_id", "distance")
     },
@@ -5480,7 +5480,7 @@ object PipelineQueries {
 
   /** Bulk serving OVER an upserted layout — [[graft.search.IvfIndex
     * .bulkSearch]] composed with the [[graft.search.IvfIndex
-    * .searchLatest]] latest-wins overlay: the base index holds WRONG
+    * .search]] latest-wins overlay: the base index holds WRONG
     * (reversed) vectors for `vec_id % 10 = 1`, the true vectors arrive
     * as one versioned batch, and the whole bulk panel served at full
     * probe must equal per-query exact kNN over the TRUE corpus. A bulk
@@ -5532,7 +5532,7 @@ object PipelineQueries {
     * micro-batch stream, and `foreachBatch` lands each batch via
     * [[graft.search.IvfIndex.upsertBatch]] at version batchId+1 — a
     * frozen-centroid assignment + file append per batch, no rebuild.
-    * Serving is [[graft.search.IvfIndex.searchLatest]] at full probe,
+    * Serving is [[graft.search.IvfIndex.search]] at full probe,
     * oracle = exact top-5 over the TRUE corpus: a dropped or doubled
     * batch leaves reversed vectors (or stale duplicates) in the
     * ranking and hash-mismatches. */
@@ -5584,7 +5584,7 @@ object PipelineQueries {
       try q.processAllAvailable() finally q.stop()
       val query = e.where(col("vec_id") === 0).select("embedding")
         .collect()(0).getSeq[Float](0).toArray
-      IvfIndex.searchLatest(s, model, "embedding", "vec_id", query,
+      IvfIndex.search(s, model, "embedding", "vec_id", query,
           k = 5, nprobe = model.nlist)
         .select("vec_id", "distance")
     },

@@ -560,7 +560,7 @@ object ScaleBench {
           val model = IvfIndex.load(spark, dir)
           val q = emb.where(col("vec_id") === 0)
             .select("embedding").as[Seq[Float]].head().toArray
-          IvfIndex.searchLatest(spark, model, "embedding", "vec_id", q,
+          IvfIndex.search(spark, model, "embedding", "vec_id", q,
             k = 5, nprobe = 8).count()
         }),
         // hot-list rebalance (round 9): split every list above half the

@@ -1,5 +1,6 @@
 package graft.core
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Build-once parquet artifacts — the warehouse convention for derived
@@ -26,7 +27,7 @@ object Artifacts {
     String, org.apache.spark.sql.types.StructType]()
 
   def buildOnce(spark: SparkSession, dir: String)(build: => DataFrame): DataFrame = {
-    val success = new org.apache.hadoop.fs.Path(dir, "_SUCCESS")
+    val success = new Path(dir, "_SUCCESS")
     val fs = success.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // The cache key includes the _SUCCESS marker's mtime (round 17,
     // ADVICE fix): immutability of a finished buildOnce dir is the
@@ -54,23 +55,38 @@ object Artifacts {
   /** Stat-fingerprinted inferred-schema read: the first read of `dir`
     * per (content fingerprint) runs parquet schema inference's 1-task
     * footer job; subsequent reads pass the cached schema and cost only
-    * the local stat walk. The fingerprint hashes every file's
-    * (name, len, mtime) — same invariant as IvfIndex.readDataMerged —
-    * so any rewrite/append misses and re-infers. For small model/code
-    * artifacts read once per serving pass (PQ/RQ codes, codebooks). */
-  def readStatCached(spark: SparkSession, dir: String): DataFrame = {
-    val key = s"$dir@${statFingerprint(spark, dir)}"
-    val cached = statSchemaCache.get(key)
-    if (cached != null) spark.read.schema(cached).parquet(dir)
-    else {
-      val df = spark.read.parquet(dir)
-      statSchemaCache.put(key, df.schema)
-      df
+    * the local stat walk, and any rewrite/append misses and re-infers.
+    * For small model/code artifacts read once per serving pass (PQ/RQ
+    * codes, codebooks). */
+  def readStatCached(spark: SparkSession, dir: String): DataFrame =
+    spark.read.schema(statSchemaCache(spark, dir) {
+      spark.read.parquet(dir).schema
+    }).parquet(dir)
+
+  private val statSchemaCache =
+    new StatCache[org.apache.spark.sql.types.StructType]
+
+  /** A per-directory cache whose entries live until the directory's
+    * [[statFingerprint]] changes: `apply(spark, dir)(compute)` returns
+    * the value computed for `dir`'s current content, running `compute`
+    * only on a miss. The stat walk is filesystem-only (no Spark job), so
+    * a warm hit never touches the cluster, while any rewrite, append or
+    * rebuild of `dir` recomputes. */
+  final class StatCache[T] {
+    private val entries =
+      new java.util.concurrent.ConcurrentHashMap[String, (String, T)]()
+
+    def apply(spark: SparkSession, dir: String)(compute: => T): T = {
+      val stat = statFingerprint(spark, dir)
+      val hit = entries.get(dir)
+      if (hit != null && hit._1 == stat) hit._2
+      else {
+        val v = compute
+        entries.put(dir, (stat, v))
+        v
+      }
     }
   }
-
-  private val statSchemaCache = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.types.StructType]()
 
   /** Per-file (name, len, mtime) hash of a directory tree — the
     * freshness fingerprint shared by the model/schema caches. Order-
@@ -79,7 +95,7 @@ object Artifacts {
     * layouts whose files share sizes and copy-preserved mtimes cannot
     * alias. */
   def statFingerprint(spark: SparkSession, dir: String): String = {
-    val p = new org.apache.hadoop.fs.Path(dir)
+    val p = new Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) "absent"
     else {
@@ -95,6 +111,37 @@ object Artifacts {
       s"h$acc.n$n"
     }
   }
+
+  /** The rename-aside swap that replaces an artifact directory
+    * crash-safely: clear `tmp` and `old`, `write(tmp)`, rename `live`
+    * aside to `old` (when it exists — a first write has nothing to move),
+    * rename `tmp` to `live`, delete `old`. The only window with no data
+    * at `live` is between the two renames, and the complete previous
+    * artifact is then at `old`: [[recoverAside]] restores it. `write` runs
+    * before `live` moves, so it may read the artifact it replaces.
+    * Single-writer, like every maintenance verb that calls it. */
+  def replaceDir(fs: FileSystem, live: Path, tmp: Path, old: Path)
+                (write: String => Unit): Unit = {
+    fs.delete(tmp, true); fs.delete(old, true)
+    write(tmp.toString)
+    if (fs.exists(live) && !fs.rename(live, old))
+      throw new java.io.IOException(s"rename $live aside to $old failed")
+    if (!fs.rename(tmp, live))
+      throw new java.io.IOException(
+        s"rename $tmp -> $live failed; previous data is at $old")
+    fs.delete(old, true)
+  }
+
+  /** Recovery probe for [[replaceDir]]: a crash between its two renames
+    * leaves nothing at `live` and the complete previous artifact at
+    * `old`; rename it back so the next maintenance pass starts from the
+    * pre-swap artifact. Writers only — a reader that renamed could race
+    * the single writer between its two renames; readers that must serve
+    * through the window read `old` in place. */
+  def recoverAside(fs: FileSystem, live: Path, old: Path): Unit =
+    if (!fs.exists(live) && fs.exists(old) && !fs.rename(old, live))
+      throw new java.io.IOException(
+        s"recoverAside: restoring $old -> $live failed")
 
   /** Recursive LOCAL-filesystem dir copy (destination is deleted first)
     * — for harness code that must MUTATE an index artifact per run

@@ -16,27 +16,21 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Inferred-schema cache (round 16, fixed-cost audit): every
-    * `spark.read.parquet` without a schema runs a 1-task footer-read
-    * job at plan time, and the fixture tables are read by nearly every
-    * registry entry — hundreds of identical footer jobs per bench
-    * pass. Fixtures are IMMUTABLE for a given dir (TESTDATA.md), so
-    * the first read infers and later reads pass the cached schema.
-    * Keyed by full path: two fixture dirs (or driver generations with
-    * different `ts` physical types — see [[normalizeTs]]) never share
-    * an entry. */
-  private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.types.StructType]()
+  /** Inferred-schema cache: every `spark.read.parquet` without a
+    * schema runs a 1-task footer-read job at plan time, and the fixture
+    * tables are read by nearly every registry entry. The first read of a
+    * table infers; later reads pass the cached schema until the table's
+    * files change ([[Artifacts.StatCache]]), so a fixture dir rewritten
+    * in the same JVM — a renamed column, a different `ts` physical type
+    * (see [[normalizeTs]]) — is re-inferred instead of read through a
+    * stale schema. */
+  private val schemaCache =
+    new Artifacts.StatCache[org.apache.spark.sql.types.StructType]
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     val p = s"$dir/$name.parquet"
-    val cached = schemaCache.get(p)
-    if (cached != null) spark.read.schema(cached).parquet(p)
-    else {
-      val df = spark.read.parquet(p)
-      schemaCache.put(p, df.schema)
-      df
-    }
+    spark.read.schema(schemaCache(spark, p)(spark.read.parquet(p).schema))
+      .parquet(p)
   }
 
   def region(s: SparkSession, d: String): DataFrame     = load(s, d, "region")

@@ -1,5 +1,6 @@
 package graft.search
 
+import graft.core.Artifacts
 import graft.functions.VectorFunctions
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.functions.array_to_vector
@@ -476,7 +477,7 @@ object GraphAnn {
   /** [[layeredSearch]] with delete propagation — the round-13 fix for
     * the layered serve's maintenance hole: EVERY serve path applies the
     * tombstone mask + latest-wins overlay ([[beamSearchMasked]],
-    * [[IvfIndex.searchLatest]]), and the layered walk must too, or a
+    * [[IvfIndex.search]]), and the layered walk must too, or a
     * doc deleted after the layered artifacts were built is silently
     * served until consolidation. BOTH walks post-filter their result
     * through [[Tombstones.maskWith]]: the upper walk's masked top-
@@ -1035,6 +1036,27 @@ object GraphAnn {
     (b2, e2, u2, ue2)
   }
 
+  /** Publish step shared by the consolidate*Root verbs: on an aliased
+    * root, `rewriteInto(current, next)` writes `v<N+1>` directly and
+    * publishes it ([[AliasedIndex.advance]]); on a flat root it rewrites
+    * the whole root into `__cons_tmp` and swaps it in
+    * ([[Artifacts.replaceDir]], aside copy `__cons_old`) with the
+    * documented single-writer window. Returns the serving dir. */
+  private def consolidateRoot(spark: SparkSession, root: String)(
+      rewriteInto: (String, String) => Unit): String =
+    if (AliasedIndex.publishedVersions(spark, root).nonEmpty)
+      AliasedIndex.advance(spark, root)(rewriteInto)
+    else {
+      val live = new org.apache.hadoop.fs.Path(root)
+      val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val old = new org.apache.hadoop.fs.Path(s"${root}__cons_old")
+      Artifacts.recoverAside(fs, live, old)
+      Artifacts.replaceDir(fs, live,
+        new org.apache.hadoop.fs.Path(s"${root}__cons_tmp"), old)(
+        rewriteInto(root, _))
+      root
+    }
+
   /** ROOT-addressed layered consolidation under the alias discipline —
     * [[consolidateDeletesRoot]] for the four-artifact layered layout
     * (`adjacency`, `entries`, `adjacency_upper`, `entries_upper`):
@@ -1058,29 +1080,7 @@ object GraphAnn {
       u2.write.mode("overwrite").parquet(upperAdjacencyDir(next))
       ue2.write.mode("overwrite").parquet(upperEntriesDir(next))
     }
-    if (AliasedIndex.publishedVersions(spark, root).nonEmpty)
-      AliasedIndex.advance(spark, root)(rewriteInto)
-    else {
-      val tmp = s"${root}__cons_tmp"
-      val f = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      Tombstones.recoverAside(f, new org.apache.hadoop.fs.Path(root),
-        new org.apache.hadoop.fs.Path(s"${root}__cons_old"))
-      f.delete(new org.apache.hadoop.fs.Path(tmp), true)
-      rewriteInto(root, tmp)
-      val old = new org.apache.hadoop.fs.Path(s"${root}__cons_old")
-      f.delete(old, true)
-      if (!f.rename(new org.apache.hadoop.fs.Path(root), old))
-        throw new java.io.IOException(
-          s"consolidateDeletesLayeredRoot: rename $root aside failed")
-      if (!f.rename(new org.apache.hadoop.fs.Path(tmp),
-          new org.apache.hadoop.fs.Path(root)))
-        throw new java.io.IOException(
-          s"consolidateDeletesLayeredRoot: rename $tmp -> $root " +
-            s"failed; previous layout is at $old")
-      f.delete(old, true)
-      root
-    }
+    consolidateRoot(spark, root)(rewriteInto)
   }
 
   /** ROOT-addressed delete consolidation under the alias discipline —
@@ -1108,30 +1108,7 @@ object GraphAnn {
       a2.write.mode("overwrite").parquet(adjacencyDir(next))
       e2.write.mode("overwrite").parquet(entriesDir(next))
     }
-    if (AliasedIndex.publishedVersions(spark, root).nonEmpty)
-      AliasedIndex.advance(spark, root)(rewriteInto)
-    else {
-      // flat layout: rename-aside rewrite of the whole root
-      val tmp = s"${root}__cons_tmp"
-      val f = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      Tombstones.recoverAside(f, new org.apache.hadoop.fs.Path(root),
-        new org.apache.hadoop.fs.Path(s"${root}__cons_old"))
-      f.delete(new org.apache.hadoop.fs.Path(tmp), true)
-      rewriteInto(root, tmp)
-      val old = new org.apache.hadoop.fs.Path(s"${root}__cons_old")
-      f.delete(old, true)
-      if (!f.rename(new org.apache.hadoop.fs.Path(root), old))
-        throw new java.io.IOException(
-          s"consolidateDeletesRoot: rename $root aside failed")
-      if (!f.rename(new org.apache.hadoop.fs.Path(tmp),
-          new org.apache.hadoop.fs.Path(root)))
-        throw new java.io.IOException(
-          s"consolidateDeletesRoot: rename $tmp -> $root failed; " +
-            s"previous layout is at $old")
-      f.delete(old, true)
-      root
-    }
+    consolidateRoot(spark, root)(rewriteInto)
   }
 
   def upperAdjacencyLevelDir(indexDir: String, level: Int): String =
@@ -1239,29 +1216,7 @@ object GraphAnn {
       }
       te2.write.mode("overwrite").parquet(topEntriesDir(next))
     }
-    if (AliasedIndex.publishedVersions(spark, root).nonEmpty)
-      AliasedIndex.advance(spark, root)(rewriteInto)
-    else {
-      val tmp = s"${root}__cons_tmp"
-      val f = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      Tombstones.recoverAside(f, new org.apache.hadoop.fs.Path(root),
-        new org.apache.hadoop.fs.Path(s"${root}__cons_old"))
-      f.delete(new org.apache.hadoop.fs.Path(tmp), true)
-      rewriteInto(root, tmp)
-      val old = new org.apache.hadoop.fs.Path(s"${root}__cons_old")
-      f.delete(old, true)
-      if (!f.rename(new org.apache.hadoop.fs.Path(root), old))
-        throw new java.io.IOException(
-          s"consolidateDeletesMultiRoot: rename $root aside failed")
-      if (!f.rename(new org.apache.hadoop.fs.Path(tmp),
-          new org.apache.hadoop.fs.Path(root)))
-        throw new java.io.IOException(
-          s"consolidateDeletesMultiRoot: rename $tmp -> $root failed; " +
-            s"previous layout is at $old")
-      f.delete(old, true)
-      root
-    }
+    consolidateRoot(spark, root)(rewriteInto)
   }
 
   /** MIPS-routed beam walk — the inner-product member of the metric ×

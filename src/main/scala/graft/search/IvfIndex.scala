@@ -1,10 +1,12 @@
 package graft.search
 
+import graft.core.Artifacts
 import graft.functions.VectorFunctions
+import org.apache.hadoop.fs.Path
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** IVF (inverted-file) vector index — the Spark-native replacement for the
   * reference's Milvus IVF_FLAT index (src/app.py:105-111: nlist=128, L2;
@@ -82,10 +84,10 @@ object IvfIndex {
     * renames and corrupt the swap), else None (pre-radii index). */
   private def readableRadiiPath(spark: SparkSession,
                                 indexDir: String): Option[String] = {
-    val fs = new org.apache.hadoop.fs.Path(radiiDir(indexDir))
+    val fs = new Path(radiiDir(indexDir))
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     def complete(p: String): Boolean =
-      fs.exists(new org.apache.hadoop.fs.Path(p, "_SUCCESS"))
+      fs.exists(new Path(p, "_SUCCESS"))
     if (complete(radiiDir(indexDir))) Some(radiiDir(indexDir))
     else if (complete(radiiDir(indexDir) + "__old"))
       Some(radiiDir(indexDir) + "__old")
@@ -116,26 +118,30 @@ object IvfIndex {
         .collect().map(r => (r.getInt(0), r.getDouble(1))).toMap
     }
 
-  /** Crash-safe swap of the (nlist-row) radii table — the rename-aside
-    * protocol every fold here uses; [[loadRadii]] runs the recovery
-    * probe. The table is materialized to `__tmp` BEFORE the live dir
-    * moves, so the plan may read the live table it replaces. */
+  /** Crash-safe swap of the (nlist-row) radii table through
+    * `__tmp`/`__old` ([[Artifacts.replaceDir]]); readers serve a crashed
+    * swap's `__old` in place ([[readableRadiiPath]]). The table is
+    * materialized BEFORE the live dir moves, so the plan may read the
+    * live table it replaces. */
   private def writeRadiiTable(spark: SparkSession, indexDir: String,
                               radii: DataFrame): Unit = {
-    val d = new org.apache.hadoop.fs.Path(radiiDir(indexDir))
+    val d = new Path(radiiDir(indexDir))
+    Artifacts.replaceDir(
+      d.getFileSystem(spark.sparkContext.hadoopConfiguration), d,
+      new Path(radiiDir(indexDir) + "__tmp"),
+      new Path(radiiDir(indexDir) + "__old")) {
+      radii.coalesce(1).write.mode("overwrite").parquet(_)
+    }
+  }
+
+  /** Recovery probe for a [[writeRadiiTable]] that crashed between its
+    * renames — writers only (see [[readableRadiiPath]]). True when a
+    * stored radii table exists after recovery. */
+  private def recoverRadii(spark: SparkSession, indexDir: String): Boolean = {
+    val d = new Path(radiiDir(indexDir))
     val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(radiiDir(indexDir) + "__tmp")
-    val old = new org.apache.hadoop.fs.Path(radiiDir(indexDir) + "__old")
-    fs.delete(tmp, true); fs.delete(old, true)
-    radii.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    if (fs.exists(d) && !fs.rename(d, old))
-      throw new java.io.IOException(
-        s"writeRadiiTable: rename $d aside failed")
-    if (!fs.rename(tmp, d))
-      throw new java.io.IOException(
-        s"writeRadiiTable: rename $tmp -> $d failed; previous table " +
-          s"is at $old")
-    fs.delete(old, true)
+    Artifacts.recoverAside(fs, d, new Path(radiiDir(indexDir) + "__old"))
+    fs.exists(d)
   }
 
   /** Fold a batch's contribution into the stored radii:
@@ -146,17 +152,14 @@ object IvfIndex {
     * data append: an enlarged radius whose rows never landed only
     * weakens pruning; the reverse order is exactly the
     * append-then-crash over-prune hazard this fold closes. */
-  private def foldRadii(batch: DataFrame, vecCol: String, model: Model,
-                        centArr: org.apache.spark.sql.Column): Unit = {
+  private def foldRadii(batch: DataFrame, vecCol: String,
+                        model: Model): Unit = {
     val spark = batch.sparkSession
-    val d = new org.apache.hadoop.fs.Path(radiiDir(model.indexDir))
-    val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Tombstones.recoverAside(fs, d,
-      new org.apache.hadoop.fs.Path(radiiDir(model.indexDir) + "__old"))
-    if (!fs.exists(d)) return
+    if (!recoverRadii(spark, model.indexDir)) return
+    val nearest = nearestCentroid(model, vecCol)
     val batchRadii = batch.select(
-        array_min(centArr).getField("cluster_id").as("cluster_id"),
-        sqrt(array_min(centArr).getField("d")).as("radius"))
+        nearest.getField("cluster_id").as("cluster_id"),
+        sqrt(nearest.getField("d")).as("radius"))
       .groupBy(col("cluster_id")).agg(max(col("radius")).as("radius"))
     val merged = spark.read.parquet(radiiDir(model.indexDir))
       .unionByName(batchRadii)
@@ -175,26 +178,30 @@ object IvfIndex {
     * affects recall at partial nprobe, never correctness of what is
     * stored; rebuild when drift matters. */
   def append(newDf: DataFrame, vecCol: String, model: Model): Unit = {
-    // Argmin over the centroids as ONE map-side expression — an array of
-    // (distance, cluster_id) structs reduced by lexicographic array_min.
-    // No self-join, no generated row ids (a monotonically_increasing_id
-    // join would evaluate the id independently per join side and silently
-    // mis-assign rows whenever the input isn't order-stable), no row
-    // blow-up: appending N rows is O(N·nlist·dim) inside one projection.
-    val centArr = array(model.centroids.map { case (i, c) =>
-      struct(
-        VectorFunctions.l2Sq(col(vecCol), typedlit(c.toSeq)).as("d"),
-        lit(i).as("cluster_id"))
-    }: _*)
     // covering-radius fold FIRST (see foldRadii for the ordering
     // argument) — the stored radii stay upper bounds through appends,
     // so range/exact serving needs no manual refresh
-    foldRadii(newDf, vecCol, model, centArr)
+    foldRadii(newDf, vecCol, model)
     newDf.withColumn("cluster_id",
-        array_min(centArr).getField("cluster_id"))
+        nearestCentroid(model, vecCol).getField("cluster_id"))
       .write.mode("append").partitionBy("cluster_id")
       .parquet(dataDir(model.indexDir))
   }
+
+  /** The nearest centroid of `vecCol` as a `(d, cluster_id)` struct
+    * (d = squared L2): argmin over the centroids as ONE map-side
+    * expression — an array of (distance, cluster_id) structs reduced by
+    * lexicographic array_min, so ties break to the lower cluster id. No
+    * self-join, no generated row ids (a monotonically_increasing_id join
+    * would evaluate the id independently per join side and silently
+    * mis-assign rows whenever the input isn't order-stable), no row
+    * blow-up: assigning N rows is O(N·nlist·dim) inside one projection. */
+  private def nearestCentroid(model: Model, vecCol: String): Column =
+    array_min(array(model.centroids.map { case (i, c) =>
+      struct(
+        VectorFunctions.l2Sq(col(vecCol), typedlit(c.toSeq)).as("d"),
+        lit(i).as("cluster_id"))
+    }: _*))
 
   /** Load a previously built index's centroid table. `indexDir` may be
     * an [[AliasedIndex]] ROOT (publish markers present) — the model then
@@ -204,29 +211,23 @@ object IvfIndex {
     * unchanged. */
   def load(spark: SparkSession, indexDir: String): Model = {
     val dir = AliasedIndex.resolveDir(spark, indexDir)
-    // Freshness-keyed model cache (round 16, fixed-cost audit): ~50
-    // registry entries load a model per serving pass, each paying a
-    // footer-inference job plus a collect for a table that almost
-    // never changes. The key is a filesystem stat fingerprint of the
-    // centroids dir (max mtime, file count, total bytes — no Spark
-    // job), so any rebuild/rebalance that rewrites centroids misses
-    // the cache and reloads; an aliased root additionally changes
-    // `dir` itself on publish.
-    val stat = centroidsStat(spark, centroidsDir(dir))
-    val cached = modelCache.get(dir)
-    if (cached != null && cached._1 == stat) return cached._2
-    val centroids = spark.read.schema(centroidsSchema)
-      .parquet(centroidsDir(dir))
-      .collect()
-      .map(r => (r.getInt(0), r.getSeq[Float](1).toArray))
-      .sortBy(_._1)
-    val m = Model(dir, centroids.length, centroids)
-    modelCache.put(dir, (stat, m))
-    m
+    // Model cache keyed by the centroids dir's stat fingerprint: many
+    // serve paths load a model per call, and each load would otherwise
+    // pay a footer-inference job plus a collect for a table that almost
+    // never changes. Any rebuild/rebalance that rewrites the centroids
+    // misses the cache and reloads; an aliased root additionally
+    // changes `dir` itself on publish.
+    modelCache(spark, centroidsDir(dir)) {
+      val centroids = spark.read.schema(centroidsSchema)
+        .parquet(centroidsDir(dir))
+        .collect()
+        .map(r => (r.getInt(0), r.getSeq[Float](1).toArray))
+        .sortBy(_._1)
+      Model(dir, centroids.length, centroids)
+    }
   }
 
-  private val modelCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, Model)]()
+  private val modelCache = new Artifacts.StatCache[Model]
 
   private val centroidsSchema = org.apache.spark.sql.types.StructType(Seq(
     org.apache.spark.sql.types.StructField("cluster_id",
@@ -235,40 +236,13 @@ object IvfIndex {
       org.apache.spark.sql.types.ArrayType(
         org.apache.spark.sql.types.FloatType))))
 
-  private[search] def centroidsStat(spark: SparkSession,
-                                    dir: String): String = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) "absent"
-    else {
-      // Hash EVERY file's (path, len, mtime) rather than aggregating
-      // (max mtime, count, total bytes) — round-17 ADVICE fix: the
-      // aggregate form aliases two content-different layouts whose
-      // files happen to share sizes and (copy-preserved) mtimes; a
-      // per-file hash flips on any single-file difference. Order-
-      // insensitive fold (sum of per-entry hashes) so listFiles
-      // enumeration order can't flip the fingerprint.
-      var acc = 0L; var n = 0L
-      val it = fs.listFiles(p, true)
-      while (it.hasNext) {
-        val st = it.next()
-        val h = scala.util.hashing.MurmurHash3.stringHash(
-          s"${st.getPath.getName}|${st.getLen}|${st.getModificationTime}")
-        acc += h.toLong
-        n += 1
-      }
-      s"h$acc.n$n"
-    }
-  }
-
   /** The merged-schema scan of an upsert-capable data dir, with the
-    * ALL-footers inference cached by the dir's stat fingerprint
-    * (round 17 — the [[versionedScan]] cache generalized and shared):
-    * every maintenance/audit/report read of a versioned layout was
-    * paying its own full footer sweep per call ([[IndexAudit]],
-    * [[Maintenance]], [[IndexSync]], rebalance/compact verbs). Any
-    * write into the dir changes the fingerprint and misses the cache;
-    * an immutable (buildOnce / mutateOnce) dir infers once per JVM. */
+    * ALL-footers inference cached by the dir's stat fingerprint — shared
+    * by [[versionedScan]] and every maintenance/audit/report read of a
+    * versioned layout ([[IndexAudit]], [[Maintenance]], [[IndexSync]],
+    * rebalance/compact verbs). Any write into the dir changes the
+    * fingerprint and misses the cache; an immutable (buildOnce /
+    * mutateOnce) dir infers once per JVM. */
   private[graft] def readDataMerged(spark: SparkSession,
                                     indexDir: String): DataFrame = {
     val dd = dataDir(indexDir)
@@ -277,32 +251,27 @@ object IvfIndex {
 
   private def mergedDataSchema(
       spark: SparkSession,
-      dd: String): org.apache.spark.sql.types.StructType = {
-    val stat = centroidsStat(spark, dd)
-    val cached = mergedSchemaCache.get(dd)
-    if (cached != null && cached._1 == stat) cached._2
-    else {
-      val s = spark.read.option("mergeSchema", "true").parquet(dd).schema
-      mergedSchemaCache.put(dd, (stat, s))
-      s
+      dd: String): org.apache.spark.sql.types.StructType =
+    mergedSchemaCache(spark, dd) {
+      spark.read.option("mergeSchema", "true").parquet(dd).schema
     }
-  }
 
   private val mergedSchemaCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      String, (String, org.apache.spark.sql.types.StructType)]()
+    new Artifacts.StatCache[org.apache.spark.sql.types.StructType]
 
-  /** Rank centroids against the query (driver-side, O(nlist·dim)). */
-  def probeClusters(model: Model, query: Array[Float], nprobe: Int): Seq[Int] = {
-    def l2(a: Array[Float], b: Array[Float]): Double = {
-      var acc = 0.0; var i = 0
-      val n = math.min(a.length, b.length)
-      while (i < n) { val d = a(i).toDouble - b(i).toDouble; acc += d * d; i += 1 }
-      acc
-    }
-    model.centroids.sortBy { case (id, c) => (l2(c, query), id) }
-      .take(nprobe).map(_._1).toSeq
+  /** Squared L2 in double precision — the driver-side centroid
+    * arithmetic of every probe and bound here. */
+  private def l2(a: Array[Float], b: Array[Float]): Double = {
+    var acc = 0.0; var i = 0
+    val n = math.min(a.length, b.length)
+    while (i < n) { val d = a(i).toDouble - b(i).toDouble; acc += d * d; i += 1 }
+    acc
   }
+
+  /** The nprobe nearest centroids to the query — the first `nprobe`
+    * entries of [[probeRanks]] (driver-side, O(nlist·dim)). */
+  def probeClusters(model: Model, query: Array[Float], nprobe: Int): Seq[Int] =
+    probeRanks(model, query).take(nprobe).map(_._1)
 
   /** Centroid probe order for MIPS serving: DESCENDING centroid inner
     * product, id tie-break (the IVF-IP discipline — the list whose
@@ -322,18 +291,11 @@ object IvfIndex {
   }
 
   /** Centroid ranks for a query: every cluster_id with its 1-based rank
-    * by (raw double L2, id) — [[probeClusters]]'s ordering, exposed so
-    * the tuning plan can express "rank ≤ nprobe" declaratively. */
-  def probeRanks(model: Model, query: Array[Float]): Seq[(Int, Int)] = {
-    def l2(a: Array[Float], b: Array[Float]): Double = {
-      var acc = 0.0; var i = 0
-      val n = math.min(a.length, b.length)
-      while (i < n) { val d = a(i).toDouble - b(i).toDouble; acc += d * d; i += 1 }
-      acc
-    }
+    * by (raw double L2, id) — the probe order, exposed so the tuning
+    * plan can express "rank ≤ nprobe" declaratively. */
+  def probeRanks(model: Model, query: Array[Float]): Seq[(Int, Int)] =
     model.centroids.sortBy { case (id, c) => (l2(c, query), id) }
       .zipWithIndex.map { case ((id, _), r) => (id, r + 1) }.toSeq
-  }
 
   /** Recall-vs-nprobe curve and the smallest probe count reaching
     * `targetRecall` — the tuning loop every IVF deployment runs before
@@ -404,9 +366,8 @@ object IvfIndex {
     * restriction and query-vector tables are broadcast, and per-query
     * top-k is one qid-partitioned ranking window. Cost: linear in
     * |queries| at fixed nprobe, corpus-size-independent per query —
-    * NOT |queries| separate scans. Tombstones are masked and, on an
-    * upserted layout, superseded rows are dropped by the
-    * [[searchLatest]] overlay — like every serve path. Returns
+    * NOT |queries| separate scans. The scan is [[liveSlice]], like
+    * every serve path. Returns
     * (qid, idCol, distance), qid-ascending with the usual tie-breaks. */
   def bulkSearch(spark: SparkSession, model: Model, vecCol: String,
                  idCol: String, queries: Seq[(Long, Array[Float])],
@@ -421,16 +382,9 @@ object IvfIndex {
     val allClusters = probed.map(_._2).distinct
     val qdf = queries.map { case (qid, qv) => (qid, qv.toSeq) }
       .toDF("qid", "qv")
-    // version-aware exactly like [[searchLatest]]: on an upserted
-    // layout the pruned scan gets the latest-wins overlay (one marker
-    // stat when never upserted — the plain plan is unchanged)
-    val vs = versionedScan(spark, model.indexDir)
-    val pruned = vs.getOrElse(spark.read.parquet(dataDir(model.indexDir)))
-      .where(col("cluster_id").isin(allClusters: _*))
-    val scan = vs.map(applyLatest(_, pruned, idCol)).getOrElse(pruned)
     val w = Window.partitionBy(col("qid"))
       .orderBy(col("distance").asc, col(idCol).asc)
-    Tombstones.mask(scan, spark, model.indexDir, idCol)
+    liveSlice(spark, model, idCol)(allClusters)
       .join(broadcast(ranks), Seq("cluster_id"))
       .join(broadcast(qdf), Seq("qid"))
       .withColumn("distance",
@@ -442,13 +396,9 @@ object IvfIndex {
   }
 
   /** IVF search: partition-pruned scan over the nprobe nearest clusters,
-    * exact distance within, global top-k via TakeOrderedAndProject.
-    * Tombstoned rows ([[Tombstones]] under the index dir — the
-    * delete-propagation path) are anti-joined out of the pruned scan
-    * before ranking, and on an upserted layout the latest-wins overlay
-    * drops superseded rows ([[upsertBatch]]'s marker — one file stat
-    * when never upserted, plan unchanged). EVERY serve path in this
-    * family applies both; a version-blind plain search would silently
+    * exact distance within, global top-k via TakeOrderedAndProject. The
+    * scan is [[liveSlice]]: superseded versions and tombstoned rows never
+    * reach the ranking — a version-blind plain search would silently
     * serve replaced vectors to whoever reaches for the obvious API. */
   def search(spark: SparkSession, model: Model, vecCol: String, idCol: String,
              query: Array[Float], k: Int, nprobe: Int): DataFrame =
@@ -465,12 +415,8 @@ object IvfIndex {
   def searchAfter(spark: SparkSession, model: Model, vecCol: String,
                   idCol: String, query: Array[Float], k: Int, nprobe: Int,
                   after: Option[(Double, Long)]): DataFrame = {
-    val clusters = probeClusters(model, query, nprobe)
-    val vs = versionedScan(spark, model.indexDir)
-    val pruned = vs.getOrElse(spark.read.parquet(dataDir(model.indexDir)))
-      .where(col("cluster_id").isin(clusters: _*))
-    val scan = vs.map(applyLatest(_, pruned, idCol)).getOrElse(pruned)
-    val scored = Tombstones.mask(scan, spark, model.indexDir, idCol)
+    val scored = liveSlice(spark, model, idCol)(
+        probeClusters(model, query, nprobe))
       .withColumn("distance",
         round(VectorFunctions.l2Sq(col(vecCol), typedlit(query)), 4))
     val paged = after match {
@@ -490,18 +436,13 @@ object IvfIndex {
     * product desc with id tie-breaks. At nprobe = nlist the probe
     * restriction is vacuous and the result is exact MIPS; at partial
     * probe the recall contract is the usual IVF one (a large-IP row in
-    * an unprobed list is missed). Tombstones are masked and the upsert
-    * overlay applied — every serve path's discipline. Returns
+    * an unprobed list is missed). The scan is [[liveSlice]], like every
+    * serve path. Returns
     * (idCol, ip), ip-descending. */
   def searchIp(spark: SparkSession, model: Model, vecCol: String,
                idCol: String, query: Array[Float], k: Int,
                nprobe: Int): DataFrame = {
-    val clusters = probeClustersIp(model, query, nprobe)
-    val vs = versionedScan(spark, model.indexDir)
-    val pruned = vs.getOrElse(spark.read.parquet(dataDir(model.indexDir)))
-      .where(col("cluster_id").isin(clusters: _*))
-    val scan = vs.map(applyLatest(_, pruned, idCol)).getOrElse(pruned)
-    Tombstones.mask(scan, spark, model.indexDir, idCol)
+    liveSlice(spark, model, idCol)(probeClustersIp(model, query, nprobe))
       .withColumn("ip",
         round(VectorFunctions.dot(col(vecCol), typedlit(query)), 4))
       .orderBy(col("ip").desc, col(idCol).asc)
@@ -550,8 +491,8 @@ object IvfIndex {
     * handoff discipline); a cluster absent from the map is never
     * pruned (safe default). The 1e-6 slack absorbs float/double drift
     * between the stored radii and the driver-side probe arithmetic —
-    * pruning stays conservative, exactness survives. Tombstones and
-    * the upsert overlay apply as on every serve path. */
+    * pruning stays conservative, exactness survives. The scan is
+    * [[liveSlice]], as on every serve path. */
   /** [[rangeSearch]] against the index's OWN maintained radii
     * ([[loadRadii]]) — the serving form that cannot be handed a stale
     * map: build/append/upsert/rebalance keep the stored table an upper
@@ -566,22 +507,12 @@ object IvfIndex {
   def rangeSearch(spark: SparkSession, model: Model, vecCol: String,
                   idCol: String, query: Array[Float], rLo: Double,
                   rHi: Double, radii: Map[Int, Double]): DataFrame = {
-    def l2(a: Array[Float], b: Array[Float]): Double = {
-      var acc = 0.0; var i = 0
-      val n = math.min(a.length, b.length)
-      while (i < n) { val d = a(i).toDouble - b(i).toDouble; acc += d * d; i += 1 }
-      acc
-    }
     val r = math.sqrt(rHi)
     val keep = model.centroids.collect {
       case (id, c) if radii.get(id).forall(rc =>
         math.sqrt(l2(c, query)) <= r + rc + 1e-6) => id
     }
-    val vs = versionedScan(spark, model.indexDir)
-    val pruned = vs.getOrElse(spark.read.parquet(dataDir(model.indexDir)))
-      .where(col("cluster_id").isin(keep: _*))
-    val scan = vs.map(applyLatest(_, pruned, idCol)).getOrElse(pruned)
-    Tombstones.mask(scan, spark, model.indexDir, idCol)
+    liveSlice(spark, model, idCol)(keep.toSeq)
       .withColumn("distance",
         round(VectorFunctions.l2Sq(col(vecCol), typedlit(query)), 4))
       .where(col("distance") >= rLo && col("distance") < rHi)
@@ -601,8 +532,8 @@ object IvfIndex {
     * scan, never to a wrong answer). Phase 1's bound uses the ROUNDED
     * stored discipline + half-ulp slack so rounding can only WEAKEN
     * pruning; fewer than k rows in the first cluster ⇒ unbounded ⇒
-    * all clusters scanned (degenerate but exact). Tombstones and the
-    * upsert overlay apply on both passes. */
+    * all clusters scanned (degenerate but exact). Both passes scan
+    * [[liveSlice]]. */
   /** [[exactSearch]] against the index's own maintained radii — see the
     * [[rangeSearch]] no-argument-radii overload. */
   def exactSearch(spark: SparkSession, model: Model, vecCol: String,
@@ -614,20 +545,8 @@ object IvfIndex {
   def exactSearch(spark: SparkSession, model: Model, vecCol: String,
                   idCol: String, query: Array[Float], k: Int,
                   radii: Map[Int, Double]): DataFrame = {
-    def l2(a: Array[Float], b: Array[Float]): Double = {
-      var acc = 0.0; var i = 0
-      val n = math.min(a.length, b.length)
-      while (i < n) { val d = a(i).toDouble - b(i).toDouble; acc += d * d; i += 1 }
-      acc
-    }
-    val vs = versionedScan(spark, model.indexDir)
-    def clusterScan(ids: Seq[Int]): DataFrame = {
-      val pruned = vs
-        .getOrElse(spark.read.parquet(dataDir(model.indexDir)))
-        .where(col("cluster_id").isin(ids: _*))
-      val scan = vs.map(applyLatest(_, pruned, idCol)).getOrElse(pruned)
-      Tombstones.mask(scan, spark, model.indexDir, idCol)
-    }
+    // both phases slice one versioned-scan lookup
+    val clusterScan = liveSlice(spark, model, idCol)
     val first = probeClusters(model, query, 1)
     // phase 1: k rows — a bounded collect (the query-vector handoff
     // discipline); rounded kth distance + half-ulp covers the rounding
@@ -643,7 +562,7 @@ object IvfIndex {
       case (id, c) if radii.get(id).forall(rc =>
         math.sqrt(l2(c, query)) - rc <= ub + 1e-6) => id
     }
-    clusterScan(keep)
+    clusterScan(keep.toSeq)
       .withColumn("distance",
         round(VectorFunctions.l2Sq(col(vecCol), typedlit(query)), 4))
       .orderBy(col("distance").asc, col(idCol).asc)
@@ -657,20 +576,14 @@ object IvfIndex {
     * point-get list; the restriction is a semi-join inside the
     * partition-pruned scan, so at a selective filter the broadcast side
     * is the (small) id set and no disallowed row's distance is ever
-    * computed. At nprobe = nlist this equals exact filtered kNN.
-    * Tombstones are masked and the upsert overlay applied as always. */
+    * computed. At nprobe = nlist this equals exact filtered kNN. The
+    * scan is [[liveSlice]], as always. */
   def searchWithIdFilter(spark: SparkSession, model: Model,
                          vecCol: String, idCol: String,
                          query: Array[Float], k: Int, nprobe: Int,
                          allowedIds: DataFrame): DataFrame = {
-    val clusters = probeClusters(model, query, nprobe)
-    val vs = versionedScan(spark, model.indexDir)
-    val pruned = vs.getOrElse(spark.read.parquet(dataDir(model.indexDir)))
-      .where(col("cluster_id").isin(clusters: _*))
-    val scan = vs.map(applyLatest(_, pruned, idCol)).getOrElse(pruned)
-    val allowed = allowedIds.toDF(idCol)
-    Tombstones.mask(scan, spark, model.indexDir, idCol)
-      .join(allowed, Seq(idCol), "left_semi")
+    liveSlice(spark, model, idCol)(probeClusters(model, query, nprobe))
+      .join(allowedIds.toDF(idCol), Seq(idCol), "left_semi")
       .withColumn("distance",
         round(VectorFunctions.l2Sq(col(vecCol), typedlit(query)), 4))
       .orderBy(col("distance").asc, col(idCol).asc)
@@ -686,39 +599,34 @@ object IvfIndex {
     * Segment-version semantics (Milvus/Delta both serve upserts this
     * way): the batch appends with an explicit `__ver` literal (strictly
     * greater than any prior batch's — the caller's sequence number; two
-    * batches must not share one), and [[searchLatest]] serves
-    * latest-version-wins per key. [[compactVersions]] folds the history
-    * physically. Assignment arithmetic = [[append]]. */
+    * batches must not share one), and every serve path serves
+    * latest-version-wins per key ([[liveSlice]]). [[compactVersions]]
+    * folds the history physically. Assignment arithmetic = [[append]]. */
   def upsertBatch(batch: DataFrame, vecCol: String, model: Model,
                   idCol: String, ver: Long): Unit = {
     require(ver >= 1, s"upsertBatch: ver=$ver (base rows are version 0)")
     // the marker goes down FIRST: a crash after it but before the
     // append leaves a marker over an unversioned layout, which
-    // searchLatest detects (no __ver column) and serves plain — the
+    // versionedScan detects (no __ver column) and serves plain — the
     // reverse order would leave versioned rows served WITHOUT the
     // supersession overlay (stale duplicates)
     val m = versionedMarker(model.indexDir)
     val fs = m.getFileSystem(batch.sparkSession
       .sparkContext.hadoopConfiguration)
     fs.create(m, true).close()
-    val centArr = array(model.centroids.map { case (i, c) =>
-      struct(
-        VectorFunctions.l2Sq(col(vecCol), typedlit(c.toSeq)).as("d"),
-        lit(i).as("cluster_id"))
-    }: _*)
     // radius fold before the data append (the [[append]] discipline) —
     // an upsert can move a key into a cluster whose stored radius does
     // not yet cover its new vector
-    foldRadii(batch, vecCol, model, centArr)
+    foldRadii(batch, vecCol, model)
     batch.withColumn("cluster_id",
-        array_min(centArr).getField("cluster_id"))
+        nearestCentroid(model, vecCol).getField("cluster_id"))
       .withColumn("__ver", lit(ver))
       .write.mode("append").partitionBy("cluster_id")
       .parquet(dataDir(model.indexDir))
   }
 
   private def versionedMarker(indexDir: String) =
-    new org.apache.hadoop.fs.Path(indexDir, "_graft_versioned")
+    new Path(indexDir, "_graft_versioned")
 
   /** The upserted layout's merged-schema scan, or None when the index
     * was never upserted (no marker — one file stat, nothing else) or a
@@ -734,12 +642,10 @@ object IvfIndex {
       // The merged-schema inference reads EVERY file footer (it must —
       // only upsert-written files carry `__ver`, so one footer cannot
       // answer); the answer is cached by the data dir's stat
-      // fingerprint ([[mergedDataSchema]], shared since round 17 with
-      // every maintenance/audit read of the layout), so a serve over
-      // an unchanged layout skips the sweep while any append/upsert/
-      // compact misses the cache and re-infers. The crash contract is
-      // unchanged: a marker over an unversioned layout yields a
-      // __ver-less schema and serves plain.
+      // fingerprint ([[mergedDataSchema]]), so a serve over an
+      // unchanged layout skips the sweep while any append/upsert/
+      // compact misses the cache and re-infers. A marker over an
+      // unversioned layout yields a __ver-less schema and serves plain.
       val dd = dataDir(indexDir)
       val sch = mergedDataSchema(spark, dd)
       if (sch.fieldNames.contains("__ver"))
@@ -765,26 +671,29 @@ object IvfIndex {
       .drop("__maxver", "__ver")
   }
 
-  /** [[search]] over an upserted layout: per-key latest-version-wins,
-    * then the tombstone mask, then exact ranking. The supersession
-    * check is GLOBAL, not probed-slice-local: the overlay is the
-    * per-key max version of the UPSERTED rows only (a two-column
-    * column-pruned scan bounded by upsert volume, broadcast like the
-    * tombstone set), and a probed row serves only if it IS its key's
-    * latest. A superseded row whose replacement lives in an UNPROBED
-    * cluster is therefore dropped, not resurrected — missing that key
-    * at partial probe is the standard IVF recall contract (its true
-    * location wasn't probed); serving its overwritten vector would be
+  /** What a serve path may return — the visibility rule of this index,
+    * written once: the partition-pruned scan of `clusters`, then the
+    * latest-version-wins overlay ([[applyLatest]], only on an upserted
+    * layout), then the tombstone mask ([[Tombstones.mask]]). The
+    * supersession check is GLOBAL, not slice-local: a superseded row
+    * whose replacement lives in an UNPROBED cluster is dropped, not
+    * resurrected — missing that key at partial probe is the standard
+    * IVF recall contract, serving its overwritten vector would be
     * corruption. Detection is one marker-file stat (written by
-    * [[upsertBatch]]), so a never-upserted index pays nothing — not
-    * even a schema merge. [[compactVersions]] returns the index to the
-    * plain path. */
-  def searchLatest(spark: SparkSession, model: Model, vecCol: String,
-                   idCol: String, query: Array[Float], k: Int,
-                   nprobe: Int): DataFrame =
-    // [[search]] applies the overlay itself now; the explicit name
-    // stays as the documented upsert-serving entry point
-    search(spark, model, vecCol, idCol, query, k, nprobe)
+    * [[upsertBatch]]), so a never-upserted index pays nothing — not even
+    * a schema merge; [[compactVersions]] returns it to the plain path.
+    * The versioned-scan lookup runs once per call of this method, so a
+    * caller slicing twice (two-phase [[exactSearch]]) shares it. */
+  private def liveSlice(spark: SparkSession, model: Model,
+                        idCol: String): Seq[Int] => DataFrame = {
+    val vs = versionedScan(spark, model.indexDir)
+    clusters => {
+      val pruned = vs.getOrElse(spark.read.parquet(dataDir(model.indexDir)))
+        .where(col("cluster_id").isin(clusters: _*))
+      val scan = vs.map(applyLatest(_, pruned, idCol)).getOrElse(pruned)
+      Tombstones.mask(scan, spark, model.indexDir, idCol)
+    }
+  }
 
   /** Fold upsert history physically: keep only each key's latest
     * version (the row keeps ITS OWN cluster assignment — the new
@@ -794,18 +703,17 @@ object IvfIndex {
     * with no overlay. */
   def compactVersions(spark: SparkSession, model: Model,
                       idCol: String): Unit = {
-    // crash-recovery probe first (the Tombstones.recoverAside protocol):
-    // a prior fold that died between its two renames left the complete
-    // pre-fold layout at __ver_old and nothing at the live path
-    val dd = new org.apache.hadoop.fs.Path(dataDir(model.indexDir))
-    Tombstones.recoverAside(
-      dd.getFileSystem(spark.sparkContext.hadoopConfiguration),
-      dd, new org.apache.hadoop.fs.Path(dataDir(model.indexDir) + "__ver_old"))
+    // crash-recovery probe first: a prior fold that died between its
+    // two renames left the complete pre-fold layout at __ver_old and
+    // nothing at the live path
+    val dir = dataDir(model.indexDir)
+    val dd = new Path(dir)
+    val fs = dd.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val old = new Path(dir + "__ver_old")
+    Artifacts.recoverAside(fs, dd, old)
     val scan = readDataMerged(spark, model.indexDir)
-    val mfs = versionedMarker(model.indexDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!scan.columns.contains("__ver")) {
-      mfs.delete(versionedMarker(model.indexDir), false)
+      fs.delete(versionedMarker(model.indexDir), false)
       return
     }
     import org.apache.spark.sql.expressions.Window
@@ -813,25 +721,13 @@ object IvfIndex {
       .orderBy(coalesce(col("__ver"), lit(0L)).desc)
     val latest = scan.withColumn("__rn", row_number().over(w))
       .where(col("__rn") === 1).drop("__rn", "__ver")
-    val d = new org.apache.hadoop.fs.Path(dataDir(model.indexDir))
-    val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(d + "__ver_tmp")
-    val old = new org.apache.hadoop.fs.Path(d + "__ver_old")
-    fs.delete(tmp, true); fs.delete(old, true)
-    latest.write.mode("overwrite").partitionBy("cluster_id")
-      .parquet(tmp.toString)
-    if (!fs.rename(d, old))
-      throw new java.io.IOException(
-        s"compactVersions: rename $d aside failed")
-    if (!fs.rename(tmp, d))
-      throw new java.io.IOException(
-        s"compactVersions: rename $tmp -> $d failed; previous layout " +
-          s"is at $old")
-    fs.delete(old, true)
+    Artifacts.replaceDir(fs, dd, new Path(dir + "__ver_tmp"), old) {
+      latest.write.mode("overwrite").partitionBy("cluster_id").parquet(_)
+    }
     // marker LAST: a crash before this line leaves marker-over-folded-
-    // layout, which searchLatest detects (no __ver column) and serves
+    // layout, which versionedScan detects (no __ver column) and serves
     // plain — correct either way
-    mfs.delete(versionedMarker(model.indexDir), false)
+    fs.delete(versionedMarker(model.indexDir), false)
   }
 
   /** Rebalance a skew-drifted index WITHOUT a full rebuild (Milvus
@@ -870,11 +766,11 @@ object IvfIndex {
                 trainSampleCap: Long = TrainSample.DefaultCap): Model = {
     require(sizeCap > 0, s"rebalance: sizeCap=$sizeCap")
     // crash-recovery probe for the centroid swap's rename-aside window
-    val cd = new org.apache.hadoop.fs.Path(centroidsDir(model.indexDir))
-    Tombstones.recoverAside(
-      cd.getFileSystem(spark.sparkContext.hadoopConfiguration),
-      cd,
-      new org.apache.hadoop.fs.Path(centroidsDir(model.indexDir) + "__rebal_old"))
+    val cdir = centroidsDir(model.indexDir)
+    val cd = new Path(cdir)
+    val fs = cd.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val oldCentroids = new Path(cdir + "__rebal_old")
+    Artifacts.recoverAside(fs, cd, oldCentroids)
     // merged-schema reads throughout: an upserted layout carries a
     // __ver column on some files only, and a plain read could infer a
     // schema without it — silently flattening version history
@@ -909,8 +805,8 @@ object IvfIndex {
     // table, all hot lists in ONE partition-pruned read + ONE
     // partitioned append (|hot| fit jobs + 1 write job total). The
     // argmin runs through an mllib KMeansModel closure, NOT the
-    // [[append]] literal-struct-array expression: at rebalance widths
-    // (~2·nlist centers) that expression falls out of whole-stage
+    // [[nearestCentroid]] literal-struct-array expression: at rebalance
+    // widths (~2·nlist centers) that expression falls out of whole-stage
     // codegen and interprets ~100× slower (688 s for the pass at 1 M,
     // SCALE.md round 9) — the predictor is tight primitive-array math
     // with precomputed norms. Centers are passed cid-ascending, so a
@@ -937,40 +833,25 @@ object IvfIndex {
       .withColumn("cluster_id", assignUdf(col(vecCol)))
       .write.mode("append").partitionBy("cluster_id")
       .parquet(dataDir(model.indexDir))
-    // (2) centroid-table swap: survivors + sub-centroids, tmp + rename
+    // (2) centroid-table swap: survivors + sub-centroids
     import spark.implicits._
-    val cdir = new org.apache.hadoop.fs.Path(centroidsDir(model.indexDir))
-    val fs = cdir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(cdir + "__rebal_tmp")
-    fs.delete(tmp, true)
-    merged.sortBy(_._1).map { case (i, c) => (i, c.toSeq) }.toSeq
-      .toDF("cluster_id", "centroid")
-      .write.mode("overwrite").parquet(tmp.toString)
-    val old = new org.apache.hadoop.fs.Path(cdir + "__rebal_old")
-    fs.delete(old, true)
-    if (!fs.rename(cdir, old))
-      throw new java.io.IOException(
-        s"rebalance: rename $cdir aside failed")
-    if (!fs.rename(tmp, cdir))
-      throw new java.io.IOException(
-        s"rebalance: centroid swap $tmp -> $cdir failed; " +
-          s"previous table is at $old")
-    fs.delete(old, true)
+    Artifacts.replaceDir(fs, cd, new Path(cdir + "__rebal_tmp"),
+      oldCentroids) {
+      sortedMerged.map { case (i, c) => (i, c.toSeq) }.toSeq
+        .toDF("cluster_id", "centroid")
+        .write.mode("overwrite").parquet(_)
+    }
     // (3) drop the split partitions' directories
     hot.foreach { case (cid, _) =>
-      fs.delete(new org.apache.hadoop.fs.Path(
-        dataDir(model.indexDir), s"cluster_id=$cid"), true)
+      fs.delete(new Path(dataDir(model.indexDir), s"cluster_id=$cid"), true)
     }
     val refreshed = load(spark, model.indexDir)
     // (4) rebalance replaces cluster ids outright, so the stored radii
     // are recomputed from the new layout (the scaladoc's "rebuild"
-    // case, now owned by the verb instead of the caller). Skipped on a
+    // case, owned by the verb instead of the caller). Skipped on a
     // pre-radii index.
-    val rd = new org.apache.hadoop.fs.Path(radiiDir(model.indexDir))
-    val rfs = rd.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Tombstones.recoverAside(rfs, rd,
-      new org.apache.hadoop.fs.Path(radiiDir(model.indexDir) + "__old"))
-    if (rfs.exists(rd)) refreshRadii(spark, refreshed, vecCol)
+    if (recoverRadii(spark, model.indexDir))
+      refreshRadii(spark, refreshed, vecCol)
     refreshed
   }
 

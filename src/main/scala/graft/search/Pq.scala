@@ -70,33 +70,25 @@ object Pq {
     model
   }
 
-  /** Load a previously built model's codebooks. Freshness-keyed cache
-    * (round 16, fixed-cost audit — the [[IvfIndex.load]] discipline):
-    * the codebooks are a one-file table many entries re-load per
-    * serving pass; a filesystem stat fingerprint detects rebuilds, no
-    * Spark job on the warm path. */
+  /** Load a previously built model's codebooks, cached by the
+    * codebooks dir's stat fingerprint ([[graft.core.Artifacts.StatCache]]):
+    * the codebooks are a one-file table many entries re-load per serving
+    * pass; a rebuild flips the fingerprint, and the warm path runs no
+    * Spark job. */
   def load(spark: SparkSession, indexDir: String): Model = {
     val cbDir = codebooksDir(indexDir)
-    // per-file hash fingerprint (round 17, ADVICE fix) — the former
-    // (max mtime, count, bytes) aggregate could alias two content-
-    // different layouts with copy-preserved mtimes
-    val stat = graft.core.Artifacts.statFingerprint(spark, cbDir)
-    val cached = modelCache.get(cbDir)
-    if (cached != null && cached._1 == stat) return cached._2
-    val rows = spark.read.schema(codebooksSchema).parquet(cbDir).collect()
-      .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Float](2).toArray))
-    val m = rows.map(_._1).max + 1
-    val kCodes = rows.map(_._2).max + 1
-    val cbs = Array.ofDim[Array[Float]](m, kCodes)
-    rows.foreach { case (s, c, v) => cbs(s)(c) = v }
-    val model = Model(indexDir, m, kCodes, cbs.head.head.length,
-      cbs.map(_.toArray))
-    modelCache.put(cbDir, (stat, model))
-    model
+    modelCache(spark, cbDir) {
+      val rows = spark.read.schema(codebooksSchema).parquet(cbDir).collect()
+        .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Float](2).toArray))
+      val m = rows.map(_._1).max + 1
+      val kCodes = rows.map(_._2).max + 1
+      val cbs = Array.ofDim[Array[Float]](m, kCodes)
+      rows.foreach { case (s, c, v) => cbs(s)(c) = v }
+      Model(indexDir, m, kCodes, cbs.head.head.length, cbs.map(_.toArray))
+    }
   }
 
-  private val modelCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, Model)]()
+  private val modelCache = new graft.core.Artifacts.StatCache[Model]
 
   private val codebooksSchema = org.apache.spark.sql.types.StructType(Seq(
     org.apache.spark.sql.types.StructField("sub",

@@ -111,25 +111,19 @@ object Rq {
           model.cb2).as("c2"))
 
   def load(spark: SparkSession, indexDir: String): Model = {
-    // Freshness-keyed model cache (round 17; the Pq/IvfIndex pattern):
-    // rq entries load the codebooks per serving pass, each paying a
-    // footer-inference job plus a collect for a table that only a
-    // rebuild rewrites — and a rebuild flips the stat fingerprint.
+    // cached by the codebooks dir's stat fingerprint: rq entries load
+    // the codebooks per serving pass, and only a rebuild rewrites them
     val cbDir = codebooksDir(indexDir)
-    val stat = graft.core.Artifacts.statFingerprint(spark, cbDir)
-    val cached = modelCache.get(cbDir)
-    if (cached != null && cached._1 == stat) return cached._2
-    val rows = spark.read.schema(codebooksSchema).parquet(cbDir).collect()
-      .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Float](2).toArray))
-    val cb1 = rows.filter(_._1 == 1).sortBy(_._2).map(_._3)
-    val cb2 = rows.filter(_._1 == 2).sortBy(_._2).map(_._3)
-    val m = Model(indexDir, cb1.length, cb2.length, cb1, cb2)
-    modelCache.put(cbDir, (stat, m))
-    m
+    modelCache(spark, cbDir) {
+      val rows = spark.read.schema(codebooksSchema).parquet(cbDir).collect()
+        .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Float](2).toArray))
+      val cb1 = rows.filter(_._1 == 1).sortBy(_._2).map(_._3)
+      val cb2 = rows.filter(_._1 == 2).sortBy(_._2).map(_._3)
+      Model(indexDir, cb1.length, cb2.length, cb1, cb2)
+    }
   }
 
-  private val modelCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, Model)]()
+  private val modelCache = new graft.core.Artifacts.StatCache[Model]
 
   private val codebooksSchema = org.apache.spark.sql.types.StructType(Seq(
     org.apache.spark.sql.types.StructField("level",

@@ -1,5 +1,6 @@
 package graft.search
 
+import graft.core.Artifacts
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -128,28 +129,17 @@ object TermIndex {
 
   private def compactSegmentsInPlace(spark: SparkSession, indexDir: String,
                                      nFiles: Int): Unit = {
-    val d = new org.apache.hadoop.fs.Path(sortedPostingsDir(indexDir))
+    val dir = sortedPostingsDir(indexDir)
+    val d = new org.apache.hadoop.fs.Path(dir)
     val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Tombstones.recoverAside(fs, d,
-      new org.apache.hadoop.fs.Path(sortedPostingsDir(indexDir) + "__old"))
-    val merged = spark.read.parquet(sortedPostingsDir(indexDir))
+    val old = new org.apache.hadoop.fs.Path(dir + "__old")
+    Artifacts.recoverAside(fs, d, old)
+    val merged = spark.read.parquet(dir)
       .select(col("id"), col("term"), col("tf"))
       .repartitionByRange(nFiles, col("term"))
       .sortWithinPartitions(col("term"), col("id"))
-    val tmp = new org.apache.hadoop.fs.Path(
-      sortedPostingsDir(indexDir) + "__tmp")
-    val old = new org.apache.hadoop.fs.Path(
-      sortedPostingsDir(indexDir) + "__old")
-    fs.delete(tmp, true); fs.delete(old, true)
-    merged.write.mode("overwrite").parquet(s"$tmp/seg=0")
-    if (!fs.rename(d, old))
-      throw new java.io.IOException(
-        s"compactSegments: rename $d aside failed")
-    if (!fs.rename(tmp, d))
-      throw new java.io.IOException(
-        s"compactSegments: rename $tmp -> $d failed; previous layout " +
-          s"is at $old")
-    fs.delete(old, true)
+    Artifacts.replaceDir(fs, d, new org.apache.hadoop.fs.Path(dir + "__tmp"),
+      old) { tmp => merged.write.mode("overwrite").parquet(s"$tmp/seg=0") }
   }
 
   /** The postings slice for `term LIKE '<prefix>%'` — the pushed

@@ -1,5 +1,6 @@
 package graft.search
 
+import graft.core.Artifacts
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -42,16 +43,15 @@ object Tombstones {
   private def fs(spark: SparkSession, dir: String) =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** The deletes path a READER should scan (round 16, review fix):
-    * normally the live dir; if a crash between [[retract]]'s two
-    * renames left NO live dir, the complete pre-retract key set
-    * survives at `deletes__tomb_old` — serve from that conservative
-    * SUPERSET. A not-yet-visible retraction is exactly the correct
-    * pre-verb state, while treating the window as "no tombstones"
-    * would silently resurrect every deleted row on every masked serve
-    * until a maintenance verb happened to heal the dir. Read-only
-    * probe — the recoverAside RENAME stays with the single-writer
-    * maintenance verbs. */
+  /** The deletes path a READER should scan: normally the live dir; if a
+    * crash between [[retract]]'s two renames left NO live dir, the
+    * complete pre-retract key set survives at `deletes__tomb_old` —
+    * serve from that conservative SUPERSET. A not-yet-visible retraction
+    * is exactly the correct pre-verb state, while treating the window as
+    * "no tombstones" would silently resurrect every deleted row on every
+    * masked serve until a maintenance verb happened to heal the dir.
+    * Read-only probe — the [[Artifacts.recoverAside]] RENAME stays with
+    * the single-writer maintenance verbs. */
   private def readDir(spark: SparkSession,
                       indexDir: String): Option[String] = {
     val f = fs(spark, indexDir)
@@ -81,7 +81,7 @@ object Tombstones {
   def record(ids: DataFrame, indexDir0: String, idCol: String): Unit = {
     val indexDir = AliasedIndex.resolveDir(ids.sparkSession, indexDir0)
     val dDir = deletesDir(indexDir)
-    recoverAside(fs(ids.sparkSession, indexDir), new Path(dDir),
+    Artifacts.recoverAside(fs(ids.sparkSession, indexDir), new Path(dDir),
       new Path(dDir + "__tomb_old"))
     ids.select(col(idCol).cast("long").as(idCol))
       .write.mode("append").parquet(dDir)
@@ -125,39 +125,22 @@ object Tombstones {
       case Some(d) => spark.read.parquet(d).distinct().count()
     }
 
-  /** Recovery probe for the rename-aside swap protocol (shared by this
-    * object's [[compact]], [[IvfIndex.compactVersions]], and
-    * [[IvfIndex.rebalance]]'s centroid swap): a crash BETWEEN "rename
-    * live aside" and "rename tmp in" leaves NO artifact at the live
-    * path — the previous complete artifact sits at `<live><oldSuffix>`.
-    * Probe for exactly that state and rename the aside copy back, so
-    * the next maintenance pass (or load) starts from the pre-fold
-    * artifact instead of failing on a missing dir. Single-writer, like
-    * every maintenance verb here. */
-  private[search] def recoverAside(fs: org.apache.hadoop.fs.FileSystem,
-                                   live: Path, old: Path): Unit =
-    if (!fs.exists(live) && fs.exists(old) && !fs.rename(old, live))
-      throw new java.io.IOException(
-        s"recoverAside: restoring $old -> $live failed")
-
   /** Fold the tombstones into one artifact dir: rewrite `artifactDir`
     * WITHOUT rows whose any-of-`keyCols` key is tombstoned (adjacency
     * folds on BOTH src and dst; per-row artifacts on their one id),
     * preserving `partitionBy` layout (the IVF data dir's cluster_id
     * partitioning is its index structure — a fold must not flatten it).
-    * Recoverable, single-writer swap: write `__tomb_tmp`, rename live
-    * aside, rename tmp in, delete old. A crash between the two renames
-    * leaves no artifact at the live path — but the complete pre-fold
-    * artifact survives at `__tomb_old`, and the [[recoverAside]] probe
-    * (run at the top of every compact) renames it back before
-    * proceeding. Call [[clear]] once EVERY artifact of the index has
+    * Recoverable, single-writer swap ([[Artifacts.replaceDir]] via
+    * `__tomb_tmp`/`__tomb_old`); the [[Artifacts.recoverAside]] probe at
+    * the top of every compact restores a fold that crashed between its
+    * two renames. Call [[clear]] once EVERY artifact of the index has
     * been folded. */
   def compact(spark: SparkSession, indexDir: String, artifactDir: String,
               keyCols: Seq[String],
               partitionBy: Seq[String] = Nil,
               sortWithin: Seq[String] = Nil): Unit = {
     require(keyCols.nonEmpty, "compact: need at least one key column")
-    recoverAside(fs(spark, artifactDir), new Path(artifactDir),
+    Artifacts.recoverAside(fs(spark, artifactDir), new Path(artifactDir),
       new Path(artifactDir + "__tomb_old"))
     if (!exist(spark, indexDir)) return
     val dead = spark.read.parquet(deletesDir(indexDir))
@@ -182,21 +165,13 @@ object Tombstones {
       else live0.repartitionByRange(
           (partitionBy ++ sortWithin).distinct.map(col): _*)
         .sortWithinPartitions(sortWithin.map(col): _*)
-    val f = fs(spark, artifactDir)
-    val tmp = new Path(artifactDir + "__tomb_tmp")
-    val old = new Path(artifactDir + "__tomb_old")
-    f.delete(tmp, true); f.delete(old, true)
-    val w = live.write.mode("overwrite")
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
-      .parquet(tmp.toString)
-    if (!f.rename(new Path(artifactDir), old))
-      throw new java.io.IOException(
-        s"tombstone compact: rename $artifactDir aside failed")
-    if (!f.rename(tmp, new Path(artifactDir)))
-      throw new java.io.IOException(
-        s"tombstone compact: rename $tmp -> $artifactDir failed; " +
-          s"previous artifact is at $old")
-    f.delete(old, true)
+    Artifacts.replaceDir(fs(spark, artifactDir), new Path(artifactDir),
+      new Path(artifactDir + "__tomb_tmp"),
+      new Path(artifactDir + "__tomb_old")) { tmp =>
+      val w = live.write.mode("overwrite")
+      (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
+        .parquet(tmp)
+    }
   }
 
   /** Drop the tombstone set — ONLY after every artifact of the index has
@@ -210,16 +185,15 @@ object Tombstones {
     ()
   }
 
-  /** RETRACT tombstones for `keys` (round 16, advisory fix): rewrite
-    * the deletes table WITHOUT those keys, under the same
-    * rename-aside swap as [[compact]]. The un-masking half of key
-    * re-ingest: a key deleted/expired and later re-ingested stays
-    * masked forever unless its tombstone is withdrawn — but retraction
-    * is only SAFE once the key's stale physical artifact rows are gone
-    * (folded by [[compact]], or re-encoded by an upsert), or the serve
-    * would resurrect old content / double-serve the id. Callers are
-    * the maintenance verbs that guarantee that ordering
-    * ([[IndexSync.repairReingestedIvf]]), not serve paths. The deletes
+  /** RETRACT tombstones for `keys`: rewrite the deletes table WITHOUT
+    * those keys, under the same rename-aside swap as [[compact]]. The
+    * un-masking half of key re-ingest: a key deleted/expired and later
+    * re-ingested stays masked forever unless its tombstone is withdrawn
+    * — but retraction is only SAFE once the key's stale physical
+    * artifact rows are gone (folded by [[compact]], or re-encoded by an
+    * upsert), or the serve would resurrect old content / double-serve
+    * the id. Callers are the maintenance verbs that guarantee that
+    * ordering ([[IndexSync.repairReingestedIvf]]), not serve paths. The deletes
     * table is delete-batch-sized, never corpus-sized, so the rewrite
     * is a bounded key-column job. Returns the retracted key count
     * (0 = no overlap, no rewrite). Aliased-root aware, like
@@ -229,26 +203,17 @@ object Tombstones {
     val indexDir = AliasedIndex.resolveDir(spark, indexDir0)
     if (!exist(spark, indexDir)) return 0L
     val dDir = deletesDir(indexDir)
-    recoverAside(fs(spark, indexDir), new Path(dDir),
+    Artifacts.recoverAside(fs(spark, indexDir), new Path(dDir),
       new Path(dDir + "__tomb_old"))
     val k = keys.select(col(idCol).cast("long").as(idCol)).distinct()
     val existing = spark.read.parquet(dDir).toDF(idCol).distinct()
     val hit = existing.join(k, Seq(idCol), "left_semi").count()
     if (hit == 0L) return 0L
     val kept = existing.join(k, Seq(idCol), "left_anti")
-    val f = fs(spark, indexDir)
-    val tmp = new Path(dDir + "__tomb_tmp")
-    val old = new Path(dDir + "__tomb_old")
-    f.delete(tmp, true); f.delete(old, true)
-    kept.write.mode("overwrite").parquet(tmp.toString)
-    if (!f.rename(new Path(dDir), old))
-      throw new java.io.IOException(
-        s"tombstone retract: rename $dDir aside failed")
-    if (!f.rename(tmp, new Path(dDir)))
-      throw new java.io.IOException(
-        s"tombstone retract: rename $tmp -> $dDir failed; " +
-          s"previous deletes are at $old")
-    f.delete(old, true)
+    Artifacts.replaceDir(fs(spark, indexDir), new Path(dDir),
+      new Path(dDir + "__tomb_tmp"), new Path(dDir + "__tomb_old")) {
+      kept.write.mode("overwrite").parquet(_)
+    }
     hit
   }
 }

@@ -239,7 +239,7 @@ class OperatorSpec extends SparkSpec {
       Knn.topK(c, "embedding", "vec_id",
           Seq(Tuple1(q.toSeq)).toDF("qe"), "qe", 5)
         .select("vec_id").as[Long].collect().toSeq
-    val latest = IvfIndex.searchLatest(spark, model, "embedding",
+    val latest = IvfIndex.search(spark, model, "embedding",
         "vec_id", q, k = 5, nprobe = 4)
       .select("vec_id").as[Long].collect().toSeq
     assert(latest == exactOver(corpus),
@@ -251,14 +251,14 @@ class OperatorSpec extends SparkSpec {
     val truth2 = corpus.withColumn("embedding",
       when(col("vec_id") === 7, reverse(col("embedding")))
         .otherwise(col("embedding")))
-    val latest2 = IvfIndex.searchLatest(spark, model, "embedding",
+    val latest2 = IvfIndex.search(spark, model, "embedding",
         "vec_id", q, k = 5, nprobe = 4)
       .select("vec_id").as[Long].collect().toSeq
     assert(latest2 == exactOver(truth2))
     // delete composes with versions: tombstoning a key hides EVERY
     // version of it
     IvfIndex.delete(Seq(Tuple1(7L)).toDF("vec_id"), model, "vec_id")
-    val masked = IvfIndex.searchLatest(spark, model, "embedding",
+    val masked = IvfIndex.search(spark, model, "embedding",
         "vec_id", q, k = 5, nprobe = 4)
       .select("vec_id").as[Long].collect().toSeq
     assert(masked == exactOver(truth2.where(col("vec_id") =!= 7)))
@@ -306,7 +306,7 @@ class OperatorSpec extends SparkSpec {
         col("__ver").isNull)
       .count()
     assert(staleRows == 1L, "scenario lost its stale row")
-    val latest = IvfIndex.searchLatest(spark, model, "embedding",
+    val latest = IvfIndex.search(spark, model, "embedding",
         "vec_id", q, k = 20, nprobe = 1)
       .select("vec_id").as[Long].collect().toSeq
     assert(!latest.contains(5L),
@@ -314,7 +314,7 @@ class OperatorSpec extends SparkSpec {
     assert(latest.size == 19) // the 20-row list minus the superseded row
     // at full probe the replacement itself ranks (far from q, but
     // present exactly once, at its NEW vector's distance)
-    val full = IvfIndex.searchLatest(spark, model, "embedding",
+    val full = IvfIndex.search(spark, model, "embedding",
         "vec_id", q, k = 40, nprobe = 2)
       .select("vec_id").as[Long].collect().toSeq
     assert(full.count(_ == 5L) == 1 && full.size == 40)
@@ -1243,7 +1243,7 @@ class OperatorSpec extends SparkSpec {
     // exactly once, every key live, = exact kNN over the live corpus
     val q = corpus.where(col("vec_id") === 3).select("embedding")
       .collect()(0).getSeq[Float](0).toArray
-    val served = IvfIndex.searchLatest(spark, model, "embedding",
+    val served = IvfIndex.search(spark, model, "embedding",
         "vec_id", q, k = 48, nprobe = model.nlist)
       .select("vec_id").as[Long].collect().toSeq
     assert(served.count(_ == 5L) == 1 && served.size == 48,
