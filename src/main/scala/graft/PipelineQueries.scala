@@ -6,6 +6,7 @@ import graft.functions.VectorFunctions
 import graft.ingest.{Embed, HashingEmbedder, Loaders, Preprocess}
 import graft.rag.Compose
 import graft.search.{IvfIndex, Knn, MultiStrategy, TextSearch}
+import graft.text.TextAnalysis
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -2447,10 +2448,11 @@ object PipelineQueries {
       ORDER BY qid ASC, distance ASC, vec_id ASC
     """))
 
-  /** HNSW-STYLE LAYERED WALK ([[graft.search.GraphAnn.layeredSearch]],
-    * round 12 — Milvus's default index is HNSW; the flat Vamana-shape
-    * walk's round count grows with graph diameter at decade scale, and
-    * this closes that gap with ONE sampled upper layer, Malkov &
+  /** HNSW-STYLE LAYERED WALK
+    * ([[graft.search.GraphAnn.layeredSearchMulti]] over one upper layer
+    * — Milvus's default index is HNSW; the flat Vamana-shape walk's
+    * round count grows with graph diameter at decade scale, and this
+    * closes that gap with ONE sampled upper layer, Malkov &
     * Yashunin's upper-layers-as-zoom): a DETERMINISTIC ~1/e² node
     * sample ([[graft.search.GraphAnn.upperSample]] — xxhash ppm, so a
     * rebuild reproduces membership) carries its own bounded-degree
@@ -2487,9 +2489,9 @@ object PipelineQueries {
         "adjacency" -> adj.select("src", "dst"))
       val query = e.where(col("vec_id") === 0).select("embedding")
         .collect()(0).getSeq[Float](0).toArray
-      GraphAnn.layeredSearch(uadj, uent, adj, e, "vec_id", "embedding",
-        query, k = 5, beamWidth = 4, upperRounds = 3, rounds = 3,
-        degree = 8, nSeeds = 2)
+      GraphAnn.layeredSearchMulti(Seq(uadj), uent, adj, e, "vec_id",
+        "embedding", query, k = 5, beamWidth = 4, upperRounds = 3,
+        rounds = 3, degree = 8, nSeeds = 2)
     },
     Some(s"""
       WITH qs AS (SELECT CAST(0 AS BIGINT) AS qid,
@@ -2565,9 +2567,9 @@ object PipelineQueries {
     """))
 
   /** Layered serve under DELETE propagation
-    * ([[graft.search.GraphAnn.layeredSearchMasked]], round 13 — the
-    * verdict's weak-grade fix): the fixture tombstones the UNMASKED
-    * layered serve's top-1 doc AND the upper walk's first seed, then
+    * ([[graft.search.GraphAnn.layeredSearchMultiMasked]] over one upper
+    * layer): the fixture tombstones the UNMASKED layered serve's top-1
+    * doc AND the upper walk's first seed, then
     * serves masked — the zoom must re-elect its seed handoff (the
     * masked upper top-2) and the deleted doc must never be returned,
     * while both walks still ROUTE through the tombstoned nodes
@@ -2604,7 +2606,7 @@ object PipelineQueries {
       val query = e.where(col("vec_id") === 0).select("embedding")
         .collect()(0).getSeq[Float](0).toArray
       // tombstone the unmasked serve's top-1 + the first upper seed
-      val plainTop = GraphAnn.layeredSearch(uadj, uent, adj, e,
+      val plainTop = GraphAnn.layeredSearchMulti(Seq(uadj), uent, adj, e,
           "vec_id", "embedding", query, k = 1, beamWidth = 4,
           upperRounds = 3, rounds = 3, degree = 8, nSeeds = 2)
         .collect()(0).getLong(0)
@@ -2615,8 +2617,8 @@ object PipelineQueries {
       val dels = Seq(plainTop, upperSeed1).distinct.sorted
         .toDF("vec_id")
       stageOracleOnce(s, "layeredmdel", dir)("deletes" -> dels)
-      GraphAnn.layeredSearchMasked(uadj, uent, adj, e, "vec_id",
-        "embedding", query, k = 5, dels, beamWidth = 4,
+      GraphAnn.layeredSearchMultiMasked(Seq(uadj), uent, adj, e,
+        "vec_id", "embedding", query, k = 5, dels, beamWidth = 4,
         upperRounds = 3, rounds = 3, degree = 8, nSeeds = 2)
     },
     Some(s"""
@@ -3815,9 +3817,9 @@ object PipelineQueries {
     """))
 
   /** Streaming ingest into a LAYERED graph
-    * ([[graft.search.GraphAnn.appendLayered]], round 13 — the upper
-    * layer's maintenance twin): batch 1 builds BOTH layers (base
-    * adjacency + medoid, [[graft.search.GraphAnn.upperSample]]'s layer
+    * ([[graft.search.GraphAnn.appendLayeredMulti]] with one upper
+    * layer): batch 1 builds BOTH layers (base adjacency + medoid,
+    * [[graft.search.GraphAnn.upperSample]]'s layer
     * + its medoid), batch 2 appends — every row joins the base graph
     * by frozen-graph walk insertion, and the rows the deterministic
     * ppm hash cut samples ALSO join the upper adjacency (membership by
@@ -3896,24 +3898,25 @@ object PipelineQueries {
               .collect()(0).getLong(0)
             val uentryId = s.read.schema(GraphAnn.entrySchema).parquet(uentryDir)
               .collect()(0).getLong(0)
-            val res = GraphAnn.appendLayered(adj, uadj, grown, "vec_id",
-              "embedding", batch, entryId, uentryId, degree = 8,
-              beamWidth = 4, rounds = 3)
+            val res = GraphAnn.appendLayeredMulti(adj, Seq(uadj), grown,
+              "vec_id", "embedding", batch, entryId, Seq(uentryId),
+              degree = 8, beamWidth = 4, rounds = 3)
             // skip the upper-artifact rewrite when the ppm cut sampled
-            // nothing into the upper layer (round 16 — the adjacency is
-            // unchanged by construction, so the write is pure fixed
-            // cost); the two .next rewrites are independent dirs, so
-            // they run concurrently like the batch-1 builds
+            // nothing into the upper layer (the adjacency is unchanged
+            // by construction, so the write is pure fixed cost); the
+            // two .next rewrites are independent dirs, so they run
+            // concurrently like the batch-1 builds
             val fb = Future {
               res.adjacency.write.mode("overwrite")
                 .parquet(s"$adjDir.next")
             }
             val swap =
-              if (res.upperIds.isEmpty) { Await.result(fb, Duration.Inf)
+              if (res.levelIds.head.isEmpty) {
+                Await.result(fb, Duration.Inf)
                 Seq(adjDir)
               } else {
                 val fu = Future {
-                  res.adjacencyUpper.write.mode("overwrite")
+                  res.adjLayers.head.write.mode("overwrite")
                     .parquet(s"$uadjDir.next")
                 }
                 Await.result(fb, Duration.Inf)
@@ -3944,7 +3947,7 @@ object PipelineQueries {
       // rounds only win once a query batch amortizes them)
       val query = e.where(col("vec_id") === 0).select("embedding")
         .collect()(0).getSeq[Float](0).toArray
-      GraphAnn.layeredSearch(uadj, uentDf, adj, e, "vec_id",
+      GraphAnn.layeredSearchMulti(Seq(uadj), uentDf, adj, e, "vec_id",
         "embedding", query, k = 5, beamWidth = 4, upperRounds = 3,
         rounds = 3, degree = 8, nSeeds = 2)
     },
@@ -4760,8 +4763,8 @@ object PipelineQueries {
       }
       val posIds = s.read.parquet(Phrase.positionsDir(phraseIdx))
         .select(col("id").as("doc_id")).distinct()
-      val tokDocs = docsT.where(size(filter(split(col("text"), "\\s+"),
-        t => length(t) > 0)) > 0).select("doc_id")
+      val tokDocs = docsT.where(size(TextAnalysis.wsTerms(col("text"))) > 0)
+        .select("doc_id")
       // entry liveness over the shared multi-entry seed artifact (no
       // tombstones on this healthy fixture — the check is the
       // adjacency-source direction) and the sorted-term layout's
@@ -6872,9 +6875,9 @@ object PipelineQueries {
     * replays the selectivity-floor rule in the ORACLE): at selectivity
     * 0.01 < floor 0.0625 every indexed tier is ineligible and the
     * router must fall back to flat exact-over-survivors
-    * ([[graft.search.GraphAnn.filteredSearchAuto]]'s dispatch,
-    * system-wide). Shares `serving_plan_report`'s build-once panel;
-    * stages it under its own oracle key. */
+    * ([[graft.search.Router.plan]]'s `exactFloorSelectivity` rule).
+    * Shares `serving_plan_report`'s build-once panel; stages it under
+    * its own oracle key. */
   private val servingPlanFiltered = Q(
     "serving_plan_filtered",
     (s, dir) => {

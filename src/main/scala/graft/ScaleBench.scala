@@ -2,6 +2,7 @@ package graft
 
 import graft.dedup.Dedup
 import graft.search.{AnnJoin, IvfIndex, Knn}
+import graft.text.TextAnalysis
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -85,7 +86,7 @@ object ScaleBench {
                                    n: Int): Unit = {
     graft.core.Artifacts.buildOnce(spark,
       s"/tmp/graft_scale/phrase_$n/positions") {
-      val toks = filter(split(col("text"), "\\s+"), t => length(t) > 0)
+      val toks = TextAnalysis.wsTerms(col("text"))
       docs.select(col("doc_id").cast("long").as("id"),
         posexplode(toks).as(Seq("pos", "term")))
     }
@@ -218,9 +219,9 @@ object ScaleBench {
             "vec_id", "embedding", qv, k = 1, beamWidth = 8,
             upperRounds = r, rounds = 3, degree = 8, nSeeds = 2)
         case "layered" =>
-          GraphAnn.layeredSearch(uadj, uent, adj, emb, "vec_id",
-            "embedding", qv, k = 1, beamWidth = 8, upperRounds = r,
-            rounds = 3, degree = 8, nSeeds = 2)
+          GraphAnn.layeredSearchMulti(Seq(uadj), uent, adj, emb,
+            "vec_id", "embedding", qv, k = 1, beamWidth = 8,
+            upperRounds = r, rounds = 3, degree = 8, nSeeds = 2)
         case _ =>
           GraphAnn.beamSearchMulti(adj, emb, "vec_id", "embedding", qv,
             ent, k = 1, beamWidth = 8, rounds = r, degree = 8,
@@ -369,7 +370,7 @@ object ScaleBench {
         "fulltext_dict_numbering (distributed, vocab grows)" -> (() => {
           val tokenized = docs.select(col("doc_id").as("id"),
             transform(
-              filter(split(col("text"), "\\s+"), t => length(t) > 0),
+              TextAnalysis.wsTerms(col("text")),
               t => when(pmod(crc32(t), lit(4)) === 0,
                 concat(t, lit("_"), col("doc_id")))
                 .otherwise(t)).as("__tk"))
@@ -857,8 +858,7 @@ object ScaleBench {
           val p = new org.apache.hadoop.fs.Path(dir)
           p.getFileSystem(spark.sparkContext.hadoopConfiguration)
             .delete(p, true)
-          val toks = filter(split(col("text"), "\\s+"),
-            t => length(t) > 0)
+          val toks = TextAnalysis.wsTerms(col("text"))
           docs.select(col("doc_id").cast("long").as("id"),
             posexplode(toks).as(Seq("pos", "term")))
             .write.mode("overwrite").parquet(dir)

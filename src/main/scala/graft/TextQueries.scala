@@ -168,7 +168,7 @@ object TextQueries {
     (s, dir) => {
       val winTokens = 20
       val stride = 15
-      val toks = filter(split(col("text"), "\\s+"), t => length(t) > 0)
+      val toks = TextAnalysis.wsTerms(col("text"))
       Tables.documents(s, dir)
         .select(col("doc_id"), toks.as("toks"))
         .select(col("doc_id"),
@@ -2417,7 +2417,7 @@ object TextQueries {
       val first = Phrase.anchors(s, idx, Seq("scan", "merge", "small"))
         .groupBy(col("id"))
         .agg(min(col("anchor")).as("a0"))
-      val toks = filter(split(col("text"), "\\s+"), t => length(t) > 0)
+      val toks = TextAnalysis.wsTerms(col("text"))
       // 1-based window [max(a0-1, 1), min(a0+m+2, n)] around the
       // occurrence at 1-based position a0+1
       val start = greatest(col("a0") - 1, lit(1L))

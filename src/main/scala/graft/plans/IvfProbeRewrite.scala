@@ -63,10 +63,10 @@ object IvfProbeRewrite extends Rule[LogicalPlan] {
   // the previous round's results, driver-coordinated bounded collects),
   // not a static plan — there is no LogicalPlan to splice where the
   // Limit(Sort) stood. A router that chooses a graph tier belongs in an
-  // API-level dispatcher ([[graft.search.GraphAnn.filteredSearchAuto]]
-  // is that shape); the REWRITE serves the three tiers whose serving IS
-  // one declarative plan. The panel still measures the graph tiers so
-  // the decision table stays complete ('serving_plan_*').
+  // API-level dispatcher ([[graft.search.Router.plan]] picks the tier,
+  // the caller runs the walk); the REWRITE serves the three tiers whose
+  // serving IS one declarative plan. The panel still measures the graph
+  // tiers so the decision table stays complete ('serving_plan_*').
   // ---------------------------------------------------------------------
 
   /** Everything the routed rewrite needs: the IVF model + nprobe (the

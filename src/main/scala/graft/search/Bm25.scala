@@ -1,5 +1,6 @@
 package graft.search
 
+import graft.text.TextAnalysis
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame}
@@ -26,7 +27,7 @@ object Bm25 {
     // empty tokens (leading-whitespace split artifacts) are excluded
     // from BOTH tf and dl, so dl is a true term count
     scoreTokens(docs, idCol,
-      filter(split(col(textCol), "\\s+"), t => length(t) > 0), terms, k1, b)
+      TextAnalysis.wsTerms(col(textCol)), terms, k1, b)
 
   /** [[score]] over an arbitrary token-array Column — the seam a
     * configurable analysis chain ([[graft.text.Analyzer]]) plugs into:

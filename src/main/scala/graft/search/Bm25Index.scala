@@ -1,5 +1,6 @@
 package graft.search
 
+import graft.text.TextAnalysis
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -74,7 +75,7 @@ object Bm25Index {
     // build/append (the FullText.appendFrom materialize-once
     // discipline). Build pays one corpus-bounded materialization;
     // appends are micro-batch-bounded.
-    val toks = filter(split(col(textCol), "\\s+"), t => length(t) > 0)
+    val toks = TextAnalysis.wsTerms(col(textCol))
     val base = docs.select(col(idCol).cast("long").as("id"),
       toks.as("__tk")).localCheckpoint(true)
     val postings = base
@@ -156,7 +157,7 @@ object Bm25Index {
       : (DataFrame, DataFrame) = {
     require(fieldCols.nonEmpty)
     val parts = fieldCols.map { f =>
-      val toks = filter(split(col(f), "\\s+"), t => length(t) > 0)
+      val toks = TextAnalysis.wsTerms(col(f))
       val p = docs.select(col(idCol).cast("long").as("id"),
           lit(f).as("field"), explode(toks).as("term"))
         .groupBy(col("id"), col("field"), col("term"))

@@ -1,5 +1,6 @@
 package graft.search
 
+import graft.text.TextAnalysis
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -55,8 +56,7 @@ object FullText {
     org.apache.spark.sql.types.StructField("avgdl",
       org.apache.spark.sql.types.DoubleType)))
 
-  private def toks = filter(split(col("__text"), "\\s+"),
-    t => length(t) > 0)
+  private def toks = TextAnalysis.wsTerms(col("__text"))
 
   /** [[build]] with an analysis chain ([[graft.text.Analyzer]]) applied
     * at INDEX time; query terms must go through the SAME chain

@@ -368,13 +368,6 @@ object GraphAnn {
       .select("entry_id", "entry_vec")
   }
 
-  /** Beam search seeded from the `nSeeds` nearest of the staged
-    * [[entryPoints]] instead of the single medoid — same walk, same
-    * budget discipline (budget = seeds + rounds·beamWidth·degree), and
-    * the seed ranking uses the identical rounded-distance + id order as
-    * every frontier pick, so the oracle replays seed choice and walk
-    * alike. `entries` is the `(entry_id, entry_vec)` artifact; its row
-    * count is a plan constant, so the collect is bounded. */
   /** The layered graph's upper-layer node sample — HNSW's level
     * assignment (Malkov & Yashunin: node level ~ floor(−ln(U)·mL), so
     * level ≥ 1 has probability e^(−1/mL); the verdict's 1/e² ≈ 13.53%
@@ -412,42 +405,6 @@ object GraphAnn {
                   ppm: Int = 135335, salt: Int = 12): DataFrame =
     upperSample(corpus, idCol, levelPpm(level, ppm), salt)
 
-  /** HNSW-STYLE LAYERED SERVE (round 12 — the verdict's depth item):
-    * one sampled upper layer carries its OWN bounded-degree adjacency
-    * (same Vamana-shape [[buildAdjacency]], built on the
-    * [[upperSample]] nodes), a CHEAP walk there zooms to the query's
-    * region, and its top-`nSeeds` results seed the base-layer beam —
-    * the upper layers' role in HNSW, collapsed to one layer (the
-    * base-layer semantics are untouched; only the SEED changes, so
-    * every recall/maintenance contract on the base graph carries
-    * over). Why it matters at decade scale: a flat medoid-seeded walk
-    * needs rounds ∝ the graph's diameter to cross the corpus; the
-    * upper layer crosses a 7.4×-smaller graph first and hands the base
-    * walk a start already near the answer — fewer base rounds at equal
-    * recall (ScaleBench's `graphann_chain_rounds_*` ops measure it).
-    * Cost: the upper walk's bounded beam × rounds plus the base walk —
-    * both driver-bounded frontier lookups, never a corpus scan.
-    * Entry choice: HNSW shares ONE entry node across layers — prefer
-    * seeding `upperEntries` with the sampled node nearest the base
-    * entry; an independently-computed sample medoid drifts ~√n
-    * positions from the corpus medoid (median sampling noise), which
-    * at decade sizes adds a seed offset that can dominate the walk
-    * (measured: ~290 rungs at 10⁶ on the chain rehearsal). */
-  def layeredSearch(adjUpper: DataFrame, upperEntries: DataFrame,
-                    adjBase: DataFrame, corpus: DataFrame, idCol: String,
-                    vecCol: String, query: Array[Float], k: Int,
-                    beamWidth: Int = 4, upperRounds: Int = 3,
-                    rounds: Int = 3, degree: Int = 8,
-                    nSeeds: Int = 2): DataFrame = {
-    val upperTop = beamSearchMulti(adjUpper, corpus, idCol, vecCol,
-      query, upperEntries, k = nSeeds, beamWidth, upperRounds, degree,
-      nSeeds = 1)
-    val seeds = upperTop
-      .select(col(idCol).cast("long").as("entry_id"))
-    beamSearchMulti(adjBase, corpus, idCol, vecCol, query, seeds, k,
-      beamWidth, rounds, degree, nSeeds = nSeeds)
-  }
-
   /** [[beamSearchMulti]] under the tombstone mask — the multi-entry
     * member of the [[beamSearchMasked]] family: the walk itself stays
     * label-blind (it ROUTES through deleted nodes — FreshDiskANN's
@@ -461,64 +418,39 @@ object GraphAnn {
                             k: Int, deletes: DataFrame,
                             beamWidth: Int = 4, rounds: Int = 3,
                             degree: Int = 8, nSeeds: Int = 2)
-      : DataFrame = {
-    val entryIds = entries.select(col("entry_id").cast("long"))
-      .collect().map(_.getLong(0)).toSeq
-    val vis = walkVisitedSeeded(adj, corpus, idCol, vecCol, query,
-      entryIds, nSeeds, beamWidth, rounds, degree)
-    Tombstones.maskWith(
-        resultDf(corpus.sparkSession, idCol,
-          vis.sortBy { case (id, d) => (d, id) }),
-        deletes.withColumnRenamed(deletes.columns.head, idCol), idCol)
-      .orderBy(col("distance").asc, col(idCol).asc)
-      .limit(k)
-  }
+      : DataFrame =
+    maskedTopK(corpus, idCol, walkVisitedSeeded(adj, corpus, idCol,
+      vecCol, query, entryIdsOf(entries), nSeeds, beamWidth, rounds,
+      degree), deletes, k)
 
-  /** [[layeredSearch]] with delete propagation — the round-13 fix for
-    * the layered serve's maintenance hole: EVERY serve path applies the
-    * tombstone mask + latest-wins overlay ([[beamSearchMasked]],
-    * [[IvfIndex.search]]), and the layered walk must too, or a
-    * doc deleted after the layered artifacts were built is silently
-    * served until consolidation. BOTH walks post-filter their result
-    * through [[Tombstones.maskWith]]: the upper walk's masked top-
-    * `nSeeds` seed the base beam (a tombstoned upper node may still
-    * ROUTE the zoom — only its election as a seed handoff is masked,
-    * keeping the seed set live), and the base walk's visited set is
-    * masked before the top-k cut exactly like the flat masked serve.
-    * The graph family's latest-wins story is delete+append (an upsert
-    * tombstones the old id and [[append]]s the new row), so the mask IS
-    * the overlay — after [[consolidateDeletesLayeredRoot]] folds, the
-    * plain [[layeredSearch]] serves again. */
-  def layeredSearchMasked(adjUpper: DataFrame, upperEntries: DataFrame,
-                          adjBase: DataFrame, corpus: DataFrame,
-                          idCol: String, vecCol: String,
-                          query: Array[Float], k: Int, deletes: DataFrame,
-                          beamWidth: Int = 4, upperRounds: Int = 3,
-                          rounds: Int = 3, degree: Int = 8,
-                          nSeeds: Int = 2): DataFrame = {
-    val upperTop = beamSearchMultiMasked(adjUpper, corpus, idCol, vecCol,
-      query, upperEntries, k = nSeeds, deletes, beamWidth, upperRounds,
-      degree, nSeeds = 1)
-    val seeds = upperTop
-      .select(col(idCol).cast("long").as("entry_id"))
-    beamSearchMultiMasked(adjBase, corpus, idCol, vecCol, query, seeds,
-      k, deletes, beamWidth, rounds, degree, nSeeds = nSeeds)
-  }
-
-  /** MULTI-LEVEL layered serve — [[layeredSearch]] generalized to a
-    * layer STACK (round 13, the verdict's depth item): `adjLayers` is
-    * ordered TOP (sparsest, [[levelSample]] level = adjLayers.length)
-    * down to level 1; the walk enters the top layer at `topEntries`
-    * (HNSW shares ONE entry across layers — seed the stack's top with
-    * the sampled node nearest the base entry), each level's top-
-    * `nSeeds` seed the next level's beam, and the base walk refines
-    * locally. Why more than one upper layer: a single ~p-occupancy
-    * layer is still a p·n-node graph — its diameter grows with the
-    * corpus and the zoom argument recurses; with log-many p^ℓ layers
-    * the entry cost is corpus-INDEPENDENT (each layer crosses a
-    * constant factor, HNSW's actual complexity argument). Each level's
-    * walk is the same bounded frontier loop; total cost = (levels + 1)
-    * × the per-walk budget, never a corpus scan. */
+  /** HNSW-style LAYERED serve (Malkov & Yashunin) — the graph family's
+    * one layered path. `adjLayers` is the upper-layer stack ordered TOP
+    * (sparsest, [[levelSample]] level = adjLayers.length) down to
+    * level 1; each layer is the same Vamana-shape [[buildAdjacency]]
+    * built on its nested node sample, and a two-level index is the
+    * stack with one upper layer (`Seq(adjUpper)`, [[upperSample]]'s
+    * nodes). The walk enters the top layer at `topEntries`, each
+    * level's top-`nSeeds` seed the next level's beam, and the base
+    * walk refines locally — the base-layer semantics are untouched,
+    * only the SEED changes, so every recall/maintenance contract on the
+    * base graph carries over.
+    *
+    * Why it matters at decade scale: a flat medoid-seeded walk needs
+    * rounds ∝ the graph's diameter to cross the corpus; an upper layer
+    * crosses a smaller graph first and hands the base walk a start
+    * already near the answer (ScaleBench's `graphann_chain_rounds_*`
+    * ops measure it). A single ~p-occupancy layer is still a p·n-node
+    * graph whose diameter grows with the corpus; with log-many p^ℓ
+    * layers the entry cost is corpus-INDEPENDENT (each layer crosses a
+    * constant factor, HNSW's complexity argument). Cost = (levels + 1)
+    * × the bounded per-walk budget, never a corpus scan.
+    *
+    * Entry choice: HNSW shares ONE entry node across layers — prefer
+    * seeding `topEntries` with the sampled node nearest the base entry;
+    * an independently-computed sample medoid drifts ~√n positions from
+    * the corpus medoid (median sampling noise), which at decade sizes
+    * adds a seed offset that can dominate the walk (measured: ~290
+    * rungs at 10⁶ on the chain rehearsal). */
   def layeredSearchMulti(adjLayers: Seq[DataFrame],
                          topEntries: DataFrame, adjBase: DataFrame,
                          corpus: DataFrame, idCol: String,
@@ -539,13 +471,20 @@ object GraphAnn {
       beamWidth, rounds, degree, nSeeds = nSeeds)
   }
 
-  /** [[layeredSearchMulti]] under the tombstone mask — the stack
-    * inherits the 1-layer masked contract ([[layeredSearchMasked]])
-    * at every level: each level's walk routes label-blind, its
-    * RESULT is masked before the seed handoff to the next level, and
-    * the base visited set is masked before the top-k cut. Cost is
-    * unchanged: one broadcast anti-join over each walk's bounded
-    * visited set. */
+  /** [[layeredSearchMulti]] under the tombstone mask — EVERY serve path
+    * applies the tombstone mask ([[beamSearchMasked]],
+    * [[IvfIndex.search]]), or a doc deleted after the layered artifacts
+    * were built is served until consolidation. Each level's walk routes
+    * label-blind, its RESULT is masked before the seed handoff to the
+    * next level (a tombstoned upper node may still ROUTE the zoom —
+    * only its election as a seed is masked, keeping the seed set live),
+    * and the base visited set is masked before the top-k cut exactly
+    * like the flat masked serve. The graph family's latest-wins story
+    * is delete+append (an upsert tombstones the old id and [[append]]s
+    * the new row), so the mask IS the overlay — after
+    * [[consolidateDeletesMultiRoot]] / [[consolidateDeletesLayeredRoot]]
+    * fold, the plain [[layeredSearchMulti]] serves again. Cost: one
+    * broadcast anti-join over each walk's bounded visited set. */
   def layeredSearchMultiMasked(adjLayers: Seq[DataFrame],
                                topEntries: DataFrame, adjBase: DataFrame,
                                corpus: DataFrame, idCol: String,
@@ -567,24 +506,30 @@ object GraphAnn {
       k, deletes, beamWidth, rounds, degree, nSeeds = nSeeds)
   }
 
+  /** Beam search seeded from the `nSeeds` nearest of the staged
+    * [[entryPoints]] instead of the single medoid — same walk, same
+    * budget discipline (budget = seeds + rounds·beamWidth·degree), and
+    * the seed ranking uses the identical rounded-distance + id order as
+    * every frontier pick, so the oracle replays seed choice and walk
+    * alike. `entries` is the `(entry_id, entry_vec)` artifact; its row
+    * count is a plan constant, so the collect is bounded. */
   def beamSearchMulti(adj: DataFrame, corpus: DataFrame, idCol: String,
                       vecCol: String, query: Array[Float],
                       entries: DataFrame, k: Int, beamWidth: Int = 4,
                       rounds: Int = 3, degree: Int = 8,
                       nSeeds: Int = 2): DataFrame = {
-    val entryIds = entries.select(col("entry_id").cast("long"))
-      .collect().map(_.getLong(0)).toSeq
     val top = walkVisitedSeeded(adj, corpus, idCol, vecCol, query,
-        entryIds, nSeeds, beamWidth, rounds, degree)
+        entryIdsOf(entries), nSeeds, beamWidth, rounds, degree)
       .sortBy { case (id, d) => (d, id) }.take(k)
     resultDf(corpus.sparkSession, idCol, top)
   }
 
-  /** Bounded best-first beam search over a built adjacency artifact.
-    * Returns (idCol, distance): the top-k of the visited set by
-    * (rounded distance, id). Each round issues two pushed-filter point
-    * lookups (adjacency rows of the frontier; vectors of the new
-    * candidates) — never a corpus scan. */
+  /** The ids of an `entry_id` artifact — a bounded collect (its row
+    * count is a plan constant). */
+  private def entryIdsOf(entries: DataFrame): Seq[Long] =
+    entries.select(col("entry_id").cast("long"))
+      .collect().map(_.getLong(0)).toSeq
+
   /** The shared walk: visited set after `rounds` rounds of label-blind
     * best-first expansion, as (id, rounded distance) pairs — bounded by
     * the `require` budget. [[beamSearch]] takes its top-k;
@@ -609,16 +554,19 @@ object GraphAnn {
                                 idCol: String, vecCol: String,
                                 query: Array[Float], entryIds: Seq[Long],
                                 nSeeds: Int, beamWidth: Int, rounds: Int,
-                                degree: Int): Seq[(Long, Double)] = {
-    val qLit = typedlit(query.toSeq)
-    def distOf(ids: Seq[Long]): Array[(Long, Double)] =
-      if (ids.isEmpty) Array.empty
-      else corpus.where(col(idCol).isin(ids: _*))
-        .select(col(idCol).cast("long"),
-          round(VectorFunctions.l2Sq(col(vecCol), qLit), 4))
-        .collect().map(r => (r.getLong(0), r.getDouble(1)))
-    walkVisitedBy(adj, distOf, entryIds, nSeeds, beamWidth, rounds, degree)
-  }
+                                degree: Int): Seq[(Long, Double)] =
+    walkVisitedBy(adj, pointScores(corpus, idCol,
+        round(VectorFunctions.l2Sq(col(vecCol), typedlit(query.toSeq)), 4)),
+      entryIds, nSeeds, beamWidth, rounds, degree)
+
+  /** A walk's candidate scorer: the (id, score) of each of `ids`, read
+    * by one pushed `id IN (...)` point lookup on `rows`. */
+  private def pointScores(rows: DataFrame, idCol: String, score: Column)(
+      ids: Seq[Long]): Array[(Long, Double)] =
+    if (ids.isEmpty) Array.empty
+    else rows.where(col(idCol).isin(ids: _*))
+      .select(col(idCol).cast("long"), score)
+      .collect().map(r => (r.getLong(0), r.getDouble(1)))
 
   /** The walk loop itself, with the candidate scorer as a seam:
     * `distOf(ids)` returns the (id, rounded distance) of each id — exact
@@ -647,11 +595,10 @@ object GraphAnn {
       if (frontier.nonEmpty) {
         expanded ++= frontier.map(_._1)
         // dedup the fetched dsts DRIVER-side (bounded by beamWidth ·
-        // degree rows — round 17): a `.distinct()` here is an AQE
-        // shuffle query, turning the pushed point lookup into three
-        // scheduled jobs per round; the collected array is already the
-        // bounded handoff, so the dedup belongs with it (the
-        // bulkVisitedFrom entry-round precedent)
+        // degree rows): a `.distinct()` here is an AQE shuffle query,
+        // turning the pushed point lookup into three scheduled jobs per
+        // round; the collected array is already the bounded handoff, so
+        // the dedup belongs with it (as in [[bulkVisited]]'s entry round)
         val fresh = adj.where(col("src").isin(frontier.map(_._1): _*))
           .select(col("dst").cast("long"))
           .collect().map(_.getLong(0)).distinct
@@ -675,6 +622,11 @@ object GraphAnn {
         StructField(idCol, LongType, nullable = false),
         StructField("distance", DoubleType, nullable = false))))
 
+  /** Bounded best-first beam search over a built adjacency artifact.
+    * Returns (idCol, distance): the top-k of the visited set by
+    * (rounded distance, id). Each round issues two pushed-filter point
+    * lookups (adjacency rows of the frontier; vectors of the new
+    * candidates) — never a corpus scan. */
   def beamSearch(adj: DataFrame, corpus: DataFrame, idCol: String,
                  vecCol: String, query: Array[Float], entryId: Long,
                  k: Int, beamWidth: Int = 4, rounds: Int = 3,
@@ -697,16 +649,21 @@ object GraphAnn {
   def beamSearchMasked(adj: DataFrame, corpus: DataFrame, idCol: String,
                        vecCol: String, query: Array[Float], entryId: Long,
                        k: Int, deletes: DataFrame, beamWidth: Int = 4,
-                       rounds: Int = 3, degree: Int = 8): DataFrame = {
-    val vis = walkVisited(adj, corpus, idCol, vecCol, query, entryId,
-      beamWidth, rounds, degree)
+                       rounds: Int = 3, degree: Int = 8): DataFrame =
+    maskedTopK(corpus, idCol, walkVisited(adj, corpus, idCol, vecCol,
+      query, entryId, beamWidth, rounds, degree), deletes, k)
+
+  /** The masked serves' shared tail: the tombstone anti-join over the
+    * bounded visited set, then the top-k cut. */
+  private def maskedTopK(corpus: DataFrame, idCol: String,
+                         vis: Seq[(Long, Double)], deletes: DataFrame,
+                         k: Int): DataFrame =
     Tombstones.maskWith(
         resultDf(corpus.sparkSession, idCol,
           vis.sortBy { case (id, d) => (d, id) }),
         deletes.withColumnRenamed(deletes.columns.head, idCol), idCol)
       .orderBy(col("distance").asc, col(idCol).asc)
       .limit(k)
-  }
 
   /** PQ-scored beam walk — DiskANN's actual serving layout (Subramanya
     * et al., NeurIPS 2019 §3: the in-memory structure holds PQ codes,
@@ -750,13 +707,9 @@ object GraphAnn {
                        vecCol: String, query: Array[Float], entryId: Long,
                        k: Int, beamWidth: Int = 4, rounds: Int = 3,
                        degree: Int = 8): DataFrame = {
-    def dOf(ids: Seq[Long]): Array[(Long, Double)] =
-      if (ids.isEmpty) Array.empty
-      else routing.where(col(idCol).isin(ids: _*))
-        .select(col(idCol).cast("long"), col(routeCol).cast("double"))
-        .collect().map(r => (r.getLong(0), r.getDouble(1)))
-    val vis = walkVisitedBy(adj, dOf, Seq(entryId), nSeeds = 1,
-      beamWidth, rounds, degree)
+    val vis = walkVisitedBy(adj,
+      pointScores(routing, idCol, col(routeCol).cast("double")),
+      Seq(entryId), nSeeds = 1, beamWidth, rounds, degree)
     val spark = corpus.sparkSession
     val approx = resultDf(spark, idCol, vis.sortBy { case (id, d) => (d, id) })
       .withColumnRenamed("distance", "route_score")
@@ -948,93 +901,9 @@ object GraphAnn {
     s"$indexDir/adjacency_upper"
   def upperEntriesDir(indexDir: String): String =
     s"$indexDir/entries_upper"
-
-  final case class LayeredAppendResult(adjacency: DataFrame,
-                                       adjacencyUpper: DataFrame,
-                                       upperIds: Seq[Long])
-
-  /** Ingest into a LAYERED graph — the upper layer's maintenance twin
-    * of [[append]] (round 13): every batch row joins the base graph by
-    * the frozen-graph walk insertion, and the rows the [[upperMember]]
-    * ppm rule samples ALSO join the upper adjacency by the same
-    * insertion against the (much smaller) upper graph. Membership is
-    * decided by the deterministic hash cut — NOT by load order — so an
-    * incrementally-grown layered index and a from-scratch rebuild hold
-    * the SAME upper node set (the [[upperSample]] reproducibility
-    * contract), and [[IndexAudit.upperLayerChecks]]'
-    * `upper_membership_violations` counter stays 0 under ingest.
-    * `corpus` is the PRE-batch corpus (the walk's vector source), as in
-    * [[append]]; cost = the base batch walk + one walk over the upper
-    * graph for the sampled subset (usually ~13.5% of the batch). */
-  def appendLayered(adjBase: DataFrame, adjUpper: DataFrame,
-                    corpus: DataFrame, idCol: String, vecCol: String,
-                    batch: DataFrame, baseEntryId: Long,
-                    upperEntryId: Long, degree: Int = 8,
-                    beamWidth: Int = 4, rounds: Int = 3,
-                    maxBatch: Int = 256, ppm: Int = 135335,
-                    salt: Int = 12): LayeredAppendResult = {
-    // ONE bounded collect decides the batch rows AND their upper
-    // membership (round 16 — was three driver round-trips: append's
-    // internal collect, the membership collect, the upper append's
-    // collect). The membership COLUMN is evaluated by Spark, so the
-    // driver never re-implements the ppm hash cut.
-    val rows = batch.select(col(idCol).cast("long"), col(vecCol),
-        upperMember(idCol, ppm, salt).as("__upper"))
-      .limit(maxBatch + 1).collect()
-    require(rows.length <= maxBatch,
-      s"graph-ann append: batch exceeds $maxBatch points — use a rebuild " +
-        "for bulk re-indexing")
-    val baseRows = rows.map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq
-    val upperRows = rows.filter(_.getBoolean(2))
-      .map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq
-    val upperIds = upperRows.map(_._1).sorted
-    // The base walk and the upper walk are independent (each reads its
-    // own frozen adjacency + the shared PRE-batch corpus), so their
-    // bounded eager work — the bulk-walk jobs inside [[appendRows]] —
-    // overlaps on concurrent driver threads (guide §2.6, round 17):
-    // the small upper append back-fills the base walk's scheduling
-    // gaps instead of serializing after them.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val base2F = Future {
-      appendRows(adjBase, corpus, idCol, vecCol, baseRows, baseEntryId,
-        degree, beamWidth, rounds)
-    }
-    val upper2F = Future {
-      if (upperIds.isEmpty) adjUpper
-      else appendRows(adjUpper, corpus, idCol, vecCol, upperRows,
-        upperEntryId, degree, beamWidth, rounds).adjacency
-    }
-    val base2 = Await.result(base2F, Duration.Inf)
-    val upper2 = Await.result(upper2F, Duration.Inf)
-    LayeredAppendResult(base2.adjacency, upper2, upperIds)
-  }
-
-  /** Delete consolidation for a LAYERED graph: fold the tombstones out
-    * of BOTH adjacencies and re-elect BOTH entry sets (the upper
-    * layer's entry strands exactly like the base's when its node dies
-    * or loses every out-edge — same [[reelectEntries]] discipline,
-    * restricted to upper-member survivors because an upper seed must
-    * source UPPER edges). Returns (base adjacency, base entries, upper
-    * adjacency, upper entries). */
-  def consolidateDeletesLayered(adjBase: DataFrame, adjUpper: DataFrame,
-                                corpus: DataFrame, idCol: String,
-                                vecCol: String, deletes: DataFrame,
-                                entries: DataFrame,
-                                upperEntries: DataFrame, degree: Int = 8)
-      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val (b2, e2) = consolidateDeletesWithEntries(adjBase, corpus, idCol,
-      vecCol, deletes, entries, degree)
-    val u2 = consolidateDeletes(adjUpper, corpus, idCol, vecCol,
-      deletes, degree)
-    // upper re-election candidates: reelectEntries(adj = Some(u2))
-    // restricts survivors to ids sourcing an UPPER edge, which are
-    // upper members by construction — no separate membership filter
-    val ue2 = reelectEntries(upperEntries, corpus, idCol, vecCol,
-      deletes, Some(u2))
-    (b2, e2, u2, ue2)
-  }
+  def upperAdjacencyLevelDir(indexDir: String, level: Int): String =
+    s"$indexDir/adjacency_upper_l$level"
+  def topEntriesDir(indexDir: String): String = s"$indexDir/entries_top"
 
   /** Publish step shared by the consolidate*Root verbs: on an aliased
     * root, `rewriteInto(current, next)` writes `v<N+1>` directly and
@@ -1057,37 +926,9 @@ object GraphAnn {
       root
     }
 
-  /** ROOT-addressed layered consolidation under the alias discipline —
-    * [[consolidateDeletesRoot]] for the four-artifact layered layout
-    * (`adjacency`, `entries`, `adjacency_upper`, `entries_upper`):
-    * rewrite all four into `v<N+1>` directly and publish atomically;
-    * readers mid-verb keep the old complete version. Flat roots use
-    * the same rename-aside rewrite as the base verb. Returns the new
-    * serving dir. */
-  def consolidateDeletesLayeredRoot(spark: SparkSession, root: String,
-                                    corpus: DataFrame, idCol: String,
-                                    vecCol: String, deletes: DataFrame,
-                                    degree: Int = 8): String = {
-    def rewriteInto(cur: String, next: String): Unit = {
-      val (b2, e2, u2, ue2) = consolidateDeletesLayered(
-        spark.read.parquet(adjacencyDir(cur)),
-        spark.read.parquet(upperAdjacencyDir(cur)),
-        corpus, idCol, vecCol, deletes,
-        spark.read.parquet(entriesDir(cur)),
-        spark.read.parquet(upperEntriesDir(cur)), degree)
-      b2.write.mode("overwrite").parquet(adjacencyDir(next))
-      e2.write.mode("overwrite").parquet(entriesDir(next))
-      u2.write.mode("overwrite").parquet(upperAdjacencyDir(next))
-      ue2.write.mode("overwrite").parquet(upperEntriesDir(next))
-    }
-    consolidateRoot(spark, root)(rewriteInto)
-  }
-
-  /** ROOT-addressed delete consolidation under the alias discipline —
-    * the graph family joins the alias-flip default (round 12; the
-    * other families got it in round 11): on a published root, read the
-    * CURRENT version's adjacency + entries, run
-    * [[consolidateDeletesWithEntries]], and write BOTH artifacts into
+  /** ROOT-addressed delete consolidation under the alias discipline: on
+    * a published root, read the CURRENT version's adjacency + entries,
+    * run [[consolidateDeletesWithEntries]], and write BOTH artifacts into
     * `v<N+1>` DIRECTLY (consolidation rewrites the whole layout anyway,
     * so it skips [[AliasedIndex.maintain]]'s bootstrap copy — the
     * rewrite-verbs-skip-the-copy contract), then publish atomically.
@@ -1111,23 +952,27 @@ object GraphAnn {
     consolidateRoot(spark, root)(rewriteInto)
   }
 
-  def upperAdjacencyLevelDir(indexDir: String, level: Int): String =
-    s"$indexDir/adjacency_upper_l$level"
-  def topEntriesDir(indexDir: String): String = s"$indexDir/entries_top"
-
   final case class MultiLayerAppendResult(adjacency: DataFrame,
                                           adjLayers: Seq[DataFrame],
                                           levelIds: Seq[Seq[Long]])
 
-  /** [[appendLayered]] for the MULTI-LEVEL stack: every batch row joins
-    * the base graph; each level ℓ (layers ordered TOP → level 1, the
-    * [[layeredSearchMulti]] convention) additionally absorbs the rows
-    * the NESTED [[levelPpm]] hash cut samples — a level-2 member is a
-    * level-1 member by construction, so a row entering the stack lands
-    * in a prefix of the levels exactly as an HNSW insert draws one
-    * level and joins every layer at or below it. Membership is
-    * rule-derived (grown stack ≡ rebuild). `layerEntryIds` aligns with
-    * `adjLayers`. */
+  /** Ingest into a LAYERED graph — the layer stack's maintenance twin
+    * of [[append]]: every batch row joins the base graph by the
+    * frozen-graph walk insertion; each level ℓ (layers ordered TOP →
+    * level 1, the [[layeredSearchMulti]] convention; a two-level index
+    * is one layer) additionally absorbs the rows the NESTED
+    * [[levelPpm]] hash cut samples — a level-2 member is a level-1
+    * member by construction, so a row entering the stack lands in a
+    * prefix of the levels exactly as an HNSW insert draws one level and
+    * joins every layer at or below it. Membership is decided by the
+    * deterministic hash cut — NOT by load order — so an
+    * incrementally-grown index and a from-scratch rebuild hold the SAME
+    * layer node sets (the [[upperSample]] reproducibility contract),
+    * and [[IndexAudit.upperLayerChecks]]' `upper_membership_violations`
+    * counter stays 0 under ingest. `corpus` is the PRE-batch corpus
+    * (the walk's vector source), as in [[append]]; `layerEntryIds`
+    * aligns with `adjLayers`. `levelIds` holds each layer's appended
+    * ids, ascending. */
   def appendLayeredMulti(adjBase: DataFrame, adjLayers: Seq[DataFrame],
                          corpus: DataFrame, idCol: String,
                          vecCol: String, batch: DataFrame,
@@ -1138,11 +983,9 @@ object GraphAnn {
       : MultiLayerAppendResult = {
     require(adjLayers.length == layerEntryIds.length)
     val nLevels = adjLayers.length
-    // ONE bounded collect carries every level's membership flag
-    // (round 16, the [[appendLayered]] clawback applied to the stack:
-    // was 1 + 2·levels driver round-trips over the same ≤ maxBatch
-    // rows). Flags are Spark-evaluated Columns — the driver never
-    // re-implements the nested ppm cut.
+    // ONE bounded collect carries the batch rows AND every level's
+    // membership flag. Flags are Spark-evaluated Columns — the driver
+    // never re-implements the nested ppm cut.
     val memberCols = (0 until nLevels).map { i =>
       upperMember(idCol, levelPpm(nLevels - i, ppm), salt).as(s"__m$i")
     }
@@ -1152,29 +995,42 @@ object GraphAnn {
     require(rows.length <= maxBatch,
       s"graph-ann append: batch exceeds $maxBatch points — use a rebuild " +
         "for bulk re-indexing")
-    val baseRows = rows.map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq
-    val base2 = appendRows(adjBase, corpus, idCol, vecCol, baseRows,
-      baseEntryId, degree, beamWidth, rounds)
-    val (layers2, ids) = adjLayers.zip(layerEntryIds).zipWithIndex.map {
-      case ((adjL, entL), i) =>
-        val lRows = rows.filter(_.getBoolean(2 + i))
-          .map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq
-        val lbIds = lRows.map(_._1).sorted
-        val grown =
-          if (lbIds.isEmpty) adjL
-          else appendRows(adjL, corpus, idCol, vecCol, lRows, entL,
-            degree, beamWidth, rounds).adjacency
-        (grown, lbIds)
-    }.unzip
-    MultiLayerAppendResult(base2.adjacency, layers2, ids)
+    def pairs(rs: Array[Row]): Seq[(Long, Seq[Float])] =
+      rs.map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq
+    val levelRows = (0 until nLevels).map(i =>
+      pairs(rows.filter(_.getBoolean(2 + i))))
+    // The base append and each layer's append are independent (each
+    // reads only its own frozen adjacency and the shared PRE-batch
+    // corpus), so their bounded eager work — the bulk-walk jobs inside
+    // [[appendRows]] — overlaps on concurrent driver threads: the small
+    // layer appends back-fill the base walk's scheduling gaps instead
+    // of serializing after them.
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration.Duration
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val baseF = Future {
+      appendRows(adjBase, corpus, idCol, vecCol, pairs(rows), baseEntryId,
+        degree, beamWidth, rounds).adjacency
+    }
+    val layerFs = adjLayers.zip(layerEntryIds).zip(levelRows).map {
+      case ((adjL, entL), lRows) => Future {
+        if (lRows.isEmpty) adjL
+        else appendRows(adjL, corpus, idCol, vecCol, lRows, entL,
+          degree, beamWidth, rounds).adjacency
+      }
+    }
+    MultiLayerAppendResult(Await.result(baseF, Duration.Inf),
+      layerFs.map(Await.result(_, Duration.Inf)),
+      levelRows.map(_.map(_._1).sorted))
   }
 
-  /** [[consolidateDeletesLayered]] for the stack: fold the base and
-    * EVERY level's adjacency, re-elect the base entry set (against the
-    * folded base) and the stack's top entry (against the folded TOP
-    * layer — a dead or stranded top entry strands every query's first
-    * zoom). Returns (base adj, base entries, folded layers top→1, top
-    * entries). */
+  /** Delete consolidation for a LAYERED graph: fold the base and EVERY
+    * layer's adjacency, re-elect the base entry set (against the folded
+    * base) and the stack's top entry (against the folded TOP layer — a
+    * dead or stranded top entry strands every query's first zoom; the
+    * survivors [[reelectEntries]] may elect source a top-layer edge, so
+    * they are top-layer members by construction). Returns (base adj,
+    * base entries, folded layers top→1, top entries). */
   def consolidateDeletesMulti(adjBase: DataFrame,
                               adjLayers: Seq[DataFrame],
                               corpus: DataFrame, idCol: String,
@@ -1191,32 +1047,57 @@ object GraphAnn {
     (b2, e2, layers2, te2)
   }
 
-  /** ROOT-addressed multi-level consolidation — the
-    * [[consolidateDeletesLayeredRoot]] discipline over the stack
-    * layout (`adjacency`, `entries`, `adjacency_upper_l<ℓ>` for ℓ =
-    * levels…1, `entries_top`): rewrite every artifact into `v<N+1>`
-    * and publish atomically. */
+  /** ROOT-addressed layered consolidation under the alias discipline —
+    * [[consolidateDeletesRoot]] for a layered layout: read the current
+    * version, run [[consolidateDeletesMulti]], rewrite every artifact
+    * into `v<N+1>` and publish atomically; readers mid-verb keep the
+    * old complete version. Flat roots use the same rename-aside rewrite
+    * as the base verb. `layerDirs(dir)` lists the layer adjacency dirs
+    * top → level 1; `topEntriesOf(dir)` is the top layer's entry dir.
+    * Returns the new serving dir. */
+  private def consolidateLayersRoot(spark: SparkSession, root: String,
+                                    corpus: DataFrame, idCol: String,
+                                    vecCol: String, deletes: DataFrame,
+                                    degree: Int,
+                                    layerDirs: String => Seq[String],
+                                    topEntriesOf: String => String)
+      : String = {
+    def rewriteInto(cur: String, next: String): Unit = {
+      val (b2, e2, layers2, te2) = consolidateDeletesMulti(
+        spark.read.parquet(adjacencyDir(cur)),
+        layerDirs(cur).map(spark.read.parquet(_)), corpus, idCol, vecCol,
+        deletes, spark.read.parquet(entriesDir(cur)),
+        spark.read.parquet(topEntriesOf(cur)), degree)
+      b2.write.mode("overwrite").parquet(adjacencyDir(next))
+      e2.write.mode("overwrite").parquet(entriesDir(next))
+      layers2.zip(layerDirs(next)).foreach { case (a, d) =>
+        a.write.mode("overwrite").parquet(d)
+      }
+      te2.write.mode("overwrite").parquet(topEntriesOf(next))
+    }
+    consolidateRoot(spark, root)(rewriteInto)
+  }
+
+  /** [[consolidateLayersRoot]] over the two-level layout: `adjacency`,
+    * `entries`, `adjacency_upper`, `entries_upper`. */
+  def consolidateDeletesLayeredRoot(spark: SparkSession, root: String,
+                                    corpus: DataFrame, idCol: String,
+                                    vecCol: String, deletes: DataFrame,
+                                    degree: Int = 8): String =
+    consolidateLayersRoot(spark, root, corpus, idCol, vecCol, deletes,
+      degree, d => Seq(upperAdjacencyDir(d)), upperEntriesDir)
+
+  /** [[consolidateLayersRoot]] over the stack layout: `adjacency`,
+    * `entries`, `adjacency_upper_l<ℓ>` for ℓ = levels…1, `entries_top`. */
   def consolidateDeletesMultiRoot(spark: SparkSession, root: String,
                                   corpus: DataFrame, idCol: String,
                                   vecCol: String, deletes: DataFrame,
                                   levels: Int,
                                   degree: Int = 8): String = {
     require(levels >= 1)
-    def rewriteInto(cur: String, next: String): Unit = {
-      val layers = (levels to 1 by -1).map(l =>
-        spark.read.parquet(upperAdjacencyLevelDir(cur, l)))
-      val (b2, e2, layers2, te2) = consolidateDeletesMulti(
-        spark.read.parquet(adjacencyDir(cur)), layers, corpus, idCol,
-        vecCol, deletes, spark.read.parquet(entriesDir(cur)),
-        spark.read.parquet(topEntriesDir(cur)), degree)
-      b2.write.mode("overwrite").parquet(adjacencyDir(next))
-      e2.write.mode("overwrite").parquet(entriesDir(next))
-      layers2.zip(levels to 1 by -1).foreach { case (a, l) =>
-        a.write.mode("overwrite").parquet(upperAdjacencyLevelDir(next, l))
-      }
-      te2.write.mode("overwrite").parquet(topEntriesDir(next))
-    }
-    consolidateRoot(spark, root)(rewriteInto)
+    consolidateLayersRoot(spark, root, corpus, idCol, vecCol, deletes,
+      degree, d => (levels to 1 by -1).map(upperAdjacencyLevelDir(d, _)),
+      topEntriesDir)
   }
 
   /** MIPS-routed beam walk — the inner-product member of the metric ×
@@ -1233,22 +1114,9 @@ object GraphAnn {
   def beamSearchMips(adj: DataFrame, corpus: DataFrame, idCol: String,
                      vecCol: String, query: Array[Float], entryId: Long,
                      k: Int, beamWidth: Int = 4, rounds: Int = 3,
-                     degree: Int = 8): DataFrame = {
-    val qLit = typedlit(query.toSeq)
-    def ipRoute(ids: Seq[Long]): Array[(Long, Double)] =
-      if (ids.isEmpty) Array.empty
-      else corpus.where(col(idCol).isin(ids: _*))
-        .select(col(idCol).cast("long"),
-          -round(VectorFunctions.dot(col(vecCol), qLit), 4))
-        .collect().map(r => (r.getLong(0), r.getDouble(1)))
-    val vis = walkVisitedBy(adj, ipRoute, Seq(entryId), nSeeds = 1,
-      beamWidth, rounds, degree)
-    resultDf(corpus.sparkSession, idCol,
-        vis.sortBy { case (id, d) => (d, id) })
-      .select(col(idCol), (-col("distance")).as("ip"))
-      .orderBy(col("ip").desc, col(idCol).asc)
-      .limit(k)
-  }
+                     degree: Int = 8): DataFrame =
+    similarityWalk(adj, corpus, idCol, vecCol, query, entryId, k,
+      beamWidth, rounds, degree, VectorFunctions.dot, "ip")
 
   /** Cosine-routed graph walk — the [[beamSearchMips]] comparator with
     * the normalize-then-IP reduction folded into the score (Milvus's
@@ -1260,21 +1128,27 @@ object GraphAnn {
   def beamSearchCosine(adj: DataFrame, corpus: DataFrame, idCol: String,
                        vecCol: String, query: Array[Float], entryId: Long,
                        k: Int, beamWidth: Int = 4, rounds: Int = 3,
-                       degree: Int = 8): DataFrame = {
-    val qLit = typedlit(query.toSeq)
-    def cosRoute(ids: Seq[Long]): Array[(Long, Double)] =
-      if (ids.isEmpty) Array.empty
-      else corpus.where(col(idCol).isin(ids: _*))
-        .select(col(idCol).cast("long"),
-          -round(graft.functions.VectorFunctions.cosineSim(col(vecCol),
-            qLit), 4))
-        .collect().map(r => (r.getLong(0), r.getDouble(1)))
-    val vis = walkVisitedBy(adj, cosRoute, Seq(entryId), nSeeds = 1,
-      beamWidth, rounds, degree)
+                       degree: Int = 8): DataFrame =
+    similarityWalk(adj, corpus, idCol, vecCol, query, entryId, k,
+      beamWidth, rounds, degree, VectorFunctions.cosineSim, "cosine")
+
+  /** The similarity-routed walk behind [[beamSearchMips]] and
+    * [[beamSearchCosine]]: route = −round(sim(vec, query), 4) through
+    * the ascending walk, result = the visited set's top-k by
+    * (`scoreName` desc, id asc). */
+  private def similarityWalk(adj: DataFrame, corpus: DataFrame,
+                             idCol: String, vecCol: String,
+                             query: Array[Float], entryId: Long, k: Int,
+                             beamWidth: Int, rounds: Int, degree: Int,
+                             sim: (Column, Column) => Column,
+                             scoreName: String): DataFrame = {
+    val route = -round(sim(col(vecCol), typedlit(query.toSeq)), 4)
+    val vis = walkVisitedBy(adj, pointScores(corpus, idCol, route),
+      Seq(entryId), nSeeds = 1, beamWidth, rounds, degree)
     resultDf(corpus.sparkSession, idCol,
         vis.sortBy { case (id, d) => (d, id) })
-      .select(col(idCol), (-col("distance")).as("cosine"))
-      .orderBy(col("cosine").desc, col(idCol).asc)
+      .select(col(idCol), (-col("distance")).as(scoreName))
+      .orderBy(col(scoreName).desc, col(idCol).asc)
       .limit(k)
   }
 
@@ -1292,9 +1166,16 @@ object GraphAnn {
                          entryId: Long,
                          predicate: org.apache.spark.sql.Column, k: Int,
                          beamWidth: Int = 6, rounds: Int = 3,
-                         degree: Int = 8): DataFrame = {
-    val vis = walkVisited(adj, corpus, idCol, vecCol, query, entryId,
-      beamWidth, rounds, degree)
+                         degree: Int = 8): DataFrame =
+    predicateTopK(corpus, idCol, walkVisited(adj, corpus, idCol, vecCol,
+      query, entryId, beamWidth, rounds, degree), predicate, k)
+
+  /** The predicate-filtered serves' shared tail: `predicate` evaluated
+    * on the corpus rows of the visited ids only (one pushed `id IN`
+    * point lookup), then the top-k of the surviving visited pairs. */
+  private def predicateTopK(corpus: DataFrame, idCol: String,
+                            vis: Seq[(Long, Double)], predicate: Column,
+                            k: Int): DataFrame = {
     val keep = corpus.where(col(idCol).isin(vis.map(_._1): _*))
       .where(predicate)
       .select(col(idCol).cast("long")).collect().map(_.getLong(0)).toSet
@@ -1341,10 +1222,11 @@ object GraphAnn {
     * `maxBeamWidth` (the walk budget is rounds·beam·degree point
     * lookups — a cap keeps the serving cost a plan constant). Below
     * sel = base/maxBeamWidth the cap saturates and recall decays again —
-    * that is the dispatch floor where [[filteredSearchAuto]] abandons
-    * the graph and scans the predicate's rows exactly (a VERY selective
-    * predicate means the filtered subset is small; with the predicate
-    * pushed to the scan, exact top-k over it is the better plan — the
+    * that is the dispatch floor where [[Router.plan]]
+    * (`exactFloorSelectivity`) abandons the indexed tiers and scans the
+    * predicate's rows exactly (a VERY selective predicate means the
+    * filtered subset is small; with the predicate pushed to the scan,
+    * exact top-k over it is the better plan — the
     * IVF-filtered fallback of Filtered-DiskANN deployments, Gollapudi
     * et al. 2023 §5). Pure arithmetic, replayed by the DuckDB oracle
     * from the fixture, so a drifted derivation hash-mismatches. */
@@ -1435,45 +1317,12 @@ object GraphAnn {
                               baseBeamWidth: Int = 4, rounds: Int = 4,
                               degree: Int = 8, maxBeamWidth: Int = 64,
                               nSeeds: Int = 2): DataFrame = {
-    val entryIds = entries.select(col("entry_id").cast("long"))
-      .collect().map(_.getLong(0)).toSeq
+    val entryIds = entryIdsOf(entries)
     val beamWidth = adaptiveBeamWidth(baseBeamWidth, selectivity,
       maxBeamWidth)
-    val vis = walkVisitedSeeded(adj, corpus, idCol, vecCol, query,
-      entryIds, nSeeds, beamWidth, rounds, degree)
-    val keep = corpus.where(col(idCol).isin(vis.map(_._1): _*))
-      .where(predicate)
-      .select(col(idCol).cast("long")).collect().map(_.getLong(0)).toSet
-    val top = vis.filter { case (id, _) => keep(id) }
-      .sortBy { case (id, d) => (d, id) }.take(k)
-    resultDf(corpus.sparkSession, idCol, top)
-  }
-
-  /** Filtered search with the selectivity dispatch: adaptive graph walk
-    * while the widened beam fits under `maxBeamWidth`; below that floor
-    * (sel < base/maxBeamWidth) the predicate is selective enough that
-    * an EXACT top-k over the pushed-predicate scan is the better plan —
-    * approximation buys nothing when the candidate set is tiny, and the
-    * label-blind walk would need an unbounded beam to hit it. */
-  def filteredSearchAuto(adj: DataFrame, corpus: DataFrame, idCol: String,
-                         vecCol: String, query: Array[Float], entryId: Long,
-                         predicate: org.apache.spark.sql.Column, k: Int,
-                         selectivity: Double, baseBeamWidth: Int = 4,
-                         rounds: Int = 4, degree: Int = 8,
-                         maxBeamWidth: Int = 64): DataFrame = {
-    require(selectivity > 0 && selectivity <= 1,
-      s"selectivity must be in (0,1], got $selectivity")
-    if (baseBeamWidth / selectivity > maxBeamWidth) {
-      val qLit = typedlit(query.toSeq)
-      corpus.where(predicate)
-        .select(col(idCol).cast("long").as(idCol),
-          round(VectorFunctions.l2Sq(col(vecCol), qLit), 4).as("distance"))
-        .orderBy(col("distance").asc, col(idCol).asc)
-        .limit(k)
-    } else
-      filteredBeamSearchAdaptive(adj, corpus, idCol, vecCol, query,
-        entryId, predicate, k, selectivity, baseBeamWidth, rounds, degree,
-        maxBeamWidth)
+    predicateTopK(corpus, idCol, walkVisitedSeeded(adj, corpus, idCol,
+      vecCol, query, entryIds, nSeeds, beamWidth, rounds, degree),
+      predicate, k)
   }
 
   /** Range search over the graph (Milvus `range_search` parity for this
@@ -1536,11 +1385,8 @@ object GraphAnn {
   }
 
   /** [[append]] over PRE-COLLECTED (id, vector) batch rows — the shared
-    * body, exposed so [[appendLayered]] can decide base rows AND upper
-    * membership with ONE bounded collect instead of three (round 16:
-    * append's internal collect + the upper-membership collect + the
-    * upper append's collect were three driver round-trips over the
-    * same ≤ maxBatch rows). */
+    * body, so [[appendLayeredMulti]] decides the base rows AND every
+    * layer's membership with ONE bounded collect. */
   private def appendRows(adj: DataFrame, corpus: DataFrame,
                          idCol: String, vecCol: String,
                          rows: Seq[(Long, Seq[Float])], entryId: Long,
@@ -1597,14 +1443,21 @@ object GraphAnn {
     * plan constant, so the loop unrolls into one declarative plan; at
     * production round counts, checkpoint the visited set between rounds
     * to keep lineage flat. */
-  /** [[bulkBeamSearch]] with PER-QUERY seed pairs — the bulk walk's
-    * seeded form (round 12): `seeds` is a (qid, id) frame, each query's
-    * walk starts from ITS OWN seed set instead of the shared entry.
-    * This is the base-layer half of [[layeredSearchBulk]] (each query's
-    * upper-walk result seeds its base walk), and more generally the
-    * bulk form of any externally-routed start (a per-shard entry table,
-    * a cached previous answer). Same round machinery, state and bounds
-    * as [[bulkBeamSearch]]; the seed distances are one equi-join, no
+  def bulkBeamSearch(adj: DataFrame, corpus: DataFrame, idCol: String,
+                     vecCol: String, queries: DataFrame, qidCol: String,
+                     qvecCol: String, entryId: Long, k: Int,
+                     beamWidth: Int = 4, rounds: Int = 3): DataFrame =
+    topKPerQid(bulkVisited(adj, corpus, idCol, vecCol, queries, qidCol,
+      qvecCol, Left(entryId), beamWidth, rounds), idCol, k)
+
+  /** [[bulkBeamSearch]] with PER-QUERY seed pairs: `seeds` is a
+    * (qid, id) frame, each query's walk starts from ITS OWN seed set
+    * instead of the shared entry. This is the base-layer half of
+    * [[layeredSearchBulk]] (each query's upper-walk result seeds its
+    * base walk), and more generally the bulk form of any
+    * externally-routed start (a per-shard entry table, a cached
+    * previous answer). Same round machinery, state and bounds as
+    * [[bulkBeamSearch]]; the seed distances are one equi-join, no
     * per-query driver work at all. */
   def bulkBeamSearchSeeded(adj: DataFrame, corpus: DataFrame,
                            idCol: String, vecCol: String,
@@ -1612,8 +1465,8 @@ object GraphAnn {
                            qvecCol: String, seeds: DataFrame, k: Int,
                            beamWidth: Int = 4,
                            rounds: Int = 3): DataFrame =
-    topKPerQid(bulkVisitedSeeded(adj, corpus, idCol, vecCol, queries,
-      qidCol, qvecCol, seeds, beamWidth, rounds), idCol, k)
+    topKPerQid(bulkVisited(adj, corpus, idCol, vecCol, queries, qidCol,
+      qvecCol, Right(seeds), beamWidth, rounds), idCol, k)
 
   /** Per-qid top-k cut of a bulk walk's (qid, id, d) visited frame —
     * the shared tail of every bulk serve (masked variants anti-join the
@@ -1627,15 +1480,16 @@ object GraphAnn {
       .select(col("qid"), col("id").as(idCol), col("d").as("distance"))
   }
 
-  /** The seeded bulk walk's VISITED set (qid, id, d) — exposed so the
-    * masked serves can apply the tombstone anti-join before the top-k
-    * cut. */
-  private def bulkVisitedSeeded(adj: DataFrame, corpus: DataFrame,
-                                idCol: String, vecCol: String,
-                                queries: DataFrame, qidCol: String,
-                                qvecCol: String, seeds: DataFrame,
-                                beamWidth: Int,
-                                rounds: Int): DataFrame = {
+  /** The bulk walk's VISITED set (qid, id, d) after `rounds` rounds —
+    * exposed to the serves so the masked ones can apply the tombstone
+    * anti-join before the top-k cut. `start` is either the shared entry
+    * id every query starts from ([[bulkBeamSearch]]) or a (qid, id)
+    * frame of per-query seeds ([[bulkBeamSearchSeeded]]). */
+  private def bulkVisited(adj: DataFrame, corpus: DataFrame,
+                          idCol: String, vecCol: String,
+                          queries: DataFrame, qidCol: String,
+                          qvecCol: String, start: Either[Long, DataFrame],
+                          beamWidth: Int, rounds: Int): DataFrame = {
     val q = queries.select(col(qidCol).cast("long").as("qid"),
       col(qvecCol).as("__qv"))
     val ids = corpus.select(col(idCol).cast("long").as("id"),
@@ -1644,124 +1498,55 @@ object GraphAnn {
       cand.join(q, Seq("qid")).join(ids, Seq("id"))
         .select(col("qid"), col("id"),
           round(VectorFunctions.l2Sq(col("__qv"), col("__cv")), 4).as("d"))
-    // localCheckpoint the (bounded: nSeeds·|queries| rows) seed state:
-    // the seed distances arrive through a double equi-join whose
-    // constraint set trips Spark's Union constraint-rewrite
-    // (UnionBase.rewriteConstraints AttributeMap miss) when the round
-    // loop unions onto it — truncating lineage here sidesteps it and
-    // also keeps the per-round plan flat, like the loop's own
-    // checkpoint cadence
-    var visited = distTo(seeds
-      .select(col("qid").cast("long").as("qid"),
-        col("id").cast("long").as("id")).distinct())
-      .localCheckpoint()
-    var expanded = visited.select("qid", "id").limit(0)
+    var (visited, expanded, step) = start match {
+      case Right(seeds) =>
+        // localCheckpoint the (bounded: nSeeds·|queries| rows) seed
+        // state: the seed distances arrive through a double equi-join
+        // whose constraint set trips Spark's Union constraint-rewrite
+        // (UnionBase.rewriteConstraints AttributeMap miss) when the
+        // round loop unions onto it — truncating lineage here sidesteps
+        // it and also keeps the per-round plan flat, like the loop's
+        // own checkpoint cadence
+        val v0 = distTo(seeds
+          .select(col("qid").cast("long").as("qid"),
+            col("id").cast("long").as("id")).distinct())
+          .localCheckpoint()
+        (v0, v0.select("qid", "id").limit(0), 0)
+      case Left(entryId) =>
+        // Round 0: every query starts at the shared entry point. The
+        // entry VECTOR is a bounded 1-row collect (the query-vector
+        // contract), so the seed is a pure projection over the query
+        // batch — no join, no nested-loop term anywhere in the walk.
+        val entryRows = corpus.where(col(idCol) === entryId)
+          .select(col(vecCol)).limit(2).collect()
+        require(entryRows.length == 1,
+          s"graph-ann bulk: entry id $entryId must match exactly one " +
+            s"corpus row, found ${entryRows.length}")
+        val v0 = q.select(col("qid"),
+          lit(entryId).cast("long").as("id"),
+          round(VectorFunctions.l2Sq(col("__qv"),
+            typedlit(entryRows(0).getSeq[Float](0))), 4).as("d"))
+        if (rounds < 1) (v0, v0.select("qid", "id").limit(0), 0)
+        else {
+          // Round 1 unrolled: with one visited node, every query's
+          // frontier IS the entry — and its adjacency row is a
+          // degree-bounded 1-src pushed lookup, so collecting it keeps
+          // the round a pure projection (explode of ≤ degree literal ids
+          // per query). Left as a join, Catalyst constant-folds the
+          // entry id out of the join key and the round degenerates to a
+          // nested loop.
+          val entryDsts = adj.where(col("src") === entryId)
+            .select(col("dst").cast("long")).collect().map(_.getLong(0))
+            .toSeq.distinct.sorted
+          val fresh = q.select(col("qid"),
+              explode(typedlit(entryDsts)).as("id"))
+            .where(col("id") =!= entryId)
+          (if (entryDsts.isEmpty) v0 else v0.unionByName(distTo(fresh)),
+            q.select(col("qid"), lit(entryId).cast("long").as("id")), 1)
+        }
+    }
     val byQid = Window.partitionBy(col("qid"))
       .orderBy(col("d").asc, col("id").asc)
-    var step = 0
-    while (step < rounds) {
-      val frontier = visited
-        .join(expanded, Seq("qid", "id"), "left_anti")
-        .withColumn("__rn", row_number().over(byQid))
-        .where(col("__rn") <= beamWidth)
-        .select("qid", "id")
-      expanded = expanded.unionByName(frontier)
-      val fresh = frontier
-        .join(adj.select(col("src").as("id"), col("dst")), Seq("id"))
-        .select(col("qid"), col("dst").as("id")).distinct()
-        .join(visited.select("qid", "id"), Seq("qid", "id"), "left_anti")
-      visited = visited.unionByName(distTo(fresh))
-      step += 1
-      // lineage control — see [[bulkBeamSearch]]'s round loop
-      if (step < rounds && step % 2 == 0) {
-        visited = visited.localCheckpoint()
-        expanded = expanded.localCheckpoint()
-      }
-    }
-    visited
-  }
-
-  /** BULK layered serve — [[layeredSearch]] for a query batch as ONE
-    * plan per stage (round 12): the batch walks the upper layer
-    * together ([[bulkBeamSearch]] from the shared upper entry), each
-    * query's top-`nSeeds` upper results seed ITS base walk
-    * ([[bulkBeamSearchSeeded]]). Per-round state stays linear in the
-    * batch and corpus-size-independent; nothing per-query happens on
-    * the driver. */
-  def layeredSearchBulk(adjUpper: DataFrame, upperEntryId: Long,
-                        adjBase: DataFrame, corpus: DataFrame,
-                        idCol: String, vecCol: String,
-                        queries: DataFrame, qidCol: String,
-                        qvecCol: String, k: Int, beamWidth: Int = 4,
-                        upperRounds: Int = 3, rounds: Int = 3,
-                        nSeeds: Int = 2): DataFrame = {
-    val upperTop = bulkBeamSearch(adjUpper, corpus, idCol, vecCol,
-      queries, qidCol, qvecCol, upperEntryId, k = nSeeds, beamWidth,
-      upperRounds)
-    val seeds = upperTop.select(col("qid"), col(idCol).as("id"))
-    bulkBeamSearchSeeded(adjBase, corpus, idCol, vecCol, queries,
-      qidCol, qvecCol, seeds, k, beamWidth, rounds)
-  }
-
-  def bulkBeamSearch(adj: DataFrame, corpus: DataFrame, idCol: String,
-                     vecCol: String, queries: DataFrame, qidCol: String,
-                     qvecCol: String, entryId: Long, k: Int,
-                     beamWidth: Int = 4, rounds: Int = 3): DataFrame =
-    topKPerQid(bulkVisitedFrom(adj, corpus, idCol, vecCol, queries,
-      qidCol, qvecCol, entryId, beamWidth, rounds), idCol, k)
-
-  /** The entry-seeded bulk walk's VISITED set (qid, id, d) — see
-    * [[bulkVisitedSeeded]]. */
-  private def bulkVisitedFrom(adj: DataFrame, corpus: DataFrame,
-                              idCol: String, vecCol: String,
-                              queries: DataFrame, qidCol: String,
-                              qvecCol: String, entryId: Long,
-                              beamWidth: Int, rounds: Int): DataFrame = {
-    val q = queries.select(col(qidCol).cast("long").as("qid"),
-      col(qvecCol).as("__qv"))
-    val ids = corpus.select(col(idCol).cast("long").as("id"),
-      col(vecCol).as("__cv"))
-    def distTo(cand: DataFrame): DataFrame =
-      cand.join(q, Seq("qid")).join(ids, Seq("id"))
-        .select(col("qid"), col("id"),
-          round(VectorFunctions.l2Sq(col("__qv"), col("__cv")), 4).as("d"))
-    // Round 0: every query starts at the shared entry point. The entry
-    // VECTOR is a bounded 1-row collect (the query-vector contract), so
-    // the seed is a pure projection over the query batch — no join, no
-    // nested-loop term anywhere in the walk.
-    val entryRows = corpus.where(col(idCol) === entryId)
-      .select(col(vecCol)).limit(2).collect()
-    require(entryRows.length == 1,
-      s"graph-ann bulk: entry id $entryId must match exactly one corpus " +
-        s"row, found ${entryRows.length}")
-    val entryVec = entryRows(0).getSeq[Float](0)
-    var visited = q.select(col("qid"),
-      lit(entryId).cast("long").as("id"),
-      round(VectorFunctions.l2Sq(col("__qv"), typedlit(entryVec)), 4)
-        .as("d"))
-    var expanded = visited.select("qid", "id").limit(0)
-    val byQid = Window.partitionBy(col("qid"))
-      .orderBy(col("d").asc, col("id").asc)
-    var step = 0
-    if (rounds >= 1) {
-      // Round 1 unrolled: with one visited node, every query's frontier
-      // IS the entry — and its adjacency row is a degree-bounded 1-src
-      // pushed lookup, so collecting it keeps the round a pure
-      // projection (explode of ≤ degree literal ids per query). Left as
-      // a join, Catalyst constant-folds the entry id out of the join key
-      // and the round degenerates to a nested loop.
-      val entryDsts = adj.where(col("src") === entryId)
-        .select(col("dst").cast("long")).collect().map(_.getLong(0))
-        .toSeq.distinct.sorted
-      expanded = q.select(col("qid"), lit(entryId).cast("long").as("id"))
-      if (entryDsts.nonEmpty) {
-        val fresh = q.select(col("qid"),
-            explode(typedlit(entryDsts)).as("id"))
-          .where(col("id") =!= entryId)
-        visited = visited.unionByName(distTo(fresh))
-      }
-      step = 1
-    }
     while (step < rounds) {
       val frontier = visited
         .join(expanded, Seq("qid", "id"), "left_anti")
@@ -1790,8 +1575,30 @@ object GraphAnn {
     visited
   }
 
+  /** BULK layered serve — [[layeredSearchMulti]] over one upper layer
+    * for a query batch, as ONE plan per stage: the batch walks the upper
+    * layer together ([[bulkBeamSearch]] from the shared upper entry),
+    * each query's top-`nSeeds` upper results seed ITS base walk
+    * ([[bulkBeamSearchSeeded]]). Per-round state stays linear in the
+    * batch and corpus-size-independent; nothing per-query happens on
+    * the driver. */
+  def layeredSearchBulk(adjUpper: DataFrame, upperEntryId: Long,
+                        adjBase: DataFrame, corpus: DataFrame,
+                        idCol: String, vecCol: String,
+                        queries: DataFrame, qidCol: String,
+                        qvecCol: String, k: Int, beamWidth: Int = 4,
+                        upperRounds: Int = 3, rounds: Int = 3,
+                        nSeeds: Int = 2): DataFrame = {
+    val upperTop = bulkBeamSearch(adjUpper, corpus, idCol, vecCol,
+      queries, qidCol, qvecCol, upperEntryId, k = nSeeds, beamWidth,
+      upperRounds)
+    val seeds = upperTop.select(col("qid"), col(idCol).as("id"))
+    bulkBeamSearchSeeded(adjBase, corpus, idCol, vecCol, queries,
+      qidCol, qvecCol, seeds, k, beamWidth, rounds)
+  }
+
   /** [[layeredSearchBulk]] under the tombstone mask — the bulk twin of
-    * [[layeredSearchMasked]], same contract: both walks route
+    * [[layeredSearchMultiMasked]], same contract: both walks route
     * label-blind, both post-filter through the broadcast tombstone
     * anti-join; the upper's masked per-qid top-`nSeeds` seed each base
     * walk, the base's masked visited set takes the top-k cut. */
@@ -1806,18 +1613,13 @@ object GraphAnn {
     val del = broadcast(deletes
       .select(col(deletes.columns.head).cast("long").as("id"))
       .distinct())
-    val byQid = Window.partitionBy(col("qid"))
-      .orderBy(col("d").asc, col("id").asc)
-    val seeds = bulkVisitedFrom(adjUpper, corpus, idCol, vecCol,
-        queries, qidCol, qvecCol, upperEntryId, beamWidth, upperRounds)
-      .join(del, Seq("id"), "left_anti")
-      .withColumn("__rn", row_number().over(byQid))
-      .where(col("__rn") <= nSeeds)
-      .select("qid", "id")
-    topKPerQid(
-      bulkVisitedSeeded(adjBase, corpus, idCol, vecCol, queries, qidCol,
-          qvecCol, seeds, beamWidth, rounds)
-        .join(del, Seq("id"), "left_anti"),
-      idCol, k)
+    def liveTopK(start: Either[Long, DataFrame], adj: DataFrame,
+                 walkRounds: Int, n: Int): DataFrame =
+      topKPerQid(bulkVisited(adj, corpus, idCol, vecCol, queries, qidCol,
+          qvecCol, start, beamWidth, walkRounds)
+        .join(del, Seq("id"), "left_anti"), idCol, n)
+    val seeds = liveTopK(Left(upperEntryId), adjUpper, upperRounds, nSeeds)
+      .select(col("qid"), col(idCol).as("id"))
+    liveTopK(Right(seeds), adjBase, rounds, k)
   }
 }

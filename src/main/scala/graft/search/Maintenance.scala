@@ -208,11 +208,11 @@ object Maintenance {
     *    [[SparseVec.searchIndex]] pays the mask anti-join until
     *    [[SparseVec.compactTombstones]] folds. The family's id column
     *    is the same `idCol`.
-    *  - `consolidate_upper_graph` (round 13, when `adjUpper` is given)
+    *  - `consolidate_upper_graph` (when `adjUpper` is given)
     *    — the layered graph's UPPER adjacency carries its own dead-edge
     *    debt (`graphDebtFrac` of its edges): a tombstoned upper node
     *    keeps doing zoom routing on every layered serve until
-    *    [[GraphAnn.consolidateDeletesLayered]] folds both layers.
+    *    [[GraphAnn.consolidateDeletesLayeredRoot]] folds both layers.
     *
     * Every metric/threshold stays `metric > threshold` in absolute
     * rows derived from artifacts the caller can inspect — bounded
@@ -315,10 +315,10 @@ object Maintenance {
             Tombstones.table(spark, sd, idCol)
               .agg(count(lit(1)).as("value"))))
       }
-    // layered family (round 13, opt-in): the UPPER adjacency's dead-
-    // edge debt — a tombstoned upper node keeps doing zoom work on
-    // every layered serve until [[GraphAnn.consolidateDeletesLayered]]
-    // folds it; same distinct-(src,dst) metric as the base row
+    // layered family (opt-in): the UPPER adjacency's dead-edge debt —
+    // a tombstoned upper node keeps doing zoom work on every layered
+    // serve until [[GraphAnn.consolidateDeletesLayeredRoot]] folds it;
+    // same distinct-(src,dst) metric as the base row
     val upperDfs: Seq[DataFrame] = adjUpper match {
       case None => Nil
       case Some(ua) => Seq(

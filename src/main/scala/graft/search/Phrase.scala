@@ -1,5 +1,6 @@
 package graft.search
 
+import graft.text.TextAnalysis
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -39,7 +40,7 @@ object Phrase {
     // Same token stream as Bm25Index: whitespace split, empties dropped.
     // posexplode AFTER the filter so pos is the index in the REAL token
     // sequence (matches the oracle's list_filter-then-range replay).
-    val toks = filter(split(col(textCol), "\\s+"), t => length(t) > 0)
+    val toks = TextAnalysis.wsTerms(col(textCol))
     docs.select(col(idCol).cast("long").as("id"),
       posexplode(toks).as(Seq("pos", "term")))
   }

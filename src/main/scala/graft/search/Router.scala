@@ -35,8 +35,7 @@ import org.apache.spark.sql.types._
   *     filter-capable), AND (selectivity ≥
   *     `exactFloorSelectivity` OR the tier is 'flat') — below the floor
   *     the filtered subset is so small that exact-over-survivors beats
-  *     any index ([[GraphAnn.filteredSearchAuto]]'s dispatch rule,
-  *     promoted to the router) — AND (round 11) its serving residency
+  *     any index — AND (round 11) its serving residency
   *     `mem_bytes` fits `memoryBudget` when one is given: the panel's
   *     bytes column (the `quantizer_error_report` arithmetic promoted
   *     to an input) is what lets a RAM-constrained deployment route to

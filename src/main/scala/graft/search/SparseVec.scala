@@ -363,9 +363,7 @@ object SparseVec {
       compactPostings(spark, d, idCol)
       Tombstones.clear(spark, d)
     }
-    if (AliasedIndex.publishedVersions(spark, indexDir).nonEmpty)
-      AliasedIndex.maintain(spark, indexDir)(inPlace)
-    else inPlace(indexDir)
+    AliasedIndex.maintain(spark, indexDir)(inPlace)
   }
 
   /** UPSERT — delete-then-insert with an immediate fold (the
@@ -382,9 +380,9 @@ object SparseVec {
     // atomically — a reader never resolves a version whose postings
     // dir is mid-rewrite, and the new version number flips
     // [[Router.artifactFingerprint]] so cached routed/panel decisions
-    // re-measure (round-13 ADVICE fix: resolving the root FIRST used
-    // to drop the fold onto the flat in-place path, mutating the
-    // served version under readers and under the fingerprint).
+    // re-measure. Resolving the root FIRST would drop the fold onto the
+    // flat in-place path, mutating the served version under readers
+    // and under the fingerprint.
     def verb(d: String): Unit = {
       Tombstones.record(batch.select(col(idCol)), d, idCol)
       val layout = compactPostings(spark, d, idCol)
@@ -400,9 +398,7 @@ object SparseVec {
       appendDimStatsRaising(spark, post, d)
       writePostings(post, d, "append", layout)
     }
-    if (AliasedIndex.publishedVersions(spark, indexDir0).nonEmpty)
-      AliasedIndex.maintain(spark, indexDir0)(verb)
-    else verb(indexDir0)
+    AliasedIndex.maintain(spark, indexDir0)(verb)
   }
 
   /** Serve top-k from the STORED artifact: the query's (≤ topN) dims

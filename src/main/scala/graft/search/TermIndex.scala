@@ -1,6 +1,7 @@
 package graft.search
 
 import graft.core.Artifacts
+import graft.text.TextAnalysis
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -31,7 +32,7 @@ object TermIndex {
 
   private def sortedTokens(docs: DataFrame, idCol: String,
                            textCol: String, nFiles: Int): DataFrame = {
-    val toks = filter(split(col(textCol), "\\s+"), t => length(t) > 0)
+    val toks = TextAnalysis.wsTerms(col(textCol))
     docs.select(col(idCol).cast("long").as("id"), explode(toks).as("term"))
       .groupBy(col("id"), col("term"))
       .agg(count(lit(1)).as("tf"))
@@ -121,11 +122,8 @@ object TermIndex {
     // atomically (readers never see the rename-aside window below); a
     // flat layout compacts in place with the documented single-writer
     // transient window
-    if (AliasedIndex.publishedVersions(spark, indexDir).nonEmpty)
-      AliasedIndex.maintain(spark, indexDir) { d =>
-        compactSegmentsInPlace(spark, d, nFiles)
-      }
-    else compactSegmentsInPlace(spark, indexDir, nFiles)
+    AliasedIndex.maintain(spark, indexDir)(
+      compactSegmentsInPlace(spark, _, nFiles))
 
   private def compactSegmentsInPlace(spark: SparkSession, indexDir: String,
                                      nFiles: Int): Unit = {
@@ -182,7 +180,7 @@ object TermIndex {
     * [[buildTrigrams]]/[[infixSearch]] since round 12. */
   def buildSortedReversed(docs: DataFrame, idCol: String, textCol: String,
                           indexDir: String, nFiles: Int = 8): Unit = {
-    val toks = filter(split(col(textCol), "\\s+"), t => length(t) > 0)
+    val toks = TextAnalysis.wsTerms(col(textCol))
     docs.select(col(idCol).cast("long").as("id"), explode(toks).as("term"))
       .groupBy(col("id"), col("term"))
       .agg(count(lit(1)).as("tf"))
@@ -261,7 +259,7 @@ object TermIndex {
                      indexDir0: String): Unit = {
     val spark = batch.sparkSession
     val indexDir = AliasedIndex.resolveDir(spark, indexDir0)
-    val toks = filter(split(col(textCol), "\\s+"), t => length(t) > 0)
+    val toks = TextAnalysis.wsTerms(col(textCol))
     batch.select(explode(toks).as("term")).distinct()
       .where(length(col("term")) >= 3)
       .select(col("term"), explode(expr(

@@ -16,6 +16,12 @@ object TextAnalysis {
   /** Whitespace tokens (reference tokenization analog). */
   def wsTokens(text: Column): Column = split(text, "\\s+")
 
+  /** Lexical terms: the whitespace tokens minus the empty token a
+    * leading separator leaves — the term definition every lexical index
+    * and scorer uses. */
+  def wsTerms(text: Column): Column =
+    filter(wsTokens(text), t => length(t) > 0)
+
   /** BPE-ish subword proxy: letter runs, single digits, single symbols. */
   val BpePattern: String = "[A-Za-z]+|[0-9]|[^A-Za-z0-9\\s]"
 

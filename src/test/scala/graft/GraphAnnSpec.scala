@@ -195,23 +195,30 @@ class GraphAnnSpec extends SparkSpec {
   test("MIPS walk: complete graph serves exact IP top-k, ip is exact") {
     import graft.functions.VectorFunctions
     // degree ≥ n ⇒ complete graph: one round from any entry visits the
-    // whole corpus, so the MIPS walk's result must equal EXACT inner-
-    // product top-k with the (ip desc, id asc) ordering it advertises
+    // whole corpus, so each similarity walk's result must equal the
+    // EXACT top-k with the (score desc, id asc) ordering it advertises
     val full = GraphAnn.Params(degree = 24, nlist = 2, overlap = 2)
     val adj = GraphAnn.buildAdjacency(corpus, "vec_id", "embedding", full)
     val entryId = GraphAnn.medoid(corpus, "vec_id", "embedding")
       .collect()(0).getLong(0)
     val q = corpus.where(col("vec_id") === 3).select("embedding")
       .collect()(0).getSeq[Float](0).toArray
-    val got = GraphAnn.beamSearchMips(adj, corpus, "vec_id", "embedding",
-        q, entryId, k = 5, beamWidth = 1, rounds = 1, degree = 24)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val exact = corpus.select(col("vec_id"),
-        round(VectorFunctions.dot(col("embedding"),
-          typedlit(q.toSeq)), 4).as("ip"))
-      .collect().map(r => (r.getLong(0), r.getDouble(1)))
-      .sortBy { case (id, ip) => (-ip, id) }.take(5).toSeq
-    assert(got == exact)
+    val qLit = typedlit(q.toSeq)
+    Seq(
+      ("mips", GraphAnn.beamSearchMips(adj, corpus, "vec_id", "embedding",
+          q, entryId, k = 5, beamWidth = 1, rounds = 1, degree = 24),
+        VectorFunctions.dot(col("embedding"), qLit)),
+      ("cosine", GraphAnn.beamSearchCosine(adj, corpus, "vec_id",
+          "embedding", q, entryId, k = 5, beamWidth = 1, rounds = 1,
+          degree = 24),
+        VectorFunctions.cosineSim(col("embedding"), qLit))
+    ).foreach { case (name, walk, score) =>
+      val got = walk.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+      val exact = corpus.select(col("vec_id"), round(score, 4))
+        .collect().map(r => (r.getLong(0), r.getDouble(1)))
+        .sortBy { case (id, s) => (-s, id) }.take(5).toSeq
+      assert(got == exact, s"$name walk $got != exact $exact")
+    }
   }
 
   test("lsh build: degree bound, rebuild determinism, servable adjacency") {
@@ -291,14 +298,20 @@ class GraphAnnSpec extends SparkSpec {
     val entry = GraphAnn.medoid(corpus, "vec_id", "embedding")
       .collect()(0).getLong(0)
     val query = Array(0.5f, 0.5f, 0.5f, 0.5f)
-    val a = GraphAnn.filteredBeamSearch(adj, corpus, "vec_id", "embedding",
-        query, entry, predicate = lit(true), k = 5,
-        beamWidth = 4, rounds = 3, degree = 23)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val b = GraphAnn.beamSearch(adj, corpus, "vec_id", "embedding",
-        query, entry, k = 5, beamWidth = 4, rounds = 3, degree = 23)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    assert(a == b)
+    def rows(df: DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    val b = rows(GraphAnn.beamSearch(adj, corpus, "vec_id", "embedding",
+      query, entry, k = 5, beamWidth = 4, rounds = 3, degree = 23))
+    // selectivity 1.0 keeps the base width; the medoid is the only seed
+    Seq(
+      "filteredBeamSearch" -> GraphAnn.filteredBeamSearch(adj, corpus,
+        "vec_id", "embedding", query, entry, predicate = lit(true), k = 5,
+        beamWidth = 4, rounds = 3, degree = 23),
+      "filteredBeamSearchMulti" -> GraphAnn.filteredBeamSearchMulti(adj,
+        corpus, "vec_id", "embedding", query,
+        Seq(entry).toDF("entry_id"), predicate = lit(true), k = 5,
+        selectivity = 1.0, baseBeamWidth = 4, rounds = 3, degree = 23)
+    ).foreach { case (name, df) => assert(rows(df) == b, name) }
   }
 
   test("alpha-RNG prune: diversity edges bridge what capped-kNN cliques " +
@@ -466,8 +479,8 @@ class GraphAnnSpec extends SparkSpec {
     val flat = ids(GraphAnn.beamSearchMulti(adj, corpus, "vec_id",
       "embedding", query, fent, k = 5, beamWidth = 4, rounds = 4,
       degree = 8, nSeeds = 1))
-    val layered = ids(GraphAnn.layeredSearch(uadj, uent, adj, corpus,
-      "vec_id", "embedding", query, k = 5, beamWidth = 4,
+    val layered = ids(GraphAnn.layeredSearchMulti(Seq(uadj), uent, adj,
+      corpus, "vec_id", "embedding", query, k = 5, beamWidth = 4,
       upperRounds = 4, rounds = 4, degree = 8, nSeeds = 2))
     assert(flat.intersect(exact).isEmpty,
       s"fixture broken: the flat walk crossed the chain in 4 rounds " +
@@ -503,7 +516,7 @@ class GraphAnnSpec extends SparkSpec {
     def ids(df: DataFrame): Seq[Long] =
       df.select("vec_id").as[Long].collect().toSeq
     // enough rounds that BOTH serves reach the far rung exactly
-    val plain = ids(GraphAnn.layeredSearch(uadj, uent, adj, c,
+    val plain = ids(GraphAnn.layeredSearchMulti(Seq(uadj), uent, adj, c,
       "vec_id", "embedding", query, k = 5, beamWidth = 4,
       upperRounds = 4, rounds = 4, degree = 8, nSeeds = 2))
     // tombstone the layered top-1 AND the first upper seed: the masked
@@ -513,8 +526,8 @@ class GraphAnnSpec extends SparkSpec {
         degree = 8, nSeeds = 1)
       .select("vec_id").as[Long].collect()(0)
     val deletes = Seq(plain.head, upperSeed1).distinct.toDF("vec_id")
-    val masked = ids(GraphAnn.layeredSearchMasked(uadj, uent, adj, c,
-      "vec_id", "embedding", query, k = 5, deletes, beamWidth = 4,
+    val masked = ids(GraphAnn.layeredSearchMultiMasked(Seq(uadj), uent,
+      adj, c, "vec_id", "embedding", query, k = 5, deletes, beamWidth = 4,
       upperRounds = 4, rounds = 4, degree = 8, nSeeds = 2))
     assert(!masked.contains(plain.head),
       "the tombstoned doc must be masked from the layered serve")
@@ -545,13 +558,27 @@ class GraphAnnSpec extends SparkSpec {
       .toSeq.sortBy(x => (x._1, x._3, x._2))
     val single = queries.collect().flatMap { qr =>
       val qv = qr.getSeq[Float](1).toArray
-      GraphAnn.layeredSearchMasked(uadj, uent, adj, c, "vec_id",
-          "embedding", qv, k = 5, deletes, beamWidth = 4,
+      GraphAnn.layeredSearchMultiMasked(Seq(uadj), uent, adj, c,
+          "vec_id", "embedding", qv, k = 5, deletes, beamWidth = 4,
           upperRounds = 4, rounds = 4, degree = 8, nSeeds = 2)
         .collect().map(r => (qr.getLong(0), r.getLong(0), r.getDouble(1)))
     }.toSeq.sortBy(x => (x._1, x._3, x._2))
     assert(bulk.nonEmpty && bulk == single)
     assert(bulk.forall { case (_, id, _) => !Set(90L, 91L, 34L)(id) })
+    val bulkPlain = GraphAnn.layeredSearchBulk(uadj, uentId, adj, c,
+        "vec_id", "embedding", queries, "qid", "qv", k = 5,
+        beamWidth = 4, upperRounds = 4, rounds = 4, nSeeds = 2)
+      .select("qid", "vec_id", "distance")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+      .toSeq.sortBy(x => (x._1, x._3, x._2))
+    val singlePlain = queries.collect().flatMap { qr =>
+      val qv = qr.getSeq[Float](1).toArray
+      GraphAnn.layeredSearchMulti(Seq(uadj), uent, adj, c, "vec_id",
+          "embedding", qv, k = 5, beamWidth = 4, upperRounds = 4,
+          rounds = 4, degree = 8, nSeeds = 2)
+        .collect().map(r => (qr.getLong(0), r.getLong(0), r.getDouble(1)))
+    }.toSeq.sortBy(x => (x._1, x._3, x._2))
+    assert(bulkPlain.nonEmpty && bulkPlain == singlePlain)
   }
 
   test("multi-level walk: nested level samples, 2-level stack reaches " +
@@ -671,21 +698,22 @@ class GraphAnnSpec extends SparkSpec {
     val batch = (200L until 216L).map { i =>
       (i, Array((16 * 3.0 + (i % 4) * 0.1).toFloat, 0.1f, 0f, 0f))
     }.toDF("vec_id", "embedding")
-    val res = GraphAnn.appendLayered(adj0, uadj0, c0, "vec_id",
+    val res = GraphAnn.appendLayeredMulti(adj0, Seq(uadj0), c0, "vec_id",
       "embedding", batch, baseEntryId = fent.collect()(0).getLong(0),
-      upperEntryId = uent.collect()(0).getLong(0))
+      layerEntryIds = Seq(uent.collect()(0).getLong(0)))
+    val (upperIds, adjUpper) = (res.levelIds.head, res.adjLayers.head)
     val expectedUpper = batch
       .where(GraphAnn.upperMember("vec_id")).select("vec_id")
       .as[Long].collect().toSeq.sorted
-    assert(res.upperIds == expectedUpper && expectedUpper.nonEmpty,
-      s"upper membership must follow the hash rule: ${res.upperIds}")
+    assert(upperIds == expectedUpper && expectedUpper.nonEmpty,
+      s"upper membership must follow the hash rule: $upperIds")
     val c1 = c0.unionByName(batch)
     // healthy post-ingest: membership/orphan/entry counters all 0
     // (test-ppm upper layer carries DEFAULT-rule violators, so check
     // against the ppm the fixture sampled with... the upper layer here
     // was built at ppm=300000, so audit with the same cut)
     val empty = spark.emptyDataset[Long].toDF("vec_id")
-    val h = IndexAudit.upperLayerChecks(res.adjacencyUpper, uent, c1,
+    val h = IndexAudit.upperLayerChecks(adjUpper, uent, c1,
         "vec_id", empty, ppm = 300000)
       .collect().map(x => x.getString(0) -> x.getLong(1)).toMap
     assert(h("upper_orphans") == 0L && h("upper_entry_dead") == 0L)
@@ -693,11 +721,11 @@ class GraphAnnSpec extends SparkSpec {
     // subset of the 300000 cut, so membership violations stay 0 too
     assert(h("upper_membership_violations") == 0L)
     // delete a rung of docs including an upper node: counters fire
-    val upperNode = res.adjacencyUpper.select(col("src").as("vec_id"))
+    val upperNode = adjUpper.select(col("src").as("vec_id"))
       .as[Long].collect().head
     val dels = Seq(upperNode).toDF("vec_id")
     val fired = IndexAudit.upperLayerChecks(
-        GraphAnn.consolidateDeletes(res.adjacencyUpper, c1, "vec_id",
+        GraphAnn.consolidateDeletes(adjUpper, c1, "vec_id",
           "embedding", dels),
         uent, c1.join(dels, Seq("vec_id"), "left_anti"), "vec_id",
         dels, ppm = 300000)
@@ -715,7 +743,7 @@ class GraphAnnSpec extends SparkSpec {
     graft.search.AliasedIndex.init(spark, root) { v1 =>
       res.adjacency.write.parquet(GraphAnn.adjacencyDir(v1))
       fent.write.parquet(GraphAnn.entriesDir(v1))
-      res.adjacencyUpper.write.parquet(GraphAnn.upperAdjacencyDir(v1))
+      adjUpper.write.parquet(GraphAnn.upperAdjacencyDir(v1))
       uent.write.parquet(GraphAnn.upperEntriesDir(v1))
     }
     val before = graft.search.AliasedIndex.currentVersion(spark, root)

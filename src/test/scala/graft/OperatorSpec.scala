@@ -678,8 +678,8 @@ class OperatorSpec extends SparkSpec {
     assert(chosenOf(tiers = all.map(t =>
       if (t.name == "ivf") t.copy(filterCapable = false) else t),
       sel = 0.5) == "graph")
-    // selectivity below the exact floor -> flat only (the
-    // filteredSearchAuto dispatch, promoted to the router)
+    // selectivity below the exact floor -> flat only (exact over the
+    // few survivors beats any index)
     assert(chosenOf(sel = 0.01) == "flat")
     // cost flip at equal target satisfaction
     val costFlip = Seq(("flat", 1.0, 1000L), ("graph", 0.92, 385L),
