@@ -1819,10 +1819,7 @@ object PipelineQueries {
     "keyword_text_search",
     (s, dir) => {
       import s.implicits._
-      val queryText = KeywordQueryText
-      val kws = graft.text.Keywords.extract(
-          Seq((0L, queryText)).toDF("qid", "text"), "qid", "text", k = 3)
-        .orderBy(col("kw_rank")).select("keyword").as[String].collect().toSeq
+      val kws = graft.text.Keywords.extractLocal(KeywordQueryText, k = 3)
       val embedder = new HashingEmbedder(64)
       val strategies = kws.zip(embedder.embed(kws)).zipWithIndex.map {
         case ((kw, v), i) => (i.toLong, kw, v)

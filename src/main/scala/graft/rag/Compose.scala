@@ -17,12 +17,15 @@ object Compose {
         col(rankCol), col(chapterCol), col(contentCol)).as("line"))
 
   /** R1 block form: the joined context string (driver-side collect of an
-    * already-truncated top-k — bounded by construction). */
+    * already-truncated top-k — bounded by construction). The few lines are
+    * sorted by rank on the driver: a Spark sort would cost a sampling job
+    * and an exchange. The rank is integral (`%d`); a null rank sorts
+    * first, as in `orderBy(asc)`. */
   def contextBlock(hits: DataFrame, rankCol: String, chapterCol: String,
                    contentCol: String): String =
-    contextLines(hits, rankCol, chapterCol, contentCol)
-      .orderBy(col(rankCol).asc)
-      .collect().map(_.getString(1)).mkString("\n")
+    contextLines(hits, rankCol, chapterCol, contentCol).collect()
+      .sortBy(r => Option(r.getAs[Number](0)).map(_.longValue))
+      .map(_.getString(1)).mkString("\n")
 
   private def kbBlockFromBody(body: String): String =
     if (body.isEmpty) "## 🔍 **知识库答案**\n\n未在知识库中找到相关信息。"

@@ -20,7 +20,9 @@ import org.apache.spark.sql.{Column, DataFrame}
   * vectors `(strategy_rank, sub_idx, k, qe)` — so the whole fan-out is ONE
   * broadcast nested-loop join + windows over the union, not N sequential
   * round-trips: at scale the corpus is scanned once regardless of how
-  * many sub-queries the strategies expand to.
+  * many sub-queries the strategies expand to. The over-fetch window is
+  * the plan's one exchange; everything after it handles a bounded
+  * candidate set in a single partition.
   */
 object MultiStrategy {
   /** @param corpus    rows with a vector, an id, and `dedupKey` column
@@ -54,6 +56,9 @@ object MultiStrategy {
       // V2 over-fetch: k*3 candidates per sub-query by distance
       .withColumn("fetch_rn", row_number().over(byDistance))
       .where(col("fetch_rn") <= col("k") * overFetch)
+      // at most Σ k·overFetch rows survive: one partition from here on, so
+      // the windows below and the final sort need no exchange
+      .coalesce(1)
       // V3+V4: score map + threshold
       .withColumn("score", lit(1.0) - col("distance"))
       .where(col("score") >= scoreThreshold)

@@ -12,7 +12,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * set as ONE [[MultiStrategy.search]] pass.
   *
   * Scale shape: the sub-query list is tiny by construction (1 + ≤3
-  * keywords + ≤2 chunks), so collecting it to the driver is O(1); the
+  * keywords + ≤2 chunks) and is split from the question on the driver
+  * with no Spark job (`Keywords.extractLocal`/`chunksLocal`); the
   * strategies then broadcast into a single corpus scan — the corpus is
   * read once no matter how many strategies fire, instead of the
   * reference's N sequential index round-trips.
@@ -24,18 +25,13 @@ object TextSearch {
     *  - rank 3: only when len(question) > 20 (src/app.py:285-287) —
     *    first 2 punctuation chunks surviving the strict len > 5 trim
     *    filter, k = 1 each (src/app.py:319-330).
+    * Split on the driver; no Spark job runs.
     */
   def subQueries(spark: SparkSession, question: String,
                  topK: Int): Seq[(Int, Int, String)] = {
-    import spark.implicits._
-    val one = Seq((0L, question)).toDF("qid", "text")
-    val kws = Keywords.extract(one, "qid", "text", k = 3)
-      .orderBy(col("kw_rank")).select("keyword").as[String].collect().toSeq
+    val kws = Keywords.extractLocal(question, k = 3)
     val chs =
-      if (question.length > 20)
-        Keywords.chunks(one, "qid", "text")
-          .orderBy(col("chunk_rank")).select("chunk").as[String].collect().toSeq
-      else Seq.empty
+      if (question.length > 20) Keywords.chunksLocal(question) else Seq.empty
     Seq((1, topK * 2, question)) ++ kws.map((2, 2, _)) ++ chs.map((3, 1, _))
   }
 
@@ -47,11 +43,8 @@ object TextSearch {
                   textCol: String, queryText: String, embedder: Embedder,
                   k: Int = 1): DataFrame = {
     import spark.implicits._
-    val chunkRows = Keywords.chunks(
-        Seq((0L, queryText)).toDF("qid", "text"), "qid", "text")
-      .orderBy(col("chunk_rank"))
-      .select(col("chunk_rank").cast("long"), col("chunk"))
-      .as[(Long, String)].collect().toSeq
+    val chunkRows = Keywords.chunksLocal(queryText).zipWithIndex
+      .map { case (c, i) => (i + 1L, c) }
     val strategies = chunkRows.zip(embedder.embed(chunkRows.map(_._2)))
       .map { case ((r, c), v) => (r, c, v) }
       .toDF("chunk_rank", "chunk", "qe")

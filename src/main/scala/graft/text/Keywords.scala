@@ -14,6 +14,12 @@ import org.apache.spark.sql.{Column, DataFrame}
   *    an explicit original-position tie-break (src/app.py:339);
   *  - chunk split on `[，。！？；:,\.!?;]`, trim, keep length > 5 strictly,
   *    first 2 surviving chunks (src/app.py:322-326).
+  *
+  * `extract`/`chunks` run over a table; `extractLocal`/`chunksLocal` are
+  * their one-string twins for text the driver already holds (a question),
+  * so splitting it costs no Spark job. The twins follow Spark's semantics
+  * exactly: `trim` strips only U+0020, `length` counts code points and
+  * `split` keeps trailing empty strings.
   */
 object Keywords {
   /** STOP_WORDS, reference src/app.py:26-31 — 32 distinct entries (the
@@ -25,6 +31,9 @@ object Keywords {
 
   val TokenPattern: String = "[一-龥]{2,}|[a-zA-Z]{3,}"
   val ChunkPattern: String = "[，。！？；:,\\.!?;]"
+
+  private val TokenRegex = TokenPattern.r
+  private val StopWordSet = StopWords.toSet
 
   def tokens(text: Column): Column =
     regexp_extract_all(text, lit(TokenPattern), lit(0))
@@ -53,5 +62,29 @@ object Keywords {
       .withColumn("chunk_rank", row_number().over(w))
       .where(col("chunk_rank") <= maxChunks)
       .select(col(idCol), col("chunk_rank"), col("chunk"))
+  }
+
+  /** `extract` for one string: its keywords in `kw_rank` order. */
+  def extractLocal(text: String, k: Int = 3): Seq[String] =
+    if (text == null) Seq.empty
+    else TokenRegex.findAllIn(text).filterNot(StopWordSet).toSeq
+      // stable: equal lengths keep their original order
+      .sortBy(t => -codePoints(t)).take(k)
+
+  /** `chunks` for one string: its chunks in `chunk_rank` order. */
+  def chunksLocal(text: String, maxChunks: Int = 2,
+                  minLen: Int = 5): Seq[String] =
+    if (text == null) Seq.empty
+    else text.split(ChunkPattern, -1).iterator.map(trimSpaces)
+      .filter(c => codePoints(c) > minLen).take(maxChunks).toSeq
+
+  private def codePoints(s: String): Int = s.codePointCount(0, s.length)
+
+  private def trimSpaces(s: String): String = {
+    var b = 0
+    var e = s.length
+    while (b < e && s.charAt(b) == ' ') b += 1
+    while (e > b && s.charAt(e - 1) == ' ') e -= 1
+    s.substring(b, e)
   }
 }

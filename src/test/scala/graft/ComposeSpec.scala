@@ -13,6 +13,12 @@ class ComposeSpec extends SparkSpec {
   test("contextBlock renders numbered markdown lines in rank order") {
     val block = Compose.contextBlock(hits, "rank", "chapter", "content")
     assert(block == "1. **第一章**: 内容一\n2. **第二章**: 内容二")
+    // ranks 12..1 over 3 partitions; 10-12 also catch a textual sort
+    val rev = spark.sparkContext.parallelize(
+        (12 to 1 by -1).map(i => (i, s"c$i", s"x$i")), 3)
+      .toDF("rank", "chapter", "content")
+    assert(Compose.contextBlock(rev, "rank", "chapter", "content") ==
+      (1 to 12).map(i => s"$i. **c$i**: x$i").mkString("\n"))
   }
 
   test("kbAnswerBlock: header + body, and the empty-hits fallback") {

@@ -80,6 +80,25 @@ class KnnSpec extends SparkSpec {
     assert(r == Set(0L, 1L))
   }
 
+  test("multi-strategy search runs one shuffle exchange") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val corpus = spark.range(0, 40, 1, 4).select(col("id"),
+      array(col("id").cast("float"), (col("id") % 7).cast("float")).as("vec"),
+      (col("id") % 5).cast("string").as("dkey"))
+    val strategies = Seq(
+      (1, 0, 4, Array(0f, 0f)), (2, 1, 2, Array(10f, 3f)),
+      (2, 2, 2, Array(20f, 6f)), (3, 3, 1, Array(30f, 1f))
+    ).toDF("strategy_rank", "sub_idx", "k", "qe")
+    val r = graft.search.MultiStrategy.search(corpus, "vec", "id", "dkey",
+      strategies, topK = 5, scoreThreshold = -1e9)
+    assert(r.collect().length == 5)
+    // the final adaptive plan, query stages included
+    val shuffles = new AdaptiveSparkPlanHelper {}
+      .collect(r.queryExecution.executedPlan) { case e: ShuffleExchangeExec => e }
+    assert(shuffles.size == 1, r.queryExecution.executedPlan.toString)
+  }
+
   test("knnJoinLarge (heap path) is row-identical to knnJoin on the fixture") {
     val e = spark.read.parquet(s"$sf0001/embeddings.parquet")
     val qs = e.where($"vec_id" < 7)

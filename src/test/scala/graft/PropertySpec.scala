@@ -89,6 +89,48 @@ class PropertySpec extends SparkSpec {
     check(prop, tests = 30)
   }
 
+  test("property: driver-side keyword/chunk twins equal the Column form") {
+    import graft.text.Keywords
+    // the Column form's edge cases: trim strips only U+0020 (not U+3000,
+    // tabs or newlines), length counts code points, split keeps trailing
+    // empty strings, equal-length keywords keep their original order
+    val cjk = Gen.chooseNum(1, 6).flatMap(n =>
+      Gen.listOfN(n, Gen.chooseNum(0x4E00, 0x9FA5).map(_.toChar)))
+      .map(_.mkString)
+    val word = Gen.chooseNum(1, 5).flatMap(n =>
+      Gen.listOfN(n, Gen.alphaChar)).map(_.mkString)
+    val piece = Gen.frequency(
+      4 -> cjk, 4 -> word,
+      3 -> Gen.oneOf(Keywords.ChunkPattern.filterNot("[]\\".contains(_))
+        .map(_.toString)),
+      2 -> Gen.oneOf(" ", "  ", "\u3000", "\t", "\n", "  \n"),
+      1 -> Gen.const(new String(Character.toChars(0x1D11E))),
+      2 -> Gen.oneOf(Keywords.StopWords),
+      2 -> Gen.oneOf("abc", "xyz", "数据", "系统", "alpha", "gamma"))
+    val textGen = for {
+      n <- Gen.chooseNum(0, 30)
+      ps <- Gen.listOfN(n, piece)
+      sep <- Gen.oneOf("", " ")
+      tail <- Gen.oneOf("", "  \n", " ", "\n")
+    } yield ps.mkString(sep) + tail
+    val prop = Prop.forAll(Gen.listOfN(20, textGen)) { texts =>
+      val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+        .toDF("id", "text")
+      def byId(rows: Array[(Long, Int, String)]) =
+        rows.groupBy(_._1).map { case (id, rs) =>
+          id -> rs.sortBy(_._2).map(_._3).toSeq }.withDefaultValue(Seq.empty)
+      val kws = byId(Keywords.extract(df, "id", "text", k = 3)
+        .as[(Long, Int, String)].collect())
+      val chs = byId(Keywords.chunks(df, "id", "text")
+        .as[(Long, Int, String)].collect())
+      texts.zipWithIndex.forall { case (t, i) =>
+        Keywords.extractLocal(t, k = 3) == kws(i.toLong) &&
+          Keywords.chunksLocal(t) == chs(i.toLong)
+      }
+    }
+    check(prop, tests = 15)
+  }
+
   test("property: CDC chunks partition the text exactly, code-point-wise") {
     import org.apache.spark.unsafe.types.UTF8String
     // includes supplementary-plane chars (2 UTF-16 units, 1 code point)

@@ -166,6 +166,22 @@ class TextSearchSpec extends SparkSpec {
     assert(byRank(3).forall(_._2 == 1), "chunk sub-queries use k=1")
   }
 
+  test("subQueries and questionSearch submit no Spark job") {
+    import org.apache.spark.JobCounter
+    val q = "spark shuffle partitions and joins, tiny, " +
+      "数据库系统的核心组件, window aggregation plans"
+    val (subs, subJobs) = JobCounter.count(spark.sparkContext)(
+      TextSearch.subQueries(spark, q, topK = 3))
+    assert(subJobs == 0, s"subQueries ran $subJobs jobs")
+    assert(subs.count(_._1 == 2) == 3 && subs.count(_._1 == 3) == 2)
+    // the call builds a lazy plan; only the caller's action runs jobs
+    val (hits, callJobs) = JobCounter.count(spark.sparkContext)(
+      TextSearch.questionSearch(spark, docs, "doc_id", "text", q,
+        embedder, topK = 3, scoreThreshold = -1.0))
+    assert(callJobs == 0, s"questionSearch ran $callJobs jobs before an action")
+    assert(hits.count() == 3)
+  }
+
   test("chunkSearch: k=1 per chunk, ordered by chunk then distance") {
     val q = "spark shuffle partitions and joins, tiny, " +
       "数据库系统的核心组件 storage, window aggregation plans"
