@@ -1077,7 +1077,7 @@ object PipelineQueries {
       }
       // the panel's own lexical artifact — the tier it measured is the
       // tier the thunk serves
-      val lexDir = s"/tmp/graft_routerlex_${math.abs(dir.hashCode)}"
+      val lexDir = s"/tmp/graft_routerlex_terms_${math.abs(dir.hashCode)}"
       // lexDir is built by routerPanelV2 (mutateOnce) the first time
       // the panel is constructed — either by the lazy-once staging
       // below or by the decision thunk on a cache miss; a deleted
@@ -4747,18 +4747,18 @@ object PipelineQueries {
       // positional (documents-side) artifact joins the audit: coverage
       // runs on DISTINCT posting ids against token-bearing docs (a
       // 0-token doc legitimately has no postings row)
-      import graft.search.Phrase
+      import graft.search.TermIndex
       val docsT = Tables.documents(s, dir)
-      val phraseIdx = s"/tmp/graft_phrase_${math.abs(dir.hashCode)}"
+      val phraseIdx = s"/tmp/graft_phrase_terms_${math.abs(dir.hashCode)}"
       mutateOnce(s, phraseIdx) {
         val p = new org.apache.hadoop.fs.Path(phraseIdx)
         p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-        Phrase.build(docsT.where(col("doc_id") < 300), "doc_id", "text",
+        TermIndex.build(docsT.where(col("doc_id") < 300), "doc_id", "text",
           phraseIdx)
-        Phrase.append(docsT.where(col("doc_id") >= 300), "doc_id",
+        TermIndex.append(docsT.where(col("doc_id") >= 300), "doc_id",
           "text", phraseIdx)
       }
-      val posIds = s.read.parquet(Phrase.positionsDir(phraseIdx))
+      val posIds = TermIndex.postings(s, phraseIdx)
         .select(col("id").as("doc_id")).distinct()
       val tokDocs = docsT.where(size(TextAnalysis.wsTerms(col("text"))) > 0)
         .select("doc_id")
@@ -4771,13 +4771,11 @@ object PipelineQueries {
       val entriesA = graft.core.Artifacts.buildOnce(s, s"$base/entries") {
         GraphAnn.entryPoints(e, "vec_id", "embedding", nEntries = 8)
       }
-      val prefixIdx = s"/tmp/graft_prefix_${math.abs(dir.hashCode)}"
+      val prefixIdx = s"/tmp/graft_prefix_terms_${math.abs(dir.hashCode)}"
       mutateOnce(s, prefixIdx) {
         val p = new org.apache.hadoop.fs.Path(prefixIdx)
         p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-        graft.search.TermIndex.buildSorted(docsT, "doc_id", "text",
-          prefixIdx)
-        graft.search.Bm25Index.build(docsT, "doc_id", "text", prefixIdx)
+        TermIndex.build(docsT, "doc_id", "text", prefixIdx)
       }
       // sparse postings coverage (round 12): posted ids vs the corpus
       // rows that HAVE a kept dim (sparsify keeps positive rounded
@@ -5671,7 +5669,7 @@ object PipelineQueries {
   private val indexMaintenancePlan = Q(
     "index_maintenance_plan",
     (s, dir) => {
-      import graft.search.{Bm25Index, GraphAnn, Maintenance}
+      import graft.search.{GraphAnn, Maintenance}
       val baseDir = s"/tmp/graft_ivf_verbase_${math.abs(dir.hashCode)}"
       val runDir = s"/tmp/graft_ivf_mplan_${math.abs(dir.hashCode)}"
       val e = Tables.embeddings(s, dir)
@@ -5707,26 +5705,24 @@ object PipelineQueries {
         GraphAnn.entryPoints(e, "vec_id", "embedding", nEntries = 8)
       }
       val graphDead = e.where(col("vec_id") % 11 === 5).select("vec_id")
-      // lexical family: its own BM25 artifact + tombstones (%13=1) and
-      // a SEGMENTED sorted-term layout (3 segments > cap 2 — the
-      // compact_term_segments debt), all inside one deterministic
-      // fixture mutation
+      // lexical family: its own term artifact in 3 segments (> cap 2 —
+      // the compact_term_segments debt) + tombstones (%13=1), all
+      // inside one deterministic fixture mutation
       val docsT = Tables.documents(s, dir)
-      val textDir = s"/tmp/graft_mplan_text_${math.abs(dir.hashCode)}"
+      val textDir = s"/tmp/graft_mplan_text_terms_${math.abs(dir.hashCode)}"
       mutateOnce(s, textDir) {
         val p = new org.apache.hadoop.fs.Path(textDir)
         p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-        Bm25Index.build(docsT, "doc_id", "text", textDir)
+        graft.search.TermIndex.build(
+          docsT.where(col("doc_id") < 300), "doc_id", "text", textDir)
+        graft.search.TermIndex.append(
+          docsT.where(col("doc_id") >= 300 && col("doc_id") < 400),
+          "doc_id", "text", textDir)
+        graft.search.TermIndex.append(
+          docsT.where(col("doc_id") >= 400), "doc_id", "text", textDir)
         graft.search.Tombstones.record(
           docsT.where(col("doc_id") % 13 === 1).select("doc_id"),
           textDir, "doc_id")
-        graft.search.TermIndex.buildSorted(
-          docsT.where(col("doc_id") < 300), "doc_id", "text", textDir)
-        graft.search.TermIndex.appendSegment(
-          docsT.where(col("doc_id") >= 300 && col("doc_id") < 400),
-          "doc_id", "text", textDir)
-        graft.search.TermIndex.appendSegment(
-          docsT.where(col("doc_id") >= 400), "doc_id", "text", textDir)
       }
       // sparse family: its own postings artifact + tombstones (%17=3)
       // — the round-12 debt row completing the family matrix
@@ -6598,11 +6594,11 @@ object PipelineQueries {
         Pq.load(s, pqDir)
       else Pq.build(e, "embedding", "vec_id", pqDir)
     // the lexical tier's own postings artifact (documents-side)
-    val lexDir = s"/tmp/graft_routerlex_${math.abs(dir.hashCode)}"
+    val lexDir = s"/tmp/graft_routerlex_terms_${math.abs(dir.hashCode)}"
     mutateOnce(s, lexDir) {
       val p = new org.apache.hadoop.fs.Path(lexDir)
       p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      graft.search.Bm25Index.build(Tables.documents(s, dir), "doc_id",
+      graft.search.TermIndex.build(Tables.documents(s, dir), "doc_id",
         "text", lexDir)
     }
     val fp = Router.artifactFingerprint(s,
@@ -6694,8 +6690,7 @@ object PipelineQueries {
       // lexical tier (round 12, modality "text"): BM25 is the exact
       // scorer for its own modality (recall 1.0 by definition); cost =
       // measured postings rows the panel's text query touches
-      val lexPost = s.read.parquet(
-        graft.search.Bm25Index.postingsDir(lexDir))
+      val lexPost = graft.search.TermIndex.postings(s, lexDir)
       val lexCost = lexPost
         .where(col("term").isin("scan", "filter", "merge"))
         .count()
@@ -6749,7 +6744,7 @@ object PipelineQueries {
         tiers = Seq(
           Router.Tier("bm25_lexical",
             present = new java.io.File(
-              s"/tmp/graft_routerlex_${math.abs(dir.hashCode)}")
+              s"/tmp/graft_routerlex_terms_${math.abs(dir.hashCode)}")
               .exists(),
             filterCapable = true, modality = "text"),
           Router.Tier("flat", present = true, filterCapable = true),

@@ -78,21 +78,18 @@ object ScaleBench {
       .collect().map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
       .sortBy(_._1).toSeq
 
-  /** Local recursive dir copy (rehearsal ops that MUTATE an index work
-    * on a throwaway copy) — shared with the query entries. */
-  /** Serve-op guard: build the positional artifact if a filtered run
-    * skipped the build op (buildOnce no-ops when present). */
-  private def ensurePhraseArtifact(spark: SparkSession, docs: DataFrame,
-                                   n: Int): Unit = {
-    graft.core.Artifacts.buildOnce(spark,
-      s"/tmp/graft_scale/phrase_$n/positions") {
-      val toks = TextAnalysis.wsTerms(col("text"))
-      docs.select(col("doc_id").cast("long").as("id"),
-        posexplode(toks).as(Seq("pos", "term")))
-    }
-    ()
+  /** Serve-op guard: the lexical artifact's dir at this n, built if a
+    * filtered run skipped the build op. */
+  private def ensureTermArtifact(spark: SparkSession, docs: DataFrame,
+                                 n: Int): String = {
+    val dir = s"/tmp/graft_scale/terms_$n"
+    if (graft.search.TermIndex.segments(spark, dir).isEmpty)
+      graft.search.TermIndex.build(docs, "doc_id", "text", dir)
+    dir
   }
 
+  /** Local recursive dir copy (rehearsal ops that MUTATE an index work
+    * on a throwaway copy) — shared with the query entries. */
   private def copyDir(srcDir: String, dstDir: String): Unit =
     graft.core.Artifacts.copyLocalDir(srcDir, dstDir)
 
@@ -602,13 +599,12 @@ object ScaleBench {
         "maintenance_plan_full (10 triggers)" -> (() => {
           import spark.implicits._
           val (adj, entryId) = graphArtifacts(spark, emb, n)
-          val textDir = s"/tmp/graft_scale/mplan_text_$n"
+          val textDir = s"/tmp/graft_scale/mplan_terms_$n"
           QueryDsl.mutateOnce(spark, textDir) {
-            graft.search.Bm25Index.build(docs, "doc_id", "text", textDir)
-            graft.search.TermIndex.buildSorted(
+            graft.search.TermIndex.build(
               docs.where(col("doc_id") % 3 =!= 2), "doc_id", "text",
               textDir)
-            graft.search.TermIndex.appendSegment(
+            graft.search.TermIndex.append(
               docs.where(col("doc_id") % 3 === 2), "doc_id", "text",
               textDir)
           }
@@ -844,59 +840,33 @@ object ScaleBench {
             "vec_id", "embedding", topN = 8)
           SparseVec.search(post, qp, "vec_id", k = 10).count()
         }),
-        // positional phrase tier (round 9): the artifact is one row per
-        // token occurrence (30n rows here); build is a pure linear
-        // tokenize+posexplode write, serving reads ONLY the phrase's
-        // terms (pushed `term IN` — ~n·m·30/5000 rows at this vocab)
-        // and resolves anchors with two hash-aggs. Expect build t-exp
-        // ≈ 1, serve scaling with the pruned postings (≪ corpus scan).
-        "phrase_positions_build" -> (() => {
-          // fresh build per invocation (noWarmup op): buildOnce would
-          // let the warm-up pass absorb the write and the timed pass
-          // measure only an exists() check
-          val dir = s"/tmp/graft_scale/phrase_$n/positions"
-          val p = new org.apache.hadoop.fs.Path(dir)
-          p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-            .delete(p, true)
-          val toks = TextAnalysis.wsTerms(col("text"))
-          docs.select(col("doc_id").cast("long").as("id"),
-            posexplode(toks).as(Seq("pos", "term")))
-            .write.mode("overwrite").parquet(dir)
+        // the lexical tier's one artifact: one tokenize + posexplode
+        // pass, a range-partitioned sorted segment write (linear) plus
+        // doclen. Phrase serving reads ONLY the phrase's terms (pushed
+        // `term IN`) and resolves anchors with two hash-aggs; the prefix
+        // serve is a pushed StringStartsWith over the contiguous term
+        // sliver + one per-doc agg — expect serve cost tracking the
+        // MATCHING rows, two orders under the corpus.
+        "term_artifact_build (sorted segment)" -> (() => {
+          import graft.search.TermIndex
+          TermIndex.build(docs, "doc_id", "text",
+            s"/tmp/graft_scale/terms_$n")
           1L
         }),
         "phrase_serve (anchor agg)" -> (() => {
           import graft.search.Phrase
-          ensurePhraseArtifact(spark, docs, n)
-          Phrase.topK(spark, s"/tmp/graft_scale/phrase_$n",
+          Phrase.topK(spark, ensureTermArtifact(spark, docs, n),
             Seq("w7", "w11", "w13"), k = 10).count()
         }),
         "phrase_slop_serve (pair window)" -> (() => {
           import graft.search.Phrase
-          ensurePhraseArtifact(spark, docs, n)
-          Phrase.slopTopK(spark, s"/tmp/graft_scale/phrase_$n",
+          Phrase.slopTopK(spark, ensureTermArtifact(spark, docs, n),
             "w7", "w11", slop = 3, k = 10).count()
-        }),
-        // prefix term match (round 10): the sorted-term layout's build
-        // is one groupBy + range-partitioned sorted write (linear); the
-        // serve is a pushed StringStartsWith over the contiguous term
-        // sliver + one per-doc agg — expect serve cost tracking the
-        // MATCHING postings, two orders under the corpus.
-        "term_prefix_build (sorted layout)" -> (() => {
-          import graft.search.TermIndex
-          val dir = s"/tmp/graft_scale/prefix_$n"
-          val p = new org.apache.hadoop.fs.Path(
-            TermIndex.sortedPostingsDir(dir))
-          p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-            .delete(p, true)
-          TermIndex.buildSorted(docs, "doc_id", "text", dir)
-          1L
         }),
         "term_prefix_serve (pushed range)" -> (() => {
           import graft.search.TermIndex
-          val dir = s"/tmp/graft_scale/prefix_$n"
-          if (TermIndex.segments(spark, dir).isEmpty)
-            TermIndex.buildSorted(docs, "doc_id", "text", dir)
-          TermIndex.prefixSearch(spark, dir, "w13", k = 10).count()
+          TermIndex.prefixSearch(spark, ensureTermArtifact(spark, docs, n),
+            "w13", k = 10).count()
         }),
         // fuzzy term match (round 11): dictionary-distinct + deletion-
         // neighborhood block join + postings equi-join. The dict
@@ -905,23 +875,17 @@ object ScaleBench {
         // query, so the candidate tier does real work at every n.
         "term_fuzzy_serve (d=1 dict block join)" -> (() => {
           import graft.search.TermIndex
-          val dir = s"/tmp/graft_scale/prefix_$n"
-          if (TermIndex.segments(spark, dir).isEmpty)
-            TermIndex.buildSorted(docs, "doc_id", "text", dir)
-          TermIndex.fuzzySearch(spark, dir, "w13", maxDist = 1,
+          TermIndex.fuzzySearch(spark, ensureTermArtifact(spark, docs, n),
+            "w13", maxDist = 1,
             k = 10).count()
         }),
         // suffix match (round 11): pushed StringStartsWith over the
-        // REVERSED-term sorted layout — the prefix discipline's twin;
-        // expect the same corpus-flat serve shape.
-        "term_suffix_build (reversed layout)" -> (() => {
+        // REVERSED-term sorted view of the artifact — the prefix
+        // discipline's twin; expect the same corpus-flat serve shape.
+        "term_suffix_build (reversed view)" -> (() => {
           import graft.search.TermIndex
-          val dir = s"/tmp/graft_scale/suffix_$n"
-          val p = new org.apache.hadoop.fs.Path(
-            TermIndex.reversedPostingsDir(dir))
-          p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-            .delete(p, true)
-          TermIndex.buildSortedReversed(docs, "doc_id", "text", dir)
+          TermIndex.buildSortedReversed(spark,
+            ensureTermArtifact(spark, docs, n))
           1L
         }),
         "term_suffix_serve (pushed reversed range)" -> (() => {
@@ -929,7 +893,7 @@ object ScaleBench {
           // "13" matches ~1% of the 5000-term vocab (…13) — the same
           // matching-postings fraction as the prefix row's "w13", so
           // the two serve rows are directly comparable
-          TermIndex.suffixSearch(spark, s"/tmp/graft_scale/suffix_$n",
+          TermIndex.suffixSearch(spark, s"/tmp/graft_scale/terms_$n",
             "13", k = 10).count()
         }),
         // fuzzy d=2 (round 12, verdict #9): the deletion neighborhood
@@ -940,10 +904,8 @@ object ScaleBench {
         // exponent breaks.
         "term_fuzzy_serve (d=2 dict block join)" -> (() => {
           import graft.search.TermIndex
-          val dir = s"/tmp/graft_scale/prefix_$n"
-          if (TermIndex.segments(spark, dir).isEmpty)
-            TermIndex.buildSorted(docs, "doc_id", "text", dir)
-          TermIndex.fuzzySearch(spark, dir, "w13", maxDist = 2,
+          TermIndex.fuzzySearch(spark, ensureTermArtifact(spark, docs, n),
+            "w13", maxDist = 2,
             k = 10).count()
         }),
         // infix match (round 12): trigram artifact over the DISTINCT
@@ -953,15 +915,12 @@ object ScaleBench {
         // postings equi-join ("134" matches w134/w1340-9/wN134…).
         "term_infix_build (trigram layout)" -> (() => {
           import graft.search.TermIndex
-          val dir = s"/tmp/graft_scale/prefix_$n"
-          if (TermIndex.segments(spark, dir).isEmpty)
-            TermIndex.buildSorted(docs, "doc_id", "text", dir)
-          TermIndex.buildTrigrams(spark, dir)
+          TermIndex.buildTrigrams(spark, ensureTermArtifact(spark, docs, n))
           1L
         }),
         "term_infix_serve (gram AND + verify)" -> (() => {
           import graft.search.TermIndex
-          TermIndex.infixSearch(spark, s"/tmp/graft_scale/prefix_$n",
+          TermIndex.infixSearch(spark, s"/tmp/graft_scale/terms_$n",
             "134", k = 10).count()
         }),
         // m-term slop (round 10, VERDICT-r9 item 8): the m−1 id-joins'
@@ -972,8 +931,7 @@ object ScaleBench {
         // row is the evidence (or the honest break point).
         "phrase_slop3_serve (3-term id-join)" -> (() => {
           import graft.search.Phrase
-          ensurePhraseArtifact(spark, docs, n)
-          Phrase.slopPhraseTopK(spark, s"/tmp/graft_scale/phrase_$n",
+          Phrase.slopPhraseTopK(spark, ensureTermArtifact(spark, docs, n),
             Seq("w7", "w11", "w13"), slop = 3, k = 10).count()
         }),
         "binary_hamming (signature artifact)" -> (() => {
@@ -1409,7 +1367,6 @@ object ScaleBench {
       // warm-up pass (the rows column is deterministic either way, and a
       // second 256 k+ build buys nothing but wall-clock)
       val noWarmup = Set("graphann_candidates (auto nlist)",
-        "phrase_positions_build",
         "fulltext_dict_numbering (distributed, vocab grows)",
         "fulltext_bucketed_build (vocab≈n, B=64)",
         "graphann_lsh_candidates (auto bands)",

@@ -849,15 +849,15 @@ object TextQueries {
   private val phraseMatchSearch = Q(
     "phrase_match_search",
     (s, dir) => {
-      import graft.search.Phrase
+      import graft.search.{Phrase, TermIndex}
       val docs = Tables.documents(s, dir)
-      val idx = s"/tmp/graft_phrase_${math.abs(dir.hashCode)}"
+      val idx = s"/tmp/graft_phrase_terms_${math.abs(dir.hashCode)}"
       mutateOnce(s, idx) {
         val p = new org.apache.hadoop.fs.Path(idx)
         p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-        Phrase.build(docs.where(col("doc_id") < 300), "doc_id", "text",
+        TermIndex.build(docs.where(col("doc_id") < 300), "doc_id", "text",
           idx)
-        Phrase.append(docs.where(col("doc_id") >= 300), "doc_id", "text",
+        TermIndex.append(docs.where(col("doc_id") >= 300), "doc_id", "text",
           idx)
       }
       Phrase.topK(s, idx, Seq("scan", "merge", "small"), k = 10)
@@ -888,13 +888,13 @@ object TextQueries {
   private val phraseMatchSlop = Q(
     "phrase_match_slop",
     (s, dir) => {
-      import graft.search.Phrase
+      import graft.search.{Phrase, TermIndex}
       val docs = Tables.documents(s, dir)
-      val idx = s"/tmp/graft_phraseslop_${math.abs(dir.hashCode)}"
+      val idx = s"/tmp/graft_phraseslop_terms_${math.abs(dir.hashCode)}"
       mutateOnce(s, idx) {
         val p = new org.apache.hadoop.fs.Path(idx)
         p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-        Phrase.build(docs, "doc_id", "text", idx)
+        TermIndex.build(docs, "doc_id", "text", idx)
       }
       Phrase.slopTopK(s, idx, "scan", "merge", slop = 2, k = 10)
         .withColumnRenamed("id", "doc_id")
@@ -927,14 +927,13 @@ object TextQueries {
   private val phraseFilteredBm25 = Q(
     "phrase_filtered_bm25",
     (s, dir) => {
-      import graft.search.{Bm25Index, Phrase}
+      import graft.search.{Bm25Index, Phrase, TermIndex}
       val docs = Tables.documents(s, dir)
-      val idx = s"/tmp/graft_phrasebm25_${math.abs(dir.hashCode)}"
+      val idx = s"/tmp/graft_phrasebm25_terms_${math.abs(dir.hashCode)}"
       mutateOnce(s, idx) {
         val p = new org.apache.hadoop.fs.Path(idx)
         p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-        Phrase.build(docs, "doc_id", "text", idx)
-        Bm25Index.build(docs, "doc_id", "text", idx)
+        TermIndex.build(docs, "doc_id", "text", idx)
       }
       val ids = Phrase.matchingIds(s, idx, Seq("scan", "merge"))
       Bm25Index.search(s, idx, Seq("scan", "filter", "merge"), k = 10,
@@ -1809,14 +1808,13 @@ object TextQueries {
   private val termPrefixSearch = Q(
     "term_prefix_search",
     (s, dir) => {
-      import graft.search.{Bm25Index, TermIndex}
+      import graft.search.TermIndex
       val docs = Tables.documents(s, dir)
-      val idx = s"/tmp/graft_prefix_${math.abs(dir.hashCode)}"
+      val idx = s"/tmp/graft_prefix_terms_${math.abs(dir.hashCode)}"
       mutateOnce(s, idx) {
         val p = new org.apache.hadoop.fs.Path(idx)
         p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-        TermIndex.buildSorted(docs, "doc_id", "text", idx)
-        Bm25Index.build(docs, "doc_id", "text", idx)
+        TermIndex.build(docs, "doc_id", "text", idx)
       }
       TermIndex.prefixSearch(s, idx, "sc", k = 10)
         .withColumnRenamed("id", "doc_id")
@@ -1846,12 +1844,11 @@ object TextQueries {
     (s, dir) => {
       import graft.search.{Bm25Index, TermIndex}
       val docs = Tables.documents(s, dir)
-      val idx = s"/tmp/graft_prefix_${math.abs(dir.hashCode)}"
+      val idx = s"/tmp/graft_prefix_terms_${math.abs(dir.hashCode)}"
       mutateOnce(s, idx) {
         val p = new org.apache.hadoop.fs.Path(idx)
         p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-        TermIndex.buildSorted(docs, "doc_id", "text", idx)
-        Bm25Index.build(docs, "doc_id", "text", idx)
+        TermIndex.build(docs, "doc_id", "text", idx)
       }
       val ids = TermIndex.prefixIds(s, idx, "wi")
       Bm25Index.search(s, idx, Seq("scan", "filter", "merge"), k = 10,
@@ -1902,11 +1899,12 @@ object TextQueries {
     (s, dir) => {
       import graft.search.TermIndex
       val docs = Tables.documents(s, dir)
-      val idx = s"/tmp/graft_suffix_${math.abs(dir.hashCode)}"
+      val idx = s"/tmp/graft_suffix_terms_${math.abs(dir.hashCode)}"
       mutateOnce(s, idx) {
         val p = new org.apache.hadoop.fs.Path(idx)
         p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-        TermIndex.buildSortedReversed(docs, "doc_id", "text", idx)
+        TermIndex.build(docs, "doc_id", "text", idx)
+        TermIndex.buildSortedReversed(s, idx)
       }
       TermIndex.suffixSearch(s, idx, "er", k = 10)
         .withColumnRenamed("id", "doc_id")
@@ -1939,14 +1937,13 @@ object TextQueries {
   private val termFuzzySearch = Q(
     "term_fuzzy_search",
     (s, dir) => {
-      import graft.search.{Bm25Index, TermIndex}
+      import graft.search.TermIndex
       val docs = Tables.documents(s, dir)
-      val idx = s"/tmp/graft_prefix_${math.abs(dir.hashCode)}"
+      val idx = s"/tmp/graft_prefix_terms_${math.abs(dir.hashCode)}"
       mutateOnce(s, idx) {
         val p = new org.apache.hadoop.fs.Path(idx)
         p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-        TermIndex.buildSorted(docs, "doc_id", "text", idx)
-        Bm25Index.build(docs, "doc_id", "text", idx)
+        TermIndex.build(docs, "doc_id", "text", idx)
       }
       TermIndex.fuzzySearch(s, idx, "port", maxDist = 1, k = 10)
         .withColumnRenamed("id", "doc_id")
@@ -1976,12 +1973,11 @@ object TextQueries {
     (s, dir) => {
       import graft.search.{Bm25Index, TermIndex}
       val docs = Tables.documents(s, dir)
-      val idx = s"/tmp/graft_prefix_${math.abs(dir.hashCode)}"
+      val idx = s"/tmp/graft_prefix_terms_${math.abs(dir.hashCode)}"
       mutateOnce(s, idx) {
         val p = new org.apache.hadoop.fs.Path(idx)
         p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-        TermIndex.buildSorted(docs, "doc_id", "text", idx)
-        Bm25Index.build(docs, "doc_id", "text", idx)
+        TermIndex.build(docs, "doc_id", "text", idx)
       }
       val ids = TermIndex.fuzzyIds(s, idx, "port", maxDist = 1)
       Bm25Index.search(s, idx, Seq("scan", "filter", "merge"), k = 10,
@@ -2034,14 +2030,13 @@ object TextQueries {
   private val termInfixSearch = Q(
     "term_infix_search",
     (s, dir) => {
-      import graft.search.{Bm25Index, TermIndex}
+      import graft.search.TermIndex
       val docs = Tables.documents(s, dir)
-      val idx = s"/tmp/graft_infix_${math.abs(dir.hashCode)}"
+      val idx = s"/tmp/graft_infix_terms_${math.abs(dir.hashCode)}"
       mutateOnce(s, idx) {
         val p = new org.apache.hadoop.fs.Path(idx)
         p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-        TermIndex.buildSorted(docs, "doc_id", "text", idx)
-        Bm25Index.build(docs, "doc_id", "text", idx)
+        TermIndex.build(docs, "doc_id", "text", idx)
         TermIndex.buildTrigrams(s, idx)
       }
       TermIndex.infixSearch(s, idx, "rder", k = 10)
@@ -2071,12 +2066,11 @@ object TextQueries {
     (s, dir) => {
       import graft.search.{Bm25Index, TermIndex}
       val docs = Tables.documents(s, dir)
-      val idx = s"/tmp/graft_infix_${math.abs(dir.hashCode)}"
+      val idx = s"/tmp/graft_infix_terms_${math.abs(dir.hashCode)}"
       mutateOnce(s, idx) {
         val p = new org.apache.hadoop.fs.Path(idx)
         p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-        TermIndex.buildSorted(docs, "doc_id", "text", idx)
-        Bm25Index.build(docs, "doc_id", "text", idx)
+        TermIndex.build(docs, "doc_id", "text", idx)
         TermIndex.buildTrigrams(s, idx)
       }
       val ids = TermIndex.infixIds(s, idx, "rder")
@@ -2127,14 +2121,13 @@ object TextQueries {
   private val termFuzzySearchD2 = Q(
     "term_fuzzy_search_d2",
     (s, dir) => {
-      import graft.search.{Bm25Index, TermIndex}
+      import graft.search.TermIndex
       val docs = Tables.documents(s, dir)
-      val idx = s"/tmp/graft_prefix_${math.abs(dir.hashCode)}"
+      val idx = s"/tmp/graft_prefix_terms_${math.abs(dir.hashCode)}"
       mutateOnce(s, idx) {
         val p = new org.apache.hadoop.fs.Path(idx)
         p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-        TermIndex.buildSorted(docs, "doc_id", "text", idx)
-        Bm25Index.build(docs, "doc_id", "text", idx)
+        TermIndex.build(docs, "doc_id", "text", idx)
       }
       TermIndex.fuzzySearch(s, idx, "port", maxDist = 2, k = 10)
         .withColumnRenamed("id", "doc_id")
@@ -2171,17 +2164,17 @@ object TextQueries {
       import s.implicits._
       import graft.search.TermIndex
       val docs = Tables.documents(s, dir)
-      val idx = s"/tmp/graft_infixinc_${math.abs(dir.hashCode)}"
+      val idx = s"/tmp/graft_infixinc_terms_${math.abs(dir.hashCode)}"
       mutateOnce(s, idx) {
         val p = new org.apache.hadoop.fs.Path(idx)
         p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
         val base = docs.where(col("doc_id") < 300)
-        TermIndex.buildSorted(base, "doc_id", "text", idx)
+        TermIndex.build(base, "doc_id", "text", idx)
         TermIndex.buildTrigrams(s, idx)
         val batch = docs.where(col("doc_id") >= 300)
           .select(col("doc_id"), col("text"))
           .unionByName(Seq((999999L, "qqinfixq zz")).toDF("doc_id", "text"))
-        TermIndex.appendSegment(batch, "doc_id", "text", idx)
+        TermIndex.append(batch, "doc_id", "text", idx)
         TermIndex.appendTrigrams(batch, "doc_id", "text", idx)
       }
       TermIndex.infixSearch(s, idx, "rder", k = 10)
@@ -2216,9 +2209,9 @@ object TextQueries {
     """))
 
   /** Incremental sorted-term maintenance ([[graft.search.TermIndex
-    * .appendSegment]]) — the Lucene segment model for the prefix
-    * layout: a raw file append would interleave term ranges and void
-    * the row-group pruning, so a new batch arrives as its OWN sorted
+    * .append]]) — the Lucene segment model for the term artifact: a
+    * raw file append would interleave term ranges and void the
+    * row-group pruning, so a new batch arrives as its OWN sorted
     * segment (existing segments untouched; each segment's files stay
     * range-prunable on their own stats) and [[graft.search.TermIndex
     * .compactSegments]] merges. Here the index builds on the first 300
@@ -2238,15 +2231,15 @@ object TextQueries {
     (s, dir) => {
       import graft.search.{AliasedIndex, TermIndex}
       val docs = Tables.documents(s, dir)
-      val idx = s"/tmp/graft_prefixinc_${math.abs(dir.hashCode)}"
+      val idx = s"/tmp/graft_prefixinc_terms_${math.abs(dir.hashCode)}"
       mutateOnce(s, idx) {
         val p = new org.apache.hadoop.fs.Path(idx)
         p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
         AliasedIndex.init(s, idx) { d =>
-          TermIndex.buildSorted(docs.where(col("doc_id") < 300), "doc_id",
+          TermIndex.build(docs.where(col("doc_id") < 300), "doc_id",
             "text", d)
         }
-        TermIndex.appendSegment(docs.where(col("doc_id") >= 300),
+        TermIndex.append(docs.where(col("doc_id") >= 300),
           "doc_id", "text", idx)
         TermIndex.compactSegments(s, idx) // alias-aware: publishes v2
       }
@@ -2270,7 +2263,7 @@ object TextQueries {
     * discipline applied to the segmented prefix layout): three
     * micro-batches drive foreachBatch — the first BUILDS segment 0, the
     * later ones land as NEW sorted segments ([[graft.search.TermIndex
-    * .appendSegment]] — tokenize the batch only, per-segment sort, no
+    * .writeSegment]] — tokenize the batch only, per-segment sort, no
     * rewrite of existing segments) — then the prefix search serves
     * across all streamed segments. The oracle recomputes from the FULL
     * corpus, so a dropped or double-absorbed micro-batch
@@ -2330,22 +2323,19 @@ object TextQueries {
 
   /** Streaming positional-index maintenance — the `streaming_bm25_
     * ingest` discipline applied to the phrase tier: three micro-batches
-    * drive foreachBatch (first BUILDS the positions artifact, later
-    * ones absorb by [[graft.search.Phrase.append]] — tokenize the batch
-    * only, file append, no rewrite), then the exact-phrase anchor
-    * search runs from the streamed artifact alone. The oracle
+    * drive foreachBatch, each landing as one segment of the lexical
+    * artifact ([[graft.search.TermIndex.writeSegment]] — tokenize the
+    * batch only, no rewrite), then the exact-phrase anchor search runs
+    * from the streamed artifact alone. The oracle
     * recomputes occurrences over the FULL corpus, so a dropped or
     * double-absorbed micro-batch hash-mismatches. */
   private val streamingPhraseIngest = Q(
     "streaming_phrase_ingest",
     (s, dir) => {
-      import graft.search.Phrase
-      import org.apache.hadoop.fs.Path
+      import graft.search.{Phrase, TermIndex}
       import org.apache.spark.sql.types._
       val docs = Tables.documents(s, dir).select("doc_id", "text")
       val work = s"/tmp/graft_streamphrase_${math.abs(dir.hashCode)}"
-      val conf = s.sparkContext.hadoopConfiguration
-      val fs = new Path(work).getFileSystem(conf)
       val idx = s"$work/phrase"
       streamInputOnce(s, work, Seq(s"$work/_ckpt", idx)) { writeOne =>
         writeOne(docs.where(col("doc_id") < 300), "00_base.parquet",
@@ -2362,12 +2352,11 @@ object TextQueries {
         .option("maxFilesPerTrigger", "1").parquet(s"$work/in")
       val q = src.writeStream
         .option("checkpointLocation", s"$work/_ckpt")
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          if (!fs.exists(new Path(
-              Phrase.positionsDir(idx) + "/_SUCCESS")))
-            Phrase.build(batch, "doc_id", "text", idx)
-          else
-            Phrase.append(batch, "doc_id", "text", idx)
+        // segment number = batchId: a replayed micro-batch overwrites
+        // its own segment (the streaming_prefix_ingest discipline)
+        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
+          TermIndex.writeSegment(batch, "doc_id", "text", idx,
+            batchId.toInt)
           ()
         }
         .start()
@@ -2402,15 +2391,15 @@ object TextQueries {
   private val phraseSnippetExtract = Q(
     "phrase_snippet_extract",
     (s, dir) => {
-      import graft.search.Phrase
+      import graft.search.{Phrase, TermIndex}
       val docs = Tables.documents(s, dir)
-      val idx = s"/tmp/graft_phrase_${math.abs(dir.hashCode)}"
+      val idx = s"/tmp/graft_phrase_terms_${math.abs(dir.hashCode)}"
       mutateOnce(s, idx) {
         val p = new org.apache.hadoop.fs.Path(idx)
         p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-        Phrase.build(docs.where(col("doc_id") < 300), "doc_id", "text",
+        TermIndex.build(docs.where(col("doc_id") < 300), "doc_id", "text",
           idx)
-        Phrase.append(docs.where(col("doc_id") >= 300), "doc_id", "text",
+        TermIndex.append(docs.where(col("doc_id") >= 300), "doc_id", "text",
           idx)
       }
       val m = 3
@@ -2459,15 +2448,15 @@ object TextQueries {
   private val phraseMatchSlopMulti = Q(
     "phrase_match_slop_multi",
     (s, dir) => {
-      import graft.search.Phrase
+      import graft.search.{Phrase, TermIndex}
       val docs = Tables.documents(s, dir)
-      val idx = s"/tmp/graft_phrase_${math.abs(dir.hashCode)}"
+      val idx = s"/tmp/graft_phrase_terms_${math.abs(dir.hashCode)}"
       mutateOnce(s, idx) {
         val p = new org.apache.hadoop.fs.Path(idx)
         p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-        Phrase.build(docs.where(col("doc_id") < 300), "doc_id", "text",
+        TermIndex.build(docs.where(col("doc_id") < 300), "doc_id", "text",
           idx)
-        Phrase.append(docs.where(col("doc_id") >= 300), "doc_id", "text",
+        TermIndex.append(docs.where(col("doc_id") >= 300), "doc_id", "text",
           idx)
       }
       Phrase.slopPhraseTopK(s, idx, Seq("scan", "merge", "small"),

@@ -1955,7 +1955,7 @@ object VectorQueries {
 
   /** Incremental maintenance of the asymmetric 1-bit artifact — the
     * every-index-maintains-incrementally discipline (IvfIndex.append /
-    * GraphAnn.append / Bm25Index.append) applied to the newest tier.
+    * GraphAnn.append / TermIndex.append) applied to the newest tier.
     * Signatures are PER-ROW statistics under a FIXED rotation (computed,
     * not learned — nothing to refit, ever), so absorbing a batch is:
     * rotate + pack ONLY the batch, parquet file-append. Build on the
@@ -4102,17 +4102,17 @@ object VectorQueries {
   private val bm25IncrementalSearch = Q(
     "bm25_incremental_search",
     (s, dir) => {
-      import graft.search.Bm25Index
+      import graft.search.{Bm25Index, TermIndex}
       val docs = Tables.documents(s, dir)
-      val idx = s"/tmp/graft_bm25inc_${math.abs(dir.hashCode)}"
+      val idx = s"/tmp/graft_bm25inc_terms_${math.abs(dir.hashCode)}"
       mutateOnce(s, idx) {
         val p = new org.apache.hadoop.fs.Path(idx)
         p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-        Bm25Index.build(docs.where(col("doc_id") < 300),
+        TermIndex.build(docs.where(col("doc_id") < 300),
           "doc_id", "text", idx)
-        Bm25Index.append(docs.where(col("doc_id") >= 300 &&
+        TermIndex.append(docs.where(col("doc_id") >= 300 &&
           col("doc_id") < 400), "doc_id", "text", idx)
-        Bm25Index.append(docs.where(col("doc_id") >= 400),
+        TermIndex.append(docs.where(col("doc_id") >= 400),
           "doc_id", "text", idx)
       }
       Bm25Index.search(s, idx, Seq("scan", "filter", "merge"), k = 10)
@@ -4412,14 +4412,14 @@ object VectorQueries {
   private val bm25MaskedSearch = Q(
     "bm25_masked_search",
     (s, dir) => {
-      import graft.search.{Bm25Index, Tombstones}
+      import graft.search.{Bm25Index, TermIndex, Tombstones}
       val docs = Tables.documents(s, dir)
       val idx = s"/tmp/graft_bm25tomb_${math.abs(dir.hashCode)}"
       // build once per JVM+fixture; only the tombstone set is per-run
       // (clear + record — the artifact itself never rewrites)
       if (!new java.io.File(
-          Bm25Index.postingsDir(idx) + "/_SUCCESS").exists())
-        Bm25Index.build(docs, "doc_id", "text", idx)
+          TermIndex.termsDir(idx) + "/seg=0/_SUCCESS").exists())
+        TermIndex.build(docs, "doc_id", "text", idx)
       Tombstones.clear(s, idx)
       Tombstones.record(docs.where(col("doc_id") % 5 === 2)
         .select(col("doc_id").as("id")), idx, "id")
@@ -4456,10 +4456,10 @@ object VectorQueries {
   /** BM25 UPSERT — document content updates on a lexical index,
     * delete-then-insert with an immediate physical fold: the updated
     * docs (`doc_id % 10 = 2`, new text = old + " merge merge") are
-    * tombstoned, both artifacts are [[graft.search.Tombstones.compact]]
-    * -folded (postings AND doclen — stats leave the stale regime),
-    * tombstones cleared, and the new content enters by the plain
-    * incremental [[graft.search.Bm25Index.append]]. Same-id re-insert
+    * tombstoned, the lexical artifact is folded (term rows AND doclen
+    * — stats leave the stale regime), tombstones cleared, and the new
+    * content enters by the plain incremental
+    * [[graft.search.TermIndex.append]]. Same-id re-insert
     * is exactly why the fold must precede the append: a mask-only
     * upsert would kill BOTH versions of an updated id at serve time.
     * The oracle recomputes BM25 over the UPDATED corpus from scratch,
@@ -4467,29 +4467,29 @@ object VectorQueries {
     * dropped), or stale (N, avgdl, df) statistics hash-mismatch.
     * Round 11: the index lives under an [[graft.search.AliasedIndex]]
     * root and the fold runs through the alias-aware
-    * [[graft.search.Bm25Index.compactTombstones]] — both artifacts fold
+    * [[graft.search.TermIndex.compactTombstones]] — every layout folds
     * in a copied v2 published atomically, so a reader can never see
-    * postings folded but doclen not; the follow-up append lands in the
+    * term rows folded but doclen not; the follow-up append lands in the
     * published current version (file appends are reader-safe in
     * place), and the serve resolves the root like any reader. */
   private val bm25UpsertSearch = Q(
     "bm25_upsert_search",
     (s, dir) => {
-      import graft.search.{AliasedIndex, Bm25Index, Tombstones}
+      import graft.search.{AliasedIndex, Bm25Index, TermIndex, Tombstones}
       val docs = Tables.documents(s, dir)
-      val idx = s"/tmp/graft_bm25up_${math.abs(dir.hashCode)}"
+      val idx = s"/tmp/graft_bm25up_terms_${math.abs(dir.hashCode)}"
       mutateOnce(s, idx) {
         val p = new org.apache.hadoop.fs.Path(idx)
         p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
         AliasedIndex.init(s, idx) { d =>
-          Bm25Index.build(docs, "doc_id", "text", d)
+          TermIndex.build(docs, "doc_id", "text", d)
         }
         val updated = docs.where(col("doc_id") % 10 === 2)
           .withColumn("text", concat(col("text"), lit(" merge merge")))
         Tombstones.record(updated.select(col("doc_id").as("id")),
           AliasedIndex.currentDir(s, idx), "id")
-        Bm25Index.compactTombstones(s, idx) // alias-aware: publishes v2
-        Bm25Index.append(updated, "doc_id", "text", idx)
+        TermIndex.compactTombstones(s, idx) // alias-aware: publishes v2
+        TermIndex.append(updated, "doc_id", "text", idx)
       }
       Bm25Index.search(s, idx, Seq("scan", "filter", "merge"), k = 10)
         .withColumnRenamed("id", "doc_id")

@@ -97,16 +97,16 @@ object AliasedIndex {
   /** Run an IN-PLACE maintenance verb under the alias discipline — the
     * round-11 default for every rewrite verb ([[IvfIndex
     * .compactTombstones]]/[[IvfIndex.compactVersions]]/[[IvfIndex
-    * .rebalance]], [[TermIndex.compactSegments]], the BM25/phrase
-    * tombstone folds): on an aliased root, copy the current version to
-    * `v<N+1>`, run `verb(v<N+1>)`, publish atomically — readers keep
-    * serving `v<N>` through the whole verb, including its rename-aside
-    * transition instants, and flip to a COMPLETE new version or never
-    * see it. On a flat root the verb runs in place (legacy layouts keep
-    * their semantics — single-writer, transient-window documented).
-    * Returns the dir the verb ran against (= the new serving dir when
-    * aliased). Pure file appends ([[IvfIndex.append]], [[Bm25Index
-    * .append]], [[TermIndex.appendSegment]]) do NOT need this — a
+    * .rebalance]], [[TermIndex.compactSegments]] and
+    * [[TermIndex.compactTombstones]]): on an aliased root, copy the
+    * current version to `v<N+1>`, run `verb(v<N+1>)`, publish
+    * atomically — readers keep serving `v<N>` through the whole verb,
+    * including its rename-aside transition instants, and flip to a
+    * COMPLETE new version or never see it. On a flat root the verb runs
+    * in place (legacy layouts keep their semantics — single-writer,
+    * transient-window documented). Returns the dir the verb ran against
+    * (= the new serving dir when aliased). Pure file appends
+    * ([[IvfIndex.append]], [[TermIndex.append]]) do NOT need this — a
     * reader's plan lists files once, so an append is reader-safe in
     * place against [[resolveDir]]. */
   def maintain(spark: SparkSession, root: String, keepVersions: Int = 1)

@@ -4,54 +4,34 @@ import graft.text.TextAnalysis
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Incremental BM25 index — the lexical-search analogue of
-  * [[IvfIndex.append]] and [[GraphAnn.append]], completing the
-  * every-index-maintains-incrementally discipline (the reference's
-  * keyword-enhanced search, src/app.py:297-340, rebuilds nothing
-  * because Milvus owns its inverted structures; this is that
-  * maintenance surface made explicit). Tokenization happens
-  * ONCE per document at ingest, the artifact absorbs new batches by
-  * parquet FILE APPEND (no rewrite, no re-tokenization of the existing
-  * corpus), and every corpus statistic BM25 needs is derivable from the
-  * artifact alone.
-  *
-  * Layout:
-  *   - `postings/` (id, term, tf) — the inverted index rows
-  *   - `doclen/`   (id, dl)      — per-doc token counts
+/** BM25 over the lexical tier's one artifact, plus the field-weighted
+  * BM25F variant with its own per-field layout. The unfielded scorer
+  * owns no storage: [[TermIndex]] writes (and compacts, and folds
+  * tombstones out of) the (id, term, tf, pos) term rows and the
+  * (id, dl) doclen rows it reads — the reference's keyword-enhanced
+  * search (src/app.py:297-340) is this ranking over that maintained
+  * artifact.
   *
   * df(term) and (N, avgdl) are computed at query time FROM the artifact:
-  * df from the postings restricted to the query terms (a pushed `term
-  * IN (...)` filter — the only postings ever read), N/avgdl from the
-  * doclen table (1 row per doc; the exact-long-sum ÷ count discipline of
+  * df from the term rows restricted to the query terms (a pushed `term
+  * IN (...)` filter — the only term rows ever read, and column pruning
+  * keeps the scan off `pos`), N/avgdl from doclen (1 row per doc,
+  * zero-token docs included; the exact-long-sum ÷ count discipline of
   * [[Bm25.score]], so merged batches can never drift a floating
   * accumulator). Because BOTH statistics are pure aggregates of appended
   * rows, append-then-search equals rebuild-then-search EXACTLY — the
   * mergeable-stats property `incremental_agg_merge` pins for plain
   * aggregates, applied to a ranking index.
-  *
-  * Scale shape (100 TB): ingest tokenizes only the new batch; search
-  * reads `terms`-matching postings (pushed filter) + the doclen
-  * aggregate. At warehouse scale doclen's (N, sum dl) would fold into a
-  * running 1-row stats file per append; kept derivational here so the
-  * artifact has no state row to corrupt.
   */
 object Bm25Index {
+  /** The FIELDED layout's dirs: `postings/` (id, field, term, tf) and
+    * `doclen/` (id, field, dl). */
   def postingsDir(indexDir: String): String = s"$indexDir/postings"
   def doclenDir(indexDir: String): String = s"$indexDir/doclen"
 
   // Explicit reader schemas — this object's own writer contract
-  // (round 16, fixed-cost audit: schema inference's footer job per
-  // read is pure metadata I/O on every BM25 serve).
-  private val postingsSchema = {
-    import org.apache.spark.sql.types._
-    StructType(Seq(StructField("id", LongType),
-      StructField("term", StringType), StructField("tf", LongType)))
-  }
-  private val doclenSchema = {
-    import org.apache.spark.sql.types._
-    StructType(Seq(StructField("id", LongType),
-      StructField("dl", LongType)))
-  }
+  // (schema inference's footer job per read is pure metadata I/O on
+  // every serve).
   private val fieldedPostingsSchema = {
     import org.apache.spark.sql.types._
     StructType(Seq(StructField("id", LongType),
@@ -64,82 +44,6 @@ object Bm25Index {
       StructField("field", StringType), StructField("dl", LongType)))
   }
 
-  private def tokenize(docs: DataFrame, idCol: String, textCol: String)
-      : (DataFrame, DataFrame) = {
-    // dl counts REAL terms only: split on leading whitespace yields an
-    // empty first token, which postings drops — dl must drop it too or
-    // the artifact's "per-doc token count" silently over-counts.
-    // ONE tokenize pass shared by both artifacts (round 17): postings
-    // and doclen each consume the split through their own write action,
-    // so the un-checkpointed pair ran the tokenize twice per
-    // build/append (the FullText.appendFrom materialize-once
-    // discipline). Build pays one corpus-bounded materialization;
-    // appends are micro-batch-bounded.
-    val toks = TextAnalysis.wsTerms(col(textCol))
-    val base = docs.select(col(idCol).cast("long").as("id"),
-      toks.as("__tk")).localCheckpoint(true)
-    val postings = base
-      .select(col("id"), explode(col("__tk")).as("term"))
-      .groupBy(col("id"), col("term"))
-      .agg(count(lit(1)).as("tf"))
-    val doclen = base.select(col("id"),
-      size(col("__tk")).cast("long").as("dl"))
-    (postings, doclen)
-  }
-
-  /** The two artifact writes are independent dirs — submit them
-    * concurrently (guide §2.6, the streaming-ingest overlap precedent:
-    * wall-clock is max(p, d) instead of p + d; the crash window —
-    * one artifact ahead of the other until a re-run — is the same
-    * either way, only its ordering changes). */
-  private def writeBoth(p: DataFrame, d: DataFrame, indexDir: String,
-                        mode: String): Unit = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    val fp = Future { p.write.mode(mode).parquet(postingsDir(indexDir)) }
-    val fd = Future { d.write.mode(mode).parquet(doclenDir(indexDir)) }
-    Await.result(fp, Duration.Inf)
-    Await.result(fd, Duration.Inf)
-  }
-
-  /** Build the artifact from scratch (overwrites). */
-  def build(docs: DataFrame, idCol: String, textCol: String,
-            indexDir: String): Unit = {
-    val (p, d) = tokenize(docs, idCol, textCol)
-    writeBoth(p, d, indexDir, "overwrite")
-  }
-
-  /** Absorb a new batch: tokenize ONLY the batch, append its rows.
-    * Ids must be new (same contract as Collection.append — dedup is the
-    * upsert/dedup family's job, not the index's). */
-  def append(batch: DataFrame, idCol: String, textCol: String,
-             indexDir0: String): Unit = {
-    // appends land in the CURRENT published version when the root is
-    // aliased: a pure file append is reader-safe in place (a reader's
-    // plan lists files once), so it needs no version copy — only
-    // rewrite verbs pay the AliasedIndex.maintain discipline
-    val indexDir = AliasedIndex.resolveDir(batch.sparkSession, indexDir0)
-    val (p, d) = tokenize(batch, idCol, textCol)
-    p.write.mode("append").parquet(postingsDir(indexDir))
-    d.write.mode("append").parquet(doclenDir(indexDir))
-  }
-
-  /** Fold recorded tombstones into postings + doclen and clear them —
-    * the lexical family's compaction verb, alias-aware by DEFAULT: on a
-    * root with published versions both folds run against a copy of the
-    * current version and publish atomically ([[AliasedIndex.maintain]]
-    * — readers never see the per-artifact rename-aside instants, or a
-    * state where postings folded but doclen didn't); flat layouts fold
-    * in place, both artifacts before the clear (the [[Tombstones
-    * .clear]] contract). */
-  def compactTombstones(spark: SparkSession, root: String): Unit =
-    AliasedIndex.maintain(spark, root) { d =>
-      Tombstones.compact(spark, d, postingsDir(d), Seq("id"))
-      Tombstones.compact(spark, d, doclenDir(d), Seq("id"))
-      Tombstones.clear(spark, d)
-    }
-
   // --- BM25F: field-weighted lexical scoring over a per-field artifact
   // (Robertson & Zaragoza 2009 §5.4 / Zaragoza et al., TREC 2004 —
   // "simple BM25F": per-field length-normalized tf, field weights
@@ -149,9 +53,8 @@ object Bm25Index {
   // concatenated text cannot express.
 
   /** Tokenize one batch per field: postings (id, field, term, tf) and
-    * doclen (id, field, dl) — the [[tokenize]] shape with a field tag,
-    * one row pair per (doc, field) even when a field is empty (dl 0),
-    * so N derives from the artifact. */
+    * doclen (id, field, dl), one row pair per (doc, field) even when a
+    * field is empty (dl 0), so N derives from the artifact. */
   private def tokenizeFielded(docs: DataFrame, idCol: String,
                               fieldCols: Seq[String])
       : (DataFrame, DataFrame) = {
@@ -178,13 +81,14 @@ object Bm25Index {
     d.write.mode("overwrite").parquet(doclenDir(indexDir))
   }
 
-  /** Absorb a new batch by file append — the [[append]] contract,
-    * fielded. */
+  /** Absorb a new batch by file append — the [[TermIndex.append]]
+    * contract (ids must be new), fielded. */
   def appendFielded(batch: DataFrame, idCol: String,
                     fieldCols: Seq[String], indexDir0: String): Unit = {
-    // aliased-root resolution, exactly like [[append]]: a fielded append
-    // against an aliased root must land in the SERVED version dir, or
-    // the update is silently invisible to searchFielded's resolved path
+    // aliased-root resolution, exactly like [[TermIndex.append]]: a
+    // fielded append against an aliased root must land in the SERVED
+    // version dir, or the update is silently invisible to
+    // searchFielded's resolved path
     val indexDir = AliasedIndex.resolveDir(batch.sparkSession, indexDir0)
     val (p, d) = tokenizeFielded(batch, idCol, fieldCols)
     p.write.mode("append").parquet(postingsDir(indexDir))
@@ -254,11 +158,11 @@ object Bm25Index {
              idFilter: Option[DataFrame] = None): DataFrame = {
     // aliased-root resolution — see [[searchFielded]]
     val indexDir = AliasedIndex.resolveDir(spark, indexDir0)
-    val postings = spark.read.schema(postingsSchema)
-      .parquet(postingsDir(indexDir))
+    val postings = TermIndex.postings(spark, indexDir)
       .where(col("term").isin(terms: _*))
-    val doclen = spark.read.schema(doclenSchema)
-      .parquet(doclenDir(indexDir))
+      .select(col("id"), col("term"), col("tf"))
+    val doclen = TermIndex.doclen(spark, indexDir)
+      .select(col("id"), col("dl"))
     val stats = doclen.agg(
       count(lit(1)).cast("double").as("n_docs"),
       (sum(col("dl")).cast("double") / count(lit(1)).cast("double"))

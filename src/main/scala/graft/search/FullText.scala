@@ -283,7 +283,7 @@ object FullText {
   }
 
   /** Absorb a new batch with the STORED statistics — the growing-
-    * segment discipline ([[Bm25Index.append]]'s contract: ids must be
+    * segment discipline ([[TermIndex.append]]'s contract: ids must be
     * NEW): the batch's tf parts are computed against the FROZEN
     * build-time avgdl (scores stay comparable to the sealed rows
     * without a corpus pass), terms already in the dictionary reuse

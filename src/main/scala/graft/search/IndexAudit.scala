@@ -268,7 +268,7 @@ object IndexAudit {
     * [[TermIndex.compactSegments]] scheduling signal — Lucene's merge
     * policy reads exactly this), and `term_segment_straddlers` = ids
     * holding postings rows in MORE THAN ONE segment — the violated
-    * ids-must-be-new append contract ([[TermIndex.appendSegment]]),
+    * ids-must-be-new append contract ([[TermIndex.append]]),
     * under which a doc's tf is silently DOUBLE-COUNTED across segments
     * (serving sums tf over all segments because the contract says an
     * (id, term) row never straddles). 0 on a contract-respecting
@@ -286,7 +286,7 @@ object IndexAudit {
     val straddlers =
       if (segs.size <= 1)
         spark.range(1).select(lit(0L).as("value"))
-      else spark.read.parquet(TermIndex.sortedPostingsDir(dir))
+      else TermIndex.postings(spark, dir)
         .select(col("id"), col("seg")).distinct()
         .groupBy(col("id"))
         .agg(countDistinct(col("seg")).as("__ns"))

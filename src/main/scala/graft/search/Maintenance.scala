@@ -176,7 +176,7 @@ object Maintenance {
     *    keys ([[Tombstones]] under `textIndexDir`, masking BM25 and
     *    phrase serving) exceed `textTombstoneFrac` of the doclen
     *    table's documents: each serve pays the anti-join until
-    *    [[Tombstones.compact]] folds postings + doclen (+ positions).
+    *    [[TermIndex.compactTombstones]] folds every lexical layout.
     *  - `reconcile` — [[IndexAudit.ivfChecks]]' drift direction:
     *    artifact ids absent from `liveCorpus` (orphans) plus corpus
     *    ids absent from the artifact (missing), threshold 0 — any
@@ -196,7 +196,7 @@ object Maintenance {
     *    there ([[GraphAnn.reelectEntries]] is the verb, or run the
     *    consolidation through
     *    [[GraphAnn.consolidateDeletesWithEntries]]).
-    *  - `compact_term_segments` (round 11) — the sorted-term layout's
+    *  - `compact_term_segments` (round 11) — the term artifact's
     *    segment count ([[TermIndex.segments]], one listStatus) vs
     *    `segmentCap`: every prefix query pays one footer read per
     *    intersecting segment, so segment debt is a serving cost
@@ -261,7 +261,7 @@ object Maintenance {
       .agg(countDistinct(struct(col("src"), col("dst"))).as("value")))
     // text: tombstone keys vs the doclen table's document count
     val nDocsDf = kv("text_docs",
-      spark.read.parquet(Bm25Index.doclenDir(textIndexDir))
+      TermIndex.doclen(spark, textIndexDir)
         .agg(countDistinct(col("id")).as("value")))
     val textTombDf = kv("text_tombstones",
       Tombstones.table(spark, textIndexDir, "id")

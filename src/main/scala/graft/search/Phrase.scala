@@ -1,6 +1,5 @@
 package graft.search
 
-import graft.text.TextAnalysis
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -8,16 +7,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * slop)` parity (the reference's engine grew first-class phrase queries
   * next to the TEXT_MATCH the keyword tier covers; the reference itself
   * does keyword-enhanced search at src/app.py:297-340). The artifact is
-  * the [[Bm25Index]] postings layout extended with token POSITIONS:
-  * `positions/` (id, term, pos) — one row per token occurrence, pos =
-  * 0-based index in the whitespace token stream. Like the BM25 artifact
-  * it absorbs new batches by parquet file APPEND (positions are
-  * per-document, so appended docs never touch existing rows).
+  * the lexical tier's one artifact ([[TermIndex]]): its (id, term, pos)
+  * columns, one row per (doc, term) with the term's 0-based positions in
+  * the whitespace token stream, exploded to one row per occurrence at
+  * read time. This object only reads; [[TermIndex]] builds, appends,
+  * compacts and folds tombstones.
   *
   * Exact-phrase serving is ONE declarative plan with no joins beyond a
   * broadcast of the m query terms (Lucene's `PhraseQuery` anchor trick,
-  * declarified): restrict postings to the phrase's terms (pushed `term
-  * IN` — the only postings ever read), align every occurrence to its
+  * declarified): restrict the artifact to the phrase's terms (pushed
+  * `term IN` — the only rows ever read), align every occurrence to its
   * candidate phrase start `anchor = pos - offset_in_phrase`, and a
   * (id, anchor) hash-agg keeps anchors where ALL m offsets are present —
   * each surviving anchor is one phrase occurrence. Cost at 100 TB: a
@@ -33,44 +32,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * exact tier.
   */
 object Phrase {
-  def positionsDir(indexDir: String): String = s"$indexDir/positions"
-
-  private def positional(docs: DataFrame, idCol: String, textCol: String)
-      : DataFrame = {
-    // Same token stream as Bm25Index: whitespace split, empties dropped.
-    // posexplode AFTER the filter so pos is the index in the REAL token
-    // sequence (matches the oracle's list_filter-then-range replay).
-    val toks = TextAnalysis.wsTerms(col(textCol))
-    docs.select(col(idCol).cast("long").as("id"),
-      posexplode(toks).as(Seq("pos", "term")))
-  }
-
-  /** Build the positional artifact from scratch (overwrites). */
-  def build(docs: DataFrame, idCol: String, textCol: String,
-            indexDir: String): Unit =
-    positional(docs, idCol, textCol)
-      .write.mode("overwrite").parquet(positionsDir(indexDir))
-
-  /** Absorb a new batch by file append — ids must be new (the
-    * [[Bm25Index.append]] contract). */
-  def append(batch: DataFrame, idCol: String, textCol: String,
-             indexDir: String): Unit =
-    // file appends land in the current published version of an aliased
-    // root (reader-safe in place — the Bm25Index.append discipline)
-    positional(batch, idCol, textCol)
-      .write.mode("append").parquet(positionsDir(
-        AliasedIndex.resolveDir(batch.sparkSession, indexDir)))
-
-  /** Fold recorded tombstones into the positional artifact and clear
-    * them — the phrase tier's compaction verb, alias-aware by default:
-    * on a root with published versions the fold runs against a copy of
-    * the current version and publishes atomically
-    * ([[AliasedIndex.maintain]]); flat layouts fold in place. */
-  def compactTombstones(spark: SparkSession, root: String): Unit =
-    AliasedIndex.maintain(spark, root) { d =>
-      Tombstones.compact(spark, d, positionsDir(d), Seq("id"))
-      Tombstones.clear(spark, d)
-    }
+  /** One row per occurrence (id, term, pos) of the `terms` — a pushed
+    * `term IN` scan of the artifact, `pos` exploded (a Generate node, no
+    * exchange). */
+  private def occurrences(spark: SparkSession, indexDir: String,
+                          terms: Seq[String]): DataFrame =
+    TermIndex.postings(spark, indexDir)
+      .where(col("term").isin(terms.distinct: _*))
+      .select(col("id"), col("term"), explode(col("pos")).as("pos"))
 
   /** Every (id, anchor) phrase occurrence — the shared core of the
     * exact-phrase family (anchor = 0-based position of the phrase's
@@ -87,12 +56,13 @@ object Phrase {
     val q = phrase.zipWithIndex
       .map { case (t, i) => (t, i.toLong) }
       .toDF("term", "off")
-    val postings = spark.read.parquet(positionsDir(indexDir))
-      .where(col("term").isin(phrase.distinct: _*))
-    val hits = postings
+    // one exchange by id serves the (id, anchor) aggregate and every
+    // per-id aggregate a caller stacks on it
+    val hits = occurrences(spark, indexDir, phrase)
       .join(broadcast(q), "term")
       .withColumn("anchor", col("pos") - col("off"))
       .where(col("anchor") >= 0)
+      .repartition(col("id"))
       .groupBy(col("id"), col("anchor"))
       .agg(countDistinct(col("off")).as("nmatch"))
       .where(col("nmatch") === m)
@@ -135,8 +105,7 @@ object Phrase {
     require(phrase.nonEmpty && slop >= 0)
     val indexDir = AliasedIndex.resolveDir(spark, indexDir0)
     val m = phrase.length
-    val postings = spark.read.parquet(positionsDir(indexDir))
-      .where(col("term").isin(phrase.distinct: _*))
+    val postings = occurrences(spark, indexDir, phrase)
     val legs = phrase.zipWithIndex.map { case (t, i) =>
       postings.where(col("term") === t)
         .select(col("id"), col("pos").as(s"p$i"))
@@ -161,8 +130,7 @@ object Phrase {
                second: String, slop: Int, k: Int): DataFrame = {
     require(slop >= 0)
     val indexDir = AliasedIndex.resolveDir(spark, indexDir0)
-    val postings = spark.read.parquet(positionsDir(indexDir))
-      .where(col("term").isin(Seq(first, second).distinct: _*))
+    val postings = occurrences(spark, indexDir, Seq(first, second))
     val p1 = postings.where(col("term") === first)
       .select(col("id"), col("pos").as("p1"))
     val p2 = postings.where(col("term") === second)

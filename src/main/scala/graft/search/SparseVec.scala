@@ -327,7 +327,7 @@ object SparseVec {
   }
 
   /** Absorb a new batch by file append into the served version — ids
-    * must be NEW (the [[Bm25Index.append]] contract); a posting append
+    * must be NEW (the [[TermIndex.append]] contract); a posting append
     * is reader-safe in place because a reader's plan lists files once.
     * Alias-root aware, like every writer since round 12. */
   def append(batch: DataFrame, idCol: String, vecCol: String, topN: Int,

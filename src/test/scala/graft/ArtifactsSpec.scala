@@ -87,12 +87,12 @@ class ArtifactsSpec extends SparkSpec {
       build = { d =>
         val docs = (0L until 40L).map(i =>
           (i, s"alpha$i beta gamma${i % 5} alpha$i")).toDF("doc_id", "text")
-        TermIndex.buildSorted(docs.where(col("doc_id") < 25), "doc_id",
+        TermIndex.build(docs.where(col("doc_id") < 25), "doc_id",
           "text", d)
-        TermIndex.appendSegment(docs.where(col("doc_id") >= 25), "doc_id",
+        TermIndex.append(docs.where(col("doc_id") >= 25), "doc_id",
           "text", d)
       },
-      live = TermIndex.sortedPostingsDir,
+      live = TermIndex.termsDir,
       prepare = d => () => TermIndex.compactSegments(spark, d),
       serve = { d =>
         TermIndex.segments(spark, d) ++

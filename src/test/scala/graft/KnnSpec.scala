@@ -120,7 +120,7 @@ class KnnSpec extends SparkSpec {
   }
 
   test("bm25 index: append-then-search equals rebuild-then-search") {
-    import graft.search.{Bm25, Bm25Index}
+    import graft.search.{Bm25, Bm25Index, TermIndex}
     val docs = Seq(
       (1L, "scan filter scan"), (2L, "merge filter x"),
       (3L, "scan y z"), (4L, "no match here"), (5L, "filter merge merge"))
@@ -130,11 +130,11 @@ class KnnSpec extends SparkSpec {
         .as[(Long, Double)].collect().toSeq
     val full = "/tmp/graft_bm25idx_full"
     val inc = "/tmp/graft_bm25idx_inc"
-    Bm25Index.build(docs, "id", "text", full)
-    Bm25Index.build(docs.where($"id" <= 2), "id", "text", inc)
-    Bm25Index.append(docs.where($"id" === 3L || $"id" === 4L),
+    TermIndex.build(docs, "id", "text", full)
+    TermIndex.build(docs.where($"id" <= 2), "id", "text", inc)
+    TermIndex.append(docs.where($"id" === 3L || $"id" === 4L),
       "id", "text", inc)
-    Bm25Index.append(docs.where($"id" === 5L), "id", "text", inc)
+    TermIndex.append(docs.where($"id" === 5L), "id", "text", inc)
     assert(results(inc) == results(full))
     // and both equal the stateless scorer's ranking
     val direct = Bm25.score(docs, "id", "text",

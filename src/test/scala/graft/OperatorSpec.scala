@@ -483,8 +483,7 @@ class OperatorSpec extends SparkSpec {
 
   test("planFull: every family's trigger fires on debt and clears " +
       "after its verb") {
-    import graft.search.{Bm25Index, GraphAnn, IndexSync, Maintenance,
-      Tombstones}
+    import graft.search.{GraphAnn, IndexSync, Maintenance, Tombstones}
     val r = new scala.util.Random(83)
     val corpus = (0L until 60L).map(i =>
         (i, Array.fill(4)((r.nextGaussian() * 0.5).toFloat)))
@@ -500,8 +499,7 @@ class OperatorSpec extends SparkSpec {
       GraphAnn.Params(degree = 4, nlist = 2))
     val docs = (0L until 20L).map(i => (i, s"tok$i common words here"))
       .toDF("doc_id", "text")
-    Bm25Index.build(docs, "doc_id", "text", textDir)
-    graft.search.TermIndex.buildSorted(docs, "doc_id", "text", textDir)
+    graft.search.TermIndex.build(docs, "doc_id", "text", textDir)
     var graphDead = corpus.limit(0).select("vec_id")
     var live = corpus
     var entries = Seq(3L, 7L).toDF("entry_id")
@@ -529,10 +527,10 @@ class OperatorSpec extends SparkSpec {
     shrunk.toSeq.toDF("cluster_id", "radius").coalesce(1)
       .write.parquet(IvfIndex.radiiDir(dir))
     // segment debt: two violating-free appends push past the cap of 2
-    graft.search.TermIndex.appendSegment(
+    graft.search.TermIndex.append(
       (20L until 25L).map(i => (i, s"tok$i more words")).toDF("doc_id",
         "text"), "doc_id", "text", textDir)
-    graft.search.TermIndex.appendSegment(
+    graft.search.TermIndex.append(
       (25L until 30L).map(i => (i, s"tok$i more words")).toDF("doc_id",
         "text"), "doc_id", "text", textDir)
     val fired = plan()
@@ -545,11 +543,7 @@ class OperatorSpec extends SparkSpec {
       corpus, "vec_id", "embedding", graphDead, entries, degree = 4)
     adj = adj2
     entries = entries2
-    Tombstones.compact(spark, textDir, Bm25Index.postingsDir(textDir),
-      Seq("id"))
-    Tombstones.compact(spark, textDir, Bm25Index.doclenDir(textDir),
-      Seq("id"))
-    Tombstones.clear(spark, textDir)
+    graft.search.TermIndex.compactTombstones(spark, textDir)
     IvfIndex.refreshRadii(spark, model, "embedding")
     IndexSync.reconcileIvf(spark, live, "vec_id", "embedding", model)
     graft.search.TermIndex.compactSegments(spark, textDir)
@@ -629,7 +623,7 @@ class OperatorSpec extends SparkSpec {
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
     val docs = Seq((1L, "alpha beta"), (2L, "beta gamma"),
       (3L, "gamma delta")).toDF("doc_id", "text")
-    TermIndex.buildSorted(docs, "doc_id", "text", dir)
+    TermIndex.build(docs, "doc_id", "text", dir)
     def counters(): Map[String, Long] =
       IndexAudit.segmentChecks(spark, dir)
         .as[(String, Long)].collect().toMap
@@ -638,7 +632,7 @@ class OperatorSpec extends SparkSpec {
       c0.toString)
     // the violating append: doc 1 re-enters in a NEW segment — its tf
     // now double-counts across segments at serve time
-    TermIndex.appendSegment(docs.where(col("doc_id") === 1), "doc_id",
+    TermIndex.append(docs.where(col("doc_id") === 1), "doc_id",
       "text", dir)
     val c1 = counters()
     assert(c1("term_segment_straddlers") == 1 && c1("term_segments") == 2,
@@ -916,15 +910,15 @@ class OperatorSpec extends SparkSpec {
     assert(AliasedIndex.currentVersion(spark, iroot) == 3)
     assert(iServe().forall(_._1 != 2L))
 
-    // --- term: appendSegment lands in-place; compactSegments
+    // --- term: append lands in-place; compactSegments
     // self-routes; prefixSearch(root) resolves ---
     val troot = "/tmp/graft_aliasdef_term"
     del(troot)
     AliasedIndex.init(spark, troot) { d =>
-      TermIndex.buildSorted(docs.where(col("doc_id") <= 3), "doc_id",
+      TermIndex.build(docs.where(col("doc_id") <= 3), "doc_id",
         "text", d)
     }
-    TermIndex.appendSegment(docs.where(col("doc_id") > 3), "doc_id",
+    TermIndex.append(docs.where(col("doc_id") > 3), "doc_id",
       "text", troot)
     assert(TermIndex.segments(spark,
       AliasedIndex.resolveDir(spark, troot)) == Seq(0, 1),
@@ -945,16 +939,16 @@ class OperatorSpec extends SparkSpec {
     assert(TermIndex.prefixSearch(spark, troot, "sc", 10)
       .as[(Long, Long)].collect().toSeq == tBefore)
     // self-routing form directly on the aliased root
-    TermIndex.appendSegment(docs.where(col("doc_id") === 1), "doc_id",
+    TermIndex.append(docs.where(col("doc_id") === 1), "doc_id",
       "text", troot) // contract violation is fine for the layout test
     TermIndex.compactSegments(spark, troot)
     assert(AliasedIndex.currentVersion(spark, troot) == 3)
 
-    // --- BM25: compactTombstones(root) folds both artifacts in v2 ---
+    // --- BM25: compactTombstones(root) folds terms + doclen in v2 ---
     val broot = "/tmp/graft_aliasdef_bm25"
     del(broot)
     AliasedIndex.init(spark, broot) { d =>
-      Bm25Index.build(docs, "doc_id", "text", d)
+      TermIndex.build(docs, "doc_id", "text", d)
     }
     // record against the ROOT — writer-side resolution is the default
     // discipline since round 12 (no caller-side currentDir)
@@ -968,13 +962,13 @@ class OperatorSpec extends SparkSpec {
       bMid = AliasedIndex.resolveDir(spark, broot).endsWith("/v1") &&
         Bm25Index.search(spark, broot, Seq("scan"), 10)
           .as[(Long, Double)].collect().toSeq == bBefore
-      Bm25Index.compactTombstones(spark, d) // flat: in-place branch
+      TermIndex.compactTombstones(spark, d) // flat: in-place branch
     }
     assert(bMid, "BM25 mid-verb reader must see complete v1")
     assert(AliasedIndex.currentVersion(spark, broot) == 2)
     val bcur = AliasedIndex.resolveDir(spark, broot)
     assert(!Tombstones.exist(spark, bcur))
-    assert(spark.read.parquet(Bm25Index.doclenDir(bcur))
+    assert(spark.read.parquet(TermIndex.doclenDir(bcur))
       .where(col("id") === 2).count() == 0,
       "doclen must fold WITH postings in the same published version")
     // post-fold SCORES legitimately change (statistics leave the
@@ -984,11 +978,11 @@ class OperatorSpec extends SparkSpec {
       .as[(Long, Double)].collect().toSeq.map(_._1).sorted ==
       bBefore.map(_._1).sorted)
 
-    // --- phrase: compactTombstones(root) folds positions in v2 ---
+    // --- phrase: compactTombstones(root) folds the term rows in v2 ---
     val proot = "/tmp/graft_aliasdef_phrase"
     del(proot)
     AliasedIndex.init(spark, proot) { d =>
-      Phrase.build(docs, "doc_id", "text", d)
+      TermIndex.build(docs, "doc_id", "text", d)
     }
     Tombstones.record(docs.where(col("doc_id") === 1)
         .select(col("doc_id").as("id")), proot, "id")
@@ -1000,7 +994,7 @@ class OperatorSpec extends SparkSpec {
       pMid = AliasedIndex.resolveDir(spark, proot).endsWith("/v1") &&
         Phrase.topK(spark, proot, Seq("scan"), 10)
           .as[(Long, Long)].collect().toSeq == pBefore
-      Phrase.compactTombstones(spark, d) // flat: in-place branch
+      TermIndex.compactTombstones(spark, d) // flat: in-place branch
     }
     assert(pMid, "phrase mid-verb reader must see complete v1")
     assert(AliasedIndex.currentVersion(spark, proot) == 2)
@@ -1168,10 +1162,10 @@ class OperatorSpec extends SparkSpec {
     // term
     val troot = "/tmp/graft_race_term"; del(troot)
     AliasedIndex.init(spark, troot) { d =>
-      TermIndex.buildSorted(docs.where(col("doc_id") <= 3), "doc_id",
+      TermIndex.build(docs.where(col("doc_id") <= 3), "doc_id",
         "text", d)
     }
-    TermIndex.appendSegment(docs.where(col("doc_id") > 3), "doc_id",
+    TermIndex.append(docs.where(col("doc_id") > 3), "doc_id",
       "text", troot)
     def tServe(): Seq[(Long, Long)] =
       TermIndex.prefixSearch(spark, troot, "sc", 10)
@@ -1183,7 +1177,7 @@ class OperatorSpec extends SparkSpec {
     // must not — compare servable id sets)
     val broot = "/tmp/graft_race_bm25"; del(broot)
     AliasedIndex.init(spark, broot) { d =>
-      Bm25Index.build(docs, "doc_id", "text", d)
+      TermIndex.build(docs, "doc_id", "text", d)
     }
     graft.search.Tombstones.record(
       docs.where(col("doc_id") === 2).select(col("doc_id").as("id")),
@@ -1192,12 +1186,12 @@ class OperatorSpec extends SparkSpec {
       Bm25Index.search(spark, broot, Seq("scan"), 10)
         .as[(Long, Double)].collect().map(_._1).toSet
     race[Set[Long]](broot, () => bServe(), bServe(),
-      d => Bm25Index.compactTombstones(spark, d))
+      d => TermIndex.compactTombstones(spark, d))
 
     // phrase
     val proot = "/tmp/graft_race_phrase"; del(proot)
     AliasedIndex.init(spark, proot) { d =>
-      Phrase.build(docs, "doc_id", "text", d)
+      TermIndex.build(docs, "doc_id", "text", d)
     }
     graft.search.Tombstones.record(
       docs.where(col("doc_id") === 1).select(col("doc_id").as("id")),
@@ -1206,7 +1200,7 @@ class OperatorSpec extends SparkSpec {
       Phrase.topK(spark, proot, Seq("scan"), 10)
         .as[(Long, Long)].collect().toSeq
     race[Seq[(Long, Long)]](proot, () => pServe(), pServe(),
-      d => Phrase.compactTombstones(spark, d))
+      d => TermIndex.compactTombstones(spark, d))
   }
 
   test("IVF rebalance preserves version history (searchLatest composes)") {

@@ -1,6 +1,6 @@
 package graft
 
-import graft.search.{Phrase, Tombstones}
+import graft.search.{Phrase, TermIndex, Tombstones}
 import org.apache.spark.sql.functions._
 
 /** Positional phrase search: the anchor trick's correctness corners —
@@ -26,7 +26,7 @@ class PhraseSpec extends SparkSpec {
 
   test("exact phrase: counts occurrences, order-sensitive") {
     val idx = freshDir("exact")
-    Phrase.build(docs, "doc_id", "text", idx)
+    TermIndex.build(docs, "doc_id", "text", idx)
     val got = Phrase.topK(spark, idx, Seq("a", "b", "c"), k = 10)
       .as[(Long, Long)].collect().toSeq
     // doc 1 has two occurrences (pos 0 and 4); doc 2 broken; doc 3
@@ -36,7 +36,7 @@ class PhraseSpec extends SparkSpec {
 
   test("repeated term in phrase needs distinct positions per offset") {
     val idx = freshDir("rep")
-    Phrase.build(docs, "doc_id", "text", idx)
+    TermIndex.build(docs, "doc_id", "text", idx)
     // phrase "a a": one posting row at a single position must NOT
     // satisfy both offsets — doc 4 ("a a a") has two anchors, doc 1
     // has 'a ... a' but never adjacent
@@ -47,7 +47,7 @@ class PhraseSpec extends SparkSpec {
 
   test("slop window: ordered, bounded gap, distinct anchors") {
     val idx = freshDir("slop")
-    Phrase.build(docs, "doc_id", "text", idx)
+    TermIndex.build(docs, "doc_id", "text", idx)
     // b→c with slop 1: doc1 (b@1 c@2, b@5 c@6 → 2 anchors), doc2
     // (b@1, c@3: gap 1 → 1 anchor), doc5 (b@0 c@1 → 1; b@3 no c after)
     val got = Phrase.slopTopK(spark, idx, "b", "c", slop = 1, k = 10)
@@ -62,7 +62,7 @@ class PhraseSpec extends SparkSpec {
   test("general slop: slop 0 equals the exact anchor search; budget " +
       "is TOTAL intervening tokens") {
     val idx = freshDir("slopm")
-    Phrase.build(docs, "doc_id", "text", idx)
+    TermIndex.build(docs, "doc_id", "text", idx)
     // slop 0 degenerates to exact: same anchors, same counts
     val exact = Phrase.topK(spark, idx, Seq("a", "b", "c"), k = 10)
       .as[(Long, Long)].collect().toSeq
@@ -77,9 +77,9 @@ class PhraseSpec extends SparkSpec {
 
   test("append equals rebuild") {
     val a = freshDir("appendA"); val b = freshDir("appendB")
-    Phrase.build(docs, "doc_id", "text", a)
-    Phrase.build(docs.where(col("doc_id") <= 2), "doc_id", "text", b)
-    Phrase.append(docs.where(col("doc_id") > 2), "doc_id", "text", b)
+    TermIndex.build(docs, "doc_id", "text", a)
+    TermIndex.build(docs.where(col("doc_id") <= 2), "doc_id", "text", b)
+    TermIndex.append(docs.where(col("doc_id") > 2), "doc_id", "text", b)
     val ra = Phrase.topK(spark, a, Seq("a", "b"), k = 10)
       .as[(Long, Long)].collect().toSeq
     val rb = Phrase.topK(spark, b, Seq("a", "b"), k = 10)
@@ -91,8 +91,7 @@ class PhraseSpec extends SparkSpec {
       "corpus-wide stats") {
     import graft.search.Bm25Index
     val idx = freshDir("filter")
-    Phrase.build(docs, "doc_id", "text", idx)
-    Bm25Index.build(docs, "doc_id", "text", idx)
+    TermIndex.build(docs, "doc_id", "text", idx)
     val ids = Phrase.matchingIds(spark, idx, Seq("a", "b"))
       .as[Long].collect().toSet
     assert(ids == Set(1L, 2L, 5L)) // all docs with adjacent "a b"
@@ -110,7 +109,7 @@ class PhraseSpec extends SparkSpec {
 
   test("tombstone mask hides deleted docs until compaction") {
     val idx = freshDir("tomb")
-    Phrase.build(docs, "doc_id", "text", idx)
+    TermIndex.build(docs, "doc_id", "text", idx)
     Tombstones.record(Seq(1L).toDF("id"), idx, "id")
     val got = Phrase.topK(spark, idx, Seq("a", "b", "c"), k = 10)
       .as[(Long, Long)].collect().toSeq

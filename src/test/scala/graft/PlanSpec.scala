@@ -100,6 +100,29 @@ class PlanSpec extends SparkSpec {
     }, s"lexical dispatch did not serve from the postings artifact: $metas")
     assert(!metas.exists(_._1.contains("documents.parquet")),
       s"routed text serve fell back to a corpus scan: $metas")
+    // the term artifact also stores positions; column pruning keeps
+    // the BM25 scan off them
+    val termSchemas = df.queryExecution.sparkPlan.collect {
+      case f: org.apache.spark.sql.execution.FileSourceScanExec
+          if f.metadata.getOrElse("Location", "").contains("/terms") =>
+        f.metadata.getOrElse("ReadSchema", "")
+    }
+    assert(termSchemas.nonEmpty && termSchemas.forall(!_.contains("pos")),
+      s"BM25 reads the artifact's positions: $termSchemas")
+  }
+
+  test("lexical plans build without a Spark job: pinned reader schemas, " +
+      "no schema inference") {
+    import org.apache.spark.JobCounter
+    Queries.all("term_prefix_search")(spark, dir).collect() // builds idx
+    val idx = s"/tmp/graft_prefix_terms_${math.abs(dir.hashCode)}"
+    assert(!graft.search.Tombstones.exist(spark, idx))
+    val (_, jobs) = JobCounter.count(spark.sparkContext) {
+      Seq(graft.search.Phrase.topK(spark, idx, Seq("scan", "merge"), 10),
+        graft.search.TermIndex.prefixSearch(spark, idx, "sc", 10))
+        .map(_.queryExecution.executedPlan)
+    }
+    assert(jobs == 0, s"building the plans ran $jobs Spark jobs")
   }
 
   test("clustering compaction: window predicate reaches the clustered scan") {
@@ -390,7 +413,7 @@ class PlanSpec extends SparkSpec {
     // the (tiny) candidate side broadcast — a naive lev(term, q) filter
     // over the postings × dictionary would nest-loop
     Queries.all("term_prefix_search")(spark, dir).collect() // builds idx
-    val idx = s"/tmp/graft_prefix_${math.abs(dir.hashCode)}"
+    val idx = s"/tmp/graft_prefix_terms_${math.abs(dir.hashCode)}"
     val p = graft.search.TermIndex
       .fuzzySearch(spark, idx, "port", maxDist = 1, k = 10)
       .queryExecution.executedPlan.toString()

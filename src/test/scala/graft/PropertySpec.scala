@@ -238,7 +238,7 @@ class PropertySpec extends SparkSpec {
 
   test("property: phrase anchor search equals sliding-window counts on " +
       "random token streams") {
-    import graft.search.Phrase
+    import graft.search.{Phrase, TermIndex}
     // tiny vocab so phrases (incl. repeated-term ones) actually occur
     val tokGen = Gen.oneOf("a", "b", "c")
     val docGen = Gen.chooseNum(0, 12).flatMap(n => Gen.listOfN(n, tokGen))
@@ -254,7 +254,7 @@ class PropertySpec extends SparkSpec {
       val p = new org.apache.hadoop.fs.Path(idx)
       p.getFileSystem(spark.sparkContext.hadoopConfiguration)
         .delete(p, true)
-      Phrase.build(corpus.toDF("doc_id", "text"), "doc_id", "text", idx)
+      TermIndex.build(corpus.toDF("doc_id", "text"), "doc_id", "text", idx)
       val got = Phrase.topK(spark, idx, phrase, k = 100)
         .as[(Long, Long)].collect().toMap
       val want = corpus.map { case (id, text) =>

@@ -217,12 +217,12 @@ class TextSearchSpec extends SparkSpec {
       p.getFileSystem(spark.sparkContext.hadoopConfiguration)
         .delete(p, true)
     }
-    TermIndex.buildSorted(many.where(col("doc_id") < 25), "doc_id",
+    TermIndex.build(many.where(col("doc_id") < 25), "doc_id",
       "text", dirInc)
-    TermIndex.appendSegment(many.where(col("doc_id") >= 25), "doc_id",
+    TermIndex.append(many.where(col("doc_id") >= 25), "doc_id",
       "text", dirInc)
     assert(TermIndex.segments(spark, dirInc) == Seq(0, 1))
-    TermIndex.buildSorted(many, "doc_id", "text", dirFull)
+    TermIndex.build(many, "doc_id", "text", dirFull)
     def serve(d: String) =
       TermIndex.prefixSearch(spark, d, "alpha", k = 50)
         .as[(Long, Long)].collect().toSeq
@@ -254,7 +254,7 @@ class TextSearchSpec extends SparkSpec {
     val dir = "/tmp/graft_infix_unit_test"
     val p = new org.apache.hadoop.fs.Path(dir)
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-    TermIndex.buildSorted(docs, "doc_id", "text", dir)
+    TermIndex.build(docs, "doc_id", "text", dir)
     TermIndex.buildTrigrams(spark, dir)
     assert(TermIndex.infixTerms(spark, dir, "abcab")
       .as[String].collect().toSeq == Seq("xabcabx"),

@@ -1,6 +1,6 @@
 package graft
 
-import graft.search.{Bm25Index, GraphAnn, IvfIndex, Tombstones}
+import graft.search.{Bm25Index, GraphAnn, IvfIndex, TermIndex, Tombstones}
 import org.apache.spark.sql.functions._
 
 /** Delete propagation to derived serving artifacts: tombstone record /
@@ -257,7 +257,7 @@ class TombstonesSpec extends SparkSpec {
       (0L, "scan the filter scan"), (1L, "merge filter join"),
       (2L, "scan scan scan"), (3L, "window shuffle"),
       (4L, "filter merge scan")).toDF("id", "text")
-    Bm25Index.build(docs, "id", "text", dir)
+    TermIndex.build(docs, "id", "text", dir)
     val before = Bm25Index.search(spark, dir, Seq("scan", "filter"), 5)
       .collect().map(x => x.getLong(0) -> x.getDouble(1)).toMap
     Tombstones.record(Seq(2L).toDF("id"), dir, "id")

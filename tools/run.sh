@@ -1,7 +1,10 @@
 #!/bin/bash
 # Run a graft main class outside sbt (same JVM flags as build.sbt).
 # Usage: tools/run.sh graft.Bench [args...]   (env passes through)
-CP="/root/repo/target/scala-2.13/classes:$(ls /opt/spark/jars/*.jar | tr '\n' ':')"
+# Classes come from the checkout this script lives in, so a second
+# checkout (a parent kept for comparison) runs its own build.
+ROOT="$(cd "$(dirname "${BASH_SOURCE[0]}")/.." && pwd)"
+CP="$ROOT/target/scala-2.13/classes:$(ls /opt/spark/jars/*.jar | tr '\n' ':')"
 exec java \
   --add-opens java.base/java.lang=ALL-UNNAMED \
   --add-opens java.base/java.lang.invoke=ALL-UNNAMED \
