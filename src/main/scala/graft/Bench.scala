@@ -44,10 +44,15 @@ object Bench {
         override def onJobStart(
             js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
           jobCount.incrementAndGet()
+          // the registry sets no job description, so a job without one
+          // is named by its first stage, whose name is the call site
           if (sys.env.contains("SPARK_GRAFT_BENCH_TRACE"))
             System.err.println("[job] " + Option(js.properties)
-              .map(p => p.getProperty("spark.job.description",
-                p.getProperty("callSite.short"))).getOrElse("?"))
+              .flatMap(p => Option(p.getProperty("spark.job.description")))
+              .filter(_.nonEmpty)
+              .orElse(js.stageInfos.sortBy(_.stageId).headOption
+                .map(_.name))
+              .getOrElse("?"))
           ()
         }
       })
@@ -124,8 +129,8 @@ object Bench {
     // bound: per-query times at 3 decimals, SLOWEST first, keeping as
     // many as fit a fixed budget; the dropped fast tail is accounted for
     // explicitly (omitted count + their summed seconds), so `value`
-    // always equals sum(queries) + omitted_time. Full per-query data is
-    // reproducible by running this main directly.
+    // always equals sum(queries) + omitted_time. The full per-entry
+    // table goes to stderr (`[bench-table]`).
     // Locale.ROOT: a comma-decimal default locale would print "0,123"
     // and break the JSON (the HashingEmbedder lowercasing rationale)
     def fmt(v: Double): String =
@@ -171,6 +176,12 @@ object Bench {
     if (only.nonEmpty)
       System.err.println("[bench-jobs] " + lastJobs.map {
         case (k, v) => s"$k=$v" }.mkString(" "))
+    // every entry's median and min, uncapped, slowest first: the full
+    // table the budgeted stdout line cannot carry
+    System.err.println("[bench-table] entry\tmedian_s\tmin_s")
+    desc.foreach { case (k, v) =>
+      System.err.println(s"[bench-table] $k\t${fmt(v)}\t${fmt(resultsMin(k))}")
+    }
     try spark.stop()
     catch { case e: Throwable =>
       System.err.println(s"Bench: spark.stop() failed: $e") }

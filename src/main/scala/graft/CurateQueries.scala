@@ -123,7 +123,7 @@ object CurateQueries {
     (s, dir) =>
       graft.curate.Contamination.report(Tables.documents(s, dir),
           "doc_id", "text",
-          workDir = Some(s"/tmp/graft_dedup_${math.abs(dir.hashCode)}"))
+          workDir = Some(Fixtures.dedupWorkDir(dir)))
         .orderBy(col("doc_id").asc),
     Some(s"""
       WITH sp AS (SELECT doc_id, text,
@@ -180,7 +180,7 @@ object CurateQueries {
     (s, dir) =>
       graft.curate.Contamination.bloomScrub(Tables.documents(s, dir),
           "doc_id", "text",
-          workDir = Some(s"/tmp/graft_dedup_${math.abs(dir.hashCode)}"))
+          workDir = Some(Fixtures.dedupWorkDir(dir)))
         .orderBy(col("doc_id").asc),
     Some(s"""
       WITH sp AS (SELECT doc_id, text,

@@ -15,7 +15,7 @@ object DedupQueries {
     * (and every re-bench) scans the artifact, which is the warehouse
     * execution shape. */
   private def wd(dir: String): Option[String] =
-    Some(s"/tmp/graft_dedup_${math.abs(dir.hashCode)}")
+    Some(Fixtures.dedupWorkDir(dir))
   /** DuckDB token-3-gram distinct shingles CTE over `documents`. */
   private val duckShingles = """
       sh AS (
@@ -627,12 +627,9 @@ object DedupQueries {
   private val annBulkTopkGuaranteed = Q(
     "ann_bulk_topk_guaranteed",
     (s, dir) => {
-      val indexDir = s"/tmp/graft_ivf_${math.abs(dir.hashCode)}"
+      val indexDir = Fixtures.ivfDir(dir)
       val e = Tables.embeddings(s, dir)
-      val model =
-        if (new java.io.File(graft.search.IvfIndex.centroidsDir(indexDir)).exists())
-          graft.search.IvfIndex.load(s, indexDir)
-        else graft.search.IvfIndex.build(e, "embedding", indexDir, nlist = 16)
+      val model = Fixtures.ivf(s, dir)
       stageOracleOnceLazy(s, "annk", dir)(Seq(
         "centroids" -> s.read.parquet(
           graft.search.IvfIndex.centroidsDir(indexDir)),
@@ -699,12 +696,9 @@ object DedupQueries {
   private val semanticDedup = Q(
     "semantic_dedup",
     (s, dir) => {
-      val indexDir = s"/tmp/graft_ivf_${math.abs(dir.hashCode)}"
+      val indexDir = Fixtures.ivfDir(dir)
       val e = Tables.embeddings(s, dir)
-      val model =
-        if (new java.io.File(graft.search.IvfIndex.centroidsDir(indexDir)).exists())
-          graft.search.IvfIndex.load(s, indexDir)
-        else graft.search.IvfIndex.build(e, "embedding", indexDir, nlist = 16)
+      val model = Fixtures.ivf(s, dir)
       val assignments = s.read.parquet(graft.search.IvfIndex.dataDir(indexDir))
         .select(col("vec_id"), col("cluster_id"))
       stageOracleOnce(s, "semdedup", dir)("assign" -> assignments)
@@ -799,12 +793,9 @@ object DedupQueries {
     "ann_recall_report",
     (s, dir) => {
       import org.apache.spark.sql.expressions.Window
-      val indexDir = s"/tmp/graft_ivf_${math.abs(dir.hashCode)}"
+      val indexDir = Fixtures.ivfDir(dir)
       val e = Tables.embeddings(s, dir)
-      val model =
-        if (new java.io.File(graft.search.IvfIndex.centroidsDir(indexDir)).exists())
-          graft.search.IvfIndex.load(s, indexDir)
-        else graft.search.IvfIndex.build(e, "embedding", indexDir, nlist = 16)
+      val model = Fixtures.ivf(s, dir)
       stageOracleOnceLazy(s, "annrecall", dir)(Seq(
         "centroids" -> s.read.parquet(
           graft.search.IvfIndex.centroidsDir(indexDir)),

@@ -47,8 +47,7 @@ object ExtraQueries {
     (s, dir) => {
       val e = Tables.embeddings(s, dir)
       val (model, indexed) = AnnLsh.fit(e, "embedding")
-      val query = e.where(col("vec_id") === 0).select("embedding")
-        .collect()(0).getSeq[Float](0).toArray
+      val query = Fixtures.queryVector(e)
       AnnLsh.neighbors(model, indexed, query, k = 5, idCol = "vec_id")
     },
     None)

@@ -1,7 +1,7 @@
 package graft
 
 import graft.QueryDsl._
-import graft.core.{Collection, Tables}
+import graft.core.{Artifacts, Collection, Tables}
 import graft.functions.VectorFunctions
 import graft.ingest.{Embed, HashingEmbedder, Loaders, Preprocess}
 import graft.rag.Compose
@@ -41,14 +41,9 @@ object PipelineQueries {
   private val ivfSearch = Q(
     "ivf_search",
     (s, dir) => {
-      val indexDir = s"/tmp/graft_ivf_${math.abs(dir.hashCode)}"
       val e = Tables.embeddings(s, dir)
-      val model =
-        if (new java.io.File(IvfIndex.centroidsDir(indexDir)).exists())
-          IvfIndex.load(s, indexDir)
-        else IvfIndex.build(e, "embedding", indexDir, nlist = 16)
-      val query = e.where(col("vec_id") === 0).select("embedding")
-        .collect()(0).getSeq[Float](0).toArray
+      val model = Fixtures.ivf(s, dir)
+      val query = Fixtures.queryVector(e)
       IvfIndex.search(s, model, "embedding", "vec_id", query, k = 5,
           nprobe = model.nlist)
         .select("vec_id", "distance")
@@ -68,14 +63,9 @@ object PipelineQueries {
   private val ivfSearchIterate = Q(
     "ivf_search_iterate",
     (s, dir) => {
-      val indexDir = s"/tmp/graft_ivf_${math.abs(dir.hashCode)}"
       val e = Tables.embeddings(s, dir)
-      val model =
-        if (new java.io.File(IvfIndex.centroidsDir(indexDir)).exists())
-          IvfIndex.load(s, indexDir)
-        else IvfIndex.build(e, "embedding", indexDir, nlist = 16)
-      val query = e.where(col("vec_id") === 0).select("embedding")
-        .collect()(0).getSeq[Float](0).toArray
+      val model = Fixtures.ivf(s, dir)
+      val query = Fixtures.queryVector(e)
       var cursor: Option[(Double, Long)] = None
       val pages = (0 until 3).map { p =>
         val pg = IvfIndex.searchAfter(s, model, "embedding", "vec_id",
@@ -114,14 +104,9 @@ object PipelineQueries {
   private val ivfIpSearch = Q(
     "ivf_ip_search",
     (s, dir) => {
-      val indexDir = s"/tmp/graft_ivf_${math.abs(dir.hashCode)}"
       val e = Tables.embeddings(s, dir)
-      val model =
-        if (new java.io.File(IvfIndex.centroidsDir(indexDir)).exists())
-          IvfIndex.load(s, indexDir)
-        else IvfIndex.build(e, "embedding", indexDir, nlist = 16)
-      val query = e.where(col("vec_id") === 0).select("embedding")
-        .collect()(0).getSeq[Float](0).toArray
+      val model = Fixtures.ivf(s, dir)
+      val query = Fixtures.queryVector(e)
       IvfIndex.searchIp(s, model, "embedding", "vec_id", query, k = 5,
         nprobe = model.nlist)
     },
@@ -155,10 +140,7 @@ object PipelineQueries {
             "aggregate(embedding, CAST(0.0 AS DOUBLE), " +
             "(acc, v) -> acc + CAST(v AS DOUBLE) * CAST(v AS DOUBLE))" +
             ") AS FLOAT))"))
-      val model =
-        if (new java.io.File(IvfIndex.centroidsDir(indexDir)).exists())
-          IvfIndex.load(s, indexDir)
-        else IvfIndex.build(normed(e), "embedding", indexDir, nlist = 16)
+      val model = Fixtures.ivfAt(s, indexDir)(normed(e))
       val query = normed(e.where(col("vec_id") === 0))
         .select("embedding").collect()(0).getSeq[Float](0).toArray
       IvfIndex.searchIp(s, model, "embedding", "vec_id", query, k = 5,
@@ -196,19 +178,9 @@ object PipelineQueries {
   private val ivfRangeSearch = Q(
     "ivf_range_search",
     (s, dir) => {
-      val indexDir = s"/tmp/graft_ivf_${math.abs(dir.hashCode)}"
       val e = Tables.embeddings(s, dir)
-      val model =
-        if (new java.io.File(IvfIndex.centroidsDir(indexDir)).exists())
-          IvfIndex.load(s, indexDir)
-        else IvfIndex.build(e, "embedding", indexDir, nlist = 16)
-      // the index's OWN maintained radii (round 10: written at build,
-      // folded by append/upsert, recomputed by rebalance) — no caller-
-      // managed refresh; a pre-radii layout (warm /tmp) gets one here
-      if (IvfIndex.loadRadii(s, indexDir).isEmpty)
-        IvfIndex.refreshRadii(s, model, "embedding")
-      val query = e.where(col("vec_id") === 0).select("embedding")
-        .collect()(0).getSeq[Float](0).toArray
+      val model = Fixtures.ivf(s, dir)
+      val query = Fixtures.queryVector(e)
       IvfIndex.rangeSearch(s, model, "embedding", "vec_id", query,
         rLo = 1.0, rHi = 1.6)
     },
@@ -231,17 +203,9 @@ object PipelineQueries {
   private val ivfExactKnn = Q(
     "ivf_exact_knn",
     (s, dir) => {
-      val indexDir = s"/tmp/graft_ivf_${math.abs(dir.hashCode)}"
       val e = Tables.embeddings(s, dir)
-      val model =
-        if (new java.io.File(IvfIndex.centroidsDir(indexDir)).exists())
-          IvfIndex.load(s, indexDir)
-        else IvfIndex.build(e, "embedding", indexDir, nlist = 16)
-      // stored maintained radii, like ivf_range_search above
-      if (IvfIndex.loadRadii(s, indexDir).isEmpty)
-        IvfIndex.refreshRadii(s, model, "embedding")
-      val query = e.where(col("vec_id") === 0).select("embedding")
-        .collect()(0).getSeq[Float](0).toArray
+      val model = Fixtures.ivf(s, dir)
+      val query = Fixtures.queryVector(e)
       IvfIndex.exactSearch(s, model, "embedding", "vec_id", query, k = 5)
     },
     Some(exactTop5Oracle))
@@ -263,16 +227,13 @@ object PipelineQueries {
     (s, dir) => {
       val indexDir = s"/tmp/graft_ivf_app_${math.abs(dir.hashCode)}"
       val e = Tables.embeddings(s, dir)
-      mutateOnce(s, indexDir) {
-        val p = new org.apache.hadoop.fs.Path(indexDir)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+      rebuildOnce(s, indexDir) {
         val m = IvfIndex.build(e.where(col("vec_id") % 3 =!= 2),
           "embedding", indexDir, nlist = 16)
         IvfIndex.append(e.where(col("vec_id") % 3 === 2), "embedding", m)
       }
       val model = IvfIndex.load(s, indexDir)
-      val query = e.where(col("vec_id") === 0).select("embedding")
-        .collect()(0).getSeq[Float](0).toArray
+      val query = Fixtures.queryVector(e)
       IvfIndex.rangeSearch(s, model, "embedding", "vec_id", query,
         rLo = 1.0, rHi = 1.6)
     },
@@ -297,18 +258,10 @@ object PipelineQueries {
     "scalar_filtered_ivf_search",
     (s, dir) => {
       import graft.search.ScalarIndex
-      val indexDir = s"/tmp/graft_ivf_${math.abs(dir.hashCode)}"
-      val scalarDir = s"/tmp/graft_scalaridx_${math.abs(dir.hashCode)}"
+      val scalarDir = Fixtures.labelIndex(s, dir)
       val e = Tables.embeddings(s, dir)
-      val model =
-        if (new java.io.File(IvfIndex.centroidsDir(indexDir)).exists())
-          IvfIndex.load(s, indexDir)
-        else IvfIndex.build(e, "embedding", indexDir, nlist = 16)
-      if (!new java.io.File(
-          ScalarIndex.valuesDir(scalarDir) + "/_SUCCESS").exists())
-        ScalarIndex.build(e, "vec_id", "label", scalarDir)
-      val query = e.where(col("vec_id") === 0).select("embedding")
-        .collect()(0).getSeq[Float](0).toArray
+      val model = Fixtures.ivf(s, dir)
+      val query = Fixtures.queryVector(e)
       IvfIndex.searchWithIdFilter(s, model, "embedding", "vec_id",
         query, k = 5, nprobe = model.nlist,
         allowedIds = ScalarIndex.ids(s, scalarDir, Seq(2, 5, 7)))
@@ -338,20 +291,18 @@ object PipelineQueries {
       val baseDir = s"/tmp/graft_ivf_reconbase_${math.abs(dir.hashCode)}"
       val runDir = s"/tmp/graft_ivf_recon_${math.abs(dir.hashCode)}"
       val e = Tables.embeddings(s, dir)
-      if (!new java.io.File(IvfIndex.centroidsDir(baseDir)).exists()) {
+      Fixtures.ivfBuiltAt(s, baseDir) {
         val maxId = e.agg(max(col("vec_id"))).collect()(0).getLong(0)
-        IvfIndex.build(e.where(col("vec_id") < maxId - 20), "embedding",
-          baseDir, nlist = 16)
+        e.where(col("vec_id") < maxId - 20)
       }
       mutateOnce(s, runDir) {
-        copyLocalDir(baseDir, runDir)
+        Artifacts.copyLocalDir(baseDir, runDir)
         val live = e.where(col("vec_id") % 9 =!= 4)
         IndexSync.reconcileIvf(s, live, "vec_id", "embedding",
           IvfIndex.load(s, runDir))
       }
       val model = IvfIndex.load(s, runDir)
-      val query = e.where(col("vec_id") === 0).select("embedding")
-        .collect()(0).getSeq[Float](0).toArray
+      val query = Fixtures.queryVector(e)
       IvfIndex.search(s, model, "embedding", "vec_id", query, k = 5,
           nprobe = model.nlist)
         .select("vec_id", "distance")
@@ -376,12 +327,9 @@ object PipelineQueries {
   private val ivfPartialProbe = Q(
     "ivf_partial_probe",
     (s, dir) => {
-      val indexDir = s"/tmp/graft_ivf_${math.abs(dir.hashCode)}"
+      val indexDir = Fixtures.ivfDir(dir)
       val e = Tables.embeddings(s, dir)
-      val model =
-        if (new java.io.File(IvfIndex.centroidsDir(indexDir)).exists())
-          IvfIndex.load(s, indexDir)
-        else IvfIndex.build(e, "embedding", indexDir, nlist = 16)
+      val model = Fixtures.ivf(s, dir)
       // handoff artifacts for the oracle, keyed by the fixture dir on
       // both sides (Verify substitutes %ORACLE_KEY% into the SQL — see
       // QueryDsl.OracleKey), so two fixture dirs verified back-to-back
@@ -392,8 +340,7 @@ object PipelineQueries {
         "centroids" -> s.read.parquet(IvfIndex.centroidsDir(indexDir)),
         "assign" -> IvfIndex.readDataMerged(s, indexDir)
           .select(col("vec_id"), col("cluster_id"))))
-      val query = e.where(col("vec_id") === 0).select("embedding")
-        .collect()(0).getSeq[Float](0).toArray
+      val query = Fixtures.queryVector(e)
       IvfIndex.search(s, model, "embedding", "vec_id", query, k = 5,
           nprobe = 4)
         .select("vec_id", "distance")
@@ -433,12 +380,9 @@ object PipelineQueries {
   private val ivfNprobeAutotune = Q(
     "ivf_nprobe_autotune",
     (s, dir) => {
-      val indexDir = s"/tmp/graft_ivf_${math.abs(dir.hashCode)}"
+      val indexDir = Fixtures.ivfDir(dir)
       val e = Tables.embeddings(s, dir)
-      val model =
-        if (new java.io.File(IvfIndex.centroidsDir(indexDir)).exists())
-          IvfIndex.load(s, indexDir)
-        else IvfIndex.build(e, "embedding", indexDir, nlist = 16)
+      val model = Fixtures.ivf(s, dir)
       stageOracleOnceLazy(s, "ivftune", dir)(Seq(
         "centroids" -> s.read.parquet(IvfIndex.centroidsDir(indexDir)),
         "assign" -> IvfIndex.readDataMerged(s, indexDir)
@@ -509,18 +453,14 @@ object PipelineQueries {
   private val ivfFilteredSearch = Q(
     "ivf_filtered_search",
     (s, dir) => {
-      val indexDir = s"/tmp/graft_ivf_${math.abs(dir.hashCode)}"
+      val indexDir = Fixtures.ivfDir(dir)
       val e = Tables.embeddings(s, dir)
-      val model =
-        if (new java.io.File(IvfIndex.centroidsDir(indexDir)).exists())
-          IvfIndex.load(s, indexDir)
-        else IvfIndex.build(e, "embedding", indexDir, nlist = 16)
+      val model = Fixtures.ivf(s, dir)
       stageOracleOnceLazy(s, "ivf_filtered", dir)(Seq(
         "centroids" -> s.read.parquet(IvfIndex.centroidsDir(indexDir)),
         "assign" -> IvfIndex.readDataMerged(s, indexDir)
           .select(col("vec_id"), col("cluster_id"))))
-      val query = e.where(col("vec_id") === 0).select("embedding")
-        .collect()(0).getSeq[Float](0).toArray
+      val query = Fixtures.queryVector(e)
       val clusters = IvfIndex.probeClusters(model, query, nprobe = 4)
       IvfIndex.readDataMerged(s, indexDir)
         .where(col("cluster_id").isin(clusters: _*)
@@ -567,12 +507,8 @@ object PipelineQueries {
   private val ivfBalanceReport = Q(
     "ivf_balance_report",
     (s, dir) => {
-      val indexDir = s"/tmp/graft_ivf_${math.abs(dir.hashCode)}"
-      val e = Tables.embeddings(s, dir)
-      val model =
-        if (new java.io.File(IvfIndex.centroidsDir(indexDir)).exists())
-          IvfIndex.load(s, indexDir)
-        else IvfIndex.build(e, "embedding", indexDir, nlist = 16)
+      val indexDir = Fixtures.ivfDir(dir)
+      val model = Fixtures.ivf(s, dir)
       stageOracleOnceLazy(s, "ivf_balance", dir)(Seq(
         "assign" -> IvfIndex.readDataMerged(s, indexDir)
           .select(col("vec_id"), col("cluster_id"))))
@@ -610,15 +546,11 @@ object PipelineQueries {
   private val ivfAutoRewrite = Q(
     "ivf_auto_rewrite",
     (s, dir) => {
-      val indexDir = s"/tmp/graft_ivf_${math.abs(dir.hashCode)}"
+      val indexDir = Fixtures.ivfDir(dir)
       val e = Tables.embeddings(s, dir)
-      val model =
-        if (new java.io.File(IvfIndex.centroidsDir(indexDir)).exists())
-          IvfIndex.load(s, indexDir)
-        else IvfIndex.build(e, "embedding", indexDir, nlist = 16)
+      val model = Fixtures.ivf(s, dir)
       graft.plans.IvfProbeRewrite.register(model, nprobe = model.nlist)
-      val query = e.where(col("vec_id") === 0).select("embedding")
-        .collect()(0).getSeq[Float](0).toArray
+      val query = Fixtures.queryVector(e)
       IvfIndex.readDataMerged(s, indexDir)
         .select(col("vec_id"),
           round(VectorFunctions.l2Sq(col("embedding"), typedlit(query)), 4)
@@ -634,7 +566,7 @@ object PipelineQueries {
     * proving the appended rows landed in the right partitions.
     *
     * Attribution: the base index (even half of the corpus) is built ONCE
-    * per JVM+sfDir behind an exists-check, like its siblings — KMeans is
+    * per fixture through [[Fixtures.ivfAt]], like its siblings — KMeans is
     * index CONSTRUCTION, not maintenance, and timing it here mislabelled
     * this entry's bench line for two rounds. Each invocation copies the
     * base directory to a scratch run dir (so the append never compounds
@@ -646,29 +578,11 @@ object PipelineQueries {
       val baseDir = s"/tmp/graft_ivf_incrbase_${math.abs(dir.hashCode)}"
       val runDir = s"/tmp/graft_ivf_incr_${math.abs(dir.hashCode)}"
       val e = Tables.embeddings(s, dir)
-      if (!new java.io.File(IvfIndex.centroidsDir(baseDir)).exists())
-        IvfIndex.build(e.where(col("vec_id") % 2 === 0),
-          "embedding", baseDir, nlist = 16)
-      val src = java.nio.file.Paths.get(baseDir)
-      val dst = java.nio.file.Paths.get(runDir)
-      import scala.jdk.CollectionConverters._
-      def walk(p: java.nio.file.Path) = {
-        val s0 = java.nio.file.Files.walk(p)
-        try s0.iterator().asScala.toVector finally s0.close()
-      }
-      if (java.nio.file.Files.exists(dst))
-        walk(dst).sortBy(-_.getNameCount)
-          .foreach(java.nio.file.Files.delete)
-      walk(src).foreach { p =>
-        val t = dst.resolve(src.relativize(p))
-        if (java.nio.file.Files.isDirectory(p))
-          java.nio.file.Files.createDirectories(t)
-        else java.nio.file.Files.copy(p, t)
-      }
+      Fixtures.ivfBuiltAt(s, baseDir)(e.where(col("vec_id") % 2 === 0))
+      Artifacts.copyLocalDir(baseDir, runDir)
       val model = IvfIndex.load(s, runDir)
       IvfIndex.append(e.where(col("vec_id") % 2 === 1), "embedding", model)
-      val query = e.where(col("vec_id") === 0).select("embedding")
-        .collect()(0).getSeq[Float](0).toArray
+      val query = Fixtures.queryVector(e)
       IvfIndex.search(s, model, "embedding", "vec_id", query, k = 5,
           nprobe = model.nlist)
         .select("vec_id", "distance")
@@ -684,12 +598,9 @@ object PipelineQueries {
     "ivf_auto_rewrite_sql",
     (s, dir) => {
       GraftExtensions.register(s)
-      val indexDir = s"/tmp/graft_ivf_${math.abs(dir.hashCode)}"
+      val indexDir = Fixtures.ivfDir(dir)
       val e = Tables.embeddings(s, dir)
-      val model =
-        if (new java.io.File(IvfIndex.centroidsDir(indexDir)).exists())
-          IvfIndex.load(s, indexDir)
-        else IvfIndex.build(e, "embedding", indexDir, nlist = 16)
+      val model = Fixtures.ivf(s, dir)
       graft.plans.IvfProbeRewrite.register(model, nprobe = model.nlist)
       IvfIndex.readDataMerged(s, indexDir)
         .createOrReplaceTempView("graft_ivf_data")
@@ -729,17 +640,12 @@ object PipelineQueries {
     "routed_auto_search",
     (s, dir) => {
       import graft.plans.IvfProbeRewrite
-      import graft.search.{Quantize, Router}
+      import graft.search.Router
       val e = Tables.embeddings(s, dir)
-      val indexDir = s"/tmp/graft_ivf_routed_${math.abs(dir.hashCode)}"
-      val model =
-        if (new java.io.File(IvfIndex.centroidsDir(indexDir)).exists())
-          IvfIndex.load(s, indexDir)
-        else IvfIndex.build(e, "embedding", indexDir, nlist = 16)
-      val sq8Dir = s"/tmp/graft_sq8_${math.abs(dir.hashCode)}"
-      graft.core.Artifacts.buildOnce(s, sq8Dir) {
-        Quantize.quantizedTable(e, "embedding", "vec_id")
-      }
+      val indexDir = Fixtures.routedIvfDir(dir)
+      val model = Fixtures.routedIvf(s, dir)
+      val sq8Dir = Fixtures.sq8Dir(dir)
+      Fixtures.sq8(s, dir)
       IvfProbeRewrite.registerRouted(IvfProbeRewrite.RoutedConfig(
         model, nprobe = 4, sq8Dir, sq8Margin = 20,
         idCol = "vec_id", vecCol = "embedding",
@@ -764,8 +670,7 @@ object PipelineQueries {
           .select(col("vec_id"), col("cluster_id")),
         "cents" -> s.read.parquet(IvfIndex.centroidsDir(indexDir))))
       val tier = IvfProbeRewrite.routedDecision(s, indexDir).get
-      val query = e.where(col("vec_id") === 0).select("embedding")
-        .collect()(0).getSeq[Float](0).toArray
+      val query = Fixtures.queryVector(e)
       IvfIndex.readDataMerged(s, indexDir)
         .select(col("vec_id"),
           round(VectorFunctions.l2Sq(col("embedding"), typedlit(query)), 4)
@@ -856,17 +761,12 @@ object PipelineQueries {
     "routed_auto_search_budget",
     (s, dir) => {
       import graft.plans.IvfProbeRewrite
-      import graft.search.{Quantize, Router}
+      import graft.search.Router
       val e = Tables.embeddings(s, dir)
-      val indexDir = s"/tmp/graft_ivf_routed_${math.abs(dir.hashCode)}"
-      val model =
-        if (new java.io.File(IvfIndex.centroidsDir(indexDir)).exists())
-          IvfIndex.load(s, indexDir)
-        else IvfIndex.build(e, "embedding", indexDir, nlist = 16)
-      val sq8Dir = s"/tmp/graft_sq8_${math.abs(dir.hashCode)}"
-      graft.core.Artifacts.buildOnce(s, sq8Dir) {
-        Quantize.quantizedTable(e, "embedding", "vec_id")
-      }
+      val indexDir = Fixtures.routedIvfDir(dir)
+      val model = Fixtures.routedIvf(s, dir)
+      val sq8Dir = Fixtures.sq8Dir(dir)
+      Fixtures.sq8(s, dir)
       // stage first (lazy-once), derive the budget from the STAGED
       // panel — one 4-row parquet read per pass instead of the whole
       // measured-panel construction (round 16); the oracle reads the
@@ -891,8 +791,7 @@ object PipelineQueries {
         memoryBudget = Some(budget),
         fingerprintRoots = Seq(indexDir, sq8Dir)))
       val tier = IvfProbeRewrite.routedDecision(s, indexDir).get
-      val query = e.where(col("vec_id") === 0).select("embedding")
-        .collect()(0).getSeq[Float](0).toArray
+      val query = Fixtures.queryVector(e)
       IvfIndex.readDataMerged(s, indexDir)
         .select(col("vec_id"),
           round(VectorFunctions.l2Sq(col("embedding"), typedlit(query)), 4)
@@ -966,18 +865,14 @@ object PipelineQueries {
     "routed_graph_search",
     (s, dir) => {
       import graft.plans.IvfProbeRewrite
-      import graft.search.{GraphAnn, Quantize, Router}
+      import graft.search.{GraphAnn, Router}
       val e = Tables.embeddings(s, dir)
       val indexDir = s"/tmp/graft_ivf_routedg_${math.abs(dir.hashCode)}"
-      val model =
-        if (new java.io.File(IvfIndex.centroidsDir(indexDir)).exists())
-          IvfIndex.load(s, indexDir)
-        else IvfIndex.build(e, "embedding", indexDir, nlist = 16)
-      val sq8Dir = s"/tmp/graft_sq8_${math.abs(dir.hashCode)}"
-      graft.core.Artifacts.buildOnce(s, sq8Dir) {
-        Quantize.quantizedTable(e, "embedding", "vec_id")
-      }
-      val (adj, entryId) = bulkGraphArtifacts(s, dir)
+      val model = Fixtures.ivfAt(s, indexDir)(e)
+      val sq8Dir = Fixtures.sq8Dir(dir)
+      Fixtures.sq8(s, dir)
+      val adj = Fixtures.graphAdjacency(s, dir)
+      val entryId = stageGraph(s, "graphbulk", dir)
       IvfProbeRewrite.registerRouted(IvfProbeRewrite.RoutedConfig(
         model, nprobe = 4, sq8Dir, sq8Margin = 20,
         idCol = "vec_id", vecCol = "embedding",
@@ -999,8 +894,7 @@ object PipelineQueries {
       stageOracleOnceLazy(s, "routedg", dir)(
         Seq("panel" -> routerPanelV2(s, dir)))
       val tier = IvfProbeRewrite.routedDecision(s, indexDir).get
-      val query = e.where(col("vec_id") === 0).select("embedding")
-        .collect()(0).getSeq[Float](0).toArray
+      val query = Fixtures.queryVector(e)
       IvfProbeRewrite.serveRouted(s, indexDir, query, 5) {
         IvfIndex.readDataMerged(s, indexDir)
           .select(col("vec_id"),
@@ -1064,21 +958,16 @@ object PipelineQueries {
     "routed_text_search",
     (s, dir) => {
       import graft.plans.IvfProbeRewrite
-      import graft.search.{Bm25Index, Quantize, Router}
+      import graft.search.{Bm25Index, Router}
       val e = Tables.embeddings(s, dir)
       val indexDir = s"/tmp/graft_ivf_routedt_${math.abs(dir.hashCode)}"
-      val model =
-        if (new java.io.File(IvfIndex.centroidsDir(indexDir)).exists())
-          IvfIndex.load(s, indexDir)
-        else IvfIndex.build(e, "embedding", indexDir, nlist = 16)
-      val sq8Dir = s"/tmp/graft_sq8_${math.abs(dir.hashCode)}"
-      graft.core.Artifacts.buildOnce(s, sq8Dir) {
-        Quantize.quantizedTable(e, "embedding", "vec_id")
-      }
+      val model = Fixtures.ivfAt(s, indexDir)(e)
+      val sq8Dir = Fixtures.sq8Dir(dir)
+      Fixtures.sq8(s, dir)
       // the panel's own lexical artifact — the tier it measured is the
       // tier the thunk serves
-      val lexDir = s"/tmp/graft_routerlex_terms_${math.abs(dir.hashCode)}"
-      // lexDir is built by routerPanelV2 (mutateOnce) the first time
+      val lexDir = Fixtures.routerLexTermsDir(dir)
+      // lexDir is built by routerPanelV2 (Fixtures.routerLexTerms) the first time
       // the panel is constructed — either by the lazy-once staging
       // below or by the decision thunk on a cache miss; a deleted
       // lexDir flips the fingerprint (it is a fingerprint root), so
@@ -1181,26 +1070,16 @@ object PipelineQueries {
     "routed_sparse_search",
     (s, dir) => {
       import graft.plans.IvfProbeRewrite
-      import graft.search.{Quantize, Router, SparseVec}
+      import graft.search.{Router, SparseVec}
       import s.implicits._
       val e = Tables.embeddings(s, dir)
-      val indexDir = s"/tmp/graft_ivf_routedsp_${math.abs(dir.hashCode)}"
-      val model =
-        if (new java.io.File(IvfIndex.centroidsDir(indexDir)).exists())
-          IvfIndex.load(s, indexDir)
-        else IvfIndex.build(e, "embedding", indexDir, nlist = 16)
-      val sq8Dir = s"/tmp/graft_sq8_${math.abs(dir.hashCode)}"
-      graft.core.Artifacts.buildOnce(s, sq8Dir) {
-        Quantize.quantizedTable(e, "embedding", "vec_id")
-      }
+      val indexDir = Fixtures.routedSparseIvfDir(dir)
+      val model = Fixtures.routedSparseIvf(s, dir)
+      val sq8Dir = Fixtures.sq8Dir(dir)
+      Fixtures.sq8(s, dir)
       // the sparse tier's own postings artifact — the tier the panel
       // measures is the tier the thunk serves
-      val spIdx = s"/tmp/graft_routedsp_${math.abs(dir.hashCode)}/sparse"
-      mutateOnce(s, spIdx) {
-        val p = new org.apache.hadoop.fs.Path(spIdx)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-        SparseVec.build(e, "vec_id", "embedding", topN = 8, spIdx)
-      }
+      val spIdx = Fixtures.routedSparseWand(s, dir)
       val qp = SparseVec.postings(e.where(col("vec_id") === 0),
           "vec_id", "embedding", topN = 8)
         .select(col("dim"), col("w")).collect()
@@ -1306,24 +1185,14 @@ object PipelineQueries {
     "routed_sparse_bulk_search",
     (s, dir) => {
       import graft.plans.IvfProbeRewrite
-      import graft.search.{Quantize, Router, SparseVec}
+      import graft.search.{Router, SparseVec}
       import s.implicits._
       val e = Tables.embeddings(s, dir)
-      val indexDir = s"/tmp/graft_ivf_routedsp_${math.abs(dir.hashCode)}"
-      val model =
-        if (new java.io.File(IvfIndex.centroidsDir(indexDir)).exists())
-          IvfIndex.load(s, indexDir)
-        else IvfIndex.build(e, "embedding", indexDir, nlist = 16)
-      val sq8Dir = s"/tmp/graft_sq8_${math.abs(dir.hashCode)}"
-      graft.core.Artifacts.buildOnce(s, sq8Dir) {
-        Quantize.quantizedTable(e, "embedding", "vec_id")
-      }
-      val spIdx = s"/tmp/graft_routedsp_${math.abs(dir.hashCode)}/sparse"
-      mutateOnce(s, spIdx) {
-        val p = new org.apache.hadoop.fs.Path(spIdx)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-        SparseVec.build(e, "vec_id", "embedding", topN = 8, spIdx)
-      }
+      val indexDir = Fixtures.routedSparseIvfDir(dir)
+      val model = Fixtures.routedSparseIvf(s, dir)
+      val sq8Dir = Fixtures.sq8Dir(dir)
+      Fixtures.sq8(s, dir)
+      val spIdx = Fixtures.routedSparseWand(s, dir)
       val qp = SparseVec.postings(e.where(col("vec_id").isin(0, 1, 2)),
           "vec_id", "embedding", topN = 8)
         .select(col("vec_id").cast("long").as("qid"), col("dim"),
@@ -1531,15 +1400,11 @@ object PipelineQueries {
   private val collectionRoundtrip = Q(
     "collection_roundtrip",
     (s, dir) => {
-      val out = s"/tmp/graft_coll_${math.abs(dir.hashCode)}/knowledge"
-      val coll = Collection(s, out)
-      val cleaned = Preprocess(
-        Tables.documents(s, dir)
-          .select(col("doc_id"), col("source").as("chapter"), col("text")),
-        "text")
-        .select(col("doc_id"), col("chapter"), col("text_clean").as("content"))
-      val rows = Collection.withDenseIds(cleaned, "doc_id")
-        .select("id", "chapter", "content")
+      // its own dir: this entry re-creates its collection on every run,
+      // which must not drop the stored one collection_point_get reads
+      val coll = Collection(s,
+        s"/tmp/graft_coll_${math.abs(dir.hashCode)}/roundtrip")
+      val rows = Fixtures.knowledgeRows(s, dir)
       coll.create(rows.schema, force = true)
       coll.append(rows)
       coll.read.agg(count(lit(1)).as("n_rows"), max(col("id")).as("max_id"),
@@ -1576,16 +1441,7 @@ object PipelineQueries {
   private val collectionTtlServe = Q(
     "collection_ttl_serve",
     (s, dir) => {
-      val out = s"/tmp/graft_ttl_${math.abs(dir.hashCode)}/serve"
-      val coll = Collection(s, out)
-      mutateOnce(s, out) {
-        val p = new org.apache.hadoop.fs.Path(out)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-        coll.appendStamped(
-          Tables.documents(s, dir).select(col("doc_id"), col("source")),
-          timestamp_seconds(lit(1704067200L) + col("doc_id")))
-        coll.setTtlSeconds(20)
-      }
+      val coll = Fixtures.ttlCollection(s, dir)
       coll.readLive(timestamp_seconds(lit(1704067230L)))
         .select(col("doc_id"), col("source"),
           col(Collection.IngestTsCol).cast("long").as("ingest_epoch"))
@@ -1615,12 +1471,7 @@ object PipelineQueries {
       val coll = Collection(s, out)
       val asOf = timestamp_seconds(lit(1704067230L))
       mutateOnce(s, out) {
-        val p = new org.apache.hadoop.fs.Path(out)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-        coll.appendStamped(
-          Tables.documents(s, dir).select(col("doc_id"), col("source")),
-          timestamp_seconds(lit(1704067200L) + col("doc_id")))
-        coll.setTtlSeconds(20)
+        Artifacts.copyLocalDir(Fixtures.ttlCollection(s, dir).dir, out)
         coll.reclaimExpired(asOf)
       }
       coll.ttlDebt(asOf)
@@ -1642,17 +1493,8 @@ object PipelineQueries {
   private val collectionTtlPlan = Q(
     "collection_ttl_plan",
     (s, dir) => {
-      val out = s"/tmp/graft_ttl_${math.abs(dir.hashCode)}/serve"
-      val coll = Collection(s, out)
-      mutateOnce(s, out) {
-        val p = new org.apache.hadoop.fs.Path(out)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-        coll.appendStamped(
-          Tables.documents(s, dir).select(col("doc_id"), col("source")),
-          timestamp_seconds(lit(1704067200L) + col("doc_id")))
-        coll.setTtlSeconds(20)
-      }
-      graft.search.Maintenance.planTtl(s, out,
+      val coll = Fixtures.ttlCollection(s, dir)
+      graft.search.Maintenance.planTtl(s, coll.dir,
         timestamp_seconds(lit(1704067400L)))
     },
     Some("""
@@ -1690,9 +1532,7 @@ object PipelineQueries {
       val idx = s"$base/ivf"
       val coll = Collection(s, out)
       val asOf = timestamp_seconds(lit(1704067230L))
-      mutateOnce(s, base) {
-        val p = new org.apache.hadoop.fs.Path(base)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+      rebuildOnce(s, base) {
         coll.appendStamped(e.select(col("vec_id"), col("embedding")),
           timestamp_seconds(lit(1704067200L) + col("vec_id")))
         coll.setTtlSeconds(20)
@@ -1702,8 +1542,7 @@ object PipelineQueries {
           "vec_id")
       }
       val model = IvfIndex.load(s, idx)
-      val query = e.where(col("vec_id") === 0).select("embedding")
-        .collect()(0).getSeq[Float](0).toArray
+      val query = Fixtures.queryVector(e)
       IvfIndex.search(s, model, "embedding", "vec_id", query, k = 5,
           nprobe = model.nlist)
         .select("vec_id", "distance")
@@ -1739,9 +1578,7 @@ object PipelineQueries {
       val idxS = s"$base/ivf_synced"
       val coll = Collection(s, out)
       val asOf = timestamp_seconds(lit(1704067400L))
-      mutateOnce(s, base) {
-        val p = new org.apache.hadoop.fs.Path(base)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+      rebuildOnce(s, base) {
         coll.appendStamped(e.select(col("vec_id"), col("embedding")),
           timestamp_seconds(lit(1704067200L) + col("vec_id")))
         coll.setTtlSeconds(20)
@@ -1749,7 +1586,7 @@ object PipelineQueries {
           "embedding", idxU, nlist = 16)
         // the synced twin differs ONLY in tombstone state — copy the
         // built artifact instead of paying a second k-means build
-        graft.core.Artifacts.copyLocalDir(idxU, idxS)
+        Artifacts.copyLocalDir(idxU, idxS)
         IndexSync.syncTtlTombstones(s, coll, "vec_id", asOf, idxS,
           "vec_id")
       }
@@ -2248,19 +2085,9 @@ object PipelineQueries {
     (s, dir) => {
       import graft.search.GraphAnn
       val e = Tables.embeddings(s, dir)
-      val base = s"/tmp/graft_graphann_${math.abs(dir.hashCode)}"
-      val adj = graft.core.Artifacts.buildOnce(s, s"$base/adjacency") {
-        GraphAnn.buildAdjacency(e, "vec_id", "embedding")
-      }
-      val entryDf = graft.core.Artifacts.buildOnce(s, s"$base/entry") {
-        GraphAnn.medoid(e, "vec_id", "embedding")
-      }
-      stageOracleOnce(s, "graphann", dir)(
-        "adjacency" -> adj.select("src", "dst"),
-        "entry" -> entryDf)
-      val entryId = entryDf.collect()(0).getLong(0)
-      val query = e.where(col("vec_id") === 0).select("embedding")
-        .collect()(0).getSeq[Float](0).toArray
+      val adj = Fixtures.graphAdjacency(s, dir)
+      val entryId = stageGraph(s, "graphann", dir)
+      val query = Fixtures.queryVector(e)
       GraphAnn.beamSearch(adj, e, "vec_id", "embedding", query, entryId,
         k = 5, beamWidth = 4, rounds = 3, degree = 8)
     },
@@ -2393,25 +2220,15 @@ object PipelineQueries {
     sb.toString
   }
 
-  /** Build-or-load the graph artifacts (same /tmp keys as
-    * graph_ann_search, so all graph entries search the SAME graph) and
-    * stage them for the `graphbulk` oracle. */
-  private def bulkGraphArtifacts(s: org.apache.spark.sql.SparkSession,
-                                 dir: String)
-      : (org.apache.spark.sql.DataFrame, Long) = {
-    import graft.search.GraphAnn
-    val e = Tables.embeddings(s, dir)
-    val base = s"/tmp/graft_graphann_${math.abs(dir.hashCode)}"
-    val adj = graft.core.Artifacts.buildOnce(s, s"$base/adjacency") {
-      GraphAnn.buildAdjacency(e, "vec_id", "embedding")
-    }
-    val entryDf = graft.core.Artifacts.buildOnce(s, s"$base/entry") {
-      GraphAnn.medoid(e, "vec_id", "embedding")
-    }
-    stageOracleOnce(s, "graphbulk", dir)(
-      "adjacency" -> adj.select("src", "dst"),
+  /** Stage the shared graph adjacency and medoid for oracle `name`;
+    * returns the medoid's id, the walk's entry point. */
+  private def stageGraph(s: org.apache.spark.sql.SparkSession, name: String,
+                         dir: String): Long = {
+    val entryDf = Fixtures.graphMedoid(s, dir)
+    stageOracleOnce(s, name, dir)(
+      "adjacency" -> Fixtures.graphAdjacency(s, dir).select("src", "dst"),
       "entry" -> entryDf)
-    (adj, entryDf.collect()(0).getLong(0))
+    entryDf.collect()(0).getLong(0)
   }
 
   /** Bulk graph serving (see [[graft.search.GraphAnn.bulkBeamSearch]]):
@@ -2427,7 +2244,8 @@ object PipelineQueries {
     (s, dir) => {
       import graft.search.GraphAnn
       val e = Tables.embeddings(s, dir)
-      val (adj, entryId) = bulkGraphArtifacts(s, dir)
+      val adj = Fixtures.graphAdjacency(s, dir)
+      val entryId = stageGraph(s, "graphbulk", dir)
       val queries = e.where(col("vec_id").isin(BulkQids: _*))
         .select(col("vec_id").as("qid"), col("embedding").as("qv"))
       GraphAnn.bulkBeamSearch(adj, e, "vec_id", "embedding", queries,
@@ -2467,25 +2285,15 @@ object PipelineQueries {
     (s, dir) => {
       import graft.search.GraphAnn
       val e = Tables.embeddings(s, dir)
-      val base = s"/tmp/graft_graphann_${math.abs(dir.hashCode)}"
-      val adj = graft.core.Artifacts.buildOnce(s, s"$base/adjacency") {
-        GraphAnn.buildAdjacency(e, "vec_id", "embedding")
-      }
-      val ubase = s"/tmp/graft_glayer_${math.abs(dir.hashCode)}"
-      val sample = GraphAnn.upperSample(e, "vec_id")
-      val uadj = graft.core.Artifacts.buildOnce(s, s"$ubase/adjacency") {
-        GraphAnn.buildAdjacency(sample, "vec_id", "embedding")
-      }
-      val uent = graft.core.Artifacts.buildOnce(s, s"$ubase/entry") {
-        GraphAnn.medoid(sample, "vec_id", "embedding")
-      }
+      val adj = Fixtures.graphAdjacency(s, dir)
+      val uadj = Fixtures.layerAdjacency(s, dir, level = 1)
+      val uent = Fixtures.layerEntry(s, dir, level = 1)
       stageOracleOnce(s, "layered", dir)(
         "adjacency" -> uadj.select("src", "dst"),
         "entry" -> uent.select("entry_id"))
       stageOracleOnce(s, "layeredb", dir)(
         "adjacency" -> adj.select("src", "dst"))
-      val query = e.where(col("vec_id") === 0).select("embedding")
-        .collect()(0).getSeq[Float](0).toArray
+      val query = Fixtures.queryVector(e)
       GraphAnn.layeredSearchMulti(Seq(uadj), uent, adj, e, "vec_id",
         "embedding", query, k = 5, beamWidth = 4, upperRounds = 3,
         rounds = 3, degree = 8, nSeeds = 2)
@@ -2520,18 +2328,9 @@ object PipelineQueries {
     (s, dir) => {
       import graft.search.GraphAnn
       val e = Tables.embeddings(s, dir)
-      val base = s"/tmp/graft_graphann_${math.abs(dir.hashCode)}"
-      val adj = graft.core.Artifacts.buildOnce(s, s"$base/adjacency") {
-        GraphAnn.buildAdjacency(e, "vec_id", "embedding")
-      }
-      val ubase = s"/tmp/graft_glayer_${math.abs(dir.hashCode)}"
-      val sample = GraphAnn.upperSample(e, "vec_id")
-      val uadj = graft.core.Artifacts.buildOnce(s, s"$ubase/adjacency") {
-        GraphAnn.buildAdjacency(sample, "vec_id", "embedding")
-      }
-      val uent = graft.core.Artifacts.buildOnce(s, s"$ubase/entry") {
-        GraphAnn.medoid(sample, "vec_id", "embedding")
-      }
+      val adj = Fixtures.graphAdjacency(s, dir)
+      val uadj = Fixtures.layerAdjacency(s, dir, level = 1)
+      val uent = Fixtures.layerEntry(s, dir, level = 1)
       stageOracleOnce(s, "layeredbu", dir)(
         "adjacency" -> uadj.select("src", "dst"),
         "entry" -> uent.select("entry_id"))
@@ -2583,25 +2382,15 @@ object PipelineQueries {
       import graft.search.GraphAnn
       import s.implicits._
       val e = Tables.embeddings(s, dir)
-      val base = s"/tmp/graft_graphann_${math.abs(dir.hashCode)}"
-      val adj = graft.core.Artifacts.buildOnce(s, s"$base/adjacency") {
-        GraphAnn.buildAdjacency(e, "vec_id", "embedding")
-      }
-      val ubase = s"/tmp/graft_glayer_${math.abs(dir.hashCode)}"
-      val sample = GraphAnn.upperSample(e, "vec_id")
-      val uadj = graft.core.Artifacts.buildOnce(s, s"$ubase/adjacency") {
-        GraphAnn.buildAdjacency(sample, "vec_id", "embedding")
-      }
-      val uent = graft.core.Artifacts.buildOnce(s, s"$ubase/entry") {
-        GraphAnn.medoid(sample, "vec_id", "embedding")
-      }
+      val adj = Fixtures.graphAdjacency(s, dir)
+      val uadj = Fixtures.layerAdjacency(s, dir, level = 1)
+      val uent = Fixtures.layerEntry(s, dir, level = 1)
       stageOracleOnce(s, "layered", dir)(
         "adjacency" -> uadj.select("src", "dst"),
         "entry" -> uent.select("entry_id"))
       stageOracleOnce(s, "layeredb", dir)(
         "adjacency" -> adj.select("src", "dst"))
-      val query = e.where(col("vec_id") === 0).select("embedding")
-        .collect()(0).getSeq[Float](0).toArray
+      val query = Fixtures.queryVector(e)
       // tombstone the unmasked serve's top-1 + the first upper seed
       val plainTop = GraphAnn.layeredSearchMulti(Seq(uadj), uent, adj, e,
           "vec_id", "embedding", query, k = 1, beamWidth = 4,
@@ -2654,35 +2443,20 @@ object PipelineQueries {
     (s, dir) => {
       import graft.search.GraphAnn
       val e = Tables.embeddings(s, dir)
-      val base = s"/tmp/graft_graphann_${math.abs(dir.hashCode)}"
-      val adj = graft.core.Artifacts.buildOnce(s, s"$base/adjacency") {
-        GraphAnn.buildAdjacency(e, "vec_id", "embedding")
-      }
-      val ubase = s"/tmp/graft_glayer_${math.abs(dir.hashCode)}"
-      val l1 = GraphAnn.levelSample(e, "vec_id", level = 1)
-      val adj1 = graft.core.Artifacts.buildOnce(s, s"$ubase/adjacency") {
-        GraphAnn.buildAdjacency(l1, "vec_id", "embedding")
-      }
-      val mbase = s"/tmp/graft_gmulti_${math.abs(dir.hashCode)}"
-      val l2 = GraphAnn.levelSample(e, "vec_id", level = 2)
-      val adj2 = graft.core.Artifacts.buildOnce(s, s"$mbase/adjacency") {
-        GraphAnn.buildAdjacency(l2, "vec_id", "embedding")
-      }
-      val tent = graft.core.Artifacts.buildOnce(s, s"$mbase/entry") {
-        GraphAnn.medoid(l2, "vec_id", "embedding")
-      }
+      val adj = Fixtures.graphAdjacency(s, dir)
+      val adj1 = Fixtures.layerAdjacency(s, dir, level = 1)
+      val adj2 = Fixtures.layerAdjacency(s, dir, level = 2)
+      val tent = Fixtures.layerEntry(s, dir, level = 2)
       stageOracleOnce(s, "mlayer2", dir)(
         "adjacency" -> adj2.select("src", "dst"),
         "entry" -> tent.select("entry_id"))
       stageOracleOnce(s, "layered", dir)(
         "adjacency" -> adj1.select("src", "dst"),
-        "entry" -> graft.core.Artifacts.buildOnce(s, s"$ubase/entry") {
-          GraphAnn.medoid(l1, "vec_id", "embedding")
-        }.select("entry_id"))
+        "entry" -> Fixtures.layerEntry(s, dir, level = 1)
+          .select("entry_id"))
       stageOracleOnce(s, "layeredb", dir)(
         "adjacency" -> adj.select("src", "dst"))
-      val query = e.where(col("vec_id") === 0).select("embedding")
-        .collect()(0).getSeq[Float](0).toArray
+      val query = Fixtures.queryVector(e)
       GraphAnn.layeredSearchMulti(Seq(adj2, adj1), tent, adj, e,
         "vec_id", "embedding", query, k = 5, beamWidth = 4,
         upperRounds = 3, rounds = 3, degree = 8, nSeeds = 2)
@@ -2720,35 +2494,20 @@ object PipelineQueries {
       import graft.search.GraphAnn
       import s.implicits._
       val e = Tables.embeddings(s, dir)
-      val base = s"/tmp/graft_graphann_${math.abs(dir.hashCode)}"
-      val adj = graft.core.Artifacts.buildOnce(s, s"$base/adjacency") {
-        GraphAnn.buildAdjacency(e, "vec_id", "embedding")
-      }
-      val ubase = s"/tmp/graft_glayer_${math.abs(dir.hashCode)}"
-      val l1 = GraphAnn.levelSample(e, "vec_id", level = 1)
-      val adj1 = graft.core.Artifacts.buildOnce(s, s"$ubase/adjacency") {
-        GraphAnn.buildAdjacency(l1, "vec_id", "embedding")
-      }
-      val mbase = s"/tmp/graft_gmulti_${math.abs(dir.hashCode)}"
-      val l2 = GraphAnn.levelSample(e, "vec_id", level = 2)
-      val adj2 = graft.core.Artifacts.buildOnce(s, s"$mbase/adjacency") {
-        GraphAnn.buildAdjacency(l2, "vec_id", "embedding")
-      }
-      val tent = graft.core.Artifacts.buildOnce(s, s"$mbase/entry") {
-        GraphAnn.medoid(l2, "vec_id", "embedding")
-      }
+      val adj = Fixtures.graphAdjacency(s, dir)
+      val adj1 = Fixtures.layerAdjacency(s, dir, level = 1)
+      val adj2 = Fixtures.layerAdjacency(s, dir, level = 2)
+      val tent = Fixtures.layerEntry(s, dir, level = 2)
       stageOracleOnce(s, "mlayer2", dir)(
         "adjacency" -> adj2.select("src", "dst"),
         "entry" -> tent.select("entry_id"))
       stageOracleOnce(s, "layered", dir)(
         "adjacency" -> adj1.select("src", "dst"),
-        "entry" -> graft.core.Artifacts.buildOnce(s, s"$ubase/entry") {
-          GraphAnn.medoid(l1, "vec_id", "embedding")
-        }.select("entry_id"))
+        "entry" -> Fixtures.layerEntry(s, dir, level = 1)
+          .select("entry_id"))
       stageOracleOnce(s, "layeredb", dir)(
         "adjacency" -> adj.select("src", "dst"))
-      val query = e.where(col("vec_id") === 0).select("embedding")
-        .collect()(0).getSeq[Float](0).toArray
+      val query = Fixtures.queryVector(e)
       val plainTop = GraphAnn.layeredSearchMulti(Seq(adj2, adj1), tent,
           adj, e, "vec_id", "embedding", query, k = 1, beamWidth = 4,
           upperRounds = 3, rounds = 3, degree = 8, nSeeds = 2)
@@ -2800,19 +2559,9 @@ object PipelineQueries {
     (s, dir) => {
       import graft.search.GraphAnn
       val e = Tables.embeddings(s, dir)
-      val base = s"/tmp/graft_graphann_${math.abs(dir.hashCode)}"
-      val adj = graft.core.Artifacts.buildOnce(s, s"$base/adjacency") {
-        GraphAnn.buildAdjacency(e, "vec_id", "embedding")
-      }
-      val entryDf = graft.core.Artifacts.buildOnce(s, s"$base/entry") {
-        GraphAnn.medoid(e, "vec_id", "embedding")
-      }
-      stageOracleOnce(s, "graphfilt", dir)(
-        "adjacency" -> adj.select("src", "dst"),
-        "entry" -> entryDf)
-      val entryId = entryDf.collect()(0).getLong(0)
-      val query = e.where(col("vec_id") === 0).select("embedding")
-        .collect()(0).getSeq[Float](0).toArray
+      val adj = Fixtures.graphAdjacency(s, dir)
+      val entryId = stageGraph(s, "graphfilt", dir)
+      val query = Fixtures.queryVector(e)
       GraphAnn.filteredBeamSearch(adj, e, "vec_id", "embedding", query,
         entryId, predicate = col("label") === 3, k = 5,
         beamWidth = 6, rounds = 3, degree = 8)
@@ -2839,19 +2588,9 @@ object PipelineQueries {
     (s, dir) => {
       import graft.search.GraphAnn
       val e = Tables.embeddings(s, dir)
-      val base = s"/tmp/graft_graphann_${math.abs(dir.hashCode)}"
-      val adj = graft.core.Artifacts.buildOnce(s, s"$base/adjacency") {
-        GraphAnn.buildAdjacency(e, "vec_id", "embedding")
-      }
-      val entryDf = graft.core.Artifacts.buildOnce(s, s"$base/entry") {
-        GraphAnn.medoid(e, "vec_id", "embedding")
-      }
-      stageOracleOnce(s, "graphfiltrec", dir)(
-        "adjacency" -> adj.select("src", "dst"),
-        "entry" -> entryDf)
-      val entryId = entryDf.collect()(0).getLong(0)
-      val query = e.where(col("vec_id") === 0).select("embedding")
-        .collect()(0).getSeq[Float](0).toArray
+      val adj = Fixtures.graphAdjacency(s, dir)
+      val entryId = stageGraph(s, "graphfiltrec", dir)
+      val query = Fixtures.queryVector(e)
       val walk = GraphAnn.filteredBeamSearch(adj, e, "vec_id",
         "embedding", query, entryId, predicate = col("label") === 3,
         k = 5, beamWidth = 12, rounds = 4, degree = 8)
@@ -2899,23 +2638,10 @@ object PipelineQueries {
     (s, dir) => {
       import graft.search.{GraphAnn, ScalarIndex}
       val e = Tables.embeddings(s, dir)
-      val base = s"/tmp/graft_graphann_${math.abs(dir.hashCode)}"
-      val scalarDir = s"/tmp/graft_scalaridx_${math.abs(dir.hashCode)}"
-      val adj = graft.core.Artifacts.buildOnce(s, s"$base/adjacency") {
-        GraphAnn.buildAdjacency(e, "vec_id", "embedding")
-      }
-      val entryDf = graft.core.Artifacts.buildOnce(s, s"$base/entry") {
-        GraphAnn.medoid(e, "vec_id", "embedding")
-      }
-      if (!new java.io.File(
-          ScalarIndex.valuesDir(scalarDir) + "/_SUCCESS").exists())
-        ScalarIndex.build(e, "vec_id", "label", scalarDir)
-      stageOracleOnce(s, "graphscal", dir)(
-        "adjacency" -> adj.select("src", "dst"),
-        "entry" -> entryDf)
-      val entryId = entryDf.collect()(0).getLong(0)
-      val query = e.where(col("vec_id") === 0).select("embedding")
-        .collect()(0).getSeq[Float](0).toArray
+      val scalarDir = Fixtures.labelIndex(s, dir)
+      val adj = Fixtures.graphAdjacency(s, dir)
+      val entryId = stageGraph(s, "graphscal", dir)
+      val query = Fixtures.queryVector(e)
       GraphAnn.filteredBeamSearchIds(adj, e, "vec_id", "embedding",
         query, entryId,
         allowedIds = ScalarIndex.ids(s, scalarDir, Seq(2, 5, 7)),
@@ -2946,23 +2672,10 @@ object PipelineQueries {
     (s, dir) => {
       import graft.search.{GraphAnn, ScalarIndex}
       val e = Tables.embeddings(s, dir)
-      val base = s"/tmp/graft_graphann_${math.abs(dir.hashCode)}"
-      val scalarDir = s"/tmp/graft_scalaridx_${math.abs(dir.hashCode)}"
-      val adj = graft.core.Artifacts.buildOnce(s, s"$base/adjacency") {
-        GraphAnn.buildAdjacency(e, "vec_id", "embedding")
-      }
-      val entryDf = graft.core.Artifacts.buildOnce(s, s"$base/entry") {
-        GraphAnn.medoid(e, "vec_id", "embedding")
-      }
-      if (!new java.io.File(
-          ScalarIndex.valuesDir(scalarDir) + "/_SUCCESS").exists())
-        ScalarIndex.build(e, "vec_id", "label", scalarDir)
-      stageOracleOnce(s, "graphscalrec", dir)(
-        "adjacency" -> adj.select("src", "dst"),
-        "entry" -> entryDf)
-      val entryId = entryDf.collect()(0).getLong(0)
-      val query = e.where(col("vec_id") === 0).select("embedding")
-        .collect()(0).getSeq[Float](0).toArray
+      val scalarDir = Fixtures.labelIndex(s, dir)
+      val adj = Fixtures.graphAdjacency(s, dir)
+      val entryId = stageGraph(s, "graphscalrec", dir)
+      val query = Fixtures.queryVector(e)
       val byIds = GraphAnn.filteredBeamSearchIds(adj, e, "vec_id",
         "embedding", query, entryId,
         allowedIds = ScalarIndex.ids(s, scalarDir, Seq(2, 5, 7)),
@@ -3017,13 +2730,8 @@ object PipelineQueries {
     (s, dir) => {
       import graft.search.GraphAnn
       val e = Tables.embeddings(s, dir)
-      val base = s"/tmp/graft_graphann_${math.abs(dir.hashCode)}"
-      val adj = graft.core.Artifacts.buildOnce(s, s"$base/adjacency") {
-        GraphAnn.buildAdjacency(e, "vec_id", "embedding")
-      }
-      val entries = graft.core.Artifacts.buildOnce(s, s"$base/entries") {
-        GraphAnn.entryPoints(e, "vec_id", "embedding", nEntries = 8)
-      }
+      val adj = Fixtures.graphAdjacency(s, dir)
+      val entries = Fixtures.graphEntries(s, dir)
       stageOracleOnce(s, "graphmulti", dir)(
         "adjacency" -> adj.select("src", "dst"),
         "entry" -> entries.select("entry_id"))
@@ -3062,13 +2770,8 @@ object PipelineQueries {
     (s, dir) => {
       import graft.search.GraphAnn
       val e = Tables.embeddings(s, dir)
-      val base = s"/tmp/graft_graphann_${math.abs(dir.hashCode)}"
-      val adj = graft.core.Artifacts.buildOnce(s, s"$base/adjacency") {
-        GraphAnn.buildAdjacency(e, "vec_id", "embedding")
-      }
-      val entries = graft.core.Artifacts.buildOnce(s, s"$base/entries") {
-        GraphAnn.entryPoints(e, "vec_id", "embedding", nEntries = 8)
-      }
+      val adj = Fixtures.graphAdjacency(s, dir)
+      val entries = Fixtures.graphEntries(s, dir)
       stageOracleOnce(s, "graphmultirec", dir)(
         "adjacency" -> adj.select("src", "dst"),
         "entry" -> entries.select("entry_id"))
@@ -3127,13 +2830,9 @@ object PipelineQueries {
     (s, dir) => {
       import graft.search.GraphAnn
       val e = Tables.embeddings(s, dir)
-      val base = s"/tmp/graft_graphann_${math.abs(dir.hashCode)}"
-      val adj = graft.core.Artifacts.buildOnce(s, s"$base/adjacency") {
-        GraphAnn.buildAdjacency(e, "vec_id", "embedding")
-      }
-      val entryDf = graft.core.Artifacts.buildOnce(s, s"$base/entry") {
-        GraphAnn.medoid(e, "vec_id", "embedding")
-      }
+      val base = Fixtures.graphDir(dir)
+      val adj = Fixtures.graphAdjacency(s, dir)
+      val entryDf = Fixtures.graphMedoid(s, dir)
       stageOracleOnce(s, "graphtune", dir)(
         "adjacency" -> adj.select("src", "dst"),
         "entry" -> entryDf)
@@ -3235,13 +2934,9 @@ object PipelineQueries {
     (s, dir) => {
       import graft.search.GraphAnn
       val e = Tables.embeddings(s, dir)
-      val base = s"/tmp/graft_graphann_${math.abs(dir.hashCode)}"
-      val adj = graft.core.Artifacts.buildOnce(s, s"$base/adjacency") {
-        GraphAnn.buildAdjacency(e, "vec_id", "embedding")
-      }
-      val entries = graft.core.Artifacts.buildOnce(s, s"$base/entries") {
-        GraphAnn.entryPoints(e, "vec_id", "embedding", nEntries = 8)
-      }
+      val base = Fixtures.graphDir(dir)
+      val adj = Fixtures.graphAdjacency(s, dir)
+      val entries = Fixtures.graphEntries(s, dir)
       stageOracleOnce(s, "graphtunem", dir)(
         "adjacency" -> adj.select("src", "dst"),
         "entry" -> entries.select("entry_id"))
@@ -3349,25 +3044,16 @@ object PipelineQueries {
     (s, dir) => {
       import graft.search.{BinaryVec, GraphAnn, Rotation}
       val e = Tables.embeddings(s, dir)
-      val base = s"/tmp/graft_graphann_${math.abs(dir.hashCode)}"
-      val adj = graft.core.Artifacts.buildOnce(s, s"$base/adjacency") {
-        GraphAnn.buildAdjacency(e, "vec_id", "embedding")
-      }
-      val entryDf = graft.core.Artifacts.buildOnce(s, s"$base/entry") {
-        GraphAnn.medoid(e, "vec_id", "embedding")
-      }
-      val rot = Rotation.hadamardSignRows(64, "graft-bin-rot")
-      val packed = graft.core.Artifacts.buildOnce(s,
-        s"/tmp/graft_asymsig_${math.abs(dir.hashCode)}") {
-        BinaryVec.packTable(e, "vec_id", "embedding", rot, 64)
-      }
+      val adj = Fixtures.graphAdjacency(s, dir)
+      val entryDf = Fixtures.graphMedoid(s, dir)
+      val rot = Fixtures.binaryRotation
+      val packed = Fixtures.asymSignatures(s, dir)
       stageOracleOnce(s, "graphasym", dir)(
         "adjacency" -> adj.select("src", "dst"),
         "entry" -> entryDf,
         "rotation" -> Rotation.rowsToDf(s, rot))
       val entryId = entryDf.collect()(0).getLong(0)
-      val qe = e.where(col("vec_id") === 0).select("embedding")
-        .collect()(0).getSeq[Float](0).toArray
+      val qe = Fixtures.queryVector(e)
       val qr = Rotation.projectRow(qe, rot)
       val qn = math.sqrt(qr.map(v => v.toDouble * v.toDouble).sum)
       require(qn > 0, "query vector must be non-zero")
@@ -3448,25 +3134,16 @@ object PipelineQueries {
     (s, dir) => {
       import graft.search.{GraphAnn, Pq}
       val e = Tables.embeddings(s, dir)
-      val base = s"/tmp/graft_graphann_${math.abs(dir.hashCode)}"
-      val pqDir = s"/tmp/graft_pq_${math.abs(dir.hashCode)}"
-      val adj = graft.core.Artifacts.buildOnce(s, s"$base/adjacency") {
-        GraphAnn.buildAdjacency(e, "vec_id", "embedding")
-      }
-      val entryDf = graft.core.Artifacts.buildOnce(s, s"$base/entry") {
-        GraphAnn.medoid(e, "vec_id", "embedding")
-      }
-      val model =
-        if (new java.io.File(Pq.codesDir(pqDir) + "/_SUCCESS").exists())
-          Pq.load(s, pqDir)
-        else Pq.build(e, "embedding", "vec_id", pqDir)
+      val pqDir = Fixtures.pqDir(dir)
+      val adj = Fixtures.graphAdjacency(s, dir)
+      val entryDf = Fixtures.graphMedoid(s, dir)
+      val model = Fixtures.pq(s, dir)
       stageOracleOnce(s, "graphpq", dir)(
         "adjacency" -> adj.select("src", "dst"),
         "entry" -> entryDf,
         "codebooks" -> s.read.parquet(Pq.codebooksDir(pqDir)))
       val entryId = entryDf.collect()(0).getLong(0)
-      val query = e.where(col("vec_id") === 0).select("embedding")
-        .collect()(0).getSeq[Float](0).toArray
+      val query = Fixtures.queryVector(e)
       val codes = s.read.parquet(Pq.codesDir(pqDir))
       GraphAnn.beamSearchPq(adj, codes, e, "vec_id", "embedding", query,
         model, entryId, k = 5, beamWidth = 4, rounds = 3, degree = 8)
@@ -3542,16 +3219,10 @@ object PipelineQueries {
       import graft.search.GraphAnn
       import s.implicits._
       val e = Tables.embeddings(s, dir)
-      val base = s"/tmp/graft_graphann_${math.abs(dir.hashCode)}"
-      val adj = graft.core.Artifacts.buildOnce(s, s"$base/adjacency") {
-        GraphAnn.buildAdjacency(e, "vec_id", "embedding")
-      }
-      val entryDf = graft.core.Artifacts.buildOnce(s, s"$base/entry") {
-        GraphAnn.medoid(e, "vec_id", "embedding")
-      }
+      val adj = Fixtures.graphAdjacency(s, dir)
+      val entryDf = Fixtures.graphMedoid(s, dir)
       val entryId = entryDf.collect()(0).getLong(0)
-      val query = e.where(col("vec_id") === 0).select("embedding")
-        .collect()(0).getSeq[Float](0).toArray
+      val query = Fixtures.queryVector(e)
       val sel = GraphAnn.estimateSelectivitySampled(e,
         col("label") === 3, col("embedding"), e.count())
       stageOracleOnce(s, "graphfiltad", dir)(
@@ -3617,15 +3288,9 @@ object PipelineQueries {
     (s, dir) => {
       import graft.search.GraphAnn
       val e = Tables.embeddings(s, dir)
-      val base = s"/tmp/graft_graphann_${math.abs(dir.hashCode)}"
-      val adj = graft.core.Artifacts.buildOnce(s, s"$base/adjacency") {
-        GraphAnn.buildAdjacency(e, "vec_id", "embedding")
-      }
-      val entries = graft.core.Artifacts.buildOnce(s, s"$base/entries") {
-        GraphAnn.entryPoints(e, "vec_id", "embedding", nEntries = 8)
-      }
-      val query = e.where(col("vec_id") === 0).select("embedding")
-        .collect()(0).getSeq[Float](0).toArray
+      val adj = Fixtures.graphAdjacency(s, dir)
+      val entries = Fixtures.graphEntries(s, dir)
+      val query = Fixtures.queryVector(e)
       // sampled-estimate dispatch (exact under the cap) — the estimate
       // is staged as an oracle INPUT, like graph_ann_filtered_adaptive
       val sel = GraphAnn.estimateSelectivitySampled(e,
@@ -3686,19 +3351,9 @@ object PipelineQueries {
     (s, dir) => {
       import graft.search.GraphAnn
       val e = Tables.embeddings(s, dir)
-      val base = s"/tmp/graft_graphann_${math.abs(dir.hashCode)}"
-      val adj = graft.core.Artifacts.buildOnce(s, s"$base/adjacency") {
-        GraphAnn.buildAdjacency(e, "vec_id", "embedding")
-      }
-      val entryDf = graft.core.Artifacts.buildOnce(s, s"$base/entry") {
-        GraphAnn.medoid(e, "vec_id", "embedding")
-      }
-      stageOracleOnce(s, "graphrange", dir)(
-        "adjacency" -> adj.select("src", "dst"),
-        "entry" -> entryDf)
-      val entryId = entryDf.collect()(0).getLong(0)
-      val query = e.where(col("vec_id") === 0).select("embedding")
-        .collect()(0).getSeq[Float](0).toArray
+      val adj = Fixtures.graphAdjacency(s, dir)
+      val entryId = stageGraph(s, "graphrange", dir)
+      val query = Fixtures.queryVector(e)
       GraphAnn.rangeBeamSearch(adj, e, "vec_id", "embedding", query,
         entryId, radius = 1.6, beamWidth = 6, rounds = 3, degree = 8)
     },
@@ -3800,8 +3455,7 @@ object PipelineQueries {
       // of the new candidates), which beats the bulk walk's
       // corpus-equi-join rounds until the query batch amortizes the
       // scans (measured round 16: the bulk swap was +2.5 s here)
-      val query = e.where(col("vec_id") === 0).select("embedding")
-        .collect()(0).getSeq[Float](0).toArray
+      val query = Fixtures.queryVector(e)
       GraphAnn.beamSearch(adj, e, "vec_id", "embedding", query, entryId,
         k = 5, beamWidth = 4, rounds = 3, degree = 8)
     },
@@ -3942,8 +3596,7 @@ object PipelineQueries {
       // single-query serve stays on the PER-QUERY layered walk (see
       // streaming_graph_ingest: the bulk walk's corpus-equi-join
       // rounds only win once a query batch amortizes them)
-      val query = e.where(col("vec_id") === 0).select("embedding")
-        .collect()(0).getSeq[Float](0).toArray
+      val query = Fixtures.queryVector(e)
       GraphAnn.layeredSearchMulti(Seq(uadj), uentDf, adj, e, "vec_id",
         "embedding", query, k = 5, beamWidth = 4, upperRounds = 3,
         rounds = 3, degree = 8, nSeeds = 2)
@@ -3972,7 +3625,8 @@ object PipelineQueries {
     (s, dir) => {
       import graft.search.GraphAnn
       val e = Tables.embeddings(s, dir)
-      val (adj, entryId) = bulkGraphArtifacts(s, dir)
+      val adj = Fixtures.graphAdjacency(s, dir)
+      val entryId = stageGraph(s, "graphbulk", dir)
       val queries = e.where(col("vec_id").isin(BulkQids: _*))
         .select(col("vec_id").as("qid"), col("embedding").as("qv"))
       val bulk = GraphAnn.bulkBeamSearch(adj, e, "vec_id", "embedding",
@@ -4140,19 +3794,9 @@ object PipelineQueries {
       import graft.search.{Bm25, GraphAnn}
       val docs = Tables.documents(s, dir)
       val e = Tables.embeddings(s, dir)
-      val base = s"/tmp/graft_graphann_${math.abs(dir.hashCode)}"
-      val adj = graft.core.Artifacts.buildOnce(s, s"$base/adjacency") {
-        GraphAnn.buildAdjacency(e, "vec_id", "embedding")
-      }
-      val entryDf = graft.core.Artifacts.buildOnce(s, s"$base/entry") {
-        GraphAnn.medoid(e, "vec_id", "embedding")
-      }
-      stageOracleOnce(s, "graphhyb", dir)(
-        "adjacency" -> adj.select("src", "dst"),
-        "entry" -> entryDf)
-      val entryId = entryDf.collect()(0).getLong(0)
-      val query = e.where(col("vec_id") === 0).select("embedding")
-        .collect()(0).getSeq[Float](0).toArray
+      val adj = Fixtures.graphAdjacency(s, dir)
+      val entryId = stageGraph(s, "graphhyb", dir)
+      val query = Fixtures.queryVector(e)
       val bm = Bm25.score(docs, "doc_id", "text",
         terms = Seq("scan", "filter", "merge"))
       val bmRanks = Bm25.topRanks(bm, "bm25", n = 20,
@@ -4282,21 +3926,7 @@ object PipelineQueries {
   private val collectionPointGet = Q(
     "collection_point_get",
     (s, dir) => {
-      val out = s"/tmp/graft_coll_${math.abs(dir.hashCode)}/knowledge"
-      val coll = Collection(s, out)
-      if (!coll.exists) {
-        val cleaned = Preprocess(
-          Tables.documents(s, dir)
-            .select(col("doc_id"), col("source").as("chapter"), col("text")),
-          "text")
-          .select(col("doc_id"), col("chapter"),
-            col("text_clean").as("content"))
-        val rows = Collection.withDenseIds(cleaned, "doc_id")
-          .select("id", "chapter", "content")
-        coll.create(rows.schema, force = true)
-        coll.append(rows)
-      }
-      coll.read.where(col("id").isin(3L, 7L, 11L))
+      Fixtures.knowledgeCollection(s, dir).read.where(col("id").isin(3L, 7L, 11L))
         .select(col("id"), col("chapter"), length(col("content"))
           .cast("long").as("content_len"))
         .orderBy(col("id").asc)
@@ -4424,11 +4054,9 @@ object PipelineQueries {
   private val collectionPartitionKey = Q(
     "collection_partition_key",
     (s, dir) => {
-      val out = s"/tmp/graft_collpk_${math.abs(dir.hashCode)}/docs"
-      val p = new org.apache.hadoop.fs.Path(out)
-      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      val coll = Collection(s, out)
-      if (!fs.exists(p)) {
+      val coll = Collection(s,
+        s"/tmp/graft_collpk_${math.abs(dir.hashCode)}/docs")
+      rebuildOnce(s, coll.dir) {
         coll.appendPartitioned(
           Tables.documents(s, dir).select("doc_id", "text", "n_chars",
             "source"),
@@ -4716,49 +4344,24 @@ object PipelineQueries {
     (s, dir) => {
       import graft.search.GraphAnn
       val e = Tables.embeddings(s, dir)
-      val base = s"/tmp/graft_graphann_${math.abs(dir.hashCode)}"
-      val adj = graft.core.Artifacts.buildOnce(s, s"$base/adjacency") {
-        GraphAnn.buildAdjacency(e, "vec_id", "embedding")
-      }
-      val indexDir = s"/tmp/graft_ivf_${math.abs(dir.hashCode)}"
-      val model =
-        if (new java.io.File(IvfIndex.centroidsDir(indexDir)).exists())
-          IvfIndex.load(s, indexDir)
-        else IvfIndex.build(e, "embedding", indexDir, nlist = 16)
+      val adj = Fixtures.graphAdjacency(s, dir)
+      val indexDir = Fixtures.ivfDir(dir)
+      val model = Fixtures.ivf(s, dir)
       val assign = IvfIndex.readDataMerged(s, indexDir)
         .select(col("vec_id"), col("cluster_id"))
       val cents = s.read.parquet(IvfIndex.centroidsDir(indexDir))
-      // a layout from a pre-radii build (warm /tmp) gets its table here
-      // so the radius checks run against a populated artifact
-      if (IvfIndex.loadRadii(s, indexDir).isEmpty)
-        IvfIndex.refreshRadii(s, model, "embedding")
       val radiiT = s.read.parquet(IvfIndex.radiiDir(indexDir))
       import graft.search.{IndexAudit, Rq}
-      val rqDir = s"/tmp/graft_rq_${math.abs(dir.hashCode)}"
-      if (!new java.io.File(Rq.codesDir(rqDir) + "/_SUCCESS").exists())
-        Rq.build(e, "embedding", "vec_id", rqDir, maxIter = 20)
-      val rqIds = s.read.parquet(Rq.codesDir(rqDir)).select("vec_id")
-      val asymIds = graft.core.Artifacts.buildOnce(s,
-        s"/tmp/graft_asymsig_${math.abs(dir.hashCode)}") {
-        import graft.search.{BinaryVec, Rotation}
-        BinaryVec.packTable(e, "vec_id", "embedding",
-          Rotation.hadamardSignRows(64, "graft-bin-rot"), 64)
-      }.select("vec_id")
+      Fixtures.rq(s, dir)
+      val rqIds = s.read.parquet(Rq.codesDir(Fixtures.rqDir(dir)))
+        .select("vec_id")
+      val asymIds = Fixtures.asymSignatures(s, dir).select("vec_id")
       // positional (documents-side) artifact joins the audit: coverage
       // runs on DISTINCT posting ids against token-bearing docs (a
       // 0-token doc legitimately has no postings row)
       import graft.search.TermIndex
       val docsT = Tables.documents(s, dir)
-      val phraseIdx = s"/tmp/graft_phrase_terms_${math.abs(dir.hashCode)}"
-      mutateOnce(s, phraseIdx) {
-        val p = new org.apache.hadoop.fs.Path(phraseIdx)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-        TermIndex.build(docsT.where(col("doc_id") < 300), "doc_id", "text",
-          phraseIdx)
-        TermIndex.append(docsT.where(col("doc_id") >= 300), "doc_id",
-          "text", phraseIdx)
-      }
-      val posIds = TermIndex.postings(s, phraseIdx)
+      val posIds = TermIndex.postings(s, Fixtures.phraseTerms(s, dir))
         .select(col("id").as("doc_id")).distinct()
       val tokDocs = docsT.where(size(TextAnalysis.wsTerms(col("text"))) > 0)
         .select("doc_id")
@@ -4768,15 +4371,8 @@ object PipelineQueries {
       // segment contract (the term_prefix_search fixture — one
       // compacted segment, no straddlers; whichever entry runs first
       // builds it)
-      val entriesA = graft.core.Artifacts.buildOnce(s, s"$base/entries") {
-        GraphAnn.entryPoints(e, "vec_id", "embedding", nEntries = 8)
-      }
-      val prefixIdx = s"/tmp/graft_prefix_terms_${math.abs(dir.hashCode)}"
-      mutateOnce(s, prefixIdx) {
-        val p = new org.apache.hadoop.fs.Path(prefixIdx)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-        TermIndex.build(docsT, "doc_id", "text", prefixIdx)
-      }
+      val entriesA = Fixtures.graphEntries(s, dir)
+      val prefixIdx = Fixtures.prefixTerms(s, dir)
       // sparse postings coverage (round 12): posted ids vs the corpus
       // rows that HAVE a kept dim (sparsify keeps positive rounded
       // weights only — a no-positive-dim row legitimately has no
@@ -4785,10 +4381,8 @@ object PipelineQueries {
       // a pre-distincted input made the dupes counter vacuous — a
       // duplicate (id, dim) posting left by a double append must be
       // observable here).
-      val sparsePosted = graft.core.Artifacts.buildOnce(s,
-        s"/tmp/graft_sparse_${math.abs(dir.hashCode)}") {
-        graft.search.SparseVec.postings(e, "vec_id", "embedding", topN = 8)
-      }.select("vec_id", "dim")
+      val sparsePosted = Fixtures.sparsePostings(s, dir)
+        .select("vec_id", "dim")
       val sparseDocs = e.where(
         size(graft.search.SparseVec.sparsify(col("embedding"), 8)) > 0)
         .select("vec_id")
@@ -4797,13 +4391,8 @@ object PipelineQueries {
       // (a rebuild reproduces it), no orphans, live upper entry. The
       // artifacts are the layered entries' shared buildOnce dirs.
       val usampleI = GraphAnn.upperSample(e, "vec_id")
-      val ubaseI = s"/tmp/graft_glayer_${math.abs(dir.hashCode)}"
-      val uadjI = graft.core.Artifacts.buildOnce(s, s"$ubaseI/adjacency") {
-        GraphAnn.buildAdjacency(usampleI, "vec_id", "embedding")
-      }
-      val uentI = graft.core.Artifacts.buildOnce(s, s"$ubaseI/entry") {
-        GraphAnn.medoid(usampleI, "vec_id", "embedding")
-      }
+      val uadjI = Fixtures.layerAdjacency(s, dir, level = 1)
+      val uentI = Fixtures.layerEntry(s, dir, level = 1)
       stageOracleOnce(s, "integrity", dir)(
         "adjacency" -> adj,
         "assign" -> assign,
@@ -5002,11 +4591,6 @@ object PipelineQueries {
       ORDER BY check_name ASC
     """))
 
-  /** Per-run throwaway copy of a mutable index base — see
-    * [[graft.core.Artifacts.copyLocalDir]]. */
-  private def copyLocalDir(srcDir: String, dstDir: String): Unit =
-    graft.core.Artifacts.copyLocalDir(srcDir, dstDir)
-
   /** Delete propagation to a derived index, serve side (see
     * [[graft.search.Tombstones]]): rows are deleted by KEY against a
     * built IVF index — the artifact is NOT rebuilt, the delete is a
@@ -5020,17 +4604,13 @@ object PipelineQueries {
     "deleted_rows_masked_search",
     (s, dir) => {
       import graft.search.Tombstones
-      val baseDir = s"/tmp/graft_ivf_tomb_${math.abs(dir.hashCode)}"
+      val baseDir = Fixtures.tombIvfDir(dir)
       val e = Tables.embeddings(s, dir)
-      val model =
-        if (new java.io.File(IvfIndex.centroidsDir(baseDir)).exists())
-          IvfIndex.load(s, baseDir)
-        else IvfIndex.build(e, "embedding", baseDir, nlist = 16)
+      val model = Fixtures.tombIvf(s, dir)
       Tombstones.clear(s, baseDir)
       IvfIndex.delete(e.where(col("vec_id") % 7 === 3).select("vec_id"),
         model, "vec_id")
-      val query = e.where(col("vec_id") === 0).select("embedding")
-        .collect()(0).getSeq[Float](0).toArray
+      val query = Fixtures.queryVector(e)
       IvfIndex.search(s, model, "embedding", "vec_id", query, k = 5,
           nprobe = model.nlist)
         .select("vec_id", "distance")
@@ -5064,16 +4644,12 @@ object PipelineQueries {
     (s, dir) => {
       import graft.search.{AliasedIndex, Tombstones}
       import s.implicits._
-      val baseDir = s"/tmp/graft_ivf_tomb_${math.abs(dir.hashCode)}"
+      val baseDir = Fixtures.tombIvfBuilt(s, dir)
       val runDir = s"/tmp/graft_ivf_tombfold_${math.abs(dir.hashCode)}"
       val e = Tables.embeddings(s, dir)
-      if (!new java.io.File(IvfIndex.centroidsDir(baseDir)).exists())
-        IvfIndex.build(e, "embedding", baseDir, nlist = 16)
-      mutateOnce(s, runDir) {
-        val p = new org.apache.hadoop.fs.Path(runDir)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+      rebuildOnce(s, runDir) {
         AliasedIndex.init(s, runDir) { d =>
-          copyLocalDir(baseDir, d)
+          Artifacts.copyLocalDir(baseDir, d)
           Tombstones.clear(s, d) // copied tombstones aren't this run's
         }
         val model = IvfIndex.load(s, runDir) // binds to v1
@@ -5125,12 +4701,9 @@ object PipelineQueries {
       import graft.search.Tombstones
       import org.apache.hadoop.fs.Path
       import org.apache.spark.sql.types._
-      val baseDir = s"/tmp/graft_ivf_tomb_${math.abs(dir.hashCode)}"
+      val baseDir = Fixtures.tombIvfDir(dir)
       val e = Tables.embeddings(s, dir)
-      val model =
-        if (new java.io.File(IvfIndex.centroidsDir(baseDir)).exists())
-          IvfIndex.load(s, baseDir)
-        else IvfIndex.build(e, "embedding", baseDir, nlist = 16)
+      val model = Fixtures.tombIvf(s, dir)
       Tombstones.clear(s, baseDir)
       val work = s"/tmp/graft_streamdel_${math.abs(dir.hashCode)}"
       val conf = s.sparkContext.hadoopConfiguration
@@ -5156,8 +4729,7 @@ object PipelineQueries {
         }
         .start()
       try q.processAllAvailable() finally q.stop()
-      val query = e.where(col("vec_id") === 0).select("embedding")
-        .collect()(0).getSeq[Float](0).toArray
+      val query = Fixtures.queryVector(e)
       IvfIndex.search(s, model, "embedding", "vec_id", query, k = 5,
           nprobe = model.nlist)
         .select("vec_id", "distance")
@@ -5182,12 +4754,9 @@ object PipelineQueries {
   private val ivfBulkSearch = Q(
     "ivf_bulk_search",
     (s, dir) => {
-      val indexDir = s"/tmp/graft_ivf_${math.abs(dir.hashCode)}"
+      val indexDir = Fixtures.ivfDir(dir)
       val e = Tables.embeddings(s, dir)
-      val model =
-        if (new java.io.File(IvfIndex.centroidsDir(indexDir)).exists())
-          IvfIndex.load(s, indexDir)
-        else IvfIndex.build(e, "embedding", indexDir, nlist = 16)
+      val model = Fixtures.ivf(s, dir)
       stageOracleOnceLazy(s, "ivfbulk", dir)(Seq(
         "centroids" -> s.read.parquet(IvfIndex.centroidsDir(indexDir)),
         "assign" -> IvfIndex.readDataMerged(s, indexDir)
@@ -5240,19 +4809,9 @@ object PipelineQueries {
     (s, dir) => {
       import graft.search.GraphAnn
       val e = Tables.embeddings(s, dir)
-      val base = s"/tmp/graft_graphann_${math.abs(dir.hashCode)}"
-      val adj = graft.core.Artifacts.buildOnce(s, s"$base/adjacency") {
-        GraphAnn.buildAdjacency(e, "vec_id", "embedding")
-      }
-      val entryDf = graft.core.Artifacts.buildOnce(s, s"$base/entry") {
-        GraphAnn.medoid(e, "vec_id", "embedding")
-      }
-      stageOracleOnce(s, "graphmask", dir)(
-        "adjacency" -> adj.select("src", "dst"),
-        "entry" -> entryDf)
-      val entryId = entryDf.collect()(0).getLong(0)
-      val query = e.where(col("vec_id") === 0).select("embedding")
-        .collect()(0).getSeq[Float](0).toArray
+      val adj = Fixtures.graphAdjacency(s, dir)
+      val entryId = stageGraph(s, "graphmask", dir)
+      val query = Fixtures.queryVector(e)
       val deletes = e.where(col("vec_id") % 7 === 3).select("vec_id")
       GraphAnn.beamSearchMasked(adj, e, "vec_id", "embedding", query,
         entryId, k = 5, deletes, beamWidth = 6, rounds = 3, degree = 8)
@@ -5306,13 +4865,10 @@ object PipelineQueries {
     "ivf_rebalance_report",
     (s, dir) => {
       import s.implicits._
-      val baseDir = s"/tmp/graft_ivf_${math.abs(dir.hashCode)}"
+      val baseDir = Fixtures.ivfBuilt(s, dir)
       val runDir = s"/tmp/graft_ivf_rebal_${math.abs(dir.hashCode)}"
-      val e = Tables.embeddings(s, dir)
-      if (!new java.io.File(IvfIndex.centroidsDir(baseDir)).exists())
-        IvfIndex.build(e, "embedding", baseDir, nlist = 16)
       mutateOnce(s, runDir) {
-        copyLocalDir(baseDir, runDir)
+        Artifacts.copyLocalDir(baseDir, runDir)
         val model = IvfIndex.load(s, runDir)
         val before = IvfIndex.readDataMerged(s, runDir)
           .select(col("vec_id"), col("cluster_id"))
@@ -5416,15 +4972,11 @@ object PipelineQueries {
     "ivf_rebalance_search",
     (s, dir) => {
       import graft.search.AliasedIndex
-      val baseDir = s"/tmp/graft_ivf_${math.abs(dir.hashCode)}"
+      val baseDir = Fixtures.ivfBuilt(s, dir)
       val runDir = s"/tmp/graft_ivf_rebalsrch_${math.abs(dir.hashCode)}"
       val e = Tables.embeddings(s, dir)
-      if (!new java.io.File(IvfIndex.centroidsDir(baseDir)).exists())
-        IvfIndex.build(e, "embedding", baseDir, nlist = 16)
-      mutateOnce(s, runDir) {
-        val p = new org.apache.hadoop.fs.Path(runDir)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-        AliasedIndex.init(s, runDir)(d => copyLocalDir(baseDir, d))
+      rebuildOnce(s, runDir) {
+        AliasedIndex.init(s, runDir)(d => Artifacts.copyLocalDir(baseDir, d))
         val maxBefore = s.read.parquet(
             IvfIndex.dataDir(AliasedIndex.currentDir(s, runDir)))
           .groupBy(col("cluster_id")).agg(count(lit(1)).as("sz"))
@@ -5433,8 +4985,7 @@ object PipelineQueries {
           sizeCap = math.max(1L, maxBefore - 1))
       }
       val model = IvfIndex.load(s, runDir) // resolves the published v2
-      val query = e.where(col("vec_id") === 0).select("embedding")
-        .collect()(0).getSeq[Float](0).toArray
+      val query = Fixtures.queryVector(e)
       IvfIndex.search(s, model, "embedding", "vec_id", query, k = 5,
           nprobe = model.nlist)
         .select("vec_id", "distance")
@@ -5455,21 +5006,14 @@ object PipelineQueries {
   private val ivfUpsertSearch = Q(
     "ivf_upsert_search",
     (s, dir) => {
-      val baseDir = s"/tmp/graft_ivf_upbase_${math.abs(dir.hashCode)}"
+      val baseDir = Fixtures.upsertBaseIvf(s, dir)
       val runDir = s"/tmp/graft_ivf_upsert_${math.abs(dir.hashCode)}"
       val e = Tables.embeddings(s, dir)
-      if (!new java.io.File(IvfIndex.centroidsDir(baseDir)).exists()) {
-        val corrupted = e.withColumn("embedding",
-          when(col("vec_id") % 10 === 1, reverse(col("embedding")))
-            .otherwise(col("embedding")))
-        IvfIndex.build(corrupted, "embedding", baseDir, nlist = 16)
-      }
-      copyLocalDir(baseDir, runDir)
+      Artifacts.copyLocalDir(baseDir, runDir)
       val model = IvfIndex.load(s, runDir)
       IvfIndex.upsertBatch(e.where(col("vec_id") % 10 === 1),
         "embedding", model, "vec_id", ver = 1)
-      val query = e.where(col("vec_id") === 0).select("embedding")
-        .collect()(0).getSeq[Float](0).toArray
+      val query = Fixtures.queryVector(e)
       IvfIndex.search(s, model, "embedding", "vec_id", query,
           k = 5, nprobe = model.nlist)
         .select("vec_id", "distance")
@@ -5488,16 +5032,10 @@ object PipelineQueries {
   private val ivfBulkUpsertSearch = Q(
     "ivf_bulk_upsert_search",
     (s, dir) => {
-      val baseDir = s"/tmp/graft_ivf_upbase_${math.abs(dir.hashCode)}"
+      val baseDir = Fixtures.upsertBaseIvf(s, dir)
       val runDir = s"/tmp/graft_ivf_bulkup_${math.abs(dir.hashCode)}"
       val e = Tables.embeddings(s, dir)
-      if (!new java.io.File(IvfIndex.centroidsDir(baseDir)).exists()) {
-        val corrupted = e.withColumn("embedding",
-          when(col("vec_id") % 10 === 1, reverse(col("embedding")))
-            .otherwise(col("embedding")))
-        IvfIndex.build(corrupted, "embedding", baseDir, nlist = 16)
-      }
-      copyLocalDir(baseDir, runDir)
+      Artifacts.copyLocalDir(baseDir, runDir)
       val model = IvfIndex.load(s, runDir)
       IvfIndex.upsertBatch(e.where(col("vec_id") % 10 === 1),
         "embedding", model, "vec_id", ver = 1)
@@ -5539,16 +5077,10 @@ object PipelineQueries {
     (s, dir) => {
       import org.apache.hadoop.fs.Path
       import org.apache.spark.sql.types._
-      val baseDir = s"/tmp/graft_ivf_upbase_${math.abs(dir.hashCode)}"
+      val baseDir = Fixtures.upsertBaseIvf(s, dir)
       val runDir = s"/tmp/graft_ivf_streamup_${math.abs(dir.hashCode)}"
       val e = Tables.embeddings(s, dir)
-      if (!new java.io.File(IvfIndex.centroidsDir(baseDir)).exists()) {
-        val corrupted = e.withColumn("embedding",
-          when(col("vec_id") % 10 === 1, reverse(col("embedding")))
-            .otherwise(col("embedding")))
-        IvfIndex.build(corrupted, "embedding", baseDir, nlist = 16)
-      }
-      copyLocalDir(baseDir, runDir)
+      Artifacts.copyLocalDir(baseDir, runDir)
       val model = IvfIndex.load(s, runDir)
       val work = s"/tmp/graft_streamup_${math.abs(dir.hashCode)}"
       val conf = s.sparkContext.hadoopConfiguration
@@ -5580,8 +5112,7 @@ object PipelineQueries {
         }
         .start()
       try q.processAllAvailable() finally q.stop()
-      val query = e.where(col("vec_id") === 0).select("embedding")
-        .collect()(0).getSeq[Float](0).toArray
+      val query = Fixtures.queryVector(e)
       IvfIndex.search(s, model, "embedding", "vec_id", query,
           k = 5, nprobe = model.nlist)
         .select("vec_id", "distance")
@@ -5602,15 +5133,13 @@ object PipelineQueries {
   private val indexVersionReport = Q(
     "index_version_report",
     (s, dir) => {
-      val baseDir = s"/tmp/graft_ivf_verbase_${math.abs(dir.hashCode)}"
+      val baseDir = Fixtures.ivfBuilt(s, dir)
       val runDir = s"/tmp/graft_ivf_verrep_${math.abs(dir.hashCode)}"
       val e = Tables.embeddings(s, dir)
-      if (!new java.io.File(IvfIndex.centroidsDir(baseDir)).exists())
-        IvfIndex.build(e, "embedding", baseDir, nlist = 16)
       // deterministic mutation once per fixture state (mutateOnce);
       // the version counters below stay live against the artifact
       mutateOnce(s, runDir) {
-        copyLocalDir(baseDir, runDir)
+        Artifacts.copyLocalDir(baseDir, runDir)
         val model = IvfIndex.load(s, runDir)
         IvfIndex.upsertBatch(e.where(col("vec_id") % 10 === 1),
           "embedding", model, "vec_id", ver = 1)
@@ -5669,23 +5198,17 @@ object PipelineQueries {
   private val indexMaintenancePlan = Q(
     "index_maintenance_plan",
     (s, dir) => {
-      import graft.search.{GraphAnn, Maintenance}
-      val baseDir = s"/tmp/graft_ivf_verbase_${math.abs(dir.hashCode)}"
+      import graft.search.Maintenance
+      val baseDir = Fixtures.ivfBuilt(s, dir)
       val runDir = s"/tmp/graft_ivf_mplan_${math.abs(dir.hashCode)}"
       val e = Tables.embeddings(s, dir)
-      if (!new java.io.File(IvfIndex.centroidsDir(baseDir)).exists())
-        IvfIndex.build(e, "embedding", baseDir, nlist = 16)
       // deterministic fixture mutation, run once per state (the
       // mutateOnce discipline — r10 bench showed this entry paying the
       // copy + 2 upserts + record 3× per pass); the PLAN aggregates
       // below stay live
       mutateOnce(s, runDir) {
-        copyLocalDir(baseDir, runDir)
+        Artifacts.copyLocalDir(baseDir, runDir)
         val model = IvfIndex.load(s, runDir)
-        // a base from a pre-radii build (warm /tmp) gets its table
-        // before the upserts so their folds have something to keep true
-        if (IvfIndex.loadRadii(s, runDir).isEmpty)
-          IvfIndex.refreshRadii(s, model, "embedding")
         IvfIndex.upsertBatch(e.where(col("vec_id") % 10 === 1),
           "embedding", model, "vec_id", ver = 1)
         IvfIndex.upsertBatch(e.where(col("vec_id") % 20 === 1),
@@ -5697,22 +5220,15 @@ object PipelineQueries {
       // graph family: the shared adjacency + multi-entry artifacts,
       // dead keys %11=5 (which may include an entry point — exactly the
       // liveness hazard the reelect_entries row watches)
-      val gbase = s"/tmp/graft_graphann_${math.abs(dir.hashCode)}"
-      val adj = graft.core.Artifacts.buildOnce(s, s"$gbase/adjacency") {
-        GraphAnn.buildAdjacency(e, "vec_id", "embedding")
-      }
-      val entries = graft.core.Artifacts.buildOnce(s, s"$gbase/entries") {
-        GraphAnn.entryPoints(e, "vec_id", "embedding", nEntries = 8)
-      }
+      val adj = Fixtures.graphAdjacency(s, dir)
+      val entries = Fixtures.graphEntries(s, dir)
       val graphDead = e.where(col("vec_id") % 11 === 5).select("vec_id")
       // lexical family: its own term artifact in 3 segments (> cap 2 —
       // the compact_term_segments debt) + tombstones (%13=1), all
       // inside one deterministic fixture mutation
       val docsT = Tables.documents(s, dir)
       val textDir = s"/tmp/graft_mplan_text_terms_${math.abs(dir.hashCode)}"
-      mutateOnce(s, textDir) {
-        val p = new org.apache.hadoop.fs.Path(textDir)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+      rebuildOnce(s, textDir) {
         graft.search.TermIndex.build(
           docsT.where(col("doc_id") < 300), "doc_id", "text", textDir)
         graft.search.TermIndex.append(
@@ -5727,9 +5243,7 @@ object PipelineQueries {
       // sparse family: its own postings artifact + tombstones (%17=3)
       // — the round-12 debt row completing the family matrix
       val sparseDir = s"/tmp/graft_mplan_sparse_${math.abs(dir.hashCode)}"
-      mutateOnce(s, sparseDir) {
-        val p = new org.apache.hadoop.fs.Path(sparseDir)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+      rebuildOnce(s, sparseDir) {
         graft.search.SparseVec.build(e, "vec_id", "embedding", topN = 8,
           sparseDir)
         graft.search.SparseVec.delete(
@@ -5738,11 +5252,7 @@ object PipelineQueries {
       }
       // layered family (round 13): the shared upper adjacency carries
       // its own dead-edge debt against the same %11=5 delete set
-      val ubaseM = s"/tmp/graft_glayer_${math.abs(dir.hashCode)}"
-      val uadjM = graft.core.Artifacts.buildOnce(s, s"$ubaseM/adjacency") {
-        GraphAnn.buildAdjacency(GraphAnn.upperSample(e, "vec_id"),
-          "vec_id", "embedding")
-      }
+      val uadjM = Fixtures.layerAdjacency(s, dir, level = 1)
       // live corpus drifted: %9=4 rows deleted without propagating
       val live = e.where(col("vec_id") % 9 =!= 4)
       stageOracleOnceLazy(s, "mplan", dir)(Seq(
@@ -5887,23 +5397,20 @@ object PipelineQueries {
       val e = Tables.embeddings(s, dir)
       val moved = e.where(col("vec_id") % 10 === 3)
         .withColumn("embedding", reverse(col("embedding")))
-      mutateOnce(s, root) {
-        val p = new org.apache.hadoop.fs.Path(root)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+      rebuildOnce(s, root) {
         AliasedIndex.init(s, root) { d =>
           IvfIndex.build(e, "embedding", d, nlist = 16); ()
         }
         val m1 = IvfIndex.load(s, AliasedIndex.currentDir(s, root))
         IvfIndex.upsertBatch(moved, "embedding", m1, "vec_id", ver = 1)
         AliasedIndex.advance(s, root) { (cur, next) =>
-          graft.core.Artifacts.copyLocalDir(cur, next)
+          Artifacts.copyLocalDir(cur, next)
           IvfIndex.compactVersions(s, IvfIndex.load(s, next), "vec_id")
         }
         ()
       }
       val m = IvfIndex.load(s, AliasedIndex.currentDir(s, root))
-      val query = e.where(col("vec_id") === 0).select("embedding")
-        .collect()(0).getSeq[Float](0).toArray
+      val query = Fixtures.queryVector(e)
       IvfIndex.search(s, m, "embedding", "vec_id", query, k = 5,
           nprobe = m.nlist)
         .select("vec_id", "distance")
@@ -5934,10 +5441,7 @@ object PipelineQueries {
     (s, dir) => {
       import graft.search.GraphAnn
       val e = Tables.embeddings(s, dir)
-      val base = s"/tmp/graft_graphann_${math.abs(dir.hashCode)}"
-      val adj = graft.core.Artifacts.buildOnce(s, s"$base/adjacency") {
-        GraphAnn.buildAdjacency(e, "vec_id", "embedding")
-      }
+      val adj = Fixtures.graphAdjacency(s, dir)
       stageOracleOnce(s, "graphfold", dir)("adjacency" -> adj)
       val deletes = e.where(col("vec_id") % 7 === 3).select("vec_id")
       GraphAnn.consolidateDeletes(adj, e, "vec_id", "embedding",
@@ -5997,21 +5501,14 @@ object PipelineQueries {
     (s, dir) => {
       import graft.search.GraphAnn
       val e = Tables.embeddings(s, dir)
-      val base = s"/tmp/graft_graphann_${math.abs(dir.hashCode)}"
-      val adj = graft.core.Artifacts.buildOnce(s, s"$base/adjacency") {
-        GraphAnn.buildAdjacency(e, "vec_id", "embedding")
-      }
-      val entry0 = graft.core.Artifacts.buildOnce(s, s"$base/entry") {
-        GraphAnn.medoid(e, "vec_id", "embedding")
-      }
+      val adj = Fixtures.graphAdjacency(s, dir)
+      val entry0 = Fixtures.graphMedoid(s, dir)
       val medoidId = entry0.collect()(0).getLong(0)
       val deletes = e
         .where(col("vec_id") === medoidId || col("vec_id") % 17 === 4)
         .select("vec_id")
       val key = s"/tmp/graft_reelect_${math.abs(dir.hashCode)}"
-      mutateOnce(s, key) {
-        val p = new org.apache.hadoop.fs.Path(key)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+      rebuildOnce(s, key) {
         val (a2, e2) = GraphAnn.consolidateDeletesWithEntries(adj, e,
           "vec_id", "embedding", deletes, entry0, degree = 8)
         a2.write.mode("overwrite").parquet(s"$key/adjacency")
@@ -6022,8 +5519,7 @@ object PipelineQueries {
       stageOracleOnce(s, "reelect", dir)(
         "adjacency" -> adj2.select("src", "dst"),
         "old_entry" -> entry0)
-      val query = e.where(col("vec_id") === 0).select("embedding")
-        .collect()(0).getSeq[Float](0).toArray
+      val query = Fixtures.queryVector(e)
       GraphAnn.beamSearchMulti(adj2, e, "vec_id", "embedding", query,
         ents2, k = 5, beamWidth = 4, rounds = 3, degree = 8, nSeeds = 1)
     },
@@ -6116,8 +5612,7 @@ object PipelineQueries {
       stageOracleOnce(s, "graphup", dir)(
         "adjacency" -> upserted.select("src", "dst"),
         "entry" -> entryDf)
-      val query = e.where(col("vec_id") === 0).select("embedding")
-        .collect()(0).getSeq[Float](0).toArray
+      val query = Fixtures.queryVector(e)
       GraphAnn.beamSearch(upserted, e, "vec_id", "embedding", query,
         entryId, k = 5, beamWidth = 4, rounds = 3, degree = 8)
     },
@@ -6191,28 +5686,16 @@ object PipelineQueries {
              SELECT dall.id, dall.d FROM dall JOIN n3 USING (id))"""
   }
 
-  /** Shared body of the two MIPS-walk entries: build-or-load the shared
-    * graph artifacts, stage them for the `graphmips` oracle, return
-    * (adjacency, corpus, entryId, query vector 0). */
+  /** Shared body of the two MIPS-walk entries: stage the shared graph
+    * for the `graphmips` oracle, return (adjacency, corpus, entryId,
+    * query vector 0). */
   private def mipsWalkSetup(s: org.apache.spark.sql.SparkSession,
                             dir: String)
       : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame,
          Long, Array[Float]) = {
-    import graft.search.GraphAnn
     val e = Tables.embeddings(s, dir)
-    val base = s"/tmp/graft_graphann_${math.abs(dir.hashCode)}"
-    val adj = graft.core.Artifacts.buildOnce(s, s"$base/adjacency") {
-      GraphAnn.buildAdjacency(e, "vec_id", "embedding")
-    }
-    val entryDf = graft.core.Artifacts.buildOnce(s, s"$base/entry") {
-      GraphAnn.medoid(e, "vec_id", "embedding")
-    }
-    stageOracleOnce(s, "graphmips", dir)(
-      "adjacency" -> adj.select("src", "dst"),
-      "entry" -> entryDf)
-    val query = e.where(col("vec_id") === 0).select("embedding")
-      .collect()(0).getSeq[Float](0).toArray
-    (adj, e, entryDf.collect()(0).getLong(0), query)
+    val entryId = stageGraph(s, "graphmips", dir)
+    (Fixtures.graphAdjacency(s, dir), e, entryId, Fixtures.queryVector(e))
   }
 
   /** MIPS-routed graph walk ([[graft.search.GraphAnn.beamSearchMips]]):
@@ -6270,20 +5753,11 @@ object PipelineQueries {
     (s, dir) => {
       import graft.search.GraphAnn
       val e = Tables.embeddings(s, dir)
-      val base = s"/tmp/graft_graphann_${math.abs(dir.hashCode)}"
-      val adj = graft.core.Artifacts.buildOnce(s, s"$base/adjacency") {
-        GraphAnn.buildAdjacency(e, "vec_id", "embedding")
-      }
-      val entryDf = graft.core.Artifacts.buildOnce(s, s"$base/entry") {
-        GraphAnn.medoid(e, "vec_id", "embedding")
-      }
-      stageOracleOnce(s, "graphcos", dir)(
-        "adjacency" -> adj.select("src", "dst"),
-        "entry" -> entryDf)
-      val query = e.where(col("vec_id") === 0).select("embedding")
-        .collect()(0).getSeq[Float](0).toArray
+      val adj = Fixtures.graphAdjacency(s, dir)
+      val entryId = stageGraph(s, "graphcos", dir)
+      val query = Fixtures.queryVector(e)
       GraphAnn.beamSearchCosine(adj, e, "vec_id", "embedding", query,
-        entryDf.collect()(0).getLong(0), k = 5, beamWidth = 4,
+        entryId, k = 5, beamWidth = 4,
         rounds = 3, degree = 8)
     },
     Some(s"""
@@ -6302,20 +5776,11 @@ object PipelineQueries {
       import graft.search.GraphAnn
       import s.implicits._
       val e = Tables.embeddings(s, dir)
-      val base = s"/tmp/graft_graphann_${math.abs(dir.hashCode)}"
-      val adj = graft.core.Artifacts.buildOnce(s, s"$base/adjacency") {
-        GraphAnn.buildAdjacency(e, "vec_id", "embedding")
-      }
-      val entryDf = graft.core.Artifacts.buildOnce(s, s"$base/entry") {
-        GraphAnn.medoid(e, "vec_id", "embedding")
-      }
-      stageOracleOnce(s, "graphcos", dir)(
-        "adjacency" -> adj.select("src", "dst"),
-        "entry" -> entryDf)
-      val query = e.where(col("vec_id") === 0).select("embedding")
-        .collect()(0).getSeq[Float](0).toArray
+      val adj = Fixtures.graphAdjacency(s, dir)
+      val entryId = stageGraph(s, "graphcos", dir)
+      val query = Fixtures.queryVector(e)
       val walk = GraphAnn.beamSearchCosine(adj, e, "vec_id", "embedding",
-          query, entryDf.collect()(0).getLong(0), k = 5, beamWidth = 4,
+          query, entryId, k = 5, beamWidth = 4,
           rounds = 3, degree = 8)
         .select("vec_id").as[Long].collect().toSet
       val exact = e.select(col("vec_id"),
@@ -6403,7 +5868,7 @@ object PipelineQueries {
     (s, dir) => {
       import graft.search.GraphAnn
       val e = Tables.embeddings(s, dir)
-      val base = s"/tmp/graft_graphann_${math.abs(dir.hashCode)}"
+      val base = Fixtures.graphDir(dir)
       val cands = graft.core.Artifacts.buildOnce(s, s"$base/cands16") {
         GraphAnn.rankedCandidates(e, "vec_id", "embedding", candCap = 16)
       }
@@ -6569,38 +6034,20 @@ object PipelineQueries {
     * verdict, What's missing #4); OperatorSpec pins the key flip. */
   private def routerPanelV2(s: org.apache.spark.sql.SparkSession,
                             dir: String): org.apache.spark.sql.DataFrame = {
-    import graft.search.{GraphAnn, Pq, Quantize, Router}
+    import graft.search.{GraphAnn, Pq, Router}
     import s.implicits._
     val e = Tables.embeddings(s, dir)
-    val indexDir = s"/tmp/graft_ivf_${math.abs(dir.hashCode)}"
-    val model =
-      if (new java.io.File(IvfIndex.centroidsDir(indexDir)).exists())
-        IvfIndex.load(s, indexDir)
-      else IvfIndex.build(e, "embedding", indexDir, nlist = 16)
-    val gbase = s"/tmp/graft_graphann_${math.abs(dir.hashCode)}"
-    val adj = graft.core.Artifacts.buildOnce(s, s"$gbase/adjacency") {
-      GraphAnn.buildAdjacency(e, "vec_id", "embedding")
-    }
-    val entryDf = graft.core.Artifacts.buildOnce(s, s"$gbase/entry") {
-      GraphAnn.medoid(e, "vec_id", "embedding")
-    }
-    val sq8Dir = s"/tmp/graft_sq8_${math.abs(dir.hashCode)}"
-    val sq8Tab = graft.core.Artifacts.buildOnce(s, sq8Dir) {
-      Quantize.quantizedTable(e, "embedding", "vec_id")
-    }
-    val pqDir = s"/tmp/graft_pq_${math.abs(dir.hashCode)}"
-    val pq =
-      if (new java.io.File(Pq.codesDir(pqDir) + "/_SUCCESS").exists())
-        Pq.load(s, pqDir)
-      else Pq.build(e, "embedding", "vec_id", pqDir)
+    val indexDir = Fixtures.ivfDir(dir)
+    val model = Fixtures.ivf(s, dir)
+    val gbase = Fixtures.graphDir(dir)
+    val adj = Fixtures.graphAdjacency(s, dir)
+    val entryDf = Fixtures.graphMedoid(s, dir)
+    val sq8Dir = Fixtures.sq8Dir(dir)
+    val sq8Tab = Fixtures.sq8(s, dir)
+    val pqDir = Fixtures.pqDir(dir)
+    val pq = Fixtures.pq(s, dir)
     // the lexical tier's own postings artifact (documents-side)
-    val lexDir = s"/tmp/graft_routerlex_terms_${math.abs(dir.hashCode)}"
-    mutateOnce(s, lexDir) {
-      val p = new org.apache.hadoop.fs.Path(lexDir)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      graft.search.TermIndex.build(Tables.documents(s, dir), "doc_id",
-        "text", lexDir)
-    }
+    val lexDir = Fixtures.routerLexTerms(s, dir)
     val fp = Router.artifactFingerprint(s,
       Seq(indexDir, s"$gbase/adjacency", sq8Dir, Pq.codesDir(pqDir),
         lexDir))
@@ -6732,8 +6179,7 @@ object PipelineQueries {
     "serving_plan_report",
     (s, dir) => {
       import graft.search.Router
-      val gbase = s"/tmp/graft_graphann_${math.abs(dir.hashCode)}"
-      val indexDir = s"/tmp/graft_ivf_${math.abs(dir.hashCode)}"
+      val graphAdjacency = s"${Fixtures.graphDir(dir)}/adjacency"
       // panel staged lazy-once (round 16); the entry then PLANS over
       // the staged rows — the same table the oracle replays — instead
       // of re-constructing the measured panel every pass
@@ -6743,31 +6189,23 @@ object PipelineQueries {
       Router.plan(s, panel,
         tiers = Seq(
           Router.Tier("bm25_lexical",
-            present = new java.io.File(
-              s"/tmp/graft_routerlex_terms_${math.abs(dir.hashCode)}")
-              .exists(),
+            present = Fixtures.built(s, Fixtures.routerLexTermsDir(dir)),
             filterCapable = true, modality = "text"),
           Router.Tier("flat", present = true, filterCapable = true),
           Router.Tier("graph_beam8x6",
-            present = new java.io.File(s"$gbase/adjacency/_SUCCESS")
-              .exists(),
+            present = Fixtures.built(s, graphAdjacency),
             filterCapable = true),
           Router.Tier("graph_filtered_beam16",
-            present = new java.io.File(s"$gbase/adjacency/_SUCCESS")
-              .exists(),
+            present = Fixtures.built(s, graphAdjacency),
             filterCapable = true),
           Router.Tier("ivf_nprobe4",
-            present = new java.io.File(
-              IvfIndex.centroidsDir(indexDir)).exists(),
+            present = Fixtures.built(s, Fixtures.ivfDir(dir)),
             filterCapable = true),
           Router.Tier("pq_adc_margin20",
-            present = new java.io.File(
-              s"/tmp/graft_pq_${math.abs(dir.hashCode)}").exists(),
+            present = Fixtures.built(s, Fixtures.pqDir(dir)),
             filterCapable = false),
           Router.Tier("sq8_margin20",
-            present = new java.io.File(
-              s"/tmp/graft_sq8_${math.abs(dir.hashCode)}/_SUCCESS")
-              .exists(),
+            present = Fixtures.built(s, Fixtures.sq8Dir(dir)),
             filterCapable = false)),
         selectivity = 1.0, recallTarget = 0.9)
     },

@@ -138,6 +138,16 @@ object QueryDsl {
     }
   }
 
+  /** [[mutateOnce]] for an artifact built from scratch: deletes whatever
+    * a killed build left at `dir`, then builds, so the marker always
+    * stands for one whole build. */
+  def rebuildOnce(spark: SparkSession, dir: String)(build: => Unit): Unit =
+    mutateOnce(spark, dir) {
+      val p = new org.apache.hadoop.fs.Path(dir)
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+      build
+    }
+
   /** DuckDB squared-L2 over list<float> columns, double accumulation,
     * rounded — textual mirror of graft.functions.L2SquaredDistance. */
   def duckL2(a: String, b: String): String =

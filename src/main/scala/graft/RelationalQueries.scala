@@ -812,9 +812,7 @@ object RelationalQueries {
       import graft.search.ScalarIndex
       val ev = Tables.events(s, dir)
       val idx = s"/tmp/graft_jsonidx_${math.abs(dir.hashCode)}"
-      mutateOnce(s, idx) {
-        val p = new org.apache.hadoop.fs.Path(idx)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+      rebuildOnce(s, idx) {
         ScalarIndex.build(
           ev.select(col("event_id"),
             get_json_object(col("props"), "$.k").cast("long").as("jk")),
@@ -855,17 +853,7 @@ object RelationalQueries {
     (s, dir) => {
       import graft.search.ScalarIndex
       val d = Tables.documents(s, dir)
-      val idx = s"/tmp/graft_arridx_${math.abs(dir.hashCode)}"
-      mutateOnce(s, idx) {
-        val p = new org.apache.hadoop.fs.Path(idx)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-        ScalarIndex.build(
-          d.select(col("doc_id"),
-            explode(array(col("lang"), col("source"),
-              concat(lit("d"), (col("doc_id") % 5).cast("string"))))
-              .as("tag")),
-          "doc_id", "tag", idx)
-      }
+      val idx = Fixtures.tagIndex(s, dir)
       val ids = ScalarIndex.ids(s, idx, Seq("zh", "d3"))
         .withColumnRenamed("id", "doc_id")
       d.join(ids, Seq("doc_id"), "left_semi")
@@ -899,17 +887,7 @@ object RelationalQueries {
     (s, dir) => {
       import graft.search.ScalarIndex
       val d = Tables.documents(s, dir)
-      val idx = s"/tmp/graft_arridx_${math.abs(dir.hashCode)}"
-      mutateOnce(s, idx) {
-        val p = new org.apache.hadoop.fs.Path(idx)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-        ScalarIndex.build(
-          d.select(col("doc_id"),
-            explode(array(col("lang"), col("source"),
-              concat(lit("d"), (col("doc_id") % 5).cast("string"))))
-              .as("tag")),
-          "doc_id", "tag", idx)
-      }
+      val idx = Fixtures.tagIndex(s, dir)
       val ids = ScalarIndex.idsAll(s, idx, Seq("en", "d1"))
         .withColumnRenamed("id", "doc_id")
       d.join(ids, Seq("doc_id"), "left_semi")

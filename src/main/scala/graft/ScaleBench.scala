@@ -317,6 +317,11 @@ object ScaleBench {
       // rehearsal exercises the width a corpus of each size NEEDS instead
       // of pinning the fixture default and saturating
       val autoBits = Dedup.bitsForCorpus(n)
+      def srpPairs(bits: Int): Long = {
+        val bands = Dedup.srpBands(emb, "vec_id", "embedding", Dim, bits, 4)
+        Dedup.cosineVerifiedPairs(
+          Dedup.srpKeptBands(bands, Dedup.srpHotBuckets(bands, 4096))).count()
+      }
       System.err.println(s"[scale] n=$n: auto-sized SRP bits=$autoBits " +
         s"(${autoBits / 4}-bit bands)")
       // deep-page cursor for the search_iterate_deep row: the page-31
@@ -474,12 +479,11 @@ object ScaleBench {
               "id", 5, checkLossless = false)
             .select("rows_scored").as[Long].head()
         }),
-        "srp_candidate_pairs (auto-sized)" -> (() => {
-          val bands = Dedup.srpBands(emb, "vec_id", "embedding", Dim,
-            autoBits, 4)
-          Dedup.cosineVerifiedPairs(
-            Dedup.srpKeptBands(bands, Dedup.srpHotBuckets(bands, 4096))).count()
-        }),
+        "srp_candidate_pairs (auto-sized)" -> (() => srpPairs(autoBits)),
+        // the two fixed widths of SCALE.md's band-width sizing rule:
+        // 16-bit bands (the ~10⁶-corpus default) and 24-bit bands
+        "srp_candidate_pairs (64 planes, 4 bands)" -> (() => srpPairs(64)),
+        "srp_candidate_pairs (96 planes, 4 bands)" -> (() => srpPairs(96)),
         "ann_bulk_topk" -> (() =>
           AnnJoin.bulkTopK(emb, "vec_id", "embedding", k = 5, dim = Dim,
             bits = autoBits).count()),

@@ -458,12 +458,8 @@ object StreamingQueries {
   private val streamingKnnTag = Q(
     "streaming_knn_tag",
     (s, dir) => {
-      val indexDir = s"/tmp/graft_ivf_${math.abs(dir.hashCode)}"
-      val e = Tables.embeddings(s, dir)
-      val model =
-        if (new java.io.File(graft.search.IvfIndex.centroidsDir(indexDir)).exists())
-          graft.search.IvfIndex.load(s, indexDir)
-        else graft.search.IvfIndex.build(e, "embedding", indexDir, nlist = 16)
+      val indexDir = Fixtures.ivfDir(dir)
+      val model = Fixtures.ivf(s, dir)
       QueryDsl.stageOracle(s, "knn_tag", dir)(
         "centroids" -> s.read.parquet(
           graft.search.IvfIndex.centroidsDir(indexDir)))

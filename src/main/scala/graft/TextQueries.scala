@@ -671,7 +671,7 @@ object TextQueries {
     (s, dir) => {
       val docs = Tables.documents(s, dir)
       val mergeTable = graft.core.Artifacts.buildOnce(s,
-        s"/tmp/graft_dedup_${math.abs(dir.hashCode)}/bpe_merges_5")(
+        s"${Fixtures.dedupWorkDir(dir)}/bpe_merges_5")(
         BpeLearn.learn(docs, "text", nMerges = 5))
       val merges = mergeTable.orderBy(col("merge_rank").asc)
         .select("pair", "merged").collect()
@@ -849,17 +849,8 @@ object TextQueries {
   private val phraseMatchSearch = Q(
     "phrase_match_search",
     (s, dir) => {
-      import graft.search.{Phrase, TermIndex}
-      val docs = Tables.documents(s, dir)
-      val idx = s"/tmp/graft_phrase_terms_${math.abs(dir.hashCode)}"
-      mutateOnce(s, idx) {
-        val p = new org.apache.hadoop.fs.Path(idx)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-        TermIndex.build(docs.where(col("doc_id") < 300), "doc_id", "text",
-          idx)
-        TermIndex.append(docs.where(col("doc_id") >= 300), "doc_id", "text",
-          idx)
-      }
+      import graft.search.Phrase
+      val idx = Fixtures.phraseTerms(s, dir)
       Phrase.topK(s, idx, Seq("scan", "merge", "small"), k = 10)
         .withColumnRenamed("id", "doc_id")
     },
@@ -891,9 +882,7 @@ object TextQueries {
       import graft.search.{Phrase, TermIndex}
       val docs = Tables.documents(s, dir)
       val idx = s"/tmp/graft_phraseslop_terms_${math.abs(dir.hashCode)}"
-      mutateOnce(s, idx) {
-        val p = new org.apache.hadoop.fs.Path(idx)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+      rebuildOnce(s, idx) {
         TermIndex.build(docs, "doc_id", "text", idx)
       }
       Phrase.slopTopK(s, idx, "scan", "merge", slop = 2, k = 10)
@@ -930,9 +919,7 @@ object TextQueries {
       import graft.search.{Bm25Index, Phrase, TermIndex}
       val docs = Tables.documents(s, dir)
       val idx = s"/tmp/graft_phrasebm25_terms_${math.abs(dir.hashCode)}"
-      mutateOnce(s, idx) {
-        val p = new org.apache.hadoop.fs.Path(idx)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+      rebuildOnce(s, idx) {
         TermIndex.build(docs, "doc_id", "text", idx)
       }
       val ids = Phrase.matchingIds(s, idx, Seq("scan", "merge"))
@@ -997,9 +984,7 @@ object TextQueries {
       import graft.search.{FullText, SparseVec}
       val idx = s"/tmp/graft_fulltext_${math.abs(dir.hashCode)}"
       val terms = Seq("scan", "filter", "merge")
-      mutateOnce(s, idx) {
-        val p = new org.apache.hadoop.fs.Path(idx)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+      rebuildOnce(s, idx) {
         FullText.build(Tables.documents(s, dir), "doc_id", "text", idx)
         val top = FullText.search(s, idx, terms, 1)
           .collect()(0).getLong(0)
@@ -1056,12 +1041,7 @@ object TextQueries {
     "fulltext_wand_search",
     (s, dir) => {
       import graft.search.FullText
-      val idx = s"/tmp/graft_ftwand_${math.abs(dir.hashCode)}"
-      mutateOnce(s, idx) {
-        val p = new org.apache.hadoop.fs.Path(idx)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-        FullText.build(Tables.documents(s, dir), "doc_id", "text", idx)
-      }
+      val idx = Fixtures.fullTextWand(s, dir)
       FullText.searchWand(s, idx, Seq("dup", "batch"), 10)
         .withColumnRenamed("id", "doc_id")
     },
@@ -1108,12 +1088,7 @@ object TextQueries {
     "fulltext_wand_prune_report",
     (s, dir) => {
       import graft.search.FullText
-      val idx = s"/tmp/graft_ftwand_${math.abs(dir.hashCode)}"
-      mutateOnce(s, idx) {
-        val p = new org.apache.hadoop.fs.Path(idx)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-        FullText.build(Tables.documents(s, dir), "doc_id", "text", idx)
-      }
+      val idx = Fixtures.fullTextWand(s, dir)
       FullText.wandReport(s, idx, Seq("dup", "batch"), 10)
     },
     None)
@@ -1135,9 +1110,7 @@ object TextQueries {
     (s, dir) => {
       import graft.search.FullText
       val idx = s"/tmp/graft_ftbuck_${math.abs(dir.hashCode)}"
-      mutateOnce(s, idx) {
-        val p = new org.apache.hadoop.fs.Path(idx)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+      rebuildOnce(s, idx) {
         FullText.build(Tables.documents(s, dir), "doc_id", "text", idx,
           buckets = 8)
       }
@@ -1186,12 +1159,7 @@ object TextQueries {
     "fulltext_bulk_search",
     (s, dir) => {
       import graft.search.FullText
-      val idx = s"/tmp/graft_ftwand_${math.abs(dir.hashCode)}"
-      mutateOnce(s, idx) {
-        val p = new org.apache.hadoop.fs.Path(idx)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-        FullText.build(Tables.documents(s, dir), "doc_id", "text", idx)
-      }
+      val idx = Fixtures.fullTextWand(s, dir)
       FullText.searchBulk(s, idx, Seq(
           0L -> Seq("dup", "batch"),
           1L -> Seq("scan", "agg"),
@@ -1251,12 +1219,7 @@ object TextQueries {
     "fulltext_bulk_wand",
     (s, dir) => {
       import graft.search.FullText
-      val idx = s"/tmp/graft_ftwand_${math.abs(dir.hashCode)}"
-      mutateOnce(s, idx) {
-        val p = new org.apache.hadoop.fs.Path(idx)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-        FullText.build(Tables.documents(s, dir), "doc_id", "text", idx)
-      }
+      val idx = Fixtures.fullTextWand(s, dir)
       FullText.searchBulkWand(s, idx, Seq(
           0L -> Seq("dup", "batch"),
           1L -> Seq("scan", "agg"),
@@ -1314,12 +1277,7 @@ object TextQueries {
     "fulltext_search_iterate",
     (s, dir) => {
       import graft.search.FullText
-      val idx = s"/tmp/graft_ftwand_${math.abs(dir.hashCode)}"
-      mutateOnce(s, idx) {
-        val p = new org.apache.hadoop.fs.Path(idx)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-        FullText.build(Tables.documents(s, dir), "doc_id", "text", idx)
-      }
+      val idx = Fixtures.fullTextWand(s, dir)
       var cursor: Option[Long] = None
       val pages = (0 until 3).map { p =>
         val pg = FullText.searchIterate(s, idx, Seq("scan", "filter"),
@@ -1382,9 +1340,7 @@ object TextQueries {
       import graft.search.{FullText, Maintenance}
       val docs = Tables.documents(s, dir)
       val idx = s"/tmp/graft_ftreb_${math.abs(dir.hashCode)}"
-      mutateOnce(s, idx) {
-        val p = new org.apache.hadoop.fs.Path(idx)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+      rebuildOnce(s, idx) {
         FullText.build(docs.where(col("doc_id") < 300),
           "doc_id", "text", idx)
         FullText.append(docs.where(col("doc_id") >= 300),
@@ -1516,9 +1472,7 @@ object TextQueries {
       import graft.text.Analyzer
       val idx = s"/tmp/graft_fulltextan_${math.abs(dir.hashCode)}"
       val cfg = Analyzer.Config()
-      mutateOnce(s, idx) {
-        val p = new org.apache.hadoop.fs.Path(idx)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+      rebuildOnce(s, idx) {
         FullText.buildAnalyzed(Tables.documents(s, dir), "doc_id", "text",
           idx, cfg)
       }
@@ -1581,9 +1535,7 @@ object TextQueries {
       val idx = s"/tmp/graft_fulltextstem_${math.abs(dir.hashCode)}"
       val cfg = Analyzer.Config(asciiFolding = true,
         stemmer = Some(Analyzer.StemmerEnglishS))
-      mutateOnce(s, idx) {
-        val p = new org.apache.hadoop.fs.Path(idx)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+      rebuildOnce(s, idx) {
         FullText.buildAnalyzed(Tables.documents(s, dir), "doc_id", "text",
           idx, cfg)
       }
@@ -1649,9 +1601,7 @@ object TextQueries {
       val idx = s"/tmp/graft_fulltextinc_${math.abs(dir.hashCode)}"
       val terms = Seq("scan", "filter", "merge")
       val docs = Tables.documents(s, dir)
-      mutateOnce(s, idx) {
-        val p = new org.apache.hadoop.fs.Path(idx)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+      rebuildOnce(s, idx) {
         FullText.build(docs.where(col("doc_id") >= 20), "doc_id", "text",
           idx)
         FullText.append(docs.where(col("doc_id") < 20), "doc_id", "text",
@@ -1809,13 +1759,7 @@ object TextQueries {
     "term_prefix_search",
     (s, dir) => {
       import graft.search.TermIndex
-      val docs = Tables.documents(s, dir)
-      val idx = s"/tmp/graft_prefix_terms_${math.abs(dir.hashCode)}"
-      mutateOnce(s, idx) {
-        val p = new org.apache.hadoop.fs.Path(idx)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-        TermIndex.build(docs, "doc_id", "text", idx)
-      }
+      val idx = Fixtures.prefixTerms(s, dir)
       TermIndex.prefixSearch(s, idx, "sc", k = 10)
         .withColumnRenamed("id", "doc_id")
     },
@@ -1843,13 +1787,7 @@ object TextQueries {
     "prefix_filtered_bm25",
     (s, dir) => {
       import graft.search.{Bm25Index, TermIndex}
-      val docs = Tables.documents(s, dir)
-      val idx = s"/tmp/graft_prefix_terms_${math.abs(dir.hashCode)}"
-      mutateOnce(s, idx) {
-        val p = new org.apache.hadoop.fs.Path(idx)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-        TermIndex.build(docs, "doc_id", "text", idx)
-      }
+      val idx = Fixtures.prefixTerms(s, dir)
       val ids = TermIndex.prefixIds(s, idx, "wi")
       Bm25Index.search(s, idx, Seq("scan", "filter", "merge"), k = 10,
           idFilter = Some(ids))
@@ -1900,9 +1838,7 @@ object TextQueries {
       import graft.search.TermIndex
       val docs = Tables.documents(s, dir)
       val idx = s"/tmp/graft_suffix_terms_${math.abs(dir.hashCode)}"
-      mutateOnce(s, idx) {
-        val p = new org.apache.hadoop.fs.Path(idx)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+      rebuildOnce(s, idx) {
         TermIndex.build(docs, "doc_id", "text", idx)
         TermIndex.buildSortedReversed(s, idx)
       }
@@ -1938,13 +1874,7 @@ object TextQueries {
     "term_fuzzy_search",
     (s, dir) => {
       import graft.search.TermIndex
-      val docs = Tables.documents(s, dir)
-      val idx = s"/tmp/graft_prefix_terms_${math.abs(dir.hashCode)}"
-      mutateOnce(s, idx) {
-        val p = new org.apache.hadoop.fs.Path(idx)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-        TermIndex.build(docs, "doc_id", "text", idx)
-      }
+      val idx = Fixtures.prefixTerms(s, dir)
       TermIndex.fuzzySearch(s, idx, "port", maxDist = 1, k = 10)
         .withColumnRenamed("id", "doc_id")
     },
@@ -1972,13 +1902,7 @@ object TextQueries {
     "fuzzy_filtered_bm25",
     (s, dir) => {
       import graft.search.{Bm25Index, TermIndex}
-      val docs = Tables.documents(s, dir)
-      val idx = s"/tmp/graft_prefix_terms_${math.abs(dir.hashCode)}"
-      mutateOnce(s, idx) {
-        val p = new org.apache.hadoop.fs.Path(idx)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-        TermIndex.build(docs, "doc_id", "text", idx)
-      }
+      val idx = Fixtures.prefixTerms(s, dir)
       val ids = TermIndex.fuzzyIds(s, idx, "port", maxDist = 1)
       Bm25Index.search(s, idx, Seq("scan", "filter", "merge"), k = 10,
           idFilter = Some(ids))
@@ -2031,14 +1955,7 @@ object TextQueries {
     "term_infix_search",
     (s, dir) => {
       import graft.search.TermIndex
-      val docs = Tables.documents(s, dir)
-      val idx = s"/tmp/graft_infix_terms_${math.abs(dir.hashCode)}"
-      mutateOnce(s, idx) {
-        val p = new org.apache.hadoop.fs.Path(idx)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-        TermIndex.build(docs, "doc_id", "text", idx)
-        TermIndex.buildTrigrams(s, idx)
-      }
+      val idx = Fixtures.infixTerms(s, dir)
       TermIndex.infixSearch(s, idx, "rder", k = 10)
         .withColumnRenamed("id", "doc_id")
     },
@@ -2065,14 +1982,7 @@ object TextQueries {
     "infix_filtered_bm25",
     (s, dir) => {
       import graft.search.{Bm25Index, TermIndex}
-      val docs = Tables.documents(s, dir)
-      val idx = s"/tmp/graft_infix_terms_${math.abs(dir.hashCode)}"
-      mutateOnce(s, idx) {
-        val p = new org.apache.hadoop.fs.Path(idx)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-        TermIndex.build(docs, "doc_id", "text", idx)
-        TermIndex.buildTrigrams(s, idx)
-      }
+      val idx = Fixtures.infixTerms(s, dir)
       val ids = TermIndex.infixIds(s, idx, "rder")
       Bm25Index.search(s, idx, Seq("scan", "filter", "merge"), k = 10,
           idFilter = Some(ids))
@@ -2122,13 +2032,7 @@ object TextQueries {
     "term_fuzzy_search_d2",
     (s, dir) => {
       import graft.search.TermIndex
-      val docs = Tables.documents(s, dir)
-      val idx = s"/tmp/graft_prefix_terms_${math.abs(dir.hashCode)}"
-      mutateOnce(s, idx) {
-        val p = new org.apache.hadoop.fs.Path(idx)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-        TermIndex.build(docs, "doc_id", "text", idx)
-      }
+      val idx = Fixtures.prefixTerms(s, dir)
       TermIndex.fuzzySearch(s, idx, "port", maxDist = 2, k = 10)
         .withColumnRenamed("id", "doc_id")
     },
@@ -2165,9 +2069,7 @@ object TextQueries {
       import graft.search.TermIndex
       val docs = Tables.documents(s, dir)
       val idx = s"/tmp/graft_infixinc_terms_${math.abs(dir.hashCode)}"
-      mutateOnce(s, idx) {
-        val p = new org.apache.hadoop.fs.Path(idx)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+      rebuildOnce(s, idx) {
         val base = docs.where(col("doc_id") < 300)
         TermIndex.build(base, "doc_id", "text", idx)
         TermIndex.buildTrigrams(s, idx)
@@ -2232,9 +2134,7 @@ object TextQueries {
       import graft.search.{AliasedIndex, TermIndex}
       val docs = Tables.documents(s, dir)
       val idx = s"/tmp/graft_prefixinc_terms_${math.abs(dir.hashCode)}"
-      mutateOnce(s, idx) {
-        val p = new org.apache.hadoop.fs.Path(idx)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+      rebuildOnce(s, idx) {
         AliasedIndex.init(s, idx) { d =>
           TermIndex.build(docs.where(col("doc_id") < 300), "doc_id",
             "text", d)
@@ -2391,17 +2291,9 @@ object TextQueries {
   private val phraseSnippetExtract = Q(
     "phrase_snippet_extract",
     (s, dir) => {
-      import graft.search.{Phrase, TermIndex}
+      import graft.search.Phrase
       val docs = Tables.documents(s, dir)
-      val idx = s"/tmp/graft_phrase_terms_${math.abs(dir.hashCode)}"
-      mutateOnce(s, idx) {
-        val p = new org.apache.hadoop.fs.Path(idx)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-        TermIndex.build(docs.where(col("doc_id") < 300), "doc_id", "text",
-          idx)
-        TermIndex.append(docs.where(col("doc_id") >= 300), "doc_id", "text",
-          idx)
-      }
+      val idx = Fixtures.phraseTerms(s, dir)
       val m = 3
       val first = Phrase.anchors(s, idx, Seq("scan", "merge", "small"))
         .groupBy(col("id"))
@@ -2448,17 +2340,8 @@ object TextQueries {
   private val phraseMatchSlopMulti = Q(
     "phrase_match_slop_multi",
     (s, dir) => {
-      import graft.search.{Phrase, TermIndex}
-      val docs = Tables.documents(s, dir)
-      val idx = s"/tmp/graft_phrase_terms_${math.abs(dir.hashCode)}"
-      mutateOnce(s, idx) {
-        val p = new org.apache.hadoop.fs.Path(idx)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-        TermIndex.build(docs.where(col("doc_id") < 300), "doc_id", "text",
-          idx)
-        TermIndex.append(docs.where(col("doc_id") >= 300), "doc_id", "text",
-          idx)
-      }
+      import graft.search.Phrase
+      val idx = Fixtures.phraseTerms(s, dir)
       Phrase.slopPhraseTopK(s, idx, Seq("scan", "merge", "small"),
           slop = 2, k = 10)
         .withColumnRenamed("id", "doc_id")
@@ -2504,9 +2387,7 @@ object TextQueries {
       val idx = s"$base/ft"
       val coll = graft.core.Collection(s, out)
       val asOf = timestamp_seconds(lit(1704067230L))
-      mutateOnce(s, base) {
-        val p = new org.apache.hadoop.fs.Path(base)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+      rebuildOnce(s, base) {
         coll.appendStamped(
           Tables.documents(s, dir).select(col("doc_id"), col("text")),
           timestamp_seconds(lit(1704067200L) + col("doc_id")))
@@ -2572,9 +2453,7 @@ object TextQueries {
       val idxS = s"$base/ft_synced"
       val coll = graft.core.Collection(s, out)
       val asOf = timestamp_seconds(lit(1704067400L))
-      mutateOnce(s, base) {
-        val p = new org.apache.hadoop.fs.Path(base)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+      rebuildOnce(s, base) {
         coll.appendStamped(
           Tables.documents(s, dir).select(col("doc_id"), col("text")),
           timestamp_seconds(lit(1704067200L) + col("doc_id")))
@@ -2641,9 +2520,7 @@ object TextQueries {
       val cfg = Analyzer.Config(minTokenLen = 1, stopwords = Nil,
         cjkBigrams = true)
       val idx = s"/tmp/graft_ftcjk_${math.abs(dir.hashCode)}"
-      mutateOnce(s, idx) {
-        val p = new org.apache.hadoop.fs.Path(idx)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+      rebuildOnce(s, idx) {
         FullText.buildAnalyzed(cn, "doc_id", "text_cn", idx, cfg)
       }
       val terms = Analyzer.analyze("向量检索", cfg)

@@ -103,8 +103,7 @@ object VectorQueries {
           substring(col("text"), 1, 30).as("content"),
           col("embedding").as("vector"))
         .as[Knowledge]
-      val query = e.where(col("vec_id") === 0).select("embedding")
-        .collect()(0).getSeq[Float](0)
+      val query = Fixtures.queryVector(e).toSeq
       TypedSearch.similaritySearch(coll, query, k = 5, scoreThreshold = -0.5)
         .toDF()
         .orderBy(col("score").desc, col("id").asc)
@@ -300,10 +299,7 @@ object VectorQueries {
       import graft.search.Quantize
       val e = Tables.embeddings(s, dir)
       val q = e.where(col("vec_id") === 0).select(col("embedding").as("qe"))
-      val qtab = graft.core.Artifacts.buildOnce(s,
-        s"/tmp/graft_sq8_${math.abs(dir.hashCode)}") {
-        Quantize.quantizedTable(e, "embedding", "vec_id")
-      }
+      val qtab = Fixtures.sq8(s, dir)
       Quantize.searchQuantized(qtab, e, "embedding",
         "vec_id", q, "qe", k = 5, margin = 4)
     },
@@ -351,9 +347,7 @@ object VectorQueries {
       val e = Tables.embeddings(s, dir)
       val idx = s"/tmp/graft_sq8up_${math.abs(dir.hashCode)}"
       val codesDir = s"$idx/codes"
-      mutateOnce(s, idx) {
-        val p = new org.apache.hadoop.fs.Path(idx)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+      rebuildOnce(s, idx) {
         val corrupted = e.withColumn("embedding",
           when(col("vec_id") % 10 === 1, reverse(col("embedding")))
             .otherwise(col("embedding")))
@@ -411,22 +405,15 @@ object VectorQueries {
     (s, dir) => {
       import graft.search.{IvfIndex, Quantize}
       val e = Tables.embeddings(s, dir)
-      val indexDir = s"/tmp/graft_ivf_${math.abs(dir.hashCode)}"
-      val model =
-        if (new java.io.File(IvfIndex.centroidsDir(indexDir)).exists())
-          IvfIndex.load(s, indexDir)
-        else IvfIndex.build(e, "embedding", indexDir, nlist = 16)
+      val indexDir = Fixtures.ivfDir(dir)
+      val model = Fixtures.ivf(s, dir)
       val assign = IvfIndex.readDataMerged(s, indexDir)
         .select(col("vec_id"), col("cluster_id"))
       stageOracleOnceLazy(s, "ivfsq8", dir)(Seq(
         "centroids" -> s.read.parquet(IvfIndex.centroidsDir(indexDir)),
         "assign" -> assign))
-      val sq8 = graft.core.Artifacts.buildOnce(s,
-        s"/tmp/graft_sq8_${math.abs(dir.hashCode)}") {
-        Quantize.quantizedTable(e, "embedding", "vec_id")
-      }
-      val query = e.where(col("vec_id") === 0).select("embedding")
-        .collect()(0).getSeq[Float](0).toArray
+      val sq8 = Fixtures.sq8(s, dir)
+      val query = Fixtures.queryVector(e)
       val clusters = IvfIndex.probeClusters(model, query, 4)
       val sel = assign.where(col("cluster_id").isin(clusters: _*))
         .select("vec_id")
@@ -487,15 +474,11 @@ object VectorQueries {
     (s, dir) => {
       import graft.search.Rq
       val e = Tables.embeddings(s, dir)
-      val rqDir = s"/tmp/graft_rq_${math.abs(dir.hashCode)}"
-      val model =
-        if (new java.io.File(Rq.codesDir(rqDir) + "/_SUCCESS").exists())
-          Rq.load(s, rqDir)
-        else Rq.build(e, "embedding", "vec_id", rqDir, maxIter = 20)
+      val rqDir = Fixtures.rqDir(dir)
+      val model = Fixtures.rq(s, dir)
       stageOracleOnceLazy(s, "rq", dir)(Seq(
         "codebooks" -> s.read.parquet(Rq.codebooksDir(rqDir))))
-      val query = e.where(col("vec_id") === 0).select("embedding")
-        .collect()(0).getSeq[Float](0).toArray
+      val query = Fixtures.queryVector(e)
       Rq.adcSearch(s, model, e, "embedding", "vec_id", query,
         k = 5, margin = 4)
     },
@@ -568,12 +551,8 @@ object VectorQueries {
     (s, dir) => {
       import graft.search.NormPrune
       val e = Tables.embeddings(s, dir)
-      val tab = graft.core.Artifacts.buildOnce(s,
-        s"/tmp/graft_normtab_${math.abs(dir.hashCode)}") {
-        NormPrune.normTable(e, "vec_id", "embedding")
-      }
-      val qe = e.where(col("vec_id") === 0).select("embedding")
-        .collect()(0).getSeq[Float](0).toArray
+      val tab = Fixtures.normTable(s, dir)
+      val qe = Fixtures.queryVector(e)
       NormPrune.search(tab, "vec_id", "embedding", qe, k = 5)
     },
     Some("""
@@ -612,22 +591,15 @@ object VectorQueries {
       import graft.search.{BinaryVec, IvfIndex, Rotation}
       val e = Tables.embeddings(s, dir)
       val rows = binRotationArtifact(s, dir)
-      val indexDir = s"/tmp/graft_ivf_${math.abs(dir.hashCode)}"
-      val model =
-        if (new java.io.File(IvfIndex.centroidsDir(indexDir)).exists())
-          IvfIndex.load(s, indexDir)
-        else IvfIndex.build(e, "embedding", indexDir, nlist = 16)
+      val indexDir = Fixtures.ivfDir(dir)
+      val model = Fixtures.ivf(s, dir)
       val assign = IvfIndex.readDataMerged(s, indexDir)
         .select(col("vec_id"), col("cluster_id"))
       stageOracleOnceLazy(s, "ivfasym", dir)(Seq(
         "centroids" -> s.read.parquet(IvfIndex.centroidsDir(indexDir)),
         "assign" -> assign))
-      val packed = graft.core.Artifacts.buildOnce(s,
-        s"/tmp/graft_asymsig_${math.abs(dir.hashCode)}") {
-        asymPack(e, rows)
-      }
-      val qe = e.where(col("vec_id") === 0).select("embedding")
-        .collect()(0).getSeq[Float](0).toArray
+      val packed = Fixtures.asymSignatures(s, dir)
+      val qe = Fixtures.queryVector(e)
       val clusters = IvfIndex.probeClusters(model, qe, 4)
       val sel = assign.where(col("cluster_id").isin(clusters: _*))
         .select("vec_id")
@@ -713,24 +685,17 @@ object VectorQueries {
     (s, dir) => {
       import graft.search.{IvfIndex, Rq}
       val e = Tables.embeddings(s, dir)
-      val indexDir = s"/tmp/graft_ivf_${math.abs(dir.hashCode)}"
-      val model =
-        if (new java.io.File(IvfIndex.centroidsDir(indexDir)).exists())
-          IvfIndex.load(s, indexDir)
-        else IvfIndex.build(e, "embedding", indexDir, nlist = 16)
+      val indexDir = Fixtures.ivfDir(dir)
+      val model = Fixtures.ivf(s, dir)
       val assign = IvfIndex.readDataMerged(s, indexDir)
         .select(col("vec_id"), col("cluster_id"))
-      val rqDir = s"/tmp/graft_rq_${math.abs(dir.hashCode)}"
-      val rq =
-        if (new java.io.File(Rq.codesDir(rqDir) + "/_SUCCESS").exists())
-          Rq.load(s, rqDir)
-        else Rq.build(e, "embedding", "vec_id", rqDir, maxIter = 20)
+      val rqDir = Fixtures.rqDir(dir)
+      val rq = Fixtures.rq(s, dir)
       stageOracleOnceLazy(s, "ivfrq", dir)(Seq(
         "centroids" -> s.read.parquet(IvfIndex.centroidsDir(indexDir)),
         "assign" -> assign,
         "codebooks" -> s.read.parquet(Rq.codebooksDir(rqDir))))
-      val qe = e.where(col("vec_id") === 0).select("embedding")
-        .collect()(0).getSeq[Float](0).toArray
+      val qe = Fixtures.queryVector(e)
       val clusters = IvfIndex.probeClusters(model, qe, 4)
       val sel = assign.where(col("cluster_id").isin(clusters: _*))
         .select("vec_id")
@@ -820,16 +785,10 @@ object VectorQueries {
     (s, dir) => {
       import graft.search.{Pq, Quantize, Rq}
       val e = Tables.embeddings(s, dir)
-      val pqDir = s"/tmp/graft_pq_${math.abs(dir.hashCode)}"
-      val rqDir = s"/tmp/graft_rq_${math.abs(dir.hashCode)}"
-      val pq =
-        if (new java.io.File(Pq.codesDir(pqDir) + "/_SUCCESS").exists())
-          Pq.load(s, pqDir)
-        else Pq.build(e, "embedding", "vec_id", pqDir)
-      val rq =
-        if (new java.io.File(Rq.codesDir(rqDir) + "/_SUCCESS").exists())
-          Rq.load(s, rqDir)
-        else Rq.build(e, "embedding", "vec_id", rqDir, maxIter = 20)
+      val pqDir = Fixtures.pqDir(dir)
+      val rqDir = Fixtures.rqDir(dir)
+      val pq = Fixtures.pq(s, dir)
+      val rq = Fixtures.rq(s, dir)
       stageOracleOnceLazy(s, "pq", dir)(Seq(
         "codebooks" -> s.read.parquet(Pq.codebooksDir(pqDir))))
       stageOracleOnceLazy(s, "rq", dir)(Seq(
@@ -969,16 +928,10 @@ object VectorQueries {
     (s, dir) => {
       import graft.search.{Pq, Rq}
       val e = Tables.embeddings(s, dir)
-      val pqDir = s"/tmp/graft_pq_${math.abs(dir.hashCode)}"
-      val rqDir = s"/tmp/graft_rq_${math.abs(dir.hashCode)}"
-      val pq =
-        if (new java.io.File(Pq.codesDir(pqDir) + "/_SUCCESS").exists())
-          Pq.load(s, pqDir)
-        else Pq.build(e, "embedding", "vec_id", pqDir)
-      val rq =
-        if (new java.io.File(Rq.codesDir(rqDir) + "/_SUCCESS").exists())
-          Rq.load(s, rqDir)
-        else Rq.build(e, "embedding", "vec_id", rqDir, maxIter = 20)
+      val pqDir = Fixtures.pqDir(dir)
+      val rqDir = Fixtures.rqDir(dir)
+      val pq = Fixtures.pq(s, dir)
+      val rq = Fixtures.rq(s, dir)
       stageOracleOnceLazy(s, "pq", dir)(Seq(
         "codebooks" -> s.read.parquet(Pq.codebooksDir(pqDir))))
       stageOracleOnceLazy(s, "rq", dir)(Seq(
@@ -1110,12 +1063,8 @@ object VectorQueries {
     (s, dir) => {
       import graft.search.NormPrune
       val e = Tables.embeddings(s, dir)
-      val tab = graft.core.Artifacts.buildOnce(s,
-        s"/tmp/graft_normtab_${math.abs(dir.hashCode)}") {
-        NormPrune.normTable(e, "vec_id", "embedding")
-      }
-      val qe = e.where(col("vec_id") === 0).select("embedding")
-        .collect()(0).getSeq[Float](0).toArray
+      val tab = Fixtures.normTable(s, dir)
+      val qe = Fixtures.queryVector(e)
       NormPrune.mipsSearch(tab, "vec_id", "embedding", qe, k = 5)
     },
     Some("""
@@ -1185,17 +1134,12 @@ object VectorQueries {
   private val pqAdcSearch = Q(
     "pq_adc_search",
     (s, dir) => {
-      val indexDir = s"/tmp/graft_pq_${math.abs(dir.hashCode)}"
+      val indexDir = Fixtures.pqDir(dir)
       val e = Tables.embeddings(s, dir)
-      val model =
-        if (new java.io.File(
-            graft.search.Pq.codesDir(indexDir) + "/_SUCCESS").exists())
-          graft.search.Pq.load(s, indexDir)
-        else graft.search.Pq.build(e, "embedding", "vec_id", indexDir)
+      val model = Fixtures.pq(s, dir)
       stageOracleOnceLazy(s, "pq", dir)(Seq(
         "codebooks" -> s.read.parquet(graft.search.Pq.codebooksDir(indexDir))))
-      val query = e.where(col("vec_id") === 0).select("embedding")
-        .collect()(0).getSeq[Float](0).toArray
+      val query = Fixtures.queryVector(e)
       graft.search.Pq.adcSearch(s, model, e, "embedding", "vec_id", query,
         k = 5, margin = 4)
     },
@@ -1239,26 +1183,17 @@ object VectorQueries {
   private val ivfPqSearch = Q(
     "ivf_pq_search",
     (s, dir) => {
-      val ivfDir = s"/tmp/graft_ivf_${math.abs(dir.hashCode)}"
-      val pqDir = s"/tmp/graft_pq_${math.abs(dir.hashCode)}"
+      val ivfDir = Fixtures.ivfDir(dir)
+      val pqDir = Fixtures.pqDir(dir)
       val e = Tables.embeddings(s, dir)
-      val ivf =
-        if (new java.io.File(
-            graft.search.IvfIndex.centroidsDir(ivfDir)).exists())
-          graft.search.IvfIndex.load(s, ivfDir)
-        else graft.search.IvfIndex.build(e, "embedding", ivfDir, nlist = 16)
-      val pq =
-        if (new java.io.File(
-            graft.search.Pq.codesDir(pqDir) + "/_SUCCESS").exists())
-          graft.search.Pq.load(s, pqDir)
-        else graft.search.Pq.build(e, "embedding", "vec_id", pqDir)
+      val ivf = Fixtures.ivf(s, dir)
+      val pq = Fixtures.pq(s, dir)
       stageOracleOnceLazy(s, "ivfpq", dir)(Seq(
         "centroids" -> s.read.parquet(graft.search.IvfIndex.centroidsDir(ivfDir)),
         "assign" -> s.read.parquet(graft.search.IvfIndex.dataDir(ivfDir))
           .select(col("vec_id"), col("cluster_id")),
         "codebooks" -> s.read.parquet(graft.search.Pq.codebooksDir(pqDir))))
-      val query = e.where(col("vec_id") === 0).select("embedding")
-        .collect()(0).getSeq[Float](0).toArray
+      val query = Fixtures.queryVector(e)
       val clusters = graft.search.IvfIndex.probeClusters(ivf, query, 4)
       val selected = s.read.parquet(graft.search.IvfIndex.dataDir(ivfDir))
         .where(col("cluster_id").isin(clusters: _*))
@@ -1413,12 +1348,8 @@ object VectorQueries {
     (s, dir) => {
       import graft.search.ScalarIndex
       val e = Tables.embeddings(s, dir)
-      val idx = s"/tmp/graft_scalaridx_${math.abs(dir.hashCode)}"
-      if (!new java.io.File(
-          ScalarIndex.valuesDir(idx) + "/_SUCCESS").exists())
-        ScalarIndex.build(e, "vec_id", "label", idx)
-      val query = e.where(col("vec_id") === 0).select("embedding")
-        .collect()(0).getSeq[Float](0).toArray
+      val idx = Fixtures.labelIndex(s, dir)
+      val query = Fixtures.queryVector(e)
       ScalarIndex.filteredKnn(s, idx, e.select("vec_id", "embedding"),
         "embedding", "vec_id", query, k = 5, Seq(2, 5, 7))
     },
@@ -1444,13 +1375,11 @@ object VectorQueries {
     "partition_scoped_knn",
     (s, dir) => {
       import graft.core.Collection
-      val out = s"/tmp/graft_embpk_${math.abs(dir.hashCode)}/emb"
-      val p = new org.apache.hadoop.fs.Path(out)
-      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      val coll = Collection(s, out)
-      if (!fs.exists(p))
-        coll.appendPartitioned(Tables.embeddings(s, dir),
-          partCol = "label")
+      val coll = Collection(s,
+        s"/tmp/graft_embpk_${math.abs(dir.hashCode)}/emb")
+      rebuildOnce(s, coll.dir) {
+        coll.appendPartitioned(Tables.embeddings(s, dir), partCol = "label")
+      }
       val e = Tables.embeddings(s, dir)
       val q = e.where(col("vec_id") === 0)
         .select(col("embedding").as("qe"))
@@ -1546,12 +1475,7 @@ object VectorQueries {
       // the packed signature table is the STORED form (16 bytes/vector) —
       // build-once artifact like the SQ8 table; the timed search scans
       // packed longs, the interpreted sign-fold runs only at build
-      val packed = graft.core.Artifacts.buildOnce(s,
-        s"/tmp/graft_binsig_${math.abs(dir.hashCode)}") {
-        e.select(col("vec_id"),
-          BinaryVec.signWord(col("embedding"), 0).as("w0"),
-          BinaryVec.signWord(col("embedding"), 1).as("w1"))
-      }
+      val packed = Fixtures.binarySignatures(s, dir)
       packed.crossJoin(broadcast(q))
         .withColumn("hamming", BinaryVec.hamming(
           Seq(col("w0") -> col("qw0"), col("w1") -> col("qw1"))))
@@ -1587,12 +1511,7 @@ object VectorQueries {
       val q = e.where(col("vec_id") === 0)
         .select(BinaryVec.signWord(col("embedding"), 0).as("qw0"),
           BinaryVec.signWord(col("embedding"), 1).as("qw1"))
-      val packed = graft.core.Artifacts.buildOnce(s,
-        s"/tmp/graft_binsig_${math.abs(dir.hashCode)}") {
-        e.select(col("vec_id"),
-          BinaryVec.signWord(col("embedding"), 0).as("w0"),
-          BinaryVec.signWord(col("embedding"), 1).as("w1"))
-      }
+      val packed = Fixtures.binarySignatures(s, dir)
       packed.crossJoin(broadcast(q))
         .withColumn("jaccard_dist", BinaryVec.jaccardDist(
           Seq(col("w0") -> col("qw0"), col("w1") -> col("qw1"))))
@@ -1639,12 +1558,7 @@ object VectorQueries {
       val q = e.where(col("vec_id") === 0)
         .select(BinaryVec.signWord(col("embedding"), 0).as("qw0"),
           BinaryVec.signWord(col("embedding"), 1).as("qw1"))
-      val packed = graft.core.Artifacts.buildOnce(s,
-        s"/tmp/graft_binsig_${math.abs(dir.hashCode)}") {
-        e.select(col("vec_id"),
-          BinaryVec.signWord(col("embedding"), 0).as("w0"),
-          BinaryVec.signWord(col("embedding"), 1).as("w1"))
-      }
+      val packed = Fixtures.binarySignatures(s, dir)
       packed.crossJoin(broadcast(q))
         .withColumn("sub_dist", BinaryVec.substructureDist(
           Seq(col("w0") -> col("qw0"), col("w1") -> col("qw1"))))
@@ -1690,12 +1604,7 @@ object VectorQueries {
       val q = e.where(col("vec_id") === 0)
         .select(BinaryVec.signWord(col("embedding"), 0).as("qw0"),
           BinaryVec.signWord(col("embedding"), 1).as("qw1"))
-      val packed = graft.core.Artifacts.buildOnce(s,
-        s"/tmp/graft_binsig_${math.abs(dir.hashCode)}") {
-        e.select(col("vec_id"),
-          BinaryVec.signWord(col("embedding"), 0).as("w0"),
-          BinaryVec.signWord(col("embedding"), 1).as("w1"))
-      }
+      val packed = Fixtures.binarySignatures(s, dir)
       packed.crossJoin(broadcast(q))
         .withColumn("super_dist", BinaryVec.superstructureDist(
           Seq(col("w0") -> col("qw0"), col("w1") -> col("qw1"))))
@@ -1734,7 +1643,7 @@ object VectorQueries {
                                   dir: String)
       : Seq[(Int, Array[Float])] = {
     import graft.search.Rotation
-    val rows = Rotation.hadamardSignRows(64, "graft-bin-rot")
+    val rows = Fixtures.binaryRotation
     stageOracleOnce(s, "binrot", dir)("rotation" -> Rotation.rowsToDf(s, rows))
     rows
   }
@@ -1758,14 +1667,10 @@ object VectorQueries {
       import graft.search.{BinaryVec, Rotation}
       val e = Tables.embeddings(s, dir)
       val rows = binRotationArtifact(s, dir)
-      val packed = graft.core.Artifacts.buildOnce(s,
-        s"/tmp/graft_asymsig_${math.abs(dir.hashCode)}") {
-        asymPack(e, rows)
-      }
+      val packed = Fixtures.asymSignatures(s, dir)
       // 1-row bounded query state: rotate + unit-normalize driver-side
       // with projectCol's exact arithmetic, inlined as plan literals
-      val qe = e.where(col("vec_id") === 0).select("embedding")
-        .collect()(0).getSeq[Float](0).toArray
+      val qe = Fixtures.queryVector(e)
       val qr = Rotation.projectRow(qe, rows)
       val qn = math.sqrt(qr.map(v => v.toDouble * v.toDouble).sum)
       require(qn > 0, "query vector must be non-zero")
@@ -1944,15 +1849,6 @@ object VectorQueries {
       ORDER BY method ASC
     """))
 
-  /** The packed-signature projection shared by the asymmetric-binary
-    * build and append paths: (vec_id, w0, w1, cx) from the rotated
-    * corpus slice. Per-row independent — the property that makes the
-    * artifact file-appendable with zero rewrite. */
-  private def asymPack(df: org.apache.spark.sql.DataFrame,
-                       rows: Seq[(Int, Array[Float])])
-      : org.apache.spark.sql.DataFrame =
-    graft.search.BinaryVec.packTable(df, "vec_id", "embedding", rows, 64)
-
   /** Incremental maintenance of the asymmetric 1-bit artifact — the
     * every-index-maintains-incrementally discipline (IvfIndex.append /
     * GraphAnn.append / TermIndex.append) applied to the newest tier.
@@ -1972,11 +1868,11 @@ object VectorQueries {
       val idx = s"/tmp/graft_asyminc_${math.abs(dir.hashCode)}"
       val p = new org.apache.hadoop.fs.Path(idx)
       p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      asymPack(e.where(col("vec_id") < 250), rows)
+      Fixtures.asymPack(e.where(col("vec_id") < 250))
         .write.mode("overwrite").parquet(idx)
-      asymPack(e.where(col("vec_id") >= 250 && col("vec_id") < 400), rows)
+      Fixtures.asymPack(e.where(col("vec_id") >= 250 && col("vec_id") < 400))
         .write.mode("append").parquet(idx)
-      asymPack(e.where(col("vec_id") >= 400), rows)
+      Fixtures.asymPack(e.where(col("vec_id") >= 400))
         .write.mode("append").parquet(idx)
       val qe = e.where(col("vec_id") === 7).select("embedding")
         .collect()(0).getSeq[Float](0).toArray
@@ -2073,7 +1969,7 @@ object VectorQueries {
       val sq = src.writeStream
         .option("checkpointLocation", s"$work/_ckpt")
         .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          asymPack(batch, rows).write.mode("append").parquet(idx)
+          Fixtures.asymPack(batch).write.mode("append").parquet(idx)
           ()
         }
         .start()
@@ -2256,10 +2152,7 @@ object VectorQueries {
       // the posting table is the stored inverted index (partitioned by
       // dim at warehouse scale) — build-once; the timed search is the
       // dim join + score aggregate over it
-      val post = graft.core.Artifacts.buildOnce(s,
-        s"/tmp/graft_sparse_${math.abs(dir.hashCode)}") {
-        SparseVec.postings(e, "vec_id", "embedding", topN = 8)
-      }
+      val post = Fixtures.sparsePostings(s, dir)
       val qp = SparseVec.postings(
         e.where(col("vec_id") === 0), "vec_id", "embedding", topN = 8)
       SparseVec.search(post, qp, "vec_id", k = 10)
@@ -2296,12 +2189,7 @@ object VectorQueries {
     (s, dir) => {
       import graft.search.SparseVec
       val e = Tables.embeddings(s, dir)
-      val idx = s"/tmp/graft_sparsewand_${math.abs(dir.hashCode)}"
-      mutateOnce(s, idx) {
-        val p = new org.apache.hadoop.fs.Path(idx)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-        SparseVec.build(e, "vec_id", "embedding", topN = 8, idx)
-      }
+      val idx = Fixtures.sparseWand(s, dir)
       val qp = SparseVec.postings(
         e.where(col("vec_id") === 0), "vec_id", "embedding", topN = 8)
         .select(col("dim"), col("w"))
@@ -2337,12 +2225,7 @@ object VectorQueries {
     (s, dir) => {
       import graft.search.SparseVec
       val e = Tables.embeddings(s, dir)
-      val idx = s"/tmp/graft_sparsewand_${math.abs(dir.hashCode)}"
-      mutateOnce(s, idx) {
-        val p = new org.apache.hadoop.fs.Path(idx)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-        SparseVec.build(e, "vec_id", "embedding", topN = 8, idx)
-      }
+      val idx = Fixtures.sparseWand(s, dir)
       val qp = SparseVec.postings(
         e.where(col("vec_id").isin(0, 1, 2)), "vec_id", "embedding",
         topN = 8)
@@ -2384,12 +2267,7 @@ object VectorQueries {
     (s, dir) => {
       import graft.search.SparseVec
       val e = Tables.embeddings(s, dir)
-      val idx = s"/tmp/graft_sparsewand_${math.abs(dir.hashCode)}"
-      mutateOnce(s, idx) {
-        val p = new org.apache.hadoop.fs.Path(idx)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-        SparseVec.build(e, "vec_id", "embedding", topN = 8, idx)
-      }
+      val idx = Fixtures.sparseWand(s, dir)
       val qp = SparseVec.postings(
         e.where(col("vec_id").isin(0, 1, 2)), "vec_id", "embedding",
         topN = 8)
@@ -2430,12 +2308,7 @@ object VectorQueries {
     (s, dir) => {
       import graft.search.SparseVec
       val e = Tables.embeddings(s, dir)
-      val idx = s"/tmp/graft_sparsewand_${math.abs(dir.hashCode)}"
-      mutateOnce(s, idx) {
-        val p = new org.apache.hadoop.fs.Path(idx)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-        SparseVec.build(e, "vec_id", "embedding", topN = 8, idx)
-      }
+      val idx = Fixtures.sparseWand(s, dir)
       val qp = SparseVec.postings(
         e.where(col("vec_id") === 0), "vec_id", "embedding", topN = 8)
         .select(col("dim"), col("w"))
@@ -2485,10 +2358,7 @@ object VectorQueries {
     (s, dir) => {
       import graft.search.{Bm25, SparseVec}
       val e = Tables.embeddings(s, dir)
-      val post = graft.core.Artifacts.buildOnce(s,
-        s"/tmp/graft_sparse_${math.abs(dir.hashCode)}") {
-        SparseVec.postings(e, "vec_id", "embedding", topN = 8)
-      }
+      val post = Fixtures.sparsePostings(s, dir)
       val qp = SparseVec.postings(
         e.where(col("vec_id") === 0), "vec_id", "embedding", topN = 8)
       val sparseRanks = Bm25.topRanks(
@@ -2559,10 +2429,7 @@ object VectorQueries {
     (s, dir) => {
       import graft.search.{Bm25, SparseVec}
       val e = Tables.embeddings(s, dir)
-      val post = graft.core.Artifacts.buildOnce(s,
-        s"/tmp/graft_sparse_${math.abs(dir.hashCode)}") {
-        SparseVec.postings(e, "vec_id", "embedding", topN = 8)
-      }
+      val post = Fixtures.sparsePostings(s, dir)
       val qp = SparseVec.postings(
         e.where(col("vec_id") === 0), "vec_id", "embedding", topN = 8)
       val sparseLeg = SparseVec.search(post, qp, "vec_id", k = 20)
@@ -2625,22 +2492,12 @@ object VectorQueries {
     import graft.search.{Bm25, IvfIndex, SparseVec}
     val e = Tables.embeddings(s, dir)
     val docs = Tables.documents(s, dir)
-    val ivfDir = s"/tmp/graft_ivf_${math.abs(dir.hashCode)}"
-    val model =
-      if (new java.io.File(IvfIndex.centroidsDir(ivfDir)).exists())
-        IvfIndex.load(s, ivfDir)
-      else IvfIndex.build(e, "embedding", ivfDir, nlist = 16)
-    val qv = e.where(col("vec_id") === 0).select("embedding")
-      .collect()(0).getSeq[Float](0).toArray
+    val model = Fixtures.ivf(s, dir)
+    val qv = Fixtures.queryVector(e)
     val dense = IvfIndex.search(s, model, "embedding", "vec_id", qv,
         k = 20, nprobe = model.nlist)
       .select(col("vec_id").as("id"), col("distance").as("d"))
-    val sidx = s"/tmp/graft_sparsewand_${math.abs(dir.hashCode)}"
-    mutateOnce(s, sidx) {
-      val p = new org.apache.hadoop.fs.Path(sidx)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      SparseVec.build(e, "vec_id", "embedding", topN = 8, sidx)
-    }
+    val sidx = Fixtures.sparseWand(s, dir)
     val qp = SparseVec.postings(
       e.where(col("vec_id") === 0), "vec_id", "embedding", topN = 8)
       .select(col("dim"), col("w"))
@@ -2816,14 +2673,11 @@ object VectorQueries {
             .as("tags"))
       val out = s"/tmp/graft_arrcoll_${math.abs(dir.hashCode)}"
       val coll = graft.core.Collection(s, out)
-      mutateOnce(s, out) {
-        val p = new org.apache.hadoop.fs.Path(out)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+      rebuildOnce(s, out) {
         coll.create(tagged.schema)
         coll.append(tagged)
       }
-      val qv = e.where(col("vec_id") === 0).select("embedding")
-        .collect()(0).getSeq[Float](0).toArray
+      val qv = Fixtures.queryVector(e)
       coll.read
         .where(arrays_overlap(col("tags"), typedlit(Seq("zh", "d3"))))
         .select(col("vec_id"),
@@ -2868,9 +2722,7 @@ object VectorQueries {
       import graft.search.SparseVec
       val e = Tables.embeddings(s, dir)
       val idx = s"/tmp/graft_sparseup_${math.abs(dir.hashCode)}"
-      mutateOnce(s, idx) {
-        val p = new org.apache.hadoop.fs.Path(idx)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+      rebuildOnce(s, idx) {
         val corrupted = e.withColumn("embedding",
           when(col("vec_id") % 10 === 1, reverse(col("embedding")))
             .otherwise(col("embedding")))
@@ -3262,7 +3114,6 @@ object VectorQueries {
   private val indexRecallReport = Q(
     "index_recall_report",
     (s, dir) => {
-      import graft.search.Quantize
       val e = Tables.embeddings(s, dir)
       val q = e.where(col("vec_id") === 0).select(col("embedding").as("qe"))
       val exactL2 = e.crossJoin(broadcast(q))
@@ -3274,10 +3125,7 @@ object VectorQueries {
           round(VectorFunctions.cosineSim(col("embedding"), col("qe")), 4)
             .as("c"))
         .orderBy(col("c").desc, col("vec_id").asc).limit(5).select("vec_id")
-      val sq8Tab = graft.core.Artifacts.buildOnce(s,
-        s"/tmp/graft_sq8_${math.abs(dir.hashCode)}") {
-        Quantize.quantizedTable(e, "embedding", "vec_id")
-      }
+      val sq8Tab = Fixtures.sq8(s, dir)
       val sq8Cand = sq8Tab.crossJoin(broadcast(q))
         .select(col("vec_id"),
           round(VectorFunctions.dequantL2(
@@ -3289,28 +3137,16 @@ object VectorQueries {
             slice(col("embedding"), 1, 16), slice(col("qe"), 1, 16)), 4)
             .as("c1"))
         .orderBy(col("c1").desc, col("vec_id").asc).limit(50).select("vec_id")
-      // PQ / IVF_PQ / graph indexes: same build-or-load discipline (and
-      // the same /tmp keys) as their serving queries, so the report
-      // measures the EXACT artifacts those queries search
+      // PQ / IVF_PQ / graph indexes: the shared fixtures their serving
+      // queries search, so the report measures those exact artifacts
       import graft.search.{GraphAnn, IvfIndex, Pq}
       val qArr = q.collect()(0).getSeq[Float](0).toArray
-      val pqDir = s"/tmp/graft_pq_${math.abs(dir.hashCode)}"
-      val pq =
-        if (new java.io.File(Pq.codesDir(pqDir) + "/_SUCCESS").exists())
-          Pq.load(s, pqDir)
-        else Pq.build(e, "embedding", "vec_id", pqDir)
-      val ivfDir = s"/tmp/graft_ivf_${math.abs(dir.hashCode)}"
-      val ivf =
-        if (new java.io.File(IvfIndex.centroidsDir(ivfDir)).exists())
-          IvfIndex.load(s, ivfDir)
-        else IvfIndex.build(e, "embedding", ivfDir, nlist = 16)
-      val gBase = s"/tmp/graft_graphann_${math.abs(dir.hashCode)}"
-      val adjDf = graft.core.Artifacts.buildOnce(s, s"$gBase/adjacency") {
-        GraphAnn.buildAdjacency(e, "vec_id", "embedding")
-      }
-      val entryDf = graft.core.Artifacts.buildOnce(s, s"$gBase/entry") {
-        GraphAnn.medoid(e, "vec_id", "embedding")
-      }
+      val pqDir = Fixtures.pqDir(dir)
+      val pq = Fixtures.pq(s, dir)
+      val ivfDir = Fixtures.ivfDir(dir)
+      val ivf = Fixtures.ivf(s, dir)
+      val adjDf = Fixtures.graphAdjacency(s, dir)
+      val entryDf = Fixtures.graphMedoid(s, dir)
       stageOracleOnceLazy(s, "recall", dir)(Seq(
         "codebooks" -> s.read.parquet(Pq.codebooksDir(pqDir)),
         "centroids" -> s.read.parquet(IvfIndex.centroidsDir(ivfDir)),
@@ -3767,24 +3603,6 @@ object VectorQueries {
       ORDER BY method ASC
     """))
 
-  /** Build-or-load the FULL-rank (64-component) rotation artifact for
-    * the OPQ tier and stage it for the `opqrot` oracle. Distinct from
-    * the 16-component MRL prefix artifact: OPQ needs a complete
-    * orthonormal basis so rotated-space L2 is a faithful search metric,
-    * not a truncation. */
-  private def opqRotationArtifact(s: org.apache.spark.sql.SparkSession,
-                                  dir: String)
-      : Seq[(Int, Array[Float])] = {
-    import graft.search.Rotation
-    val e = Tables.embeddings(s, dir)
-    val rotDf = graft.core.Artifacts.buildOnce(s,
-      s"/tmp/graft_rot64_${math.abs(dir.hashCode)}") {
-      Rotation.learn(e, "embedding", dim = 64, k = 64)
-    }
-    stageOracleOnce(s, "opqrot", dir)("rotation" -> rotDf)
-    Rotation.collectRows(rotDf)
-  }
-
   /** Build-or-load the rotated corpus, rotated-space PQ codebooks, and
     * rotated-space IVF layout the OPQ∘IVF_PQ entries share, staging the
     * `opqivfpq` oracle handoffs. Returns (rotated corpus, PQ model, IVF
@@ -3793,21 +3611,12 @@ object VectorQueries {
                                 dir: String)
       : (org.apache.spark.sql.DataFrame, graft.search.Pq.Model,
          graft.search.IvfIndex.Model, String, String) = {
-    import graft.search.{IvfIndex, Pq, Rotation}
-    val e = Tables.embeddings(s, dir)
-    val rows = opqRotationArtifact(s, dir)
-    val rotated = e.select(col("vec_id"),
-      Rotation.projectCol(col("embedding"), rows).as("rvec"))
+    import graft.search.{IvfIndex, Pq}
+    val rotated = Fixtures.opqRotated(s, dir)
     val ivfDir = s"/tmp/graft_opqivf_${math.abs(dir.hashCode)}"
-    val opqDir = s"/tmp/graft_opq_${math.abs(dir.hashCode)}"
-    val ivf =
-      if (new java.io.File(IvfIndex.centroidsDir(ivfDir)).exists())
-        IvfIndex.load(s, ivfDir)
-      else IvfIndex.build(rotated, "rvec", ivfDir, nlist = 16)
-    val opq =
-      if (new java.io.File(Pq.codesDir(opqDir) + "/_SUCCESS").exists())
-        Pq.load(s, opqDir)
-      else Pq.build(rotated, "rvec", "vec_id", opqDir)
+    val opqDir = Fixtures.opqDir(dir)
+    val ivf = Fixtures.ivfAt(s, ivfDir, "rvec")(rotated)
+    val opq = Fixtures.opq(s, dir)
     stageOracleOnceLazy(s, "opqivfpq", dir)(Seq(
       "centroids" -> s.read.parquet(IvfIndex.centroidsDir(ivfDir)),
       "assign" -> IvfIndex.readDataMerged(s, ivfDir)
@@ -3830,16 +3639,10 @@ object VectorQueries {
   private val opqAdcSearch = Q(
     "opq_adc_search",
     (s, dir) => {
-      import graft.search.{Pq, Rotation}
-      val e = Tables.embeddings(s, dir)
-      val rows = opqRotationArtifact(s, dir)
-      val rotated = e.select(col("vec_id"),
-        Rotation.projectCol(col("embedding"), rows).as("rvec"))
-      val opqDir = s"/tmp/graft_opq_${math.abs(dir.hashCode)}"
-      val model =
-        if (new java.io.File(Pq.codesDir(opqDir) + "/_SUCCESS").exists())
-          Pq.load(s, opqDir)
-        else Pq.build(rotated, "rvec", "vec_id", opqDir)
+      import graft.search.Pq
+      val rotated = Fixtures.opqRotated(s, dir)
+      val opqDir = Fixtures.opqDir(dir)
+      val model = Fixtures.opq(s, dir)
       stageOracleOnceLazy(s, "opq", dir)(Seq(
         "codebooks" -> s.read.parquet(Pq.codebooksDir(opqDir))))
       val rq = rotated.where(col("vec_id") === 0).select("rvec")
@@ -3971,21 +3774,13 @@ object VectorQueries {
   private val opqRecallReport = Q(
     "opq_recall_report",
     (s, dir) => {
-      import graft.search.{Pq, Rotation}
+      import graft.search.Pq
       val e = Tables.embeddings(s, dir)
-      val rows = opqRotationArtifact(s, dir)
-      val rotated = e.select(col("vec_id"),
-        Rotation.projectCol(col("embedding"), rows).as("rvec"))
-      val pqDir = s"/tmp/graft_pq_${math.abs(dir.hashCode)}"
-      val opqDir = s"/tmp/graft_opq_${math.abs(dir.hashCode)}"
-      val pq =
-        if (new java.io.File(Pq.codesDir(pqDir) + "/_SUCCESS").exists())
-          Pq.load(s, pqDir)
-        else Pq.build(e, "embedding", "vec_id", pqDir)
-      val opq =
-        if (new java.io.File(Pq.codesDir(opqDir) + "/_SUCCESS").exists())
-          Pq.load(s, opqDir)
-        else Pq.build(rotated, "rvec", "vec_id", opqDir)
+      val rotated = Fixtures.opqRotated(s, dir)
+      val pqDir = Fixtures.pqDir(dir)
+      val opqDir = Fixtures.opqDir(dir)
+      val pq = Fixtures.pq(s, dir)
+      val opq = Fixtures.opq(s, dir)
       stageOracleOnceLazy(s, "pq", dir)(Seq(
         "codebooks" -> s.read.parquet(Pq.codebooksDir(pqDir))))
       stageOracleOnceLazy(s, "opq", dir)(Seq(
@@ -4105,9 +3900,7 @@ object VectorQueries {
       import graft.search.{Bm25Index, TermIndex}
       val docs = Tables.documents(s, dir)
       val idx = s"/tmp/graft_bm25inc_terms_${math.abs(dir.hashCode)}"
-      mutateOnce(s, idx) {
-        val p = new org.apache.hadoop.fs.Path(idx)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+      rebuildOnce(s, idx) {
         TermIndex.build(docs.where(col("doc_id") < 300),
           "doc_id", "text", idx)
         TermIndex.append(docs.where(col("doc_id") >= 300 &&
@@ -4160,9 +3953,7 @@ object VectorQueries {
       val docs = Tables.documents(s, dir)
       val idx = s"/tmp/graft_bm25f_${math.abs(dir.hashCode)}"
       val fields = Seq("source", "text")
-      mutateOnce(s, idx) {
-        val p = new org.apache.hadoop.fs.Path(idx)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+      rebuildOnce(s, idx) {
         Bm25Index.buildFielded(docs.where(col("doc_id") < 300),
           "doc_id", fields, idx)
         Bm25Index.appendFielded(docs.where(col("doc_id") >= 300 &&
@@ -4417,9 +4208,7 @@ object VectorQueries {
       val idx = s"/tmp/graft_bm25tomb_${math.abs(dir.hashCode)}"
       // build once per JVM+fixture; only the tombstone set is per-run
       // (clear + record — the artifact itself never rewrites)
-      if (!new java.io.File(
-          TermIndex.termsDir(idx) + "/seg=0/_SUCCESS").exists())
-        TermIndex.build(docs, "doc_id", "text", idx)
+      rebuildOnce(s, idx)(TermIndex.build(docs, "doc_id", "text", idx))
       Tombstones.clear(s, idx)
       Tombstones.record(docs.where(col("doc_id") % 5 === 2)
         .select(col("doc_id").as("id")), idx, "id")
@@ -4478,9 +4267,7 @@ object VectorQueries {
       import graft.search.{AliasedIndex, Bm25Index, TermIndex, Tombstones}
       val docs = Tables.documents(s, dir)
       val idx = s"/tmp/graft_bm25up_terms_${math.abs(dir.hashCode)}"
-      mutateOnce(s, idx) {
-        val p = new org.apache.hadoop.fs.Path(idx)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+      rebuildOnce(s, idx) {
         AliasedIndex.init(s, idx) { d =>
           TermIndex.build(docs, "doc_id", "text", d)
         }

@@ -158,7 +158,10 @@ object Artifacts {
     }
     if (java.nio.file.Files.exists(dst))
       walk(dst).sortBy(-_.getNameCount).foreach(java.nio.file.Files.delete)
-    walk(src).foreach { p =>
+    // the source's completion marker stays behind: whether the copy's
+    // own mutation finished is for the copy's mutateOnce to record
+    walk(src).filterNot(_.getFileName.toString == "__graft_mutated")
+        .foreach { p =>
       val t = dst.resolve(src.relativize(p))
       if (java.nio.file.Files.isDirectory(p))
         java.nio.file.Files.createDirectories(t)

@@ -149,4 +149,50 @@ class ArtifactsSpec extends SparkSpec {
         "a recovered run must serve what a crash-free run serves")
     }
   }
+
+  test("a registry IVF fixture whose build was killed mid-write is " +
+      "rebuilt, not served as an empty index") {
+    // a private fixture dir: its own key, so its own IVF dir
+    val fixture = freshDir("killed_ivf_fixture")
+    fs.mkdirs(new Path(fixture))
+    java.nio.file.Files.copy(
+      java.nio.file.Paths.get(s"$sf0001/embeddings.parquet"),
+      java.nio.file.Paths.get(s"$fixture/embeddings.parquet"))
+    val ivfDir = new Path(Fixtures.ivfDir(fixture))
+    val ivfSearch = SparkEntry.queries("ivf_search")
+    def serve() = ivfSearch(spark, fixture).collect().toSeq
+    fs.delete(ivfDir, true)
+    val clean = serve()
+    assert(clean.size == 5)
+    // IvfIndex.build writes data, then centroids, then radii: a kill
+    // during the centroids write leaves the data and, of the centroids,
+    // only the job's _temporary dir
+    fs.listStatus(ivfDir).map(_.getPath)
+      .filter(_.getName != "data").foreach(fs.delete(_, true))
+    fs.mkdirs(new Path(ivfDir, "centroids/_temporary/0"))
+    assert(serve() == clean,
+      "the half-written index must be rebuilt before it is searched")
+    fs.delete(ivfDir, true)
+    fs.delete(new Path(fixture), true)
+  }
+
+  test("a copy of a ready fixture leaves its completion marker behind, so " +
+      "a mutation killed after the copy re-runs") {
+    val base = freshDir("marked_base")
+    val run = freshDir("marked_run")
+    QueryDsl.rebuildOnce(spark, base) {
+      Seq(1L, 2L).toDF("id").write.parquet(base)
+    }
+    // a run killed after `copy(base, run)` but before its mutation ends
+    Artifacts.copyLocalDir(base, run)
+    var mutated = false
+    QueryDsl.mutateOnce(spark, run) {
+      Artifacts.copyLocalDir(base, run)
+      mutated = true
+    }
+    assert(mutated, "the copy must not read as an already-mutated dir")
+    assert(spark.read.parquet(run).count() == 2)
+    fs.delete(new Path(base), true)
+    fs.delete(new Path(run), true)
+  }
 }
