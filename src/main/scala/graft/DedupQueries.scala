@@ -633,7 +633,7 @@ object DedupQueries {
       stageOracleOnceLazy(s, "annk", dir)(Seq(
         "centroids" -> s.read.parquet(
           graft.search.IvfIndex.centroidsDir(indexDir)),
-        "assign" -> s.read.parquet(graft.search.IvfIndex.dataDir(indexDir))
+        "assign" -> graft.search.IvfIndex.readData(s, indexDir)
           .select(col("vec_id"), col("cluster_id"))))
       graft.search.AnnJoin.bulkTopKGuaranteed(e,
           "vec_id", "embedding", k = 5, dim = 64, ivf = model, nprobe = 4,
@@ -699,7 +699,7 @@ object DedupQueries {
       val indexDir = Fixtures.ivfDir(dir)
       val e = Tables.embeddings(s, dir)
       val model = Fixtures.ivf(s, dir)
-      val assignments = s.read.parquet(graft.search.IvfIndex.dataDir(indexDir))
+      val assignments = graft.search.IvfIndex.readData(s, indexDir)
         .select(col("vec_id"), col("cluster_id"))
       stageOracleOnce(s, "semdedup", dir)("assign" -> assignments)
       SemanticDedup.markDuplicates(e, assignments, "vec_id", "embedding",
@@ -799,7 +799,7 @@ object DedupQueries {
       stageOracleOnceLazy(s, "annrecall", dir)(Seq(
         "centroids" -> s.read.parquet(
           graft.search.IvfIndex.centroidsDir(indexDir)),
-        "assign" -> s.read.parquet(graft.search.IvfIndex.dataDir(indexDir))
+        "assign" -> graft.search.IvfIndex.readData(s, indexDir)
           .select(col("vec_id"), col("cluster_id"))))
 
       val q = e.where(col("vec_id") < 10)
@@ -821,7 +821,7 @@ object DedupQueries {
           .orderBy(col("cd").asc, col("cluster_id").asc)))
         .where(col("crn") <= 4)
         .select("qid", "qv", "cluster_id")
-      val asg = s.read.parquet(graft.search.IvfIndex.dataDir(indexDir))
+      val asg = graft.search.IvfIndex.readData(s, indexDir)
         .select(col("vec_id"), col("cluster_id"))
       val ivf = probed.join(asg, Seq("cluster_id"))
         .join(e, Seq("vec_id"))

@@ -338,7 +338,7 @@ object PipelineQueries {
       // a concurrent DuckDB read never sees a half-written dir.
       stageOracleOnceLazy(s, "ivf_probe", dir)(Seq(
         "centroids" -> s.read.parquet(IvfIndex.centroidsDir(indexDir)),
-        "assign" -> IvfIndex.readDataMerged(s, indexDir)
+        "assign" -> IvfIndex.readData(s, indexDir)
           .select(col("vec_id"), col("cluster_id"))))
       val query = Fixtures.queryVector(e)
       IvfIndex.search(s, model, "embedding", "vec_id", query, k = 5,
@@ -385,7 +385,7 @@ object PipelineQueries {
       val model = Fixtures.ivf(s, dir)
       stageOracleOnceLazy(s, "ivftune", dir)(Seq(
         "centroids" -> s.read.parquet(IvfIndex.centroidsDir(indexDir)),
-        "assign" -> IvfIndex.readDataMerged(s, indexDir)
+        "assign" -> IvfIndex.readData(s, indexDir)
           .select(col("vec_id"), col("cluster_id"))))
       val qs = e.where(col("vec_id").isin(BulkQids: _*))
         .select(col("vec_id"), col("embedding")).collect()
@@ -458,11 +458,11 @@ object PipelineQueries {
       val model = Fixtures.ivf(s, dir)
       stageOracleOnceLazy(s, "ivf_filtered", dir)(Seq(
         "centroids" -> s.read.parquet(IvfIndex.centroidsDir(indexDir)),
-        "assign" -> IvfIndex.readDataMerged(s, indexDir)
+        "assign" -> IvfIndex.readData(s, indexDir)
           .select(col("vec_id"), col("cluster_id"))))
       val query = Fixtures.queryVector(e)
       val clusters = IvfIndex.probeClusters(model, query, nprobe = 4)
-      IvfIndex.readDataMerged(s, indexDir)
+      IvfIndex.readData(s, indexDir)
         .where(col("cluster_id").isin(clusters: _*)
           && col("label").isin(1, 3, 5, 8))
         .withColumn("distance",
@@ -510,9 +510,9 @@ object PipelineQueries {
       val indexDir = Fixtures.ivfDir(dir)
       val model = Fixtures.ivf(s, dir)
       stageOracleOnceLazy(s, "ivf_balance", dir)(Seq(
-        "assign" -> IvfIndex.readDataMerged(s, indexDir)
+        "assign" -> IvfIndex.readData(s, indexDir)
           .select(col("vec_id"), col("cluster_id"))))
-      val sizes = IvfIndex.readDataMerged(s, indexDir)
+      val sizes = IvfIndex.readData(s, indexDir)
         .groupBy(col("cluster_id"))
         .agg(count(lit(1)).as("sz"))
       sizes.agg(
@@ -551,7 +551,7 @@ object PipelineQueries {
       val model = Fixtures.ivf(s, dir)
       graft.plans.IvfProbeRewrite.register(model, nprobe = model.nlist)
       val query = Fixtures.queryVector(e)
-      IvfIndex.readDataMerged(s, indexDir)
+      IvfIndex.readData(s, indexDir)
         .select(col("vec_id"),
           round(VectorFunctions.l2Sq(col("embedding"), typedlit(query)), 4)
             .as("distance"))
@@ -602,7 +602,7 @@ object PipelineQueries {
       val e = Tables.embeddings(s, dir)
       val model = Fixtures.ivf(s, dir)
       graft.plans.IvfProbeRewrite.register(model, nprobe = model.nlist)
-      IvfIndex.readDataMerged(s, indexDir)
+      IvfIndex.readData(s, indexDir)
         .createOrReplaceTempView("graft_ivf_data")
       e.createOrReplaceTempView("graft_embeddings")
       s.sql("""
@@ -666,12 +666,12 @@ object PipelineQueries {
       stageOracleOnceLazy(s, "routedauto", dir)(
         Seq("panel" -> routerPanelV2(s, dir)))
       stageOracleOnceLazy(s, "routedautofix", dir)(Seq(
-        "assign" -> IvfIndex.readDataMerged(s, indexDir)
+        "assign" -> IvfIndex.readData(s, indexDir)
           .select(col("vec_id"), col("cluster_id")),
         "cents" -> s.read.parquet(IvfIndex.centroidsDir(indexDir))))
       val tier = IvfProbeRewrite.routedDecision(s, indexDir).get
       val query = Fixtures.queryVector(e)
-      IvfIndex.readDataMerged(s, indexDir)
+      IvfIndex.readData(s, indexDir)
         .select(col("vec_id"),
           round(VectorFunctions.l2Sq(col("embedding"), typedlit(query)), 4)
             .as("distance"))
@@ -792,7 +792,7 @@ object PipelineQueries {
         fingerprintRoots = Seq(indexDir, sq8Dir)))
       val tier = IvfProbeRewrite.routedDecision(s, indexDir).get
       val query = Fixtures.queryVector(e)
-      IvfIndex.readDataMerged(s, indexDir)
+      IvfIndex.readData(s, indexDir)
         .select(col("vec_id"),
           round(VectorFunctions.l2Sq(col("embedding"), typedlit(query)), 4)
             .as("distance"))
@@ -896,7 +896,7 @@ object PipelineQueries {
       val tier = IvfProbeRewrite.routedDecision(s, indexDir).get
       val query = Fixtures.queryVector(e)
       IvfProbeRewrite.serveRouted(s, indexDir, query, 5) {
-        IvfIndex.readDataMerged(s, indexDir)
+        IvfIndex.readData(s, indexDir)
           .select(col("vec_id"),
             round(VectorFunctions.l2Sq(col("embedding"), typedlit(query)),
               4).as("distance"))
@@ -4347,7 +4347,7 @@ object PipelineQueries {
       val adj = Fixtures.graphAdjacency(s, dir)
       val indexDir = Fixtures.ivfDir(dir)
       val model = Fixtures.ivf(s, dir)
-      val assign = IvfIndex.readDataMerged(s, indexDir)
+      val assign = IvfIndex.readData(s, indexDir)
         .select(col("vec_id"), col("cluster_id"))
       val cents = s.read.parquet(IvfIndex.centroidsDir(indexDir))
       val radiiT = s.read.parquet(IvfIndex.radiiDir(indexDir))
@@ -4653,7 +4653,7 @@ object PipelineQueries {
           Tombstones.clear(s, d) // copied tombstones aren't this run's
         }
         val model = IvfIndex.load(s, runDir) // binds to v1
-        val nBefore = IvfIndex.readDataMerged(s, model.indexDir)
+        val nBefore = IvfIndex.readData(s, model.indexDir)
           .count()
         IvfIndex.delete(e.where(col("vec_id") % 7 === 3).select("vec_id"),
           model, "vec_id")
@@ -4662,7 +4662,7 @@ object PipelineQueries {
         // readers; v2 is the folded layout, published atomically
         IvfIndex.compactTombstonesRoot(s, runDir, "vec_id")
         val cur = AliasedIndex.currentDir(s, runDir)
-        val after = IvfIndex.readDataMerged(s, cur)
+        val after = IvfIndex.readData(s, cur)
         val live = e.where(col("vec_id") % 7 =!= 3).select("vec_id")
         val orphans = after.select("vec_id")
           .join(live, Seq("vec_id"), "left_anti").count()
@@ -4759,7 +4759,7 @@ object PipelineQueries {
       val model = Fixtures.ivf(s, dir)
       stageOracleOnceLazy(s, "ivfbulk", dir)(Seq(
         "centroids" -> s.read.parquet(IvfIndex.centroidsDir(indexDir)),
-        "assign" -> IvfIndex.readDataMerged(s, indexDir)
+        "assign" -> IvfIndex.readData(s, indexDir)
           .select(col("vec_id"), col("cluster_id"))))
       val qs = e.where(col("vec_id").isin(BulkQids: _*))
         .select(col("vec_id"), col("embedding")).collect()
@@ -4870,7 +4870,7 @@ object PipelineQueries {
       mutateOnce(s, runDir) {
         Artifacts.copyLocalDir(baseDir, runDir)
         val model = IvfIndex.load(s, runDir)
-        val before = IvfIndex.readDataMerged(s, runDir)
+        val before = IvfIndex.readData(s, runDir)
           .select(col("vec_id"), col("cluster_id"))
         val maxBefore = before.groupBy(col("cluster_id"))
           .agg(count(lit(1)).as("sz"))
@@ -4894,7 +4894,7 @@ object PipelineQueries {
       val maxBefore = beforeDf.groupBy(col("cluster_id"))
         .agg(count(lit(1)).as("sz"))
         .agg(max(col("sz"))).collect()(0).getLong(0)
-      val after = IvfIndex.readDataMerged(s, runDir)
+      val after = IvfIndex.readData(s, runDir)
         .select(col("vec_id"), col("cluster_id"))
       stageOracleOnce(s, "ivfrebal", dir)(
         "before" -> beforeDf,
@@ -4977,8 +4977,8 @@ object PipelineQueries {
       val e = Tables.embeddings(s, dir)
       rebuildOnce(s, runDir) {
         AliasedIndex.init(s, runDir)(d => Artifacts.copyLocalDir(baseDir, d))
-        val maxBefore = s.read.parquet(
-            IvfIndex.dataDir(AliasedIndex.currentDir(s, runDir)))
+        val maxBefore = IvfIndex.readData(s,
+            AliasedIndex.currentDir(s, runDir))
           .groupBy(col("cluster_id")).agg(count(lit(1)).as("sz"))
           .agg(max(col("sz"))).collect()(0).getLong(0)
         IvfIndex.rebalanceRoot(s, runDir, "embedding",
@@ -5256,7 +5256,7 @@ object PipelineQueries {
       // live corpus drifted: %9=4 rows deleted without propagating
       val live = e.where(col("vec_id") % 9 =!= 4)
       stageOracleOnceLazy(s, "mplan", dir)(Seq(
-        "assign" -> IvfIndex.readDataMerged(s, runDir)
+        "assign" -> IvfIndex.readData(s, runDir)
           .select("vec_id", "cluster_id"),
         "centroids" -> s.read.parquet(IvfIndex.centroidsDir(runDir)),
         "radii" -> s.read.parquet(IvfIndex.radiiDir(runDir)),
@@ -6065,7 +6065,7 @@ object PipelineQueries {
       val ivfRecall = IvfIndex.nprobeCurve(s, model, "embedding",
           "vec_id", qs, k = 5, nprobes = Seq(4), targetRecall = 0.9)
         .collect()(0).getDouble(2)
-      val sizes = IvfIndex.readDataMerged(s, indexDir)
+      val sizes = IvfIndex.readData(s, indexDir)
         .groupBy(col("cluster_id")).agg(count(lit(1)).as("sz"))
         .collect().map(r => (r.getInt(0), r.getLong(1))).toMap
       val ivfCost = qs.map { case (_, qv) =>

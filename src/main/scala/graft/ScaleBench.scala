@@ -281,6 +281,9 @@ object ScaleBench {
   def main(args: Array[String]): Unit = {
     val sizes = (if (args.nonEmpty) args(0) else "4000,16000")
       .split(",").map(_.trim.toInt).toSeq
+    require(sizes.size >= 2, s"ScaleBench needs at least two sizes " +
+      s"(got ${sizes.mkString(",")}): each operator's growth exponent is " +
+      "fitted over the last two, e.g. 2000,4000")
     // optional 2nd arg: regex over operator names — the serving-cost
     // rehearsal at 10⁶ runs only the per-query serving rows (the full
     // list includes Θ(n²)-BY-SEMANTICS demo widths that are not meant
@@ -578,7 +581,7 @@ object ScaleBench {
           val dir = s"/tmp/graft_scale/ivf_rebal_$n"
           copyDir(s"/tmp/graft_scale/ivf_$n", dir)
           val model = IvfIndex.load(spark, dir)
-          val maxList = spark.read.parquet(IvfIndex.dataDir(dir))
+          val maxList = IvfIndex.readData(spark, dir)
             .groupBy(col("cluster_id")).agg(count(lit(1)).as("sz"))
             .agg(max(col("sz"))).collect()(0).getLong(0)
           IvfIndex.rebalance(spark, model, "embedding",
@@ -760,7 +763,7 @@ object ScaleBench {
           val dir = s"/tmp/graft_scale/semivf_${n}"
           if (!new java.io.File(s"$dir/centroids/_SUCCESS").exists())
             IvfIndex.build(emb, "embedding", dir, nlist = nlist, maxIter = 5)
-          val asg = spark.read.parquet(IvfIndex.dataDir(dir))
+          val asg = IvfIndex.readData(spark, dir)
             .select(col("vec_id"), col("cluster_id"))
           graft.dedup.SemanticDedup
             .markDuplicates(emb, asg, "vec_id", "embedding", tau = 0.9)
@@ -999,7 +1002,7 @@ object ScaleBench {
           val qe = emb.where(col("vec_id") === 0)
             .select("embedding").as[Seq[Float]].head().toArray
           val probed = IvfIndex.probeClusters(ivf, qe, 8)
-          val sel = spark.read.parquet(IvfIndex.dataDir(ivf.indexDir))
+          val sel = IvfIndex.readData(spark, ivf.indexDir)
             .where(col("cluster_id").isin(probed: _*)).select("vec_id")
           val qr = Rotation.projectRow(qe, rot)
           val qn = math.sqrt(qr.map(v => v.toDouble * v.toDouble).sum)
@@ -1254,7 +1257,7 @@ object ScaleBench {
           val q = emb.where(col("vec_id") === 0)
             .select("embedding").as[Seq[Float]].head().toArray
           val probed = IvfIndex.probeClusters(ivf, q, 8)
-          val sel = spark.read.parquet(IvfIndex.dataDir(ivf.indexDir))
+          val sel = IvfIndex.readData(spark, ivf.indexDir)
             .where(col("cluster_id").isin(probed: _*)).select("vec_id")
           spark.read.parquet(Pq.codesDir(pqDir))
             .join(sel, Seq("vec_id"), "left_semi")

@@ -407,7 +407,7 @@ object VectorQueries {
       val e = Tables.embeddings(s, dir)
       val indexDir = Fixtures.ivfDir(dir)
       val model = Fixtures.ivf(s, dir)
-      val assign = IvfIndex.readDataMerged(s, indexDir)
+      val assign = IvfIndex.readData(s, indexDir)
         .select(col("vec_id"), col("cluster_id"))
       stageOracleOnceLazy(s, "ivfsq8", dir)(Seq(
         "centroids" -> s.read.parquet(IvfIndex.centroidsDir(indexDir)),
@@ -593,7 +593,7 @@ object VectorQueries {
       val rows = binRotationArtifact(s, dir)
       val indexDir = Fixtures.ivfDir(dir)
       val model = Fixtures.ivf(s, dir)
-      val assign = IvfIndex.readDataMerged(s, indexDir)
+      val assign = IvfIndex.readData(s, indexDir)
         .select(col("vec_id"), col("cluster_id"))
       stageOracleOnceLazy(s, "ivfasym", dir)(Seq(
         "centroids" -> s.read.parquet(IvfIndex.centroidsDir(indexDir)),
@@ -687,7 +687,7 @@ object VectorQueries {
       val e = Tables.embeddings(s, dir)
       val indexDir = Fixtures.ivfDir(dir)
       val model = Fixtures.ivf(s, dir)
-      val assign = IvfIndex.readDataMerged(s, indexDir)
+      val assign = IvfIndex.readData(s, indexDir)
         .select(col("vec_id"), col("cluster_id"))
       val rqDir = Fixtures.rqDir(dir)
       val rq = Fixtures.rq(s, dir)
@@ -1190,12 +1190,12 @@ object VectorQueries {
       val pq = Fixtures.pq(s, dir)
       stageOracleOnceLazy(s, "ivfpq", dir)(Seq(
         "centroids" -> s.read.parquet(graft.search.IvfIndex.centroidsDir(ivfDir)),
-        "assign" -> s.read.parquet(graft.search.IvfIndex.dataDir(ivfDir))
+        "assign" -> graft.search.IvfIndex.readData(s, ivfDir)
           .select(col("vec_id"), col("cluster_id")),
         "codebooks" -> s.read.parquet(graft.search.Pq.codebooksDir(pqDir))))
       val query = Fixtures.queryVector(e)
       val clusters = graft.search.IvfIndex.probeClusters(ivf, query, 4)
-      val selected = s.read.parquet(graft.search.IvfIndex.dataDir(ivfDir))
+      val selected = graft.search.IvfIndex.readData(s, ivfDir)
         .where(col("cluster_id").isin(clusters: _*))
         .select(col("vec_id"))
       val lut = graft.search.Pq.adcTable(pq, query)
@@ -3150,14 +3150,14 @@ object VectorQueries {
       stageOracleOnceLazy(s, "recall", dir)(Seq(
         "codebooks" -> s.read.parquet(Pq.codebooksDir(pqDir)),
         "centroids" -> s.read.parquet(IvfIndex.centroidsDir(ivfDir)),
-        "assign" -> IvfIndex.readDataMerged(s, ivfDir)
+        "assign" -> IvfIndex.readData(s, ivfDir)
           .select(col("vec_id"), col("cluster_id")),
         "adjacency" -> adjDf.select("src", "dst"),
         "entry" -> entryDf))
       val pqCand = Pq.adcCandidates(s, pq, "vec_id", qArr, 20)
         .select("vec_id")
       val probed = IvfIndex.probeClusters(ivf, qArr, 4)
-      val sel = IvfIndex.readDataMerged(s, ivfDir)
+      val sel = IvfIndex.readData(s, ivfDir)
         .where(col("cluster_id").isin(probed: _*)).select("vec_id")
       val ivfpqCand = s.read.parquet(Pq.codesDir(pqDir))
         .join(sel, Seq("vec_id"), "left_semi")
@@ -3176,7 +3176,7 @@ object VectorQueries {
       val rqArr = rotated.where(col("vec_id") === 0).select("rvec")
         .collect()(0).getSeq[Float](0).toArray
       val oprobed = IvfIndex.probeClusters(opqIvf, rqArr, 4)
-      val osel = IvfIndex.readDataMerged(s, opqIvfDir)
+      val osel = IvfIndex.readData(s, opqIvfDir)
         .where(col("cluster_id").isin(oprobed: _*)).select("vec_id")
       val opqIvfpqCand = s.read.parquet(Pq.codesDir(opqPqDir))
         .join(osel, Seq("vec_id"), "left_semi")
@@ -3619,7 +3619,7 @@ object VectorQueries {
     val opq = Fixtures.opq(s, dir)
     stageOracleOnceLazy(s, "opqivfpq", dir)(Seq(
       "centroids" -> s.read.parquet(IvfIndex.centroidsDir(ivfDir)),
-      "assign" -> IvfIndex.readDataMerged(s, ivfDir)
+      "assign" -> IvfIndex.readData(s, ivfDir)
         .select(col("vec_id"), col("cluster_id")),
       "codebooks" -> s.read.parquet(Pq.codebooksDir(opqDir))))
     (rotated, opq, ivf, ivfDir, opqDir)
@@ -3701,7 +3701,7 @@ object VectorQueries {
       val rq = rotated.where(col("vec_id") === 0).select("rvec")
         .collect()(0).getSeq[Float](0).toArray
       val clusters = IvfIndex.probeClusters(ivf, rq, 4)
-      val selected = IvfIndex.readDataMerged(s, ivfDir)
+      val selected = IvfIndex.readData(s, ivfDir)
         .where(col("cluster_id").isin(clusters: _*))
         .select(col("vec_id"))
       val cand = s.read.parquet(Pq.codesDir(opqDir))

@@ -112,6 +112,64 @@ object Artifacts {
     }
   }
 
+  /** The schema sidecar's file name: the schema a directory's writer
+    * pinned, as `StructType` JSON. The `_` prefix keeps it out of every
+    * Spark scan, and living inside the directory it describes, it moves
+    * with the data through every [[replaceDir]] rename. */
+  val SchemaFile = "_graft_schema.json"
+
+  /** Write `text` as the small file `name` inside `dir`: written to a
+    * `.`-prefixed tmp file, then moved over the old one by ONE
+    * overwrite-capable rename (`FileContext.rename(…, OVERWRITE)`,
+    * atomic replace on local FS and HDFS), so a reader sees the old
+    * text or the new, never a torn file or none. Only a filesystem with
+    * no `FileContext` binding (some object stores) falls back to
+    * delete + rename, which can show a reader no file for an instant. */
+  def writeSidecar(spark: SparkSession, dir: String, name: String,
+                   text: String): Unit = {
+    val live = new Path(dir, name)
+    val tmp = new Path(dir, s".$name.tmp")
+    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val out = fs.create(tmp, true)
+    try out.write(text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    finally out.close()
+    try {
+      val fc = org.apache.hadoop.fs.FileContext
+        .getFileContext(live.toUri, spark.sparkContext.hadoopConfiguration)
+      fc.rename(fc.makeQualified(tmp), fc.makeQualified(live),
+        org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+    } catch {
+      case _: org.apache.hadoop.fs.UnsupportedFileSystemException =>
+        fs.delete(live, false)
+        if (!fs.rename(tmp, live))
+          throw new java.io.IOException(s"rename $tmp -> $live failed")
+    }
+  }
+
+  /** The file `name` inside `dir` as text, or None when none exists. */
+  def readSidecar(spark: SparkSession, dir: String,
+                  name: String): Option[String] = {
+    val p = new Path(dir, name)
+    try {
+      val in = p.getFileSystem(spark.sparkContext.hadoopConfiguration).open(p)
+      try Some(new String(in.readAllBytes(),
+        java.nio.charset.StandardCharsets.UTF_8))
+      finally in.close()
+    } catch { case _: java.io.FileNotFoundException => None }
+  }
+
+  /** Pin `schema` as `dir`'s [[SchemaFile]]. */
+  def writeSchema(spark: SparkSession, dir: String,
+                  schema: org.apache.spark.sql.types.StructType): Unit =
+    writeSidecar(spark, dir, SchemaFile, schema.json)
+
+  /** The schema pinned in `dir`; None when its writer pinned none. */
+  def readSchema(spark: SparkSession,
+                 dir: String): Option[org.apache.spark.sql.types.StructType] =
+    readSidecar(spark, dir, SchemaFile).map(s =>
+      org.apache.spark.sql.types.DataType.fromJson(s)
+        .asInstanceOf[org.apache.spark.sql.types.StructType])
+
   /** The rename-aside swap that replaces an artifact directory
     * crash-safely: clear `tmp` and `old`, `write(tmp)`, rename `live`
     * aside to `old` (when it exists — a first write has nothing to move),
@@ -167,9 +225,9 @@ object Artifacts {
         java.nio.file.Files.createDirectories(t)
       // COPY_ATTRIBUTES (round 16): preserve mtimes so a re-copied
       // fixture carries the same filesystem stat fingerprint as its
-      // source — the freshness-keyed caches (IvfIndex model /
-      // versioned-schema) then recognize the identical content instead
-      // of re-inferring every pass
+      // source — the freshness-keyed caches (the IvfIndex model) then
+      // recognize the identical content instead of re-inferring every
+      // pass
       else java.nio.file.Files.copy(p, t,
         java.nio.file.StandardCopyOption.COPY_ATTRIBUTES)
     }

@@ -34,14 +34,11 @@ final class Collection(spark: SparkSession, val dir: String,
     if (!exists) {
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
         .write.mode(SaveMode.Overwrite).parquet(dir)
-      val out = fs.create(declaredSchemaPath, true)
-      out.write(schema.json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      out.close()
+      Artifacts.writeSchema(spark, dir, schema)
     }
   }
 
-  private def declaredSchemaPath = new Path(dir, "_graft_schema.json")
-  private def propsPath = new Path(dir, "_graft_props.json")
+  private val PropsFile = "_graft_props.json"
 
   // --- Collection properties + TTL (Milvus `collection.ttl.seconds`
   // parity, round 14). Properties are a tiny `_`-prefixed JSON sidecar
@@ -57,22 +54,14 @@ final class Collection(spark: SparkSession, val dir: String,
     require(props.values.forall(v => !v.contains("\n")),
       "property values must not contain newline")
     val merged = properties ++ props
-    val out = fs.create(propsPath, true)
-    try out.write(merged.toSeq.sorted
-      .map { case (k, v) => s"$k=$v" }.mkString("\n")
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    Artifacts.writeSidecar(spark, dir, PropsFile, merged.toSeq.sorted
+      .map { case (k, v) => s"$k=$v" }.mkString("\n"))
   }
 
   /** Stored collection properties (empty if none set). */
   def properties: Map[String, String] =
-    if (!fs.exists(propsPath)) Map.empty
-    else {
-      val in = fs.open(propsPath)
-      val s = try new String(
-        org.apache.commons.io.IOUtils.toByteArray(in),
-        java.nio.charset.StandardCharsets.UTF_8)
-      finally in.close()
+    Artifacts.readSidecar(spark, dir, PropsFile).fold(
+      Map.empty[String, String]) { s =>
       s.split("\n").filter(_.contains("=")).map { line =>
         val i = line.indexOf('=')
         line.substring(0, i) -> line.substring(i + 1)
@@ -202,20 +191,7 @@ final class Collection(spark: SparkSession, val dir: String,
     * the sidecar exists; collections built by raw appends fall back to
     * the stored footer schema (all-nullable, parquet's read contract). */
   def declaredSchema: Option[StructType] =
-    if (!fs.exists(declaredSchemaPath)) None
-    else {
-      val in = fs.open(declaredSchemaPath)
-      val bytes = try {
-        val buf = new java.io.ByteArrayOutputStream()
-        val tmp = new Array[Byte](8192)
-        var n = in.read(tmp)
-        while (n >= 0) { buf.write(tmp, 0, n); n = in.read(tmp) }
-        buf.toByteArray
-      } finally in.close()
-      Some(org.apache.spark.sql.types.DataType
-        .fromJson(new String(bytes, java.nio.charset.StandardCharsets.UTF_8))
-        .asInstanceOf[StructType])
-    }
+    Artifacts.readSchema(spark, dir)
 
   /** S6: batch insert (append). */
   def append(df: DataFrame): Unit =
@@ -547,11 +523,9 @@ final class Collection(spark: SparkSession, val dir: String,
     newData.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
     // the declared-schema and properties sidecars survive every
     // rewrite swap
-    Seq(declaredSchemaPath, propsPath).foreach { side =>
-      if (f.exists(side))
-        org.apache.hadoop.fs.FileUtil.copy(f, side,
-          f, new Path(tmp, side.getName), false,
-          spark.sparkContext.hadoopConfiguration)
+    Seq(Artifacts.SchemaFile, PropsFile).foreach { side =>
+      Artifacts.readSidecar(spark, dir, side)
+        .foreach(Artifacts.writeSidecar(spark, tmp.toString, side, _))
     }
     if (!f.rename(new Path(dir), old))
       throw new java.io.IOException(s"swap: rename $dir -> $old failed")
@@ -668,49 +642,20 @@ object Collection {
   private def aliasPath(root: String, name: String) =
     new Path(root, s"$name.alias")
 
-  /** Create or atomically retarget `name` → `targetDir`.
-    *
-    * The retarget is ONE overwrite-capable rename
-    * (`FileContext.rename(…, Options.Rename.OVERWRITE)` — atomic
-    * replace on local FS and HDFS), not delete-then-rename, so there is
-    * no window in which a concurrent [[resolveAlias]] finds no alias
-    * file. Only where the filesystem has no `FileContext` binding
-    * (some object stores) does it fall back to delete+rename, and THAT
-    * path can surface a transient "no alias" to a concurrent reader —
-    * on such stores rename isn't atomic anyway, so the alias root
-    * belongs on a real filesystem. */
+  /** Create or atomically retarget `name` → `targetDir`: one
+    * [[Artifacts.writeSidecar]], so a concurrent [[resolveAlias]] never
+    * finds no alias file (the alias root belongs on a filesystem with
+    * an atomic rename). */
   def setAlias(spark: SparkSession, root: String, name: String,
-               targetDir: String): Unit = {
-    val p = aliasPath(root, name)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = p.getFileSystem(conf)
-    fs.mkdirs(new Path(root))
-    val tmp = new Path(root, s".$name.alias.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(targetDir.getBytes("UTF-8")) finally out.close()
-    try {
-      val fc = org.apache.hadoop.fs.FileContext.getFileContext(p.toUri, conf)
-      fc.rename(fc.makeQualified(tmp), fc.makeQualified(p),
-        org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-    } catch {
-      case _: org.apache.hadoop.fs.UnsupportedFileSystemException =>
-        fs.delete(p, false)
-        if (!fs.rename(tmp, p))
-          throw new java.io.IOException(
-            s"alias swap: rename $tmp -> $p failed")
-    }
-  }
+               targetDir: String): Unit =
+    Artifacts.writeSidecar(spark, root, s"$name.alias", targetDir)
 
   /** Resolve `name` to its target dir. */
   def resolveAlias(spark: SparkSession, root: String,
                    name: String): String = {
-    val p = aliasPath(root, name)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(p), s"no alias '$name' under $root")
-    val in = fs.open(p)
-    try new String(
-      org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8")
-    finally in.close()
+    val target = Artifacts.readSidecar(spark, root, s"$name.alias")
+    require(target.isDefined, s"no alias '$name' under $root")
+    target.get
   }
 
   /** Open the collection an alias currently points at. */

@@ -474,7 +474,7 @@ object IvfProbeRewrite extends Rule[LogicalPlan] {
     import spark.implicits._
     val qdf = Seq(Tuple1(query.toSeq)).toDF("__rq")
     val qtab = spark.read.parquet(cfg.sq8Dir)
-    val full = spark.read.parquet(IvfIndex.dataDir(cfg.model.indexDir))
+    val full = IvfIndex.readData(spark, cfg.model.indexDir)
     val served = Quantize.searchQuantized(qtab, full, cfg.vecCol,
       cfg.idCol, qdf, "__rq", k, cfg.sq8Margin)
     // splice the OPTIMIZED inner tree: the broadcast hints must be

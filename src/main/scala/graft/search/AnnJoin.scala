@@ -173,7 +173,7 @@ object AnnJoin {
         explode(slice(array_sort(centArr), 1, nprobe)).as("pc"))
       .select(col("id"), col("v_q"),
         col("pc").getField("cluster_id").as("cluster_id"))
-    val cells = df.sparkSession.read.parquet(IvfIndex.dataDir(ivf.indexDir))
+    val cells = IvfIndex.readData(df.sparkSession, ivf.indexDir)
       .select(col(idCol).as("nbr"), col(vecCol).as("v_c"), col("cluster_id"))
     val spark = df.sparkSession
     import spark.implicits._

@@ -78,37 +78,17 @@ object FullText {
     writeAnalyzerMarker(docs.sparkSession, indexDir, cfg)
   }
 
-  private def analyzerMarkerPath(indexDir: String) =
-    new org.apache.hadoop.fs.Path(s"$indexDir/_analyzer")
-
   private def writeAnalyzerMarker(spark: SparkSession, indexDir: String,
-                                  cfg: graft.text.Analyzer.Config): Unit = {
-    val p = analyzerMarkerPath(indexDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try out.write(graft.text.Analyzer.fingerprint(cfg).getBytes("UTF-8"))
-    finally out.close()
-  }
+                                  cfg: graft.text.Analyzer.Config): Unit =
+    graft.core.Artifacts.writeSidecar(spark, indexDir, "_analyzer",
+      graft.text.Analyzer.fingerprint(cfg))
 
   /** The analysis-chain fingerprint the artifact was built under
     * (None: built by the raw-token [[build]], or pre-marker). */
   def analyzerFingerprint(spark: SparkSession,
-                          indexDir0: String): Option[String] = {
-    val p = analyzerMarkerPath(
-      AliasedIndex.resolveDir(spark, indexDir0))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try {
-        val buf = new java.io.ByteArrayOutputStream()
-        val tmp = new Array[Byte](4096)
-        var n = in.read(tmp)
-        while (n >= 0) { buf.write(tmp, 0, n); n = in.read(tmp) }
-        Some(new String(buf.toByteArray, "UTF-8"))
-      } finally in.close()
-    }
-  }
+                          indexDir0: String): Option[String] =
+    graft.core.Artifacts.readSidecar(spark,
+      AliasedIndex.resolveDir(spark, indexDir0), "_analyzer")
 
   /** Fail loudly when `cfg` is not the chain the artifact was built
     * under — the serve-side guard query paths call before analyzing

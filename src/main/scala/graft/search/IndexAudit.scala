@@ -158,9 +158,7 @@ object IndexAudit {
     // no root-level data/ dir, so an unresolved read throws — and an
     // audit of anything but the serving version would be the wrong debt
     val indexDir = AliasedIndex.resolveDir(spark, indexDir0)
-    // cached merged-schema scan (round 17): the audit re-reads the
-    // layout every pass, and the all-footers sweep is the cost
-    val data = IvfIndex.readDataMerged(spark, indexDir)
+    val data = IvfIndex.readData(spark, indexDir)
     // a PRE-radii index (no stored table — the loadRadii degradation
     // contract) is not corrupt, it is unmaintained: report every
     // populated cluster as missing (so Maintenance.planFull schedules
@@ -359,7 +357,7 @@ object IndexAudit {
                     indexDir0: String, idCol: String): DataFrame = {
     // aliased-root resolution — see [[radiiChecks]]
     val indexDir = AliasedIndex.resolveDir(spark, indexDir0)
-    val scan0 = IvfIndex.readDataMerged(spark, indexDir)
+    val scan0 = IvfIndex.readData(spark, indexDir)
     val scan =
       if (scan0.columns.contains("__ver")) scan0
       else scan0.withColumn("__ver", lit(null).cast("long"))

@@ -34,12 +34,7 @@ object IndexSync {
     * the collection re-uses keys. */
   def reconcileIvf(spark: SparkSession, corpus: DataFrame, idCol: String,
                    vecCol: String, model: IvfIndex.Model): (Long, Long) = {
-    // mergeSchema like every other versioned-layout read (rebalance /
-    // compactVersions / versionChecks): today's projection is id-only,
-    // but a plain read of an upserted (__ver partial-schema) layout
-    // infers a schema without __ver and would silently truncate if the
-    // projection ever widens
-    val artIds = IvfIndex.readDataMerged(spark, model.indexDir)
+    val artIds = IvfIndex.readData(spark, model.indexDir)
       .select(col(idCol)).distinct()
     val orphans = Tombstones.mask(artIds, spark, model.indexDir, idCol)
       .join(corpus.select(col(idCol)), Seq(idCol), "left_anti")
@@ -129,8 +124,7 @@ object IndexSync {
     val snap = spark.read.parquet(snapDir)
     val n = snap.count()
     if (n > 0) {
-      Tombstones.compact(spark, indexDir, IvfIndex.dataDir(indexDir),
-        Seq(idCol), partitionBy = Seq("cluster_id"))
+      IvfIndex.foldTombstones(spark, indexDir, idCol)
       // latest live row per key: a NULL stamp sorts lowest (epoch 0),
       // matching readLive's "unstamped is live" floor; ties (same
       // stamp) break on the vector struct comparison, deterministic.

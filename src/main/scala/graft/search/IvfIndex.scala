@@ -6,6 +6,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** IVF (inverted-file) vector index — the Spark-native replacement for the
@@ -49,8 +50,15 @@ object IvfIndex {
       .setFeaturesCol("__mlvec").setPredictionCol("cluster_id")
     val model = km.fit(
       TrainSample.forFit(withVec, vecCol, df.count(), trainSampleCap, nlist))
-    model.transform(withVec).drop("__mlvec")
-      .write.mode("overwrite").partitionBy("cluster_id").parquet(dataDir(indexDir))
+    val rows = model.transform(withVec).drop("__mlvec")
+    rows.write.mode("overwrite").partitionBy("cluster_id")
+      .parquet(dataDir(indexDir))
+    // a read takes the partition column's nullability and metadata from
+    // the pinned schema (data columns come back nullable regardless), so
+    // `cluster_id` is pinned plain, without the prediction's ML metadata
+    Artifacts.writeSchema(spark, dataDir(indexDir), StructType(rows.schema
+      .map(f => if (f.name == "cluster_id") StructField(f.name, f.dataType)
+        else f)))
     val centroids = model.clusterCenters.zipWithIndex
       .map { case (c, i) => (i, c.toArray.map(_.toFloat)) }
     import spark.implicits._
@@ -181,6 +189,7 @@ object IvfIndex {
     // covering-radius fold FIRST (see foldRadii for the ordering
     // argument) — the stored radii stay upper bounds through appends,
     // so range/exact serving needs no manual refresh
+    pinFor(newDf, model.indexDir, versioned = false)
     foldRadii(newDf, vecCol, model)
     newDf.withColumn("cluster_id",
         nearestCentroid(model, vecCol).getField("cluster_id"))
@@ -236,28 +245,59 @@ object IvfIndex {
       org.apache.spark.sql.types.ArrayType(
         org.apache.spark.sql.types.FloatType))))
 
-  /** The merged-schema scan of an upsert-capable data dir, with the
-    * ALL-footers inference cached by the dir's stat fingerprint — shared
-    * by [[versionedScan]] and every maintenance/audit/report read of a
-    * versioned layout ([[IndexAudit]], [[Maintenance]], [[IndexSync]],
-    * rebalance/compact verbs). Any write into the dir changes the
-    * fingerprint and misses the cache; an immutable (buildOnce /
-    * mutateOnce) dir infers once per JVM. */
-  private[graft] def readDataMerged(spark: SparkSession,
-                                    indexDir: String): DataFrame = {
-    val dd = dataDir(indexDir)
-    spark.read.schema(mergedDataSchema(spark, dd)).parquet(dd)
-  }
+  /** The data layout's scan — the one read of [[dataDir]], for serving
+    * ([[liveSlice]]) and every maintenance/audit/report read alike. Its
+    * schema is the one the layout's writers pinned ([[dataSchema]]), so
+    * the read runs no inference job, and a file written before a column
+    * existed reads that column as null. */
+  private[graft] def readData(spark: SparkSession,
+                              indexDir: String): DataFrame =
+    spark.read.schema(dataSchema(spark, indexDir)).parquet(dataDir(indexDir))
 
-  private def mergedDataSchema(
-      spark: SparkSession,
-      dd: String): org.apache.spark.sql.types.StructType =
-    mergedSchemaCache(spark, dd) {
-      spark.read.option("mergeSchema", "true").parquet(dd).schema
+  /** The layout's schema as pinned in [[dataDir]]'s
+    * [[Artifacts.SchemaFile]]: [[build]] pins the columns it wrote,
+    * [[upsertBatch]] adds a nullable `__ver` before its first versioned
+    * append, [[compactVersions]] drops it again. The layout is
+    * VERSIONED exactly when this schema has `__ver`. A layout written
+    * before the sidecar existed reads through [[legacyDataSchema]] until
+    * its next writer pins it. */
+  private def dataSchema(spark: SparkSession, indexDir: String): StructType =
+    Artifacts.readSchema(spark, dataDir(indexDir))
+      .getOrElse(legacyDataSchema(spark, indexDir))
+
+  /** An unpinned layout's schema, inferred from EVERY footer: only
+    * upsert-written files carry `__ver`, so one footer cannot answer. */
+  private def legacyDataSchema(spark: SparkSession,
+                               indexDir: String): StructType =
+    spark.read.option("mergeSchema", "true").parquet(dataDir(indexDir)).schema
+
+  /** The schema a writer works to: the pinned one, or for an unpinned
+    * layout the [[legacyDataSchema]], which this pins. */
+  private def writerSchema(spark: SparkSession,
+                           indexDir: String): StructType =
+    Artifacts.readSchema(spark, dataDir(indexDir)).getOrElse {
+      val s = legacyDataSchema(spark, indexDir)
+      Artifacts.writeSchema(spark, dataDir(indexDir), s)
+      s
     }
 
-  private val mergedSchemaCache =
-    new Artifacts.StatCache[org.apache.spark.sql.types.StructType]
+  /** Run before a batch lands: a batch column the layout lacks fails
+    * loudly, and a `versioned` write adds a nullable `__ver` to the
+    * pinned schema first. Pinning `__ver` BEFORE the rows that carry it
+    * keeps a crash safe: a sidecar naming a `__ver` no file has reads it
+    * as null, and the layout serves plain. The reverse order would leave
+    * versioned rows served without the latest-wins overlay. */
+  private def pinFor(batch: DataFrame, indexDir: String,
+                     versioned: Boolean): Unit = {
+    val spark = batch.sparkSession
+    val pinned = writerSchema(spark, indexDir)
+    val extra = batch.columns.filterNot(pinned.fieldNames.contains)
+    require(extra.isEmpty, s"IVF layout ${dataDir(indexDir)} has no " +
+      s"column ${extra.mkString(", ")}; its schema is ${pinned.simpleString}")
+    if (versioned && !pinned.fieldNames.contains("__ver"))
+      Artifacts.writeSchema(spark, dataDir(indexDir),
+        pinned.add("__ver", LongType))
+  }
 
   /** Squared L2 in double precision — the driver-side centroid
     * arithmetic of every probe and bound here. */
@@ -317,7 +357,7 @@ object IvfIndex {
     require(queries.nonEmpty && nprobes.nonEmpty)
     import org.apache.spark.sql.expressions.Window
     import spark.implicits._
-    val data = spark.read.parquet(dataDir(model.indexDir))
+    val data = readData(spark, model.indexDir)
     val qdf = queries.map { case (qid, qv) => (qid, qv.toSeq) }
       .toDF("qid", "qv")
     val ranks = queries.flatMap { case (qid, qv) =>
@@ -475,7 +515,7 @@ object IvfIndex {
     val cents = model.centroids.toSeq
       .map { case (id, c) => (id, c.toSeq) }
       .toDF("cluster_id", "__cent")
-    readDataMerged(spark, model.indexDir)
+    readData(spark, model.indexDir)
       .join(broadcast(cents), Seq("cluster_id"))
       .withColumn("__d",
         sqrt(VectorFunctions.l2Sq(col(vecCol), col("__cent"))))
@@ -545,7 +585,7 @@ object IvfIndex {
   def exactSearch(spark: SparkSession, model: Model, vecCol: String,
                   idCol: String, query: Array[Float], k: Int,
                   radii: Map[Int, Double]): DataFrame = {
-    // both phases slice one versioned-scan lookup
+    // both phases slice one data read
     val clusterScan = liveSlice(spark, model, idCol)
     val first = probeClusters(model, query, 1)
     // phase 1: k rows — a bounded collect (the query-vector handoff
@@ -605,15 +645,7 @@ object IvfIndex {
   def upsertBatch(batch: DataFrame, vecCol: String, model: Model,
                   idCol: String, ver: Long): Unit = {
     require(ver >= 1, s"upsertBatch: ver=$ver (base rows are version 0)")
-    // the marker goes down FIRST: a crash after it but before the
-    // append leaves a marker over an unversioned layout, which
-    // versionedScan detects (no __ver column) and serves plain — the
-    // reverse order would leave versioned rows served WITHOUT the
-    // supersession overlay (stale duplicates)
-    val m = versionedMarker(model.indexDir)
-    val fs = m.getFileSystem(batch.sparkSession
-      .sparkContext.hadoopConfiguration)
-    fs.create(m, true).close()
+    pinFor(batch, model.indexDir, versioned = true)
     // radius fold before the data append (the [[append]] discipline) —
     // an upsert can move a key into a cluster whose stored radius does
     // not yet cover its new vector
@@ -623,35 +655,6 @@ object IvfIndex {
       .withColumn("__ver", lit(ver))
       .write.mode("append").partitionBy("cluster_id")
       .parquet(dataDir(model.indexDir))
-  }
-
-  private def versionedMarker(indexDir: String) =
-    new Path(indexDir, "_graft_versioned")
-
-  /** The upserted layout's merged-schema scan, or None when the index
-    * was never upserted (no marker — one file stat, nothing else) or a
-    * crash left a marker over an unversioned layout (no `__ver`
-    * column: serve plain). Shared by every serve path that must not
-    * resurrect superseded rows. */
-  private def versionedScan(spark: SparkSession,
-                            indexDir: String): Option[DataFrame] = {
-    val m = versionedMarker(indexDir)
-    val fs = m.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(m)) None
-    else {
-      // The merged-schema inference reads EVERY file footer (it must —
-      // only upsert-written files carry `__ver`, so one footer cannot
-      // answer); the answer is cached by the data dir's stat
-      // fingerprint ([[mergedDataSchema]]), so a serve over an
-      // unchanged layout skips the sweep while any append/upsert/
-      // compact misses the cache and re-infers. A marker over an
-      // unversioned layout yields a __ver-less schema and serves plain.
-      val dd = dataDir(indexDir)
-      val sch = mergedDataSchema(spark, dd)
-      if (sch.fieldNames.contains("__ver"))
-        Some(spark.read.schema(sch).parquet(dd))
-      else None
-    }
   }
 
   /** Latest-version-wins overlay over a (pruned) slice of a versioned
@@ -679,18 +682,18 @@ object IvfIndex {
     * whose replacement lives in an UNPROBED cluster is dropped, not
     * resurrected — missing that key at partial probe is the standard
     * IVF recall contract, serving its overwritten vector would be
-    * corruption. Detection is one marker-file stat (written by
-    * [[upsertBatch]]), so a never-upserted index pays nothing — not even
-    * a schema merge; [[compactVersions]] returns it to the plain path.
-    * The versioned-scan lookup runs once per call of this method, so a
-    * caller slicing twice (two-phase [[exactSearch]]) shares it. */
+    * corruption. Detection is the pinned schema ([[dataSchema]]): a
+    * never-upserted index pays no overlay, and [[compactVersions]]
+    * returns it to the plain path. The schema is read once per call of
+    * this method, so a caller slicing twice (two-phase [[exactSearch]])
+    * shares it. */
   private def liveSlice(spark: SparkSession, model: Model,
                         idCol: String): Seq[Int] => DataFrame = {
-    val vs = versionedScan(spark, model.indexDir)
+    val data = readData(spark, model.indexDir)
+    val versioned = data.columns.contains("__ver")
     clusters => {
-      val pruned = vs.getOrElse(spark.read.parquet(dataDir(model.indexDir)))
-        .where(col("cluster_id").isin(clusters: _*))
-      val scan = vs.map(applyLatest(_, pruned, idCol)).getOrElse(pruned)
+      val pruned = data.where(col("cluster_id").isin(clusters: _*))
+      val scan = if (versioned) applyLatest(data, pruned, idCol) else pruned
       Tombstones.mask(scan, spark, model.indexDir, idCol)
     }
   }
@@ -698,7 +701,7 @@ object IvfIndex {
   /** Fold upsert history physically: keep only each key's latest
     * version (the row keeps ITS OWN cluster assignment — the new
     * vector's cluster, not the stale row's), drop the version column
-    * and the versioned marker, crash-safe swap, partitioning
+    * from the rows and the pinned schema, crash-safe swap, partitioning
     * preserved. After this, plain [[search]] serves the index again
     * with no overlay. */
   def compactVersions(spark: SparkSession, model: Model,
@@ -711,23 +714,17 @@ object IvfIndex {
     val fs = dd.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val old = new Path(dir + "__ver_old")
     Artifacts.recoverAside(fs, dd, old)
-    val scan = readDataMerged(spark, model.indexDir)
-    if (!scan.columns.contains("__ver")) {
-      fs.delete(versionedMarker(model.indexDir), false)
-      return
-    }
+    val scan = readData(spark, model.indexDir)
+    if (!scan.columns.contains("__ver")) return
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col(idCol))
       .orderBy(coalesce(col("__ver"), lit(0L)).desc)
     val latest = scan.withColumn("__rn", row_number().over(w))
       .where(col("__rn") === 1).drop("__rn", "__ver")
-    Artifacts.replaceDir(fs, dd, new Path(dir + "__ver_tmp"), old) {
-      latest.write.mode("overwrite").partitionBy("cluster_id").parquet(_)
+    Artifacts.replaceDir(fs, dd, new Path(dir + "__ver_tmp"), old) { tmp =>
+      latest.write.mode("overwrite").partitionBy("cluster_id").parquet(tmp)
+      Artifacts.writeSchema(spark, tmp, latest.schema)
     }
-    // marker LAST: a crash before this line leaves marker-over-folded-
-    // layout, which versionedScan detects (no __ver column) and serves
-    // plain — correct either way
-    fs.delete(versionedMarker(model.indexDir), false)
   }
 
   /** Rebalance a skew-drifted index WITHOUT a full rebuild (Milvus
@@ -771,10 +768,8 @@ object IvfIndex {
     val fs = cd.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val oldCentroids = new Path(cdir + "__rebal_old")
     Artifacts.recoverAside(fs, cd, oldCentroids)
-    // merged-schema reads throughout: an upserted layout carries a
-    // __ver column on some files only, and a plain read could infer a
-    // schema without it — silently flattening version history
-    val data = readDataMerged(spark, model.indexDir)
+    val data = spark.read.schema(writerSchema(spark, model.indexDir))
+      .parquet(dataDir(model.indexDir))
     val hot = data.groupBy(col("cluster_id"))
       .agg(count(lit(1)).as("sz")).where(col("sz") > sizeCap)
       .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
@@ -785,8 +780,7 @@ object IvfIndex {
     hot.foreach { case (cid, sz) =>
       val pieces = math.max(2, math.ceil(sz.toDouble / sizeCap).toInt)
       // partition-pruned read: exactly the hot list's files
-      val rows = readDataMerged(spark, model.indexDir)
-        .where(col("cluster_id") === cid).drop("cluster_id")
+      val rows = data.where(col("cluster_id") === cid).drop("cluster_id")
       val withVec = rows.withColumn("__mlvec", array_to_vector(col(vecCol)))
       val km = new KMeans()
         .setK(pieces).setSeed(seed).setMaxIter(maxIter)
@@ -827,8 +821,7 @@ object IvfIndex {
         org.apache.spark.mllib.linalg.Vectors.dense(
           v.map(_.toDouble).toArray)))
     }
-    readDataMerged(spark, model.indexDir)
-      .where(col("cluster_id").isin(hot.map(_._1): _*))
+    data.where(col("cluster_id").isin(hot.map(_._1): _*))
       .drop("cluster_id")
       .withColumn("cluster_id", assignUdf(col(vecCol)))
       .write.mode("append").partitionBy("cluster_id")
@@ -866,9 +859,21 @@ object IvfIndex {
     * for this index family. */
   def compactTombstones(spark: SparkSession, model: Model,
                         idCol: String): Unit = {
-    Tombstones.compact(spark, model.indexDir, dataDir(model.indexDir),
-      Seq(idCol), partitionBy = Seq("cluster_id"))
+    foldTombstones(spark, model.indexDir, idCol)
     Tombstones.clear(spark, model.indexDir)
+  }
+
+  /** [[Tombstones.compact]] of the data layout, which reads the pinned
+    * schema and carries it through the swap; an unpinned layout is
+    * pinned first. The tombstones stay recorded. */
+  private[search] def foldTombstones(spark: SparkSession, indexDir: String,
+                                     idCol: String): Unit = {
+    Artifacts.recoverAside(new Path(indexDir)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration),
+      new Path(dataDir(indexDir)), new Path(dataDir(indexDir) + "__tomb_old"))
+    writerSchema(spark, indexDir)
+    Tombstones.compact(spark, indexDir, dataDir(indexDir), Seq(idCol),
+      partitionBy = Seq("cluster_id"))
   }
 
   // --- Root-addressed maintenance: the alias-aware DEFAULT forms ---

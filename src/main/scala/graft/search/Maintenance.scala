@@ -51,7 +51,7 @@ object Maintenance {
       .select(col("check_name").as("k"), col("value").as("v"))
     // empty data dir: zero groups -> count 0, sum/max NULL -> coalesce
     // to zeros (no action triggers on an empty index) instead of an NPE
-    val stats = IvfIndex.readDataMerged(spark, indexDir)
+    val stats = IvfIndex.readData(spark, indexDir)
       .groupBy(col("cluster_id")).agg(count(lit(1)).as("sz"))
       .agg(coalesce(sum(col("sz")), lit(0L)).as("total"),
         coalesce(max(col("sz")), lit(0L)).as("mx"),
@@ -278,7 +278,7 @@ object Maintenance {
     // twice). artIds and corpusIds are both key-unique, so the
     // full-outer is 1:1 and a null on either side IS the drift.
     val artIds = Tombstones.mask(
-      IvfIndex.readDataMerged(spark, indexDir)
+      IvfIndex.readData(spark, indexDir)
         .select(col(idCol)).distinct(),
       spark, indexDir, idCol)
     val corpusIds = liveCorpus.select(col(idCol))

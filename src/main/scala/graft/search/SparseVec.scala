@@ -87,39 +87,25 @@ object SparseVec {
   // detects it, so ONE API covers both layouts.
   // ---------------------------------------------------------------------
 
-  private def bucketsMarker(indexDir: String) =
-    new org.apache.hadoop.fs.Path(indexDir, "_graft_dim_buckets")
+  private val BucketsMarker = "_graft_dim_buckets"
 
   /** Bucket count of a dim-bucketed layout; None = per-dim layout. */
   def bucketCount(spark: org.apache.spark.sql.SparkSession,
-                  indexDir: String): Option[Int] = {
-    val p = bucketsMarker(indexDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try Some(new String(
-        org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8")
-        .trim.toInt)
-      finally in.close()
-    }
-  }
+                  indexDir: String): Option[Int] =
+    graft.core.Artifacts.readSidecar(spark, indexDir, BucketsMarker)
+      .map(_.trim.toInt)
 
   private[graft] def writeBucketsMarker(
       spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, b: Int): Unit = {
-    val p = bucketsMarker(indexDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try out.write(b.toString.getBytes("UTF-8")) finally out.close()
-  }
+      indexDir: String, b: Int): Unit =
+    graft.core.Artifacts.writeSidecar(spark, indexDir, BucketsMarker,
+      b.toString)
 
   private[graft] def clearBucketsMarker(
       spark: org.apache.spark.sql.SparkSession,
       indexDir: String): Unit = {
-    val p = bucketsMarker(indexDir)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .delete(p, false)
+    val p = new org.apache.hadoop.fs.Path(indexDir, BucketsMarker)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, false)
     ()
   }
 

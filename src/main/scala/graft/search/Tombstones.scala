@@ -3,6 +3,7 @@ package graft.search
 import graft.core.Artifacts
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Delete propagation for derived serving artifacts — segment-tombstone
@@ -68,6 +69,22 @@ object Tombstones {
   def exist(spark: SparkSession, indexDir: String): Boolean =
     readDir(spark, indexDir).nonEmpty
 
+  /** A set's one long key column, as its first [[record]] pinned it
+    * ([[Artifacts.SchemaFile]] inside the set, so every swap of the set
+    * moves it along). Every file of the set is written under that name,
+    * whatever `idCol` a later caller passes. */
+  private def keySchema(spark: SparkSession, d: String): StructType =
+    Artifacts.readSchema(spark, d).getOrElse(legacyKeySchema(spark, d))
+
+  /** A set recorded before its key column was pinned: inferred from a
+    * footer, as it was written. Its next [[record]] pins it. */
+  private def legacyKeySchema(spark: SparkSession, d: String): StructType =
+    spark.read.parquet(d).schema
+
+  /** The keys stored in set `d`, under the pinned name (not distinct). */
+  private def stored(spark: SparkSession, d: String): DataFrame =
+    spark.read.schema(keySchema(spark, d)).parquet(d)
+
   /** Record a batch of deleted keys: appends `ids` (single key column,
     * cast to long) under `indexDir/deletes/`. Re-deleting an id is
     * harmless — [[table]] reads the key set distinct. Aliased-root
@@ -79,12 +96,18 @@ object Tombstones {
     * append into a fresh live dir while the full set sat aside would
     * SHADOW it for every [[readDir]]-routed reader. */
   def record(ids: DataFrame, indexDir0: String, idCol: String): Unit = {
-    val indexDir = AliasedIndex.resolveDir(ids.sparkSession, indexDir0)
+    val spark = ids.sparkSession
+    val indexDir = AliasedIndex.resolveDir(spark, indexDir0)
     val dDir = deletesDir(indexDir)
-    Artifacts.recoverAside(fs(ids.sparkSession, indexDir), new Path(dDir),
-      new Path(dDir + "__tomb_old"))
-    ids.select(col(idCol).cast("long").as(idCol))
+    val f = fs(spark, indexDir)
+    Artifacts.recoverAside(f, new Path(dDir), new Path(dDir + "__tomb_old"))
+    val pinned = Artifacts.readSchema(spark, dDir)
+    val key = pinned.orElse(Option.when(f.exists(new Path(dDir)))(
+        legacyKeySchema(spark, dDir)))
+      .getOrElse(StructType(Seq(StructField(idCol, LongType))))
+    ids.select(col(idCol).cast("long").as(key.fieldNames.head))
       .write.mode("append").parquet(dDir)
+    if (pinned.isEmpty) Artifacts.writeSchema(spark, dDir, key)
   }
 
   /** The distinct tombstone key set (empty 1-column frame if none). */
@@ -93,10 +116,8 @@ object Tombstones {
       case None =>
         spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField(idCol,
-              org.apache.spark.sql.types.LongType, nullable = false))))
-      case Some(d) => spark.read.parquet(d).toDF(idCol).distinct()
+          StructType(Seq(StructField(idCol, LongType, nullable = false))))
+      case Some(d) => stored(spark, d).toDF(idCol).distinct()
     }
 
   /** Serve-time mask: drop `artifact` rows whose `idCol` is tombstoned
@@ -106,8 +127,8 @@ object Tombstones {
     readDir(spark, indexDir) match {
       case None => artifact
       case Some(d) => artifact.join(
-        broadcast(spark.read.parquet(d).toDF(idCol).distinct()),
-        Seq(idCol), "left_anti")
+        broadcast(stored(spark, d).toDF(idCol).distinct()), Seq(idCol),
+        "left_anti")
     }
 
   /** [[mask]] with an explicit tombstone frame (for artifact scans whose
@@ -122,7 +143,7 @@ object Tombstones {
   def count(spark: SparkSession, indexDir: String): Long =
     readDir(spark, indexDir) match {
       case None => 0L
-      case Some(d) => spark.read.parquet(d).distinct().count()
+      case Some(d) => stored(spark, d).distinct().count()
     }
 
   /** Fold the tombstones into one artifact dir: rewrite `artifactDir`
@@ -130,6 +151,8 @@ object Tombstones {
     * folds on BOTH src and dst; per-row artifacts on their one id),
     * preserving `partitionBy` layout (the IVF data dir's cluster_id
     * partitioning is its index structure — a fold must not flatten it).
+    * An artifact whose writer pinned its schema ([[Artifacts.SchemaFile]])
+    * is read with it, and the rewrite carries the sidecar along.
     * Recoverable, single-writer swap ([[Artifacts.replaceDir]] via
     * `__tomb_tmp`/`__tomb_old`); the [[Artifacts.recoverAside]] probe at
     * the top of every compact restores a fold that crashed between its
@@ -143,15 +166,12 @@ object Tombstones {
     Artifacts.recoverAside(fs(spark, artifactDir), new Path(artifactDir),
       new Path(artifactDir + "__tomb_old"))
     if (!exist(spark, indexDir)) return
-    val dead = spark.read.parquet(deletesDir(indexDir))
-      .toDF("__dead_id").distinct()
-    // merged-schema read: an upserted layout carries __ver on some
-    // files only — a plain read could infer a schema without it and
-    // the rewrite would silently flatten version history
-    val live0 = keyCols.foldLeft(
-      spark.read.option("mergeSchema", "true").parquet(artifactDir)) {
-      (df, kc) =>
-        df.join(broadcast(dead), df(kc) === dead("__dead_id"), "left_anti")
+    val dead = table(spark, indexDir, "__dead_id")
+    val pinned = Artifacts.readSchema(spark, artifactDir)
+    val scan = pinned.fold(spark.read.parquet(artifactDir))(
+      spark.read.schema(_).parquet(artifactDir))
+    val live0 = keyCols.foldLeft(scan) { (df, kc) =>
+      df.join(broadcast(dead), df(kc) === dead("__dead_id"), "left_anti")
     }
     // `sortWithin`: layouts whose row-group min/max tightness IS the
     // index structure (the dim-bucketed postings: dim-sorted files
@@ -171,6 +191,7 @@ object Tombstones {
       val w = live.write.mode("overwrite")
       (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
         .parquet(tmp)
+      pinned.foreach(Artifacts.writeSchema(spark, tmp, _))
     }
   }
 
@@ -205,14 +226,16 @@ object Tombstones {
     val dDir = deletesDir(indexDir)
     Artifacts.recoverAside(fs(spark, indexDir), new Path(dDir),
       new Path(dDir + "__tomb_old"))
-    val k = keys.select(col(idCol).cast("long").as(idCol)).distinct()
-    val existing = spark.read.parquet(dDir).toDF(idCol).distinct()
-    val hit = existing.join(k, Seq(idCol), "left_semi").count()
+    val existing = stored(spark, dDir).distinct()
+    val name = existing.columns.head
+    val k = keys.select(col(idCol).cast("long").as(name)).distinct()
+    val hit = existing.join(k, Seq(name), "left_semi").count()
     if (hit == 0L) return 0L
-    val kept = existing.join(k, Seq(idCol), "left_anti")
+    val kept = existing.join(k, Seq(name), "left_anti")
     Artifacts.replaceDir(fs(spark, indexDir), new Path(dDir),
-      new Path(dDir + "__tomb_tmp"), new Path(dDir + "__tomb_old")) {
-      kept.write.mode("overwrite").parquet(_)
+      new Path(dDir + "__tomb_tmp"), new Path(dDir + "__tomb_old")) { tmp =>
+      kept.write.mode("overwrite").parquet(tmp)
+      Artifacts.writeSchema(spark, tmp, existing.schema)
     }
     hit
   }

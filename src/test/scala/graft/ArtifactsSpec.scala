@@ -1,13 +1,15 @@
 package graft
 
 import graft.core.{Artifacts, Tables}
-import graft.search.{GraphAnn, IvfIndex, TermIndex}
+import graft.search.{GraphAnn, IvfIndex, TermIndex, Tombstones}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 /** The storage protocols shared by every index artifact: the stat-keyed
-  * caches ([[Artifacts.StatCache]]) and the rename-aside directory swap
-  * ([[Artifacts.replaceDir]] / [[Artifacts.recoverAside]]). */
+  * caches ([[Artifacts.StatCache]]), the rename-aside directory swap
+  * ([[Artifacts.replaceDir]] / [[Artifacts.recoverAside]]) and the
+  * schema sidecar a layout's writer pins ([[Artifacts.writeSchema]]). */
 class ArtifactsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -147,7 +149,75 @@ class ArtifactsSpec extends SparkSpec {
         "the verb must restore the aside copy and complete its swap")
       assert(s.serve(crashed) == expected,
         "a recovered run must serve what a crash-free run serves")
+      assert(Artifacts.readSchema(spark, s.live(crashed)) ==
+          Artifacts.readSchema(spark, s.live(clean)),
+        "a recovered run must pin what a crash-free run pins")
     }
+  }
+
+  private def upsertReversed(d: String, ver: Long): Unit =
+    IvfIndex.upsertBatch(corpus.where(col("vec_id") % 4 === ver)
+        .withColumn("embedding", reverse(col("embedding"))),
+      "embedding", IvfIndex.load(spark, d), "vec_id", ver)
+
+  test("an upsert killed after pinning __ver, before its rows landed, " +
+      "serves the unversioned rows, and the next upsert serves as a " +
+      "crash-free one") {
+    val base = freshDir("pinned_ver_base")
+    IvfIndex.build(corpus, "embedding", base, nlist = 2)
+    val clean = freshDir("pinned_ver_clean")
+    val crashed = freshDir("pinned_ver_crashed")
+    Artifacts.copyLocalDir(base, clean)
+    Artifacts.copyLocalDir(base, crashed)
+    // the sidecar upsertBatch writes before its first versioned append
+    val dd = IvfIndex.dataDir(crashed)
+    Artifacts.writeSchema(spark, dd,
+      Artifacts.readSchema(spark, dd).get.add("__ver", LongType))
+    assert(ivfServe(crashed) == ivfServe(base))
+    upsertReversed(clean, ver = 1)
+    upsertReversed(crashed, ver = 1)
+    assert(ivfServe(crashed) == ivfServe(clean))
+  }
+
+  test("a schema sidecar's tmp file left by a killed write is never read") {
+    val d = freshDir("sidecar_tmp")
+    IvfIndex.build(corpus, "embedding", d, nlist = 2)
+    val expected = ivfServe(d)
+    val dd = IvfIndex.dataDir(d)
+    val pinned = Artifacts.readSchema(spark, dd)
+    // a write killed mid-file: a torn tmp beside the live sidecar
+    java.nio.file.Files.write(
+      java.nio.file.Paths.get(dd, s".${Artifacts.SchemaFile}.tmp"),
+      """{"type":"struct","fie""".getBytes("UTF-8"))
+    assert(Artifacts.readSchema(spark, dd) == pinned)
+    assert(ivfServe(d) == expected)
+    upsertReversed(d, ver = 1)
+    assert(Artifacts.readSchema(spark, dd).get.fieldNames.contains("__ver"))
+  }
+
+  test("an index written before schema sidecars serves as before, and " +
+      "its next writers pin the data and tombstone schemas") {
+    val pinnedDir = freshDir("legacy_pinned")
+    val m = IvfIndex.build(corpus, "embedding", pinnedDir, nlist = 2)
+    upsertReversed(pinnedDir, ver = 1)
+    IvfIndex.delete(Seq(5L, 9L).toDF("vec_id"), m, "vec_id")
+    val legacy = freshDir("legacy_unpinned")
+    Artifacts.copyLocalDir(pinnedDir, legacy)
+    val sidecars = Seq(IvfIndex.dataDir(legacy),
+      Tombstones.deletesDir(legacy)).map(new Path(_, Artifacts.SchemaFile))
+    assert(sidecars.forall(fs.exists))
+    sidecars.foreach(fs.delete(_, false))
+    assert(ivfServe(legacy) == ivfServe(pinnedDir))
+    assert(Tombstones.count(spark, legacy) == 2)
+    for (d <- Seq(pinnedDir, legacy)) {
+      upsertReversed(d, ver = 2)
+      Tombstones.record(Seq(13L).toDF("vec_id"), d, "vec_id")
+    }
+    assert(sidecars.forall(fs.exists))
+    assert(IvfIndex.readData(spark, legacy).schema ==
+      IvfIndex.readData(spark, pinnedDir).schema)
+    assert(ivfServe(legacy) == ivfServe(pinnedDir))
+    assert(Tombstones.count(spark, legacy) == 3)
   }
 
   test("a registry IVF fixture whose build was killed mid-write is " +

@@ -1204,10 +1204,9 @@ class OperatorSpec extends SparkSpec {
   }
 
   test("IVF rebalance preserves version history (searchLatest composes)") {
-    // upsert first, rebalance second: the hot-row reassignment and the
-    // compaction-era reads are all merged-schema, so the __ver column
-    // (and the marker) survive the rewrite and latest-wins serving
-    // still suppresses the superseded row afterwards
+    // upsert first, rebalance second: the hot-row reassignment reads
+    // the pinned schema, so the __ver column survives the rewrite and
+    // latest-wins serving still suppresses the superseded row afterwards
     val r = new scala.util.Random(41)
     val corpus = ((0 until 40).map(i =>
         (i.toLong, Array.fill(4)((r.nextGaussian() * 0.1).toFloat))) ++

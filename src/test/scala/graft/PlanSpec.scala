@@ -125,6 +125,49 @@ class PlanSpec extends SparkSpec {
     assert(jobs == 0, s"building the plans ran $jobs Spark jobs")
   }
 
+  test("IVF search builds without a Spark job, fresh and after an upsert " +
+      "and a delete: pinned data and tombstone schemas, no inference") {
+    import org.apache.spark.JobCounter
+    import spark.implicits._
+    val idx = "/tmp/graft_test_plan_ivf_jobs"
+    val p = new org.apache.hadoop.fs.Path(idx)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+    val r = new scala.util.Random(5)
+    val corpus = (0L until 64L).map(i =>
+      (i, Array.fill(8)(r.nextGaussian().toFloat))).toDF("vec_id", "embedding")
+    val q = Array.fill(8)(r.nextGaussian().toFloat)
+    val m = graft.search.IvfIndex.build(corpus, "embedding", idx, nlist = 4)
+    def searchJobs(): Int = JobCounter.count(spark.sparkContext) {
+      graft.search.IvfIndex.search(spark, m, "embedding", "vec_id", q,
+        k = 5, nprobe = 2)
+    }._2
+    val fresh = searchJobs()
+    assert(fresh == 0, s"a fresh index's search ran $fresh jobs")
+    graft.search.IvfIndex.upsertBatch(corpus.where(col("vec_id") < 4),
+      "embedding", m, "vec_id", ver = 1)
+    graft.search.IvfIndex.delete(Seq(5L).toDF("vec_id"), m, "vec_id")
+    val written = searchJobs()
+    assert(written == 0,
+      s"the search after upsertBatch + delete ran $written jobs")
+  }
+
+  test("BM25 over a tombstoned term dir reads the deletes set without " +
+      "inferring its schema") {
+    import org.apache.spark.JobCounter
+    import spark.implicits._
+    val idx = "/tmp/graft_test_plan_bm25_jobs"
+    val p = new org.apache.hadoop.fs.Path(idx)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+    graft.search.TermIndex.build(Seq((0L, "scan the filter"),
+      (1L, "merge filter join"), (2L, "scan scan")).toDF("id", "text"),
+      "id", "text", idx)
+    graft.search.Tombstones.record(Seq(2L).toDF("id"), idx, "id")
+    val (_, jobs) = JobCounter.count(spark.sparkContext) {
+      graft.search.Bm25Index.search(spark, idx, Seq("scan", "filter"), 5)
+    }
+    assert(jobs == 0, s"building the masked BM25 search ran $jobs jobs")
+  }
+
   test("clustering compaction: window predicate reaches the clustered scan") {
     val p = plan("clustering_compaction")
     assert(p.contains("GreaterThanOrEqual(ts") && p.contains("LessThan(ts"),

@@ -33,6 +33,22 @@ class TombstonesSpec extends SparkSpec {
       Tombstones.count(spark, dir) == 0)
   }
 
+  test("a set recorded under two key names masks every id by either " +
+      "name") {
+    val dir = freshDir("two_names")
+    Tombstones.record(Seq(1L, 2L).toDF("vec_id"), dir, "vec_id")
+    Tombstones.record(Seq(3L).toDF("id"), dir, "id")
+    assert(Tombstones.count(spark, dir) == 3)
+    val df = (0L until 6L).toDF("n")
+    for (name <- Seq("vec_id", "id")) {
+      val live = Tombstones.mask(df.toDF(name), spark, dir, name)
+        .as[Long].collect().sorted.toSeq
+      assert(live == Seq(0L, 4L, 5L), s"masked by $name")
+      assert(Tombstones.table(spark, dir, name).as[Long].collect().sorted
+        .toSeq == Seq(1L, 2L, 3L))
+    }
+  }
+
   test("IVF: delete masks stale layout; compact folds and clears") {
     val dir = freshDir("ivf")
     val r = new scala.util.Random(11)
