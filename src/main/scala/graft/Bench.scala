@@ -44,15 +44,14 @@ object Bench {
         override def onJobStart(
             js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
           jobCount.incrementAndGet()
-          // the registry sets no job description, so a job without one
-          // is named by its first stage, whose name is the call site
+          // the description is the entry `time` runs (inherited by
+          // broadcast and subquery threads); the first stage's name is
+          // the call site
           if (sys.env.contains("SPARK_GRAFT_BENCH_TRACE"))
             System.err.println("[job] " + Option(js.properties)
               .flatMap(p => Option(p.getProperty("spark.job.description")))
-              .filter(_.nonEmpty)
-              .orElse(js.stageInfos.sortBy(_.stageId).headOption
-                .map(_.name))
-              .getOrElse("?"))
+              .getOrElse("?") + ": " + js.stageInfos.sortBy(_.stageId)
+              .headOption.map(_.name).getOrElse("?"))
           ()
         }
       })
@@ -76,8 +75,10 @@ object Bench {
              fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val j0 = drainedJobCount(drain = countJobs)
       val t0 = System.nanoTime()
+      spark.sparkContext.setJobDescription(name)
       try fn(spark, sfDir).count()
       catch { case _: Throwable => failed += name }
+      finally spark.sparkContext.setJobDescription(null)
       val dt = (System.nanoTime() - t0) / 1e9
       lastJobs(name) = drainedJobCount(drain = countJobs) - j0
       // drop caches OUTSIDE the timed window: several operators cache()

@@ -326,10 +326,10 @@ object Fixtures {
         topN = 8)
     }
 
-  /** The dim-partitioned sparse index with WAND bounds over the
+  /** The dim-bucketed sparse index with WAND bounds over the
     * top-8 sparse vectors; returns its dir. */
   def sparseWand(s: SparkSession, dir: String): String =
-    dirOnce(s, tmp("sparsewand", dir)) {
+    dirOnce(s, tmp("sparsewand_b16", dir)) {
       SparseVec.build(Tables.embeddings(s, dir), "vec_id", "embedding",
         topN = 8, _)
     }
@@ -337,7 +337,7 @@ object Fixtures {
   /** The full-text index with WAND bounds over the documents; returns
     * its dir. */
   def fullTextWand(s: SparkSession, dir: String): String =
-    dirOnce(s, tmp("ftwand", dir)) {
+    dirOnce(s, tmp("ftwand_b16", dir)) {
       FullText.build(Tables.documents(s, dir), "doc_id", "text", _)
     }
 
@@ -345,7 +345,7 @@ object Fixtures {
     * [[sparseWand]] so the panel measures the tier its thunk serves;
     * returns its dir. */
   def routedSparseWand(s: SparkSession, dir: String): String =
-    dirOnce(s, s"${tmp("routedsp", dir)}/sparse") {
+    dirOnce(s, s"${tmp("routedsp_b16", dir)}/sparse") {
       SparseVec.build(Tables.embeddings(s, dir), "vec_id", "embedding",
         topN = 8, _)
     }

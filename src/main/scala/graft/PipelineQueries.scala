@@ -1087,9 +1087,9 @@ object PipelineQueries {
       // extended panel: the shared v2 rows plus the sparse tier's
       // measured row (cost = posting rows under the panel query's dims)
       def panelSp() = {
-        val spCost = s.read.parquet(SparseVec.postingsDir(spIdx))
+        val spCost = SparseVec.readPostings(s, spIdx, "vec_id")
           .where(col("dim").isin(qp.map(_._1): _*)).count()
-        val spRows = s.read.parquet(SparseVec.postingsDir(spIdx)).count()
+        val spRows = SparseVec.readPostings(s, spIdx, "vec_id").count()
         routerPanelV2(s, dir).unionByName(
           Seq(("sparse_wand", 1.0, spCost, spRows * 16L))
             .toDF("tier", "recall", "cost", "mem_bytes"))
@@ -1206,7 +1206,7 @@ object PipelineQueries {
       // total counts were two separate scans, paid on every panel
       // evaluation).
       def panelSp() = {
-        val agg = s.read.parquet(SparseVec.postingsDir(spIdx))
+        val agg = SparseVec.readPostings(s, spIdx, "vec_id")
           .agg(
             coalesce(sum(when(col("dim").isin(qDims: _*), 1L)
               .otherwise(0L)), lit(0L)).as("hit"),
@@ -5242,7 +5242,7 @@ object PipelineQueries {
       }
       // sparse family: its own postings artifact + tombstones (%17=3)
       // — the round-12 debt row completing the family matrix
-      val sparseDir = s"/tmp/graft_mplan_sparse_${math.abs(dir.hashCode)}"
+      val sparseDir = s"/tmp/graft_mplan_sparse_b16_${math.abs(dir.hashCode)}"
       rebuildOnce(s, sparseDir) {
         graft.search.SparseVec.build(e, "vec_id", "embedding", topN = 8,
           sparseDir)

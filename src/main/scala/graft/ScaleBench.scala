@@ -346,12 +346,9 @@ object ScaleBench {
       // WAND decade corpus: the standard docs plus a stopword in EVERY
       // doc ('the', df=n — its posting list is the corpus-sized cost
       // the pruned serve must NOT pay) and a rare term planted in 10
-      // docs. Vocab stays ~5000 (bounded): the per-dim posting
-      // DIRECTORY layout is for bounded dim spaces (learned-sparse /
-      // curated lexical vocab) — a corpus-grown vocabulary would write
-      // one directory per term, which is this round's measured layout
-      // boundary (see SCALE.md); the dictionary row below measures the
-      // NUMBERING at growing vocab without paying that write.
+      // docs. Vocab stays ~5000 (bounded); the bucketed rows below
+      // serve a corpus-grown vocabulary, and the dictionary row
+      // measures the NUMBERING at growing vocab alone.
       lazy val wandDocs = materialize(
         docs.withColumn("text",
           concat(col("text"), lit(" the"),
@@ -359,7 +356,7 @@ object ScaleBench {
               .otherwise(lit("")))),
         s"/tmp/graft_scale/wanddocs_$n")
       def ensureWandIndex(): String = {
-        val idx = s"/tmp/graft_scale/ftwand_$n"
+        val idx = s"/tmp/graft_scale/ftwand_b16_$n"
         QueryDsl.mutateOnce(spark, idx) {
           graft.search.FullText.build(wandDocs, "doc_id", "text", idx)
         }
@@ -407,30 +404,29 @@ object ScaleBench {
               Seq("rarex", "the"), 5, checkLossless = false)
             .select("rows_scored").as[Long].head()
         }),
-        // the BUCKETED layout at corpus-grown vocabulary — the corpus
-        // that broke the per-dim layout (vocab ≈ 5000 + n from a
-        // unique token per doc; the first rehearsal spent 152 s at
-        // n=4000 writing one dir per term). B=64 buckets: build is a
-        // linear write, serve opens ≤2 bucket dirs and row-group
-        // prunes inside them
-        "fulltext_bucketed_build (vocab≈n, B=64)" -> (() => {
-          val dir = s"/tmp/graft_scale/ftheaps_$n"
+        // the bucketed layout at corpus-grown vocabulary — the corpus
+        // that broke the retired per-dim layout (vocab ≈ 5000 + n from
+        // a unique token per doc; the first rehearsal spent 152 s at
+        // n=4000 writing one dir per term): build is a linear write,
+        // serve opens ≤2 bucket dirs and row-group prunes inside them
+        "fulltext_bucketed_build (vocab≈n)" -> (() => {
+          val dir = s"/tmp/graft_scale/ftheaps_b16_$n"
           val p = new org.apache.hadoop.fs.Path(dir)
           p.getFileSystem(spark.sparkContext.hadoopConfiguration)
             .delete(p, true)
           graft.search.FullText.build(
             docs.withColumn("text",
               concat(col("text"), lit(" the u"), col("doc_id"))),
-            "doc_id", "text", dir, buckets = 64)
+            "doc_id", "text", dir)
           spark.read.parquet(s"$dir/dict").count()
         }),
         "fulltext_bucketed_serve (rare+stopword, k=1)" -> (() => {
-          val dir = s"/tmp/graft_scale/ftheaps_$n"
+          val dir = s"/tmp/graft_scale/ftheaps_b16_$n"
           QueryDsl.mutateOnce(spark, dir) {
             graft.search.FullText.build(
               docs.withColumn("text",
                 concat(col("text"), lit(" the u"), col("doc_id"))),
-              "doc_id", "text", dir, buckets = 64)
+              "doc_id", "text", dir)
           }
           graft.search.FullText.searchWand(spark, dir,
             Seq("u7", "the"), 1).count()
@@ -616,7 +612,7 @@ object ScaleBench {
               textDir)
           }
           // sparse family (round 12): postings + 1% tombstone debt
-          val sparseDir = s"/tmp/graft_scale/mplan_sparse_$n"
+          val sparseDir = s"/tmp/graft_scale/mplan_sparse_b16_$n"
           QueryDsl.mutateOnce(spark, sparseDir) {
             graft.search.SparseVec.build(emb, "vec_id", "embedding",
               topN = 8, sparseDir)
@@ -1375,7 +1371,7 @@ object ScaleBench {
       // second 256 k+ build buys nothing but wall-clock)
       val noWarmup = Set("graphann_candidates (auto nlist)",
         "fulltext_dict_numbering (distributed, vocab grows)",
-        "fulltext_bucketed_build (vocab≈n, B=64)",
+        "fulltext_bucketed_build (vocab≈n)",
         "graphann_lsh_candidates (auto bands)",
         "ivf_rebalance (cap=max/2)",
         "ivf_dircopy (rebalance setup baseline)",

@@ -970,7 +970,7 @@ object TextQueries {
     * ([[graft.search.FullText]]) — the architecture behind
     * `bm25_sparse_duality`, productionized: build writes the factored
     * BM25 postings in [[graft.search.SparseVec]]'s exact layout
-    * (dim-partitioned under `postings/`), so the sparse family's
+    * (dim-bucketed under `postings/`), so the sparse family's
     * maintenance surface applies to the LEXICAL tier verbatim — here a
     * tombstone delete of the unmasked top-1 doc
     * ([[graft.search.SparseVec.delete]]) masks it out of the ranking
@@ -982,7 +982,7 @@ object TextQueries {
     "fulltext_sparse_masked",
     (s, dir) => {
       import graft.search.{FullText, SparseVec}
-      val idx = s"/tmp/graft_fulltext_${math.abs(dir.hashCode)}"
+      val idx = s"/tmp/graft_fulltext_b16_${math.abs(dir.hashCode)}"
       val terms = Seq("scan", "filter", "merge")
       rebuildOnce(s, idx) {
         FullText.build(Tables.documents(s, dir), "doc_id", "text", idx)
@@ -1097,22 +1097,20 @@ object TextQueries {
     * the corpus-grown-vocabulary layout: a lexical dictionary follows
     * Heaps' law, and one partition directory PER TERM is filesystem
     * abuse at 10⁸+ terms, measured in SCALE.md; postings live in
-    * `dim mod B` buckets with dim-SORTED files, so a query's `dim IN`
+    * `dim mod 16` buckets with dim-SORTED files, so a query's `dim IN`
     * literals open ≤|dims| bucket dirs and prune row groups inside
     * them via parquet min/max). Serving is [[graft.search
     * .FullText.searchWand]] — the WAND pruning composes with the
-    * bucketed seek unchanged, because the layout self-describes
-    * ([[graft.search.SparseVec.bucketCount]]) under one API. The
-    * oracle is the exhaustive BM25 ranking: layout AND pruning are
-    * both invisible in the result, which is the whole claim. */
+    * bucketed seek. The oracle is the exhaustive BM25 ranking: layout
+    * AND pruning are both invisible in the result, which is the whole
+    * claim. */
   private val fulltextBucketedSearch = Q(
     "fulltext_bucketed_search",
     (s, dir) => {
       import graft.search.FullText
-      val idx = s"/tmp/graft_ftbuck_${math.abs(dir.hashCode)}"
+      val idx = s"/tmp/graft_ftbuck_b16_${math.abs(dir.hashCode)}"
       rebuildOnce(s, idx) {
-        FullText.build(Tables.documents(s, dir), "doc_id", "text", idx,
-          buckets = 8)
+        FullText.build(Tables.documents(s, dir), "doc_id", "text", idx)
       }
       FullText.searchWand(s, idx, Seq("dup", "batch"), 10)
         .withColumnRenamed("id", "doc_id")
@@ -1339,7 +1337,7 @@ object TextQueries {
     (s, dir) => {
       import graft.search.{FullText, Maintenance}
       val docs = Tables.documents(s, dir)
-      val idx = s"/tmp/graft_ftreb_${math.abs(dir.hashCode)}"
+      val idx = s"/tmp/graft_ftreb_b16_${math.abs(dir.hashCode)}"
       rebuildOnce(s, idx) {
         FullText.build(docs.where(col("doc_id") < 300),
           "doc_id", "text", idx)
@@ -1379,7 +1377,7 @@ object TextQueries {
     * `streaming_bm25_ingest` discipline): micro-batch 1 BUILDS (stats
     * freeze there), batches 2-3 absorb by
     * [[graft.search.FullText.append]] — tokenize the batch only, file
-    * append into the dim partitions, no rewrite. The oracle recomputes
+    * append into the dim buckets, no rewrite. The oracle recomputes
     * every doc's tf part against the FIRST batch's statistics and
     * weights query terms by first-batch df (the frozen-stats
     * contract), so a dropped/double-absorbed batch OR a stat leak
@@ -1391,7 +1389,7 @@ object TextQueries {
       import org.apache.hadoop.fs.Path
       import org.apache.spark.sql.types._
       val docs = Tables.documents(s, dir).select("doc_id", "text")
-      val work = s"/tmp/graft_streamft_${math.abs(dir.hashCode)}"
+      val work = s"/tmp/graft_streamft_b16_${math.abs(dir.hashCode)}"
       val conf = s.sparkContext.hadoopConfiguration
       val fs = new Path(work).getFileSystem(conf)
       val idx = s"$work/ft"
@@ -1413,12 +1411,7 @@ object TextQueries {
         .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
           if (!fs.exists(new Path(
               SparseVec.postingsDir(idx) + "/_SUCCESS")))
-            // dim-BUCKETED layout (round 16, guide §6): micro-batch
-            // appends into per-dim directories pay one parquet file
-            // create per touched dim per batch; the bucketed writer
-            // lands a couple of dim-sorted files instead. Serve
-            // semantics unchanged (layout marker drives every verb).
-            FullText.build(batch, "doc_id", "text", idx, buckets = 16)
+            FullText.build(batch, "doc_id", "text", idx)
           else
             FullText.append(batch, "doc_id", "text", idx)
           ()
@@ -1470,7 +1463,7 @@ object TextQueries {
     (s, dir) => {
       import graft.search.FullText
       import graft.text.Analyzer
-      val idx = s"/tmp/graft_fulltextan_${math.abs(dir.hashCode)}"
+      val idx = s"/tmp/graft_fulltextan_b16_${math.abs(dir.hashCode)}"
       val cfg = Analyzer.Config()
       rebuildOnce(s, idx) {
         FullText.buildAnalyzed(Tables.documents(s, dir), "doc_id", "text",
@@ -1532,7 +1525,7 @@ object TextQueries {
     (s, dir) => {
       import graft.search.FullText
       import graft.text.Analyzer
-      val idx = s"/tmp/graft_fulltextstem_${math.abs(dir.hashCode)}"
+      val idx = s"/tmp/graft_fulltextstem_b16_${math.abs(dir.hashCode)}"
       val cfg = Analyzer.Config(asciiFolding = true,
         stemmer = Some(Analyzer.StemmerEnglishS))
       rebuildOnce(s, idx) {
@@ -1598,7 +1591,7 @@ object TextQueries {
     "fulltext_sparse_incremental",
     (s, dir) => {
       import graft.search.FullText
-      val idx = s"/tmp/graft_fulltextinc_${math.abs(dir.hashCode)}"
+      val idx = s"/tmp/graft_fulltextinc_b16_${math.abs(dir.hashCode)}"
       val terms = Seq("scan", "filter", "merge")
       val docs = Tables.documents(s, dir)
       rebuildOnce(s, idx) {
@@ -2382,7 +2375,7 @@ object TextQueries {
     "ttl_fulltext_serve",
     (s, dir) => {
       import graft.search.{FullText, IndexSync}
-      val base = s"/tmp/graft_ttlft_${math.abs(dir.hashCode)}"
+      val base = s"/tmp/graft_ttlft_b16_${math.abs(dir.hashCode)}"
       val out = s"$base/coll"
       val idx = s"$base/ft"
       val coll = graft.core.Collection(s, out)
@@ -2447,7 +2440,7 @@ object TextQueries {
     "ttl_fulltext_sync_plan",
     (s, dir) => {
       import graft.search.{FullText, IndexSync, Maintenance}
-      val base = s"/tmp/graft_ttlftsync_${math.abs(dir.hashCode)}"
+      val base = s"/tmp/graft_ttlftsync_b16_${math.abs(dir.hashCode)}"
       val out = s"$base/coll"
       val idxU = s"$base/ft_unsynced"
       val idxS = s"$base/ft_synced"
@@ -2519,7 +2512,7 @@ object TextQueries {
               (pmod(col("doc_id") + j, lit(10L)) + 1L).cast("int")))))
       val cfg = Analyzer.Config(minTokenLen = 1, stopwords = Nil,
         cjkBigrams = true)
-      val idx = s"/tmp/graft_ftcjk_${math.abs(dir.hashCode)}"
+      val idx = s"/tmp/graft_ftcjk_b16_${math.abs(dir.hashCode)}"
       rebuildOnce(s, idx) {
         FullText.buildAnalyzed(cn, "doc_id", "text_cn", idx, cfg)
       }

@@ -2705,13 +2705,13 @@ object VectorQueries {
     * fold-then-append, SQ8/binary: delete-then-insert — this is the
     * delete-then-insert member, because sparse postings re-encode
     * per-row with no trained state): the stored inverted index
-    * ([[graft.search.SparseVec.build]], PARTITIONED BY DIM — the
+    * ([[graft.search.SparseVec.build]], dim-bucketed — the
     * posting-list layout) was encoded from WRONG (reversed) vectors
     * for `vec_id % 10 = 1`; [[graft.search.SparseVec.upsertBatch]]
-    * tombstones those ids, folds the postings (dim partitioning
-    * preserved — it IS the index), and appends the re-encoded TRUE
+    * tombstones those ids, folds the postings (buckets and dim order
+    * preserved — they ARE the index), and appends the re-encoded TRUE
     * rows. Serve = [[graft.search.SparseVec.searchIndex]]: the query's
-    * ≤ topN dims as a literal `dim IN (...)` directory prune, posting
+    * ≤ topN dims as a literal `dim IN (...)` bucket prune, posting
     * join, score aggregate, tombstone mask. The oracle is the clean
     * full-corpus sparse recompute — a skipped fold (stale reversed
     * postings still scoring), dropped append, or unmasked delete
@@ -2721,7 +2721,7 @@ object VectorQueries {
     (s, dir) => {
       import graft.search.SparseVec
       val e = Tables.embeddings(s, dir)
-      val idx = s"/tmp/graft_sparseup_${math.abs(dir.hashCode)}"
+      val idx = s"/tmp/graft_sparseup_b16_${math.abs(dir.hashCode)}"
       rebuildOnce(s, idx) {
         val corrupted = e.withColumn("embedding",
           when(col("vec_id") % 10 === 1, reverse(col("embedding")))
@@ -2757,7 +2757,7 @@ object VectorQueries {
     * `streaming_graph_ingest`, `streaming_asym_ingest`, ...): a REAL
     * micro-batch run (file source, maxFilesPerTrigger=1, foreachBatch)
     * sparsifies ONLY each arriving batch and file-appends its postings
-    * into the dim-partitioned layout — per-row encodings under a fixed
+    * into the dim-bucketed layout — per-row encodings under a fixed
     * sparsifier need no refit ever, so the stream sink is exactly the
     * batch append. The final search reads the artifact alone; the
     * oracle recomputes the whole pipeline from the full corpus, so a
@@ -2766,12 +2766,9 @@ object VectorQueries {
     "streaming_sparse_ingest",
     (s, dir) => {
       import graft.search.SparseVec
-      import org.apache.hadoop.fs.Path
       import org.apache.spark.sql.types._
       val e = Tables.embeddings(s, dir).select("vec_id", "embedding")
-      val work = s"/tmp/graft_streamsparse_${math.abs(dir.hashCode)}"
-      val conf = s.sparkContext.hadoopConfiguration
-      val fs = new Path(work).getFileSystem(conf)
+      val work = s"/tmp/graft_streamsparse_b16_${math.abs(dir.hashCode)}"
       val idx = s"$work/sparseidx"
       streamInputOnce(s, work, Seq(s"$work/_ckpt", idx)) { writeOne =>
         writeOne(e.where(col("vec_id") < 250), "00_base.parquet",
@@ -2781,15 +2778,6 @@ object VectorQueries {
         writeOne(e.where(col("vec_id") >= 400), "02_batch.parquet",
           3000000L)
       }
-      // Declare the dim-BUCKETED layout before the first append
-      // (round 16, guide §6 small-files): a per-dim layout writes one
-      // file per touched dim PER MICRO-BATCH (~64 parquet creates,
-      // ~1.1 s each batch at this FS), while the bucketed writer's
-      // range shuffle lands a couple of dim-sorted files across B
-      // directories. Same serve semantics — every verb reads the
-      // marker ([[graft.search.SparseVec.bucketCount]]).
-      fs.mkdirs(new Path(idx))
-      SparseVec.writeBucketsMarker(s, idx, 16)
       val schema = StructType(Seq(
         StructField("vec_id", LongType),
         StructField("embedding", ArrayType(FloatType, containsNull = true))))

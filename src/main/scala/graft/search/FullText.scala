@@ -9,7 +9,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * SPARSE_FLOAT_VECTORs; the sparse index serves BM25): doc postings
   * carry the tf part of BM25 (tf·(k1+1)/(tf+k1·(1−b+b·dl/avgdl))),
   * the query's postings carry the idf part, and the artifact is laid
-  * out EXACTLY like [[SparseVec]]'s (`postings/` partitioned by dim),
+  * out EXACTLY like [[SparseVec]]'s (`postings/` in dim buckets),
   * so the whole sparse maintenance surface — [[SparseVec.delete]]
   * tombstones + masked serve, [[SparseVec.compactTombstones]],
   * alias-root publication — applies to the lexical tier verbatim: one
@@ -24,7 +24,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * numbering (range-shuffle + zipWithIndex — see [[denseDict]]; no
   * vocab-sized single task); serving is the [[SparseVec.searchIndex]]
   * plan — `dim IN`
-  * directory pruning over the posting partitions, broadcast query
+  * bucket and row-group pruning over the postings, broadcast query
   * side, one hash aggregate. No dense scan, no O(corpus) work per
   * query. */
 object FullText {
@@ -64,11 +64,10 @@ object FullText {
     * sides contract every analyzed index carries. */
   def buildAnalyzed(docs: DataFrame, idCol: String, textCol: String,
                     indexDir: String, cfg: graft.text.Analyzer.Config,
-                    k1: Double = 1.2, b: Double = 0.75,
-                    buckets: Int = 0): Unit = {
+                    k1: Double = 1.2, b: Double = 0.75): Unit = {
     buildFrom(docs.select(col(idCol).as("id"),
         graft.text.Analyzer.tokens(col(textCol), cfg).as("__tk")),
-      indexDir, k1, b, buckets)
+      indexDir, k1, b)
     // chain marker LAST (a crashed build leaves no marker — probed as
     // "unversioned", same as a pre-round-16 artifact): appends and
     // serves under a DIFFERENT chain can now fail loudly instead of
@@ -107,20 +106,17 @@ object FullText {
             "misses terms)")
     }
 
-  /** Build the artifact: postings (id, dim, w) partitioned by dim under
-    * [[SparseVec.postingsDir]], plus the term dictionary, per-term df,
-    * and corpus stats the query side needs. */
-  /** `buckets > 0` selects the dim-BUCKETED layout (see
-    * [[SparseVec.bucketCount]]) — the corpus-grown-vocabulary path: a
-    * lexical index whose dictionary follows Heaps' law must not write
-    * one directory per term. */
+  /** Build the artifact: postings (id, dim, w) in [[SparseVec]]'s
+    * dim-bucketed layout under [[SparseVec.postingsDir]] (a dictionary
+    * that follows Heaps' law never writes one directory per term), plus
+    * the term dictionary, per-term df, and corpus stats the query side
+    * needs. */
   def build(docs: DataFrame, idCol: String, textCol: String,
-            indexDir: String, k1: Double = 1.2, b: Double = 0.75,
-            buckets: Int = 0): Unit =
+            indexDir: String, k1: Double = 1.2, b: Double = 0.75): Unit =
     buildFrom(docs.select(col(idCol).as("id"),
         col(textCol).as("__text"))
         .select(col("id"), toks.as("__tk")),
-      indexDir, k1, b, buckets)
+      indexDir, k1, b)
 
   /** The corpus-scan parts of a build over a tokenized (id, __tk)
     * frame: per-doc term frequencies, doc lengths, the 1-row corpus
@@ -207,8 +203,7 @@ object FullText {
   }
 
   private def buildFrom(tokenized: DataFrame, indexDir: String,
-                        k1: Double, b: Double,
-                        buckets: Int = 0): Unit = {
+                        k1: Double, b: Double): Unit = {
     val spark = tokenized.sparkSession
     requireLongId(tokenized)
     // ONE materialization of the tokenized corpus (round 17 — the
@@ -235,15 +230,11 @@ object FullText {
     sp.getFileSystem(spark.sparkContext.hadoopConfiguration)
       .delete(sp, true)
     SparseVec.writePostings(weighted(tf, dl, stats, dict, k1, b),
-      indexDir, "overwrite", if (buckets > 0) Some(buckets) else None)
-    // marker follows THIS build's layout, written only after the
-    // postings write succeeded (the SparseVec.build crash argument)
-    if (buckets > 0) SparseVec.writeBucketsMarker(spark, indexDir, buckets)
-    else SparseVec.clearBucketsMarker(spark, indexDir)
+      indexDir, "overwrite")
     // per-dim bound stats for WAND serving ([[SparseVec.dimStatsDir]])
     // from the stored postings
-    SparseVec.appendDimStats(
-      spark.read.parquet(SparseVec.postingsDir(indexDir)), indexDir)
+    SparseVec.appendDimStats(SparseVec.readPostings(spark, indexDir),
+      indexDir)
     // stats LAST, sealing the build's extent (posting rows + vocab) —
     // the baseline [[debt]] measures frozen-stats drift against: every
     // [[append]]ed row past these counts is rebuild-repayable debt.
@@ -251,9 +242,7 @@ object FullText {
     // size at build (every dict term comes from tf, and every tf row
     // writes a posting regardless of its rounded weight), so the
     // separate dict-count scan is free
-    val sealedCounts = spark.read
-      .schema(SparseVec.postingsSchema("id", bucketed = buckets > 0))
-      .parquet(SparseVec.postingsDir(indexDir))
+    val sealedCounts = SparseVec.readPostings(spark, indexDir)
       .agg(count(lit(1)).as("r"), countDistinct(col("dim")).as("t"))
       .first()
     stats
@@ -300,8 +289,8 @@ object FullText {
     * asserts it, but buildFrom/appendFrom write postings via
     * [[SparseVec.writePostings]] directly — without this, a FullText
     * artifact over a non-long doc id fails only on the rare
-    * all-dims-absent serve path ([[SparseVec.dimScan]]'s hardcoded
-    * LongType empty fallback), exactly the late failure the build-time
+    * all-dims-absent serve path ([[SparseVec.dimScan]]'s LongType empty
+    * fallback), exactly the late failure the build-time
     * require exists to prevent. */
   private def requireLongId(tokenized: DataFrame): Unit =
     require(tokenized.schema("id").dataType ==
@@ -380,8 +369,7 @@ object FullText {
     // posting append (the crash-safe order: a bound with no postings
     // yet is conservative; postings with no bound prune wrongly)
     SparseVec.appendDimStatsRaising(spark, post, indexDir)
-    SparseVec.writePostings(post, indexDir, "append",
-      SparseVec.bucketCount(spark, indexDir))
+    SparseVec.writePostings(post, indexDir, "append")
   }
 
   /** The query's sparse form: (dim, w = rounded idf) for each query
@@ -505,8 +493,7 @@ object FullText {
   def debt(spark: SparkSession, indexDir0: String): DataFrame = {
     val indexDir = AliasedIndex.resolveDir(spark, indexDir0)
     val stats = spark.read.parquet(statsDir(indexDir))
-    val rows = spark.read.parquet(SparseVec.postingsDir(indexDir))
-      .count()
+    val rows = SparseVec.readPostings(spark, indexDir).count()
     val terms = spark.read.parquet(dictDir(indexDir)).count()
     val (sr, st) =
       if (stats.columns.contains("sealed_rows")) {

@@ -313,8 +313,7 @@ object IndexAudit {
   def dimBoundChecks(spark: org.apache.spark.sql.SparkSession,
                      indexDir0: String): DataFrame = {
     val indexDir = AliasedIndex.resolveDir(spark, indexDir0)
-    val actual = spark.read
-      .parquet(SparseVec.postingsDir(indexDir))
+    val actual = SparseVec.readPostings(spark, indexDir)
       .groupBy(col("dim")).agg(max(col("w")).as("__actual"))
     val statsPath = new org.apache.hadoop.fs.Path(
       SparseVec.dimStatsDir(indexDir))

@@ -309,7 +309,7 @@ object Maintenance {
         val sd = AliasedIndex.resolveDir(spark, sparseIndexDir)
         Seq(
           kv("sparse_docs",
-            spark.read.parquet(SparseVec.postingsDir(sd))
+            SparseVec.readPostings(spark, sd, idCol)
               .agg(countDistinct(col(idCol)).as("value"))),
           kv("sparse_tombstones",
             Tombstones.table(spark, sd, idCol)

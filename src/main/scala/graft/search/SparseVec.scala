@@ -17,10 +17,10 @@ import org.apache.spark.sql.{Column, DataFrame}
   * cross-engine float noise cannot reorder.
   *
   * Scale shape (100 TB): [[postings]] is the inverted index — one
-  * (id, dim, w) row per nonzero. Stored partitioned/bucketed BY DIM,
-  * a query touches only its own dims' partitions (partition pruning is
-  * the posting-list seek, the same trick [[IvfIndex]] plays with
-  * cluster_id), the tiny query side broadcasts, and the score is one
+  * (id, dim, w) row per nonzero. Stored in `dim mod 16` buckets with
+  * dim-sorted files, a query touches only its own dims' buckets and row
+  * groups (the posting-list seek, the same trick [[IvfIndex]] plays
+  * with cluster_id), the tiny query side broadcasts, and the score is one
   * hash aggregate over matching postings — docs sharing no query dim
   * are never read, scored, or shuffled. No O(corpus) work, no dense
   * scan: this is the term-at-a-time inverted-index plan every lexical
@@ -70,99 +70,100 @@ object SparseVec {
   def postingsDir(indexDir: String): String = s"$indexDir/postings"
 
   // ---------------------------------------------------------------------
-  // DIM-BUCKETED layout (round 14) — the corpus-grown-vocabulary path.
-  //
-  // The default layout is one partition DIRECTORY per dim: a true
-  // posting-list seek for BOUNDED dim spaces (learned-sparse
-  // vocabularies, sparsified embeddings, curated lexical vocabs). At a
-  // corpus-grown vocabulary (Heaps' law: 10⁸–10⁹ terms at 100 TB) one
-  // directory per term is filesystem abuse — the round-14 decade
-  // rehearsal measured 9 001 dirs costing 152 s at n=4 000. The
-  // bucketed twin partitions by `dimb = dim mod B` (B directories
-  // total) and SORTS each bucket's files by dim, so a query's `dim IN`
-  // literals prune row groups INSIDE its ≤|dims| buckets via parquet
-  // min/max — the same seek, two levels: O(query dims) directory
-  // opens, then stats-pruned row groups. The layout self-describes via
-  // a `_graft_dim_buckets` marker; every serve/maintenance verb
-  // detects it, so ONE API covers both layouts.
+  // The one postings layout: `dim_bucket = dim mod Buckets` partition
+  // directories, each holding dim-SORTED files. A query's dims open at
+  // most |dims| bucket directories and their `dim IN` literals prune row
+  // groups inside them via parquet min/max — the posting-list seek in
+  // two levels, without one directory per dim (a corpus-grown
+  // vocabulary reaches 10⁸–10⁹ terms; SCALE.md measured 9 001 per-dim
+  // directories costing 152 s at n = 4 000).
   // ---------------------------------------------------------------------
 
-  private val BucketsMarker = "_graft_dim_buckets"
+  /** Bucket count of every postings directory: 16 bounds the bucket
+    * directories one streaming micro-batch writes into, while a query's
+    * few dims still open few buckets. */
+  private val Buckets = 16
 
-  /** Bucket count of a dim-bucketed layout; None = per-dim layout. */
-  def bucketCount(spark: org.apache.spark.sql.SparkSession,
-                  indexDir: String): Option[Int] =
-    graft.core.Artifacts.readSidecar(spark, indexDir, BucketsMarker)
-      .map(_.trim.toInt)
+  /** The partition column. Its name is new with this layout, so no
+    * directory an earlier layout wrote (`dim=` per-dim trees, `dimb=`
+    * buckets under other counts) can match it: see
+    * [[requireBucketLayout]]. A future change of [[Buckets]] renames it
+    * again. */
+  private val BucketCol = "dim_bucket"
 
-  private[graft] def writeBucketsMarker(
-      spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, b: Int): Unit =
-    graft.core.Artifacts.writeSidecar(spark, indexDir, BucketsMarker,
-      b.toString)
-
-  private[graft] def clearBucketsMarker(
-      spark: org.apache.spark.sql.SparkSession,
-      indexDir: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(indexDir, BucketsMarker)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, false)
-    ()
+  /** The posting files' schema as written: (BIGINT id, INT dim,
+    * DOUBLE w) plus the INT bucket partition column ([[build]]'s
+    * id-type assertion backs the LongType). Every read of a postings
+    * directory passes it, so none pays schema inference's footer job. */
+  private def postingsSchema(idCol: String)
+      : org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.types._
+    StructType(Seq(StructField(idCol, LongType),
+      StructField("dim", IntegerType), StructField("w", DoubleType),
+      StructField(BucketCol, IntegerType)))
   }
 
-  /** Write `post` (id, dim, w) in the layout `indexDir` declares:
-    * per-dim directories, or `dimb` buckets with dim-sorted files.
-    * The bucketed shuffle is a RANGE partition over (dimb, dim) — NOT
-    * a hash on dimb alone, which would cap write parallelism at B
-    * tasks and hand each one a whole bucket to sort (the spill/OOM
-    * shape at exactly the vocabulary scale this layout exists for): a
-    * large bucket splits across tasks by dim range, every file stays
-    * dim-sorted (row-group pruning needs per-FILE tightness, not
-    * one-file buckets), and `partitionBy` still routes rows to their
-    * bucket directory. */
-  private[graft] def writePostings(post: DataFrame, indexDir: String,
-                                   mode: String,
-                                   buckets: Option[Int]): Unit =
-    buckets match {
-      case Some(b) =>
-        post.withColumn("dimb", pmod(col("dim"), lit(b)))
-          .repartitionByRange(col("dimb"), col("dim"))
-          .sortWithinPartitions(col("dimb"), col("dim"))
-          .write.mode(mode).partitionBy("dimb")
-          .parquet(postingsDir(indexDir))
-      case None =>
-        // Range-repartition by dim BEFORE the partitioned write
-        // (round 16, guide §6 small-files): without it every input
-        // partition writes its own file into every dim directory it
-        // touches — a 32-partition build over 64 dims landed ~500
-        // ~1 KB files per artifact, and every micro-batch append
-        // re-paid the same (files × open-cost) on each later serve
-        // and each write's commit. Ranging by (dim, w) gives one file
-        // per dim in the common case while a genuinely hot dim still
-        // splits across tasks by weight range (the bucketed writer's
-        // own skew argument, applied to the per-dim layout); file
-        // count follows the shuffle-partition conf, so the cap is
-        // scale-adaptive, not a local constant.
-        post.repartitionByRange(col("dim"), col("w"))
-          .write.mode(mode).partitionBy("dim")
-          .parquet(postingsDir(indexDir))
-    }
+  /** Every posting of the artifact at `indexDir` as (idCol, dim, w) —
+    * the one whole-directory read of the postings. */
+  private[graft] def readPostings(spark: org.apache.spark.sql.SparkSession,
+                                  indexDir: String,
+                                  idCol: String = "id"): DataFrame =
+    spark.read.schema(postingsSchema(idCol))
+      .parquet(postingsDir(indexDir)).drop(BucketCol)
 
-  /** ONE definition of the layout→fold-arguments rule: tombstone-fold
-    * the postings dir preserving whatever layout the marker declares
-    * (per-dim dirs, or dimb buckets re-sorted by dim so row-group
-    * pruning survives the rewrite). Returns the resolved layout so the
-    * caller can reuse it without a second marker read. */
-  private def compactPostings(spark: org.apache.spark.sql.SparkSession,
-                              d: String, idCol: String): Option[Int] = {
-    val layout = bucketCount(spark, d)
-    layout match {
-      case Some(_) => Tombstones.compact(spark, d, postingsDir(d),
-        Seq(idCol), partitionBy = Seq("dimb"),
-        sortWithin = Seq("dimb", "dim"))
-      case None => Tombstones.compact(spark, d, postingsDir(d),
-        Seq(idCol), partitionBy = Seq("dim"))
+  /** The legacy rule, in one place: a postings directory holding any
+    * partition directory but this layout's was written by an earlier
+    * layout, and serving, extending or folding it would touch only part
+    * of its postings — fail, and name the fix. Off the hot path: called
+    * by every append and fold, and by [[dimScan]] only when none of the
+    * query's buckets exists (always the case for an earlier layout). */
+  private def requireBucketLayout(spark: org.apache.spark.sql.SparkSession,
+                                  base: String): Unit = {
+    val bp = new org.apache.hadoop.fs.Path(base)
+    val fs = bp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(bp)) return
+    val it = fs.listStatusIterator(bp)
+    while (it.hasNext) {
+      val st = it.next()
+      val n = st.getPath.getName
+      if (st.isDirectory && !n.startsWith(s"$BucketCol=") &&
+          !n.startsWith("_") && !n.startsWith("."))
+        throw new IllegalStateException(
+          s"postings under $base hold '$n', not $BucketCol= directories: " +
+            "the artifact was written by an earlier postings layout; " +
+            "rebuild it")
     }
-    layout
+  }
+
+  /** Write `post` (id, dim, w) into the bucketed layout. The shuffle is
+    * a RANGE partition over (bucket, dim) — NOT a hash on the bucket
+    * alone, which would cap write parallelism at [[Buckets]] tasks and
+    * hand each one a whole bucket to sort: a large bucket splits across
+    * tasks by dim range, every file stays dim-sorted (row-group pruning
+    * needs per-FILE tightness), and `partitionBy` still routes rows to
+    * their bucket directory. An append first checks the layout
+    * ([[requireBucketLayout]]); every write pins the schema, so the
+    * tombstone fold reads it without inference. */
+  private[graft] def writePostings(post: DataFrame, indexDir: String,
+                                   mode: String): Unit = {
+    val spark = post.sparkSession
+    val base = postingsDir(indexDir)
+    if (mode == "append") requireBucketLayout(spark, base)
+    post.withColumn(BucketCol, pmod(col("dim"), lit(Buckets)))
+      .repartitionByRange(col(BucketCol), col("dim"))
+      .sortWithinPartitions(col(BucketCol), col("dim"))
+      .write.mode(mode).partitionBy(BucketCol).parquet(base)
+    graft.core.Artifacts.writeSchema(spark, base,
+      postingsSchema(post.columns.head))
+  }
+
+  /** Tombstone-fold the postings, re-sorting each bucket by dim so
+    * row-group pruning survives the rewrite. */
+  private def compactPostings(spark: org.apache.spark.sql.SparkSession,
+                              d: String, idCol: String): Unit = {
+    requireBucketLayout(spark, postingsDir(d))
+    Tombstones.compact(spark, d, postingsDir(d), Seq(idCol),
+      partitionBy = Seq(BucketCol), sortWithin = Seq(BucketCol, "dim"))
   }
 
   /** Per-dimension score-bound statistics for WAND/max-score serving:
@@ -216,9 +217,7 @@ object SparseVec {
       // finding): rebuild the bounds from the STORED postings first,
       // then add the batch's.
       val pp = new org.apache.hadoop.fs.Path(postingsDir(indexDir))
-      if (fs.exists(pp))
-        appendDimStats(spark.read.parquet(postingsDir(indexDir)),
-          indexDir)
+      if (fs.exists(pp)) appendDimStats(readPostings(spark, indexDir), indexDir)
       appendDimStats(post, indexDir)
       return
     }
@@ -251,8 +250,8 @@ object SparseVec {
     * missing bound must never default to 0, which would prune docs it
     * has no right to prune. */
   private def dimBounds(spark: org.apache.spark.sql.SparkSession,
-                        indexDir: String, dims: Seq[Int],
-                        bc: Option[Option[Int]] = None): Map[Int, Double] = {
+                        indexDir: String,
+                        dims: Seq[Int]): Map[Int, Double] = {
     val statsPath = new org.apache.hadoop.fs.Path(dimStatsDir(indexDir))
     val fs = statsPath.getFileSystem(
       spark.sparkContext.hadoopConfiguration)
@@ -265,18 +264,18 @@ object SparseVec {
         .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
     val missing = dims.filterNot(stored.contains)
     if (missing.isEmpty) stored
-    else stored ++ dimScan(spark, indexDir, missing, bc = bc)
+    else stored ++ dimScan(spark, indexDir, missing)
       .groupBy(col("dim")).agg(max(col("w")).as("maxw"))
       .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
   }
 
-  /** Materialize the inverted index under `indexDir/postings`,
-    * PARTITIONED BY DIM — the posting-list layout: a query's
-    * `dim IN (...)` slice is directory pruning, exactly the
-    * [[IvfIndex]] cluster_id trick, so serving never lists (let alone
-    * reads) a dimension no query weight touches. */
+  /** Materialize the inverted index under `indexDir/postings` in the
+    * bucketed layout ([[writePostings]]): a query's `dim IN (...)`
+    * slice opens only its dims' bucket directories, the [[IvfIndex]]
+    * cluster_id trick, so serving never reads a bucket no query weight
+    * touches. */
   def build(df: DataFrame, idCol: String, vecCol: String, topN: Int,
-            indexDir: String, buckets: Int = 0): Unit = {
+            indexDir: String): Unit = {
     val spark = df.sparkSession
     // ids must be BIGINT across the sparse family: the empty-serve
     // schema ([[dimScan]]'s fallback) and the maintenance joins assume
@@ -296,20 +295,10 @@ object SparseVec {
     val sp = new org.apache.hadoop.fs.Path(dimStatsDir(indexDir))
     sp.getFileSystem(spark.sparkContext.hadoopConfiguration)
       .delete(sp, true)
-    writePostings(postings(df, idCol, vecCol, topN), indexDir,
-      "overwrite", if (buckets > 0) Some(buckets) else None)
-    // the marker follows this build's layout AND lands only after the
-    // postings write SUCCEEDED: a crashed layout-switching build must
-    // not leave a marker declaring directories that were never
-    // written (readers would probe for the wrong prefix; [[dimScan]]
-    // turns that mismatch into a loud error, not an empty serve)
-    if (buckets > 0) writeBucketsMarker(spark, indexDir, buckets)
-    else clearBucketsMarker(spark, indexDir)
+    writePostings(postings(df, idCol, vecCol, topN), indexDir, "overwrite")
     // per-dim bounds from the STORED postings (one columnar scan of
-    // (dim, w); schema pinned — this build just wrote the layout)
-    appendDimStats(spark.read
-      .schema(postingsSchema(idCol, bucketed = buckets > 0))
-      .parquet(postingsDir(indexDir)), indexDir)
+    // (dim, w))
+    appendDimStats(readPostings(spark, indexDir, idCol), indexDir)
   }
 
   /** Absorb a new batch by file append into the served version — ids
@@ -328,7 +317,7 @@ object SparseVec {
     // bound stats FIRST (raising-only), postings second — the
     // crash-safe order: see [[appendDimStatsRaising]]
     appendDimStatsRaising(spark, post, indexDir)
-    writePostings(post, indexDir, "append", bucketCount(spark, indexDir))
+    writePostings(post, indexDir, "append")
   }
 
   /** Record deletes against the sparse artifact ([[Tombstones]] under
@@ -337,8 +326,9 @@ object SparseVec {
   def delete(ids: DataFrame, indexDir: String, idCol: String): Unit =
     Tombstones.record(ids, indexDir, idCol)
 
-  /** Fold recorded tombstones out of the postings (preserving the dim
-    * partitioning — it IS the index structure) and clear them.
+  /** Fold recorded tombstones out of the postings (preserving the
+    * bucket partitioning and dim order — they ARE the index structure)
+    * and clear them.
     * Alias-aware by default: on a published root the rewrite runs
     * against a copy of the current version and publishes atomically
     * ([[AliasedIndex.maintain]]); flat layouts fold in place with the
@@ -371,7 +361,7 @@ object SparseVec {
     // and under the fingerprint.
     def verb(d: String): Unit = {
       Tombstones.record(batch.select(col(idCol)), d, idCol)
-      val layout = compactPostings(spark, d, idCol)
+      compactPostings(spark, d, idCol)
       Tombstones.clear(spark, d)
       // one materialization — see [[append]] (round-17 ADVICE fix)
       val post = postings(batch, idCol, vecCol, topN)
@@ -382,13 +372,13 @@ object SparseVec {
       // Raising-only, and BEFORE the posting append (crash-safe order,
       // see [[appendDimStatsRaising]])
       appendDimStatsRaising(spark, post, d)
-      writePostings(post, d, "append", layout)
+      writePostings(post, d, "append")
     }
     AliasedIndex.maintain(spark, indexDir0)(verb)
   }
 
   /** Serve top-k from the STORED artifact: the query's (≤ topN) dims
-    * select their posting-list partitions EXPLICITLY ([[dimScan]] — an
+    * select their bucket directories EXPLICITLY ([[dimScan]] — an
     * O(query dims) seek, with the literal `dim IN (...)` kept on the
     * scan; the collected dim set is the bounded query-side handoff,
     * like the query vector itself) — then the [[search]] join +
@@ -455,114 +445,34 @@ object SparseVec {
   private val WandTieMargin = 1.0001e-4
 
   /** Dim-pruned postings scan as a posting-list SEEK: the reader is
-    * handed the query dims' partition directories EXPLICITLY
-    * (`basePath` keeps the dim column), so planning lists O(query
-    * dims) directories — NOT the whole lexicon. `spark.read` over the
-    * artifact root enumerates every `dim=` directory before partition
-    * pruning even runs, which at a real vocabulary makes directory
-    * listing the per-query fixed cost (the round-14 decade rehearsal
-    * measured exactly that); a lexical engine opens the query's
-    * posting lists, it does not readdir the term dictionary. Dims with
-    * no stored postings are skipped via one bounded existence probe
-    * each. */
-  /** `bc`: pass `Some(resolvedBucketCount)` when the caller already
-    * read the layout marker (the WAND serve issues several dimScans
-    * per query — re-reading the marker each time is avoidable metadata
-    * I/O on an object store); `None` resolves it here. */
+    * handed the query dims' bucket directories EXPLICITLY (`basePath`
+    * keeps the bucket column), so planning lists O(query dims)
+    * directories, never the whole artifact, and the `dim IN` literals
+    * prune row groups inside them (files are dim-sorted by
+    * [[writePostings]]). Buckets with no stored postings are skipped via
+    * one bounded existence probe each. */
   private def dimScan(spark: org.apache.spark.sql.SparkSession,
                       indexDir: String, dims: Seq[Int],
-                      idCol: String = "id",
-                      bc: Option[Option[Int]] = None): DataFrame = {
+                      idCol: String = "id"): DataFrame = {
     val base = postingsDir(indexDir)
-    val bp = new org.apache.hadoop.fs.Path(base)
-    val fs = bp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val layout = bc.getOrElse(bucketCount(spark, indexDir))
-    val (prefix, dirNames) =
-      layout match {
-        // bucketed layout: a query dim's list lives in its dim%B
-        // bucket; the `dim IN` literals then prune row groups inside
-        // the bucket via parquet min/max (files are dim-sorted by the
-        // writers)
-        case Some(b) =>
-          ("dimb=", dims.map(d => s"dimb=${math.floorMod(d, b)}"))
-        case None => ("dim=", dims.map(d => s"dim=$d"))
-      }
-    val paths = dirNames.distinct.sorted
-      .map(n => new org.apache.hadoop.fs.Path(base, n))
+    val fs = new org.apache.hadoop.fs.Path(base)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val paths = dims.map(d => math.floorMod(d, Buckets)).distinct.sorted
+      .map(b => new org.apache.hadoop.fs.Path(base, s"$BucketCol=$b"))
       .filter(fs.exists(_)).map(_.toString)
-    // explicit schema (round 16, fixed-cost audit): the layout is the
-    // family's own writer contract — (BIGINT id, INT dim, DOUBLE w)
-    // data columns plus the marker-declared partition column — so
-    // schema inference's per-read footer job (one 1-task Spark job per
-    // dimScan, and a WAND serve issues several dimScans) buys nothing
-    val schema = postingsSchema(idCol, bucketed = layout.isDefined)
-    if (paths.nonEmpty)
-      return spark.read.option("basePath", base).schema(schema)
-        .parquet(paths: _*)
-        .where(col("dim").isin(dims: _*))
-        .drop("dimb")
-    // (the LongType idCol in the no-postings-at-all fallback below is
-    // backed by [[build]]'s id-type assertion: ids are BIGINT across
-    // the sparse family — round-14 ADVICE)
-    // RARE path: NONE of the query dims' declared directories exist —
-    // a genuinely out-of-vocabulary query, or a marker/layout mismatch
-    // (a crashed layout-switching rebuild). One EARLY-STOPPING root
-    // iteration distinguishes them: the first partition directory of
-    // the declared kind both proves the layout and supplies the TRUE
-    // stored schema for the empty result (a hardcoded schema would
-    // silently differ from the artifact's id type on this one path);
-    // a directory of the OTHER kind is corruption and fails LOUDLY
-    // instead of serving empty.
-    def emptyFallback: DataFrame = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField(idCol,
-          org.apache.spark.sql.types.LongType, nullable = true),
-        org.apache.spark.sql.types.StructField("dim",
-          org.apache.spark.sql.types.IntegerType, nullable = true),
-        org.apache.spark.sql.types.StructField("w",
-          org.apache.spark.sql.types.DoubleType, nullable = true))))
-    if (!fs.exists(bp)) return emptyFallback
-    val it = fs.listStatusIterator(bp)
-    var sample: Option[org.apache.hadoop.fs.Path] = None
-    var mismatch: Option[String] = None
-    while (it.hasNext && sample.isEmpty && mismatch.isEmpty) {
-      val st = it.next()
-      if (st.isDirectory) {
-        val n = st.getPath.getName
-        if (n.startsWith(prefix)) sample = Some(st.getPath)
-        else if (n.startsWith("dim")) mismatch = Some(n)
-      }
+    if (paths.isEmpty) {
+      // RARE path: none of the query's buckets exists — an empty
+      // artifact, or one an earlier layout wrote, which fails here
+      // instead of serving empty
+      requireBucketLayout(spark, base)
+      return spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        postingsSchema(idCol)).drop(BucketCol)
     }
-    mismatch.foreach(n => throw new IllegalStateException(
-      s"postings layout mismatch under $base: marker declares " +
-        s"'$prefix' partitions but found '$n' — a layout-switching " +
-        "rebuild did not complete; rebuild the artifact"))
-    sample match {
-      case Some(sp) =>
-        spark.read.option("basePath", base).schema(schema)
-          .parquet(sp.toString)
-          .where(col("dim").isin(dims: _*))
-          .drop("dimb")
-      case None => emptyFallback
-    }
-  }
-
-  /** The posting files' schema AS WRITTEN — (BIGINT id, INT dim,
-    * DOUBLE w) data columns ([[build]]'s id-type assertion backs the
-    * LongType), plus the `dimb` partition column when the marker
-    * declares the bucketed layout (per-dim layouts carry `dim` as the
-    * partition column instead; either way the column is declared INT
-    * so directory values parse identically to inference). Passing it
-    * explicitly skips schema inference's footer-read job on every
-    * artifact scan. */
-  private[graft] def postingsSchema(idCol: String, bucketed: Boolean)
-      : org.apache.spark.sql.types.StructType = {
-    import org.apache.spark.sql.types._
-    StructType(
-      StructField(idCol, LongType) :: StructField("dim", IntegerType) ::
-        StructField("w", DoubleType) ::
-        (if (bucketed) List(StructField("dimb", IntegerType)) else Nil))
+    spark.read.option("basePath", base).schema(postingsSchema(idCol))
+      .parquet(paths: _*)
+      .where(col("dim").isin(dims: _*))
+      .drop(BucketCol)
   }
 
   /** The dim-stats files' schema as written by [[appendDimStats]] /
@@ -577,9 +487,8 @@ object SparseVec {
     * stored-artifact serve. */
   private def maskedDimScan(spark: org.apache.spark.sql.SparkSession,
                             indexDir: String, idCol: String,
-                            dims: Seq[Int],
-                            bc: Option[Option[Int]] = None): DataFrame =
-    Tombstones.mask(dimScan(spark, indexDir, dims, idCol, bc), spark,
+                            dims: Seq[Int]): DataFrame =
+    Tombstones.mask(dimScan(spark, indexDir, dims, idCol), spark,
       indexDir, idCol)
 
   private[graft] final case class WandState(
@@ -634,10 +543,6 @@ object SparseVec {
                         idCol: String, k: Int)
       : (DataFrame, WandState) = {
     val indexDir = AliasedIndex.resolveDir(spark, indexDir0)
-    // layout marker resolved ONCE per serve and threaded through every
-    // scan this serve issues (the doubling loop alone is log2(dims)
-    // scans — per-scan marker reads are metadata round trips)
-    val bc: Option[Option[Int]] = Some(bucketCount(spark, indexDir))
     val qpAll = queryPostings.select(col("dim"), col("w")).collect()
       .map(r => (r.getInt(0), r.getDouble(1))).toSeq.sorted
     require(qpAll.forall(_._2 >= 0),
@@ -688,10 +593,10 @@ object SparseVec {
     if (m == 0) {
       val st = WandState(indexDir, qpAll, qp, Nil)
       return (zeroFilled(exact(
-        maskedDimScan(spark, indexDir, idCol, Nil, bc))), st)
+        maskedDimScan(spark, indexDir, idCol, Nil))), st)
     }
     // bounds, best-first; suffix(i) = Σ of bounds i..m-1
-    val mw = dimBounds(spark, indexDir, posDims, bc)
+    val mw = dimBounds(spark, indexDir, posDims)
     val bounds = qp.map { case (d, qw) => (d, qw, qw * mw.getOrElse(d, 0.0)) }
       .sortBy { case (d, _, ub) => (-ub, d) }
     val suffix = bounds.map(_._3).scanRight(0.0)(_ + _)
@@ -702,7 +607,7 @@ object SparseVec {
       val essQ = broadcast(spark.createDataFrame(
         ess.map(t => (t._1, t._2))).toDF("dim", "qw"))
       val partial = maskedDimScan(spark, indexDir, idCol,
-          ess.map(_._1), bc)
+          ess.map(_._1))
         .join(essQ, Seq("dim"))
         .groupBy(col(idCol)).agg(sum(col("w") * col("qw")).as("p"))
         .orderBy(col("p").desc, col(idCol).asc).limit(k)
@@ -715,11 +620,11 @@ object SparseVec {
     val st = WandState(indexDir, qpAll, qp, bounds.take(chosen).map(_._1))
     val positives =
       if (st.exhaustive)
-        exact(maskedDimScan(spark, indexDir, idCol, posDims, bc))
+        exact(maskedDimScan(spark, indexDir, idCol, posDims))
       else {
-        val cand = maskedDimScan(spark, indexDir, idCol, st.essDims, bc)
+        val cand = maskedDimScan(spark, indexDir, idCol, st.essDims)
           .select(col(idCol)).distinct()
-        exact(maskedDimScan(spark, indexDir, idCol, posDims, bc)
+        exact(maskedDimScan(spark, indexDir, idCol, posDims)
           .join(cand, Seq(idCol), "left_semi"))
       }
     (zeroFilled(positives), st)
@@ -768,8 +673,7 @@ object SparseVec {
       indexDir: String,
       qpAll: Seq[(Long, Int, Double)],
       posByQ: Map[Long, Seq[(Int, Double)]],
-      chosenByQ: Map[Long, Int],
-      bc: Option[Int]) {
+      chosenByQ: Map[Long, Int]) {
     def essPairs: Seq[(Long, Int)] = posByQ.toSeq.flatMap {
       case (qid, bounds) => bounds.take(chosenByQ(qid)).map(t => (qid, t._1))
     }
@@ -814,8 +718,6 @@ object SparseVec {
       : (DataFrame, BulkWandState) = {
     import org.apache.spark.sql.expressions.Window
     val indexDir = AliasedIndex.resolveDir(spark, indexDir0)
-    val bcv = bucketCount(spark, indexDir)
-    val bc: Option[Option[Int]] = Some(bcv)
     val qpAll = queryPostings
       .select(col("qid").cast("long"), col("dim").cast("int"),
         col("w").cast("double"))
@@ -841,13 +743,13 @@ object SparseVec {
     if (pos.isEmpty) {
       // every weight is zero: the bulk serve IS the zero-score tail —
       // delegate wholesale, exact by definition
-      val st = BulkWandState(indexDir, qpAll, Map.empty, Map.empty, bcv)
+      val st = BulkWandState(indexDir, qpAll, Map.empty, Map.empty)
       return (searchBulkIndex(spark, indexDir, queryPostings, idCol, k),
         st)
     }
     // per-query bound-ranked dims + suffix sums, ONE stats lookup
     val allPosDims = pos.map(_._2).distinct
-    val mw = dimBounds(spark, indexDir, allPosDims, bc)
+    val mw = dimBounds(spark, indexDir, allPosDims)
     val posByQ: Map[Long, Seq[(Int, Double)]] = pos.groupBy(_._1).map {
       case (qid, rows) =>
         qid -> rows.map { case (_, d, qw) => (d, qw) }
@@ -870,7 +772,7 @@ object SparseVec {
       val essDims = essPairs.map(_._2).distinct
       val wq = Window.partitionBy(col("qid"))
         .orderBy(col("p").desc, col(idCol).asc)
-      val kth = maskedDimScan(spark, indexDir, idCol, essDims, bc)
+      val kth = maskedDimScan(spark, indexDir, idCol, essDims)
         .join(broadcast(spark.createDataFrame(essPairs)
           .toDF("qid", "dim", "qw")), Seq("dim"))
         .groupBy(col("qid"), col(idCol))
@@ -892,18 +794,18 @@ object SparseVec {
       j = 2 * j
     }
     unfrozen.foreach(qid => chosen(qid) = posByQ(qid).length)
-    val st = BulkWandState(indexDir, qpAll, posByQ, chosen.toMap, bcv)
+    val st = BulkWandState(indexDir, qpAll, posByQ, chosen.toMap)
     // exact phase, one plan: essential-dim candidates per query, then
     // full positive-dim scoring semi-joined to them
     val essDf = broadcast(spark.createDataFrame(st.essPairs)
       .toDF("qid", "dim"))
     val candDims = st.essPairs.map(_._2).distinct
-    val cand = maskedDimScan(spark, indexDir, idCol, candDims, bc)
+    val cand = maskedDimScan(spark, indexDir, idCol, candDims)
       .join(essDf, Seq("dim"))
       .select(col("qid"), col(idCol)).distinct()
     val wq = Window.partitionBy(col("qid"))
       .orderBy(col("score").desc, col(idCol).asc)
-    val positives = maskedDimScan(spark, indexDir, idCol, allPosDims, bc)
+    val positives = maskedDimScan(spark, indexDir, idCol, allPosDims)
       .join(broadcast(spark.createDataFrame(st.posPairs)
         .toDF("qid", "dim", "qw")), Seq("dim"))
       .join(cand, Seq("qid", idCol), "left_semi")
@@ -946,9 +848,8 @@ object SparseVec {
                      checkLossless: Boolean = true): DataFrame = {
     val (topk, st) = bulkWandServe(spark, indexDir0, queryPostings,
       idCol, k)
-    val rbc: Option[Option[Int]] = Some(st.bc)
     val allDims = st.qpAll.map(_._2).distinct
-    val total = maskedDimScan(spark, st.indexDir, idCol, allDims, rbc)
+    val total = maskedDimScan(spark, st.indexDir, idCol, allDims)
       .join(broadcast(spark.createDataFrame(st.qpAll.map(t =>
           (t._1, t._2))).toDF("qid", "dim")), Seq("dim"))
       .count()
@@ -957,12 +858,12 @@ object SparseVec {
       if (st.essPairs.isEmpty) Seq((-1L, -1)) else st.essPairs)
       .toDF("qid", "dim"))
     val cand = maskedDimScan(spark, st.indexDir, idCol,
-        st.essPairs.map(_._2).distinct, rbc)
+        st.essPairs.map(_._2).distinct)
       .join(essDf, Seq("dim"))
       .select(col("qid"), col(idCol)).distinct()
     val scored =
       if (st.posPairs.isEmpty) 0L
-      else maskedDimScan(spark, st.indexDir, idCol, posDims, rbc)
+      else maskedDimScan(spark, st.indexDir, idCol, posDims)
         .join(broadcast(spark.createDataFrame(st.posPairs.map(t =>
           (t._1, t._2))).toDF("qid", "dim")), Seq("dim"))
         .join(cand, Seq("qid", idCol), "left_semi")
@@ -1010,18 +911,17 @@ object SparseVec {
                  idCol: String, k: Int,
                  checkLossless: Boolean = true): DataFrame = {
     val (topk, st) = wandServe(spark, indexDir0, queryPostings, idCol, k)
-    val rbc: Option[Option[Int]] = Some(bucketCount(spark, st.indexDir))
     val allDims = st.qpAll.map(_._1)
     val posDims = st.qp.map(_._1)
-    val total = maskedDimScan(spark, st.indexDir, idCol, allDims, rbc)
+    val total = maskedDimScan(spark, st.indexDir, idCol, allDims)
       .count()
     // rows the exact phase aggregates: candidate docs' positive-dim
     // postings (zero-weight dims are never scored — see wandServe)
     val scored =
       if (st.exhaustive)
-        maskedDimScan(spark, st.indexDir, idCol, posDims, rbc).count()
-      else maskedDimScan(spark, st.indexDir, idCol, posDims, rbc)
-        .join(maskedDimScan(spark, st.indexDir, idCol, st.essDims, rbc)
+        maskedDimScan(spark, st.indexDir, idCol, posDims).count()
+      else maskedDimScan(spark, st.indexDir, idCol, posDims)
+        .join(maskedDimScan(spark, st.indexDir, idCol, st.essDims)
           .select(col(idCol)).distinct(), Seq(idCol), "left_semi")
         .count()
     // `checkLossless = false` skips the exhaustive twin (for decade

@@ -391,6 +391,34 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("CartesianProduct"))
   }
 
+  test("stored sparse serve reads only the query dims' bucket directories, " +
+      "with the dim IN list pushed for row-group pruning") {
+    import graft.search.SparseVec
+    import spark.implicits._
+    val root = "/tmp/graft_sparse_bucket_plan_test"
+    val p = new org.apache.hadoop.fs.Path(root)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+    // 40 dims: every one of the 16 buckets holds postings
+    SparseVec.build((0L until 40L).map(i => (i, Array.tabulate(40)(d =>
+        if ((i + d) % 4 == 0) 1.0f + d else 0f))).toDF("id", "vec"),
+      "id", "vec", 10, root)
+    // dims 3 and 20 live in buckets 3 and 4
+    val q = Seq((3, 1.0), (20, 0.5)).toDF("dim", "w")
+    val scans = SparseVec.searchIndex(spark, root, q, "id", 5)
+      .queryExecution.sparkPlan.collect {
+        case f: org.apache.spark.sql.execution.FileSourceScanExec => f
+      }
+    assert(scans.size == 1, s"expected one postings scan: $scans")
+    val read = scans.head.relation.location.rootPaths.map(_.getName).toSet
+    assert(read == Set("dim_bucket=3", "dim_bucket=4"),
+      s"serve read other bucket directories: $read")
+    val pushed = scans.head.metadata.getOrElse("PushedFilters", "")
+    val inDims = """In\(dim, \[([0-9,]+)\]\)""".r.findFirstMatchIn(pushed)
+      .map(_.group(1).split(",").toSet)
+    assert(inDims.contains(Set("3", "20")),
+      s"dim IN list not pushed to the postings scan: $pushed")
+  }
+
   test("group-by-field search: argmin window then bounded top-k") {
     val p = plan("group_by_field_search")
     assert(p.contains("Window"), "per-group argmin must be a window")

@@ -410,14 +410,17 @@ class SearchOpsSpec extends SparkSpec {
     SparseVec.upsertBatch(spark, Seq((1L, Array(0f, 0f, 4.0f, 0f)))
       .toDF("id", "vec"), "id", "vec", topN = 4, root)
     assert(serve() == Map(1L -> 4.0, 4L -> 6.0))
-    // the query's dims arrive as a pushed literal filter (partition
-    // pruning over the dim= layout)
+    // the query's dims (1 and 3) open only their bucket directories and
+    // arrive as a pushed literal filter (row-group pruning inside them)
     val scans = SparseVec.searchIndex(spark, root, q, "id", 10)
       .queryExecution.sparkPlan.collect {
-        case s: org.apache.spark.sql.execution.FileSourceScanExec =>
-          s.metadata.getOrElse("PartitionFilters", "")
-      }.mkString
-    assert(scans.contains("dim"), s"dim prune missing: $scans")
+        case s: org.apache.spark.sql.execution.FileSourceScanExec => s
+      }
+    val read = scans.flatMap(_.relation.location.rootPaths.map(_.getName))
+    assert(read.toSet == Set("dim_bucket=1", "dim_bucket=3"),
+      s"dim prune missing: $read")
+    val pushed = scans.map(_.metadata.getOrElse("PushedFilters", "")).mkString
+    assert(pushed.contains("In(dim"), s"dim prune missing: $pushed")
   }
 
   test("sparse WAND serve: lossless vs exhaustive, prunes the high-df " +
@@ -511,67 +514,83 @@ class SearchOpsSpec extends SparkSpec {
     assert(rep._5 > 0L, s"the stopword list was not pruned: $rep")
   }
 
-  test("dim-bucketed sparse layout: serve and WAND equal the per-dim " +
-      "layout through append/delete/compact/upsert") {
-    import graft.search.{SparseVec, Tombstones}
+  test("one dim-bucketed sparse layout: serve and WAND equal the stateless " +
+      "search through append/delete/compact/upsert and a rebuild") {
+    import graft.search.SparseVec
     val corpus = (0L until 40L).map { i =>
       (i, Array.tabulate(12)(d =>
         if ((i + d) % 5 == 0) (1.0 + (i % 7) * 0.25).toFloat else 0f))
     }.toDF("id", "vec")
-    val perDim = "/tmp/graft_bucketed_test/perdim"
-    val bucketed = "/tmp/graft_bucketed_test/bucketed"
-    val p = new org.apache.hadoop.fs.Path("/tmp/graft_bucketed_test")
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-    SparseVec.build(corpus.where(col("id") < 30), "id", "vec", 6, perDim)
-    SparseVec.build(corpus.where(col("id") < 30), "id", "vec", 6,
-      bucketed, buckets = 5)
-    assert(SparseVec.bucketCount(spark, bucketed).contains(5))
-    assert(SparseVec.bucketCount(spark, perDim).isEmpty)
-    // same maintenance sequence on both layouts
-    def mutate(root: String): Unit = {
-      SparseVec.append(corpus.where(col("id") >= 30), "id", "vec", 6, root)
-      SparseVec.delete(Seq(Tuple1(2L)).toDF("id"), root, "id")
-      SparseVec.compactTombstones(spark, root, "id")
-      SparseVec.upsertBatch(spark,
-        Seq((5L, Array.fill(12)(0.5f))).toDF("id", "vec"),
-        "id", "vec", 6, root)
-    }
-    mutate(perDim); mutate(bucketed)
+    val root = "/tmp/graft_bucketed_test"
+    val p = new org.apache.hadoop.fs.Path(root)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(p, true)
+    SparseVec.build(corpus.where(col("id") < 30), "id", "vec", 6, root)
+    SparseVec.append(corpus.where(col("id") >= 30), "id", "vec", 6, root)
+    SparseVec.delete(Seq(Tuple1(2L)).toDF("id"), root, "id")
+    SparseVec.compactTombstones(spark, root, "id")
+    val upserted = Seq((5L, Array.fill(12)(0.5f))).toDF("id", "vec")
+    SparseVec.upsertBatch(spark, upserted, "id", "vec", 6, root)
     val q = SparseVec.postings(
       Seq((0L, Array.tabulate(12)(d => if (d % 3 == 0) 1.0f else 0f)))
         .toDF("id", "vec"), "id", "vec", 6)
-    def serve(root: String, wand: Boolean) =
+    def serve(wand: Boolean) =
       (if (wand) SparseVec.searchWandIndex(spark, root, q, "id", 12)
        else SparseVec.searchIndex(spark, root, q, "id", 12))
         .as[(Long, Double)].collect().toSeq
-    assert(serve(bucketed, wand = false) == serve(perDim, wand = false),
-      "bucketed serve diverged from per-dim serve")
-    assert(serve(bucketed, wand = true) == serve(perDim, wand = false),
-      "bucketed WAND serve diverged")
-    // the bucketed fold kept the layout: dimb dirs, no dim= dirs
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dirs = fs.listStatus(new org.apache.hadoop.fs.Path(
-        SparseVec.postingsDir(bucketed)))
+    def stateless(rows: org.apache.spark.sql.DataFrame) =
+      SparseVec.search(SparseVec.postings(rows, "id", "vec", 6), q, "id", 12)
+        .as[(Long, Double)].collect().toSeq
+    // live rows: id 2 deleted, id 5 at its upserted vector
+    val live = corpus.where(!col("id").isin(2L, 5L)).unionByName(upserted)
+    assert(serve(wand = false) == stateless(live),
+      "stored serve diverged from the stateless search over live rows")
+    assert(serve(wand = true) == stateless(live),
+      "WAND serve diverged from the stateless search over live rows")
+    def dirs() = fs.listStatus(new org.apache.hadoop.fs.Path(
+        SparseVec.postingsDir(root)))
       .filter(_.isDirectory).map(_.getPath.getName).toSeq
-    assert(dirs.nonEmpty && dirs.forall(_.startsWith("dimb=")),
-      s"bucketed fold flattened the layout: $dirs")
-    // a rebuild at the default (per-dim) layout CLEARS the stale
-    // marker — or later appends would write dimb= dirs into a dim=
-    // tree (review finding, round 14)
-    SparseVec.build(corpus, "id", "vec", 6, bucketed)
-    assert(SparseVec.bucketCount(spark, bucketed).isEmpty,
-      "stale bucket marker survived a per-dim rebuild")
-    val dirs2 = fs.listStatus(new org.apache.hadoop.fs.Path(
-        SparseVec.postingsDir(bucketed)))
-      .filter(_.isDirectory).map(_.getPath.getName).toSeq
-    assert(dirs2.nonEmpty && dirs2.forall(_.startsWith("dim=")),
-      s"per-dim rebuild left bucketed dirs: $dirs2")
-    // the rebuilt (full original corpus) artifact serves correctly —
-    // compared against the in-memory exhaustive over the same rows
-    assert(serve(bucketed, wand = false) ==
-      SparseVec.search(SparseVec.postings(corpus, "id", "vec", 6),
-          q, "id", 12)
-        .as[(Long, Double)].collect().toSeq)
+    // appends and the fold kept the layout: bucket directories only
+    assert(dirs().nonEmpty && dirs().forall(_.startsWith("dim_bucket=")),
+      s"maintenance left non-bucket directories: ${dirs()}")
+    // a rebuild replaces the tree and serves the rebuilt corpus
+    SparseVec.build(corpus, "id", "vec", 6, root)
+    assert(dirs().nonEmpty && dirs().forall(_.startsWith("dim_bucket=")),
+      s"rebuild left non-bucket directories: ${dirs()}")
+    assert(serve(wand = false) == stateless(corpus))
+    assert(serve(wand = true) == stateless(corpus))
+  }
+
+  test("sparse postings written by an earlier layout (per-dim dim= or " +
+      "dimb= buckets) fail on serve and append instead of returning rows") {
+    import graft.search.SparseVec
+    val corpus = (0L until 6L).map(i =>
+      (i, Array(1.0f + i, 2.0f, 0.5f))).toDF("id", "vec")
+    val q = SparseVec.postings(corpus.where(col("id") === 0L),
+      "id", "vec", 3)
+    val post = SparseVec.postings(corpus, "id", "vec", 3)
+    Seq("dim", "dimb").foreach { legacy =>
+      val root = s"/tmp/graft_legacy_postings_test/$legacy"
+      val p = new org.apache.hadoop.fs.Path(root)
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+      // the earlier writers' trees: postings/dim=3/… and postings/dimb=1/…
+      (if (legacy == "dim") post
+       else post.withColumn("dimb", pmod(col("dim"), lit(2))))
+        .write.partitionBy(legacy).parquet(SparseVec.postingsDir(root))
+      val calls: Seq[(String, () => Unit)] = Seq(
+        "searchIndex" -> (() =>
+          SparseVec.searchIndex(spark, root, q, "id", 3).collect()),
+        "searchWandIndex" -> (() =>
+          SparseVec.searchWandIndex(spark, root, q, "id", 3).collect()),
+        "append" -> (() => SparseVec.append(
+          corpus.where(col("id") === 0L).withColumn("id", lit(99L)),
+          "id", "vec", 3, root)))
+      calls.foreach { case (name, call) =>
+        val e = intercept[IllegalStateException](call())
+        assert(e.getMessage.contains("rebuild"),
+          s"$legacy tree, $name: ${e.getMessage}")
+      }
+    }
   }
 
   test("bulk sparse serve: one plan equals the per-query loop, masked, " +
