@@ -59,7 +59,7 @@ object Fixtures {
 
   // ---- IVF ----------------------------------------------------------
 
-  def ivfDir(dir: String): String = tmp("ivf", dir)
+  def ivfDir(dir: String): String = tmp("ivfrs", dir)
 
   /** The nlist-16 IVF index over the fixture's embeddings. */
   def ivf(s: SparkSession, dir: String): IvfIndex.Model =
@@ -90,7 +90,7 @@ object Fixtures {
   /** The full-corpus nlist-16 index the delete entries record and
     * clear tombstones on, apart from [[ivf]] so the shared index never
     * carries a delete. */
-  def tombIvfDir(dir: String): String = tmp("ivf_tomb", dir)
+  def tombIvfDir(dir: String): String = tmp("ivfrs_tomb", dir)
 
   def tombIvf(s: SparkSession, dir: String): IvfIndex.Model =
     ivfAt(s, tombIvfDir(dir))(Tables.embeddings(s, dir))
@@ -103,7 +103,7 @@ object Fixtures {
     * rows is what restores exact search. The entries copy it; returns
     * its dir. */
   def upsertBaseIvf(s: SparkSession, dir: String): String =
-    ivfBuiltAt(s, tmp("ivf_upbase", dir)) {
+    ivfBuiltAt(s, tmp("ivfrs_upbase", dir)) {
       Tables.embeddings(s, dir).withColumn("embedding",
         when(col("vec_id") % 10 === 1, reverse(col("embedding")))
           .otherwise(col("embedding")))
@@ -111,12 +111,12 @@ object Fixtures {
 
   /** The full-corpus nlist-16 indexes the router registers: under their
     * own dirs, so the always-IVF rewrite entries stay un-routed. */
-  def routedIvfDir(dir: String): String = tmp("ivf_routed", dir)
+  def routedIvfDir(dir: String): String = tmp("ivfrs_routed", dir)
 
   def routedIvf(s: SparkSession, dir: String): IvfIndex.Model =
     ivfAt(s, routedIvfDir(dir))(Tables.embeddings(s, dir))
 
-  def routedSparseIvfDir(dir: String): String = tmp("ivf_routedsp", dir)
+  def routedSparseIvfDir(dir: String): String = tmp("ivfrs_routedsp", dir)
 
   def routedSparseIvf(s: SparkSession, dir: String): IvfIndex.Model =
     ivfAt(s, routedSparseIvfDir(dir))(Tables.embeddings(s, dir))

@@ -132,7 +132,7 @@ object PipelineQueries {
   private val ivfCosineSearch = Q(
     "ivf_cosine_search",
     (s, dir) => {
-      val indexDir = s"/tmp/graft_ivf_cos_${math.abs(dir.hashCode)}"
+      val indexDir = s"/tmp/graft_ivfrs_cos_${math.abs(dir.hashCode)}"
       val e = Tables.embeddings(s, dir)
       def normed(df: org.apache.spark.sql.DataFrame) =
         df.withColumn("embedding",
@@ -225,7 +225,7 @@ object PipelineQueries {
   private val ivfRangeSearchAppended = Q(
     "ivf_range_search_appended",
     (s, dir) => {
-      val indexDir = s"/tmp/graft_ivf_app_${math.abs(dir.hashCode)}"
+      val indexDir = s"/tmp/graft_ivfrs_app_${math.abs(dir.hashCode)}"
       val e = Tables.embeddings(s, dir)
       rebuildOnce(s, indexDir) {
         val m = IvfIndex.build(e.where(col("vec_id") % 3 =!= 2),
@@ -252,7 +252,7 @@ object PipelineQueries {
     * semi-join BEFORE any distance math — the filtered-ANN composition
     * Milvus runs when a search carries a `filter=` expression over an
     * indexed scalar field. Full probe ⇒ equals exact filtered kNN
-    * (oracled); the artifacts are the shared `graft_ivf`/`scalaridx`
+    * (oracled); the artifacts are the shared `graft_ivfrs`/`scalaridx`
     * build-once dirs. */
   private val scalarFilteredIvfSearch = Q(
     "scalar_filtered_ivf_search",
@@ -288,8 +288,8 @@ object PipelineQueries {
     "index_reconcile_serve",
     (s, dir) => {
       import graft.search.IndexSync
-      val baseDir = s"/tmp/graft_ivf_reconbase_${math.abs(dir.hashCode)}"
-      val runDir = s"/tmp/graft_ivf_recon_${math.abs(dir.hashCode)}"
+      val baseDir = s"/tmp/graft_ivfrs_reconbase_${math.abs(dir.hashCode)}"
+      val runDir = s"/tmp/graft_ivfrs_recon_${math.abs(dir.hashCode)}"
       val e = Tables.embeddings(s, dir)
       Fixtures.ivfBuiltAt(s, baseDir) {
         val maxId = e.agg(max(col("vec_id"))).collect()(0).getLong(0)
@@ -575,8 +575,8 @@ object PipelineQueries {
   private val ivfIncrementalSearch = Q(
     "ivf_incremental_search",
     (s, dir) => {
-      val baseDir = s"/tmp/graft_ivf_incrbase_${math.abs(dir.hashCode)}"
-      val runDir = s"/tmp/graft_ivf_incr_${math.abs(dir.hashCode)}"
+      val baseDir = s"/tmp/graft_ivfrs_incrbase_${math.abs(dir.hashCode)}"
+      val runDir = s"/tmp/graft_ivfrs_incr_${math.abs(dir.hashCode)}"
       val e = Tables.embeddings(s, dir)
       Fixtures.ivfBuiltAt(s, baseDir)(e.where(col("vec_id") % 2 === 0))
       Artifacts.copyLocalDir(baseDir, runDir)
@@ -867,7 +867,7 @@ object PipelineQueries {
       import graft.plans.IvfProbeRewrite
       import graft.search.{GraphAnn, Router}
       val e = Tables.embeddings(s, dir)
-      val indexDir = s"/tmp/graft_ivf_routedg_${math.abs(dir.hashCode)}"
+      val indexDir = s"/tmp/graft_ivfrs_routedg_${math.abs(dir.hashCode)}"
       val model = Fixtures.ivfAt(s, indexDir)(e)
       val sq8Dir = Fixtures.sq8Dir(dir)
       Fixtures.sq8(s, dir)
@@ -960,7 +960,7 @@ object PipelineQueries {
       import graft.plans.IvfProbeRewrite
       import graft.search.{Bm25Index, Router}
       val e = Tables.embeddings(s, dir)
-      val indexDir = s"/tmp/graft_ivf_routedt_${math.abs(dir.hashCode)}"
+      val indexDir = s"/tmp/graft_ivfrs_routedt_${math.abs(dir.hashCode)}"
       val model = Fixtures.ivfAt(s, indexDir)(e)
       val sq8Dir = Fixtures.sq8Dir(dir)
       Fixtures.sq8(s, dir)
@@ -4350,7 +4350,7 @@ object PipelineQueries {
       val assign = IvfIndex.readData(s, indexDir)
         .select(col("vec_id"), col("cluster_id"))
       val cents = s.read.parquet(IvfIndex.centroidsDir(indexDir))
-      val radiiT = s.read.parquet(IvfIndex.radiiDir(indexDir))
+      val radiiT = IvfIndex.radiiFrame(s, indexDir)
       import graft.search.{IndexAudit, Rq}
       Fixtures.rq(s, dir)
       val rqIds = s.read.parquet(Rq.codesDir(Fixtures.rqDir(dir)))
@@ -4645,7 +4645,7 @@ object PipelineQueries {
       import graft.search.{AliasedIndex, Tombstones}
       import s.implicits._
       val baseDir = Fixtures.tombIvfBuilt(s, dir)
-      val runDir = s"/tmp/graft_ivf_tombfold_${math.abs(dir.hashCode)}"
+      val runDir = s"/tmp/graft_ivfrs_tombfold_${math.abs(dir.hashCode)}"
       val e = Tables.embeddings(s, dir)
       rebuildOnce(s, runDir) {
         AliasedIndex.init(s, runDir) { d =>
@@ -4866,7 +4866,7 @@ object PipelineQueries {
     (s, dir) => {
       import s.implicits._
       val baseDir = Fixtures.ivfBuilt(s, dir)
-      val runDir = s"/tmp/graft_ivf_rebal_${math.abs(dir.hashCode)}"
+      val runDir = s"/tmp/graft_ivfrs_rebal_${math.abs(dir.hashCode)}"
       mutateOnce(s, runDir) {
         Artifacts.copyLocalDir(baseDir, runDir)
         val model = IvfIndex.load(s, runDir)
@@ -4973,7 +4973,7 @@ object PipelineQueries {
     (s, dir) => {
       import graft.search.AliasedIndex
       val baseDir = Fixtures.ivfBuilt(s, dir)
-      val runDir = s"/tmp/graft_ivf_rebalsrch_${math.abs(dir.hashCode)}"
+      val runDir = s"/tmp/graft_ivfrs_rebalsrch_${math.abs(dir.hashCode)}"
       val e = Tables.embeddings(s, dir)
       rebuildOnce(s, runDir) {
         AliasedIndex.init(s, runDir)(d => Artifacts.copyLocalDir(baseDir, d))
@@ -5007,7 +5007,7 @@ object PipelineQueries {
     "ivf_upsert_search",
     (s, dir) => {
       val baseDir = Fixtures.upsertBaseIvf(s, dir)
-      val runDir = s"/tmp/graft_ivf_upsert_${math.abs(dir.hashCode)}"
+      val runDir = s"/tmp/graft_ivfrs_upsert_${math.abs(dir.hashCode)}"
       val e = Tables.embeddings(s, dir)
       Artifacts.copyLocalDir(baseDir, runDir)
       val model = IvfIndex.load(s, runDir)
@@ -5033,7 +5033,7 @@ object PipelineQueries {
     "ivf_bulk_upsert_search",
     (s, dir) => {
       val baseDir = Fixtures.upsertBaseIvf(s, dir)
-      val runDir = s"/tmp/graft_ivf_bulkup_${math.abs(dir.hashCode)}"
+      val runDir = s"/tmp/graft_ivfrs_bulkup_${math.abs(dir.hashCode)}"
       val e = Tables.embeddings(s, dir)
       Artifacts.copyLocalDir(baseDir, runDir)
       val model = IvfIndex.load(s, runDir)
@@ -5078,7 +5078,7 @@ object PipelineQueries {
       import org.apache.hadoop.fs.Path
       import org.apache.spark.sql.types._
       val baseDir = Fixtures.upsertBaseIvf(s, dir)
-      val runDir = s"/tmp/graft_ivf_streamup_${math.abs(dir.hashCode)}"
+      val runDir = s"/tmp/graft_ivfrs_streamup_${math.abs(dir.hashCode)}"
       val e = Tables.embeddings(s, dir)
       Artifacts.copyLocalDir(baseDir, runDir)
       val model = IvfIndex.load(s, runDir)
@@ -5134,7 +5134,7 @@ object PipelineQueries {
     "index_version_report",
     (s, dir) => {
       val baseDir = Fixtures.ivfBuilt(s, dir)
-      val runDir = s"/tmp/graft_ivf_verrep_${math.abs(dir.hashCode)}"
+      val runDir = s"/tmp/graft_ivfrs_verrep_${math.abs(dir.hashCode)}"
       val e = Tables.embeddings(s, dir)
       // deterministic mutation once per fixture state (mutateOnce);
       // the version counters below stay live against the artifact
@@ -5200,7 +5200,7 @@ object PipelineQueries {
     (s, dir) => {
       import graft.search.Maintenance
       val baseDir = Fixtures.ivfBuilt(s, dir)
-      val runDir = s"/tmp/graft_ivf_mplan_${math.abs(dir.hashCode)}"
+      val runDir = s"/tmp/graft_ivfrs_mplan_${math.abs(dir.hashCode)}"
       val e = Tables.embeddings(s, dir)
       // deterministic fixture mutation, run once per state (the
       // mutateOnce discipline — r10 bench showed this entry paying the
@@ -5259,7 +5259,7 @@ object PipelineQueries {
         "assign" -> IvfIndex.readData(s, runDir)
           .select("vec_id", "cluster_id"),
         "centroids" -> s.read.parquet(IvfIndex.centroidsDir(runDir)),
-        "radii" -> s.read.parquet(IvfIndex.radiiDir(runDir)),
+        "radii" -> IvfIndex.radiiFrame(s, runDir),
         "adjacency" -> adj.select("src", "dst"),
         "entries" -> entries.select("entry_id"),
         "upper_adjacency" -> uadjM.select("src", "dst")))

@@ -164,34 +164,25 @@ object Dedup {
       array_min(transform(sh, s => md5(concat(lit(s"$h:"), s))))
     }: _*)
 
-  /** Batch MinHash signatures via explode + groupBy: each shingle's salted
-    * digests are materialized ONCE per row (md5 evaluated ceil(n/4) times
-    * per shingle, not n times), then `numHashes` min-aggregates each take
-    * an 8-hex slice — min-of-slices of independent digests is a valid
-    * min-hash family with 32-bit slice resolution. Partial aggregation
-    * applies to the mins, so at scale each executor ships one signature
-    * per group. Returns (idCol, sig ARRAY<STRING>[numHashes]). */
+  /** Batch MinHash signatures: each row is signed in place by the
+    * codegen'd [[graft.functions.MinHashSlices]] kernel — `numHashes`
+    * 8-hex slices of ceil(numHashes/4) salted md5 digests per shingle,
+    * min over the row's shingles (min-of-slices of independent digests is
+    * a valid min-hash family with 32-bit slice resolution) — then one
+    * component-wise min per id. The per-id min is the union-of-rows
+    * semantics a collection holding superseded rows of one id needs, and
+    * partial aggregation applies to it, so at scale each executor ships
+    * one signature per id; a single-partition batch needs no exchange at
+    * all. Rows with no shingle (fewer than `shingleN` tokens, empty or
+    * null text) sign nothing. Returns (id, sig ARRAY<STRING>[numHashes]). */
   def minhashSignatures(df: DataFrame, idCol: String, textCol: String,
-                        numHashes: Int, shingleN: Int = 3): DataFrame = {
-    val nDigests = (numHashes + 3) / 4
-    val digestConcat = concat((0 until nDigests).map { i =>
-      if (i == 0) md5(col("s")) else md5(concat(lit(s"$i:"), col("s")))
-    }: _*)
-    // repartition raw text by id FIRST: parallelizes the interpreted
-    // shingle + md5 work, and the groupBy(id) below then needs no second
-    // exchange (already hash(id)-partitioned) — so the digest rows, which
-    // are larger than the source text, never shuffle at all
-    df.select(col(idCol).as("id"), col(textCol).as("text"))
-      .repartition(col("id"))
-      .select(col("id"), shingles(col("text"), shingleN).as("sh"))
-      .where(size(col("sh")) > 0)
-      .select(col("id"), explode(col("sh")).as("s"))
-      .withColumn("d", digestConcat)
+                        numHashes: Int, shingleN: Int = 3): DataFrame =
+    df.select(col(idCol).as("id"), graft.functions.TextFunctions
+        .minhashSlices(col(textCol), shingleN, numHashes).as("rs"))
+      .where(size(col("rs")) > 0)
       .groupBy(col("id"))
-      .agg(array((0 until numHashes).map { h =>
-        min(substring(col("d"), h * 8 + 1, 8))
-      }: _*).as("sig"))
-  }
+      .agg(array((0 until numHashes).map(h =>
+        min(col("rs").getItem(h))): _*).as("sig"))
 
   /** MinHash estimate of Jaccard = fraction of matching components. */
   def minhashSimilarity(sigA: Column, sigB: Column, numHashes: Int): Column =
@@ -280,18 +271,19 @@ object Dedup {
     val n = minhashBands(newSig, numHashes, bandSize)
       .select(col("band"), col("band_key"),
         col("id").as("__new_id"), col("sig").as("__sig_n"))
-    val cand = n.join(o, Seq("band", "band_key"))
+    // one aggregate per new id picks its best match: the min of
+    // (−est, old id) is the max est with the min old id among its ties,
+    // and a pair found through several bands is the same pair
+    n.join(o, Seq("band", "band_key"))
       .select(col("__new_id"), col("__old_id"),
         minhashSimilarity(col("__sig_n"), col("__sig_o"), numHashes)
           .as("est_jaccard"))
-      .distinct()
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("__new_id"))
-      .orderBy(col("est_jaccard").desc, col("__old_id").asc)
-    cand.withColumn("__rn", row_number().over(w))
-      .where(col("__rn") === 1 && col("est_jaccard") >= minEst)
-      .select(col("__new_id").as(idCol), col("__old_id").as("dup_of"),
-        col("est_jaccard"))
+      .where(col("est_jaccard") >= minEst)
+      .groupBy(col("__new_id"))
+      .agg(min(struct((-col("est_jaccard")).as("neg_est"),
+        col("__old_id").as("old_id"))).as("best"))
+      .select(col("__new_id").as(idCol), col("best.old_id").as("dup_of"),
+        (-col("best.neg_est")).as("est_jaccard"))
   }
 
   /** Batch SimHash via explode + groupBy: md5 evaluated ONCE per distinct

@@ -42,9 +42,8 @@ object SubstringDedup {
                  windowTokens: Int = 20): DataFrame = {
     require(windowTokens >= 1)
     // repartition the RAW rows first: text is smaller than its exploded
-    // window set, so spread compute before the explode (the
-    // minhashSignatures rationale), and the groupBy(id) below reuses the
-    // partitioning
+    // window set, so spread compute before the explode, and the
+    // groupBy(id) below reuses the partitioning
     val wins = df.select(col(idCol).as("id"), col(textCol).as("text"))
       .repartition(col("id"))
       .select(col("id"),

@@ -83,6 +83,83 @@ object TokenShingles {
   }
 }
 
+/** Codegen'd per-row MinHash: for each of `numHashes` 8-hex slices, the
+  * minimum over the row's distinct token `n`-gram shingles s
+  * ([[TokenShingles]]) of slice h of md5(s) ‖ md5("1:"‖s) ‖ md5("2:"‖s)
+  * ‖ … — slice h is hex characters 8h+1..8h+8 of that digest string, so
+  * each digest serves four slices. A row with no shingle yields an
+  * empty array. The min over a union of rows is the component-wise min
+  * of their per-row results, so a per-id aggregate of this array equals
+  * the explode-every-shingle aggregate it replaces, while each shingle's
+  * digests live only inside one compiled call.
+  */
+case class MinHashSlices(child: Expression, n: Int, numHashes: Int)
+    extends UnaryExpression {
+  override def prettyName: String = "minhash_slices"
+  override def dataType: DataType = ArrayType(StringType, containsNull = false)
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (child.dataType == StringType && n >= 1 && numHashes >= 1)
+      TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"$prettyName requires a STRING argument, n >= 1 and numHashes >= 1, " +
+        s"got ${child.dataType.sql}, n=$n, numHashes=$numHashes")
+
+  override def nullSafeEval(input: Any): Any =
+    MinHashSlices.compute(input.asInstanceOf[UTF8String], n, numHashes)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev,
+      c => s"graft.functions.MinHashSlices.compute($c, $n, $numHashes)")
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+object MinHashSlices {
+  private val HexChars =
+    "0123456789abcdef".getBytes(java.nio.charset.StandardCharsets.US_ASCII)
+
+  /** Called from generated code. A slice compares as its 8 lowercase
+    * hex characters do, which is as the unsigned 32-bit big-endian value
+    * of its 4 digest bytes, so the mins are kept as those values and
+    * rendered to hex once. */
+  def compute(text: UTF8String, n: Int, numHashes: Int): ArrayData = {
+    val sh = TokenShingles.compute(text, n)
+    if (sh.numElements() == 0) return new GenericArrayData(Array.empty[Any])
+    val nDigests = (numHashes + 3) / 4
+    val salts = Array.tabulate(nDigests)(i =>
+      if (i == 0) Array.emptyByteArray
+      else s"$i:".getBytes(java.nio.charset.StandardCharsets.US_ASCII))
+    val mins = Array.fill(numHashes)(Long.MaxValue)
+    val md = java.security.MessageDigest.getInstance("MD5")
+    var k = 0
+    while (k < sh.numElements()) {
+      val s = sh.getUTF8String(k).getBytes
+      var i = 0
+      while (i < nDigests) {
+        md.update(salts(i))
+        val dg = md.digest(s)
+        var q = 0
+        while (q < 4 && i * 4 + q < numHashes) {
+          val v = ((dg(4 * q) & 0xffL) << 24) | ((dg(4 * q + 1) & 0xffL) << 16) |
+            ((dg(4 * q + 2) & 0xffL) << 8) | (dg(4 * q + 3) & 0xffL)
+          if (v < mins(i * 4 + q)) mins(i * 4 + q) = v
+          q += 1
+        }
+        i += 1
+      }
+      k += 1
+    }
+    new GenericArrayData(mins.map { v =>
+      val hex = new Array[Byte](8)
+      var j = 0
+      while (j < 8) { hex(j) = HexChars(((v >>> (28 - 4 * j)) & 0xf).toInt); j += 1 }
+      UTF8String.fromBytes(hex): Any
+    })
+  }
+}
+
 /** Codegen'd content-defined chunking (see [[graft.text.CdcChunks]] for
   * the operator-level story). One compiled pass per row: slide a w-char
   * window, boundary where md5(window) starts with hex nibble '0', emit
@@ -225,6 +302,9 @@ object TextFunctions {
   /** Multiset variant (keeps duplicate shingles — pair counting). */
   def tokenShinglesAll(text: Column, n: Int): Column =
     Bridge.column(TokenShingles(Bridge.expression(text), n, distinct = false))
+
+  def minhashSlices(text: Column, n: Int, numHashes: Int): Column =
+    Bridge.column(MinHashSlices(Bridge.expression(text), n, numHashes))
 
   def cdcChunkList(text: Column, w: Int): Column =
     Bridge.column(CdcChunkList(Bridge.expression(text), w))

@@ -5,26 +5,19 @@ import org.apache.spark.sql.types.{ArrayType, BinaryType, FloatType}
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 
 /** Multimodal (image/audio/video) column plumbing (north-star surface,
-  * BASELINE.json): media travel as opaque `binary` columns with a typed
-  * metadata struct; decode / feature-extraction runs as a batched
-  * per-partition stage behind a pluggable [[MediaDecoder]].
+  * BASELINE.json): media travel as opaque `binary` columns; decode /
+  * feature-extraction runs as a batched per-partition stage behind a
+  * pluggable [[MediaDecoder]].
   *
   * The decode step is STUBBED by design — no image/audio codecs ship in
   * this environment — with [[ByteHistogramDecoder]], a deterministic fake
-  * that exercises the real Spark-side contract: binary schema, struct
-  * metadata, batched `mapPartitions` signature, fixed-width float feature
-  * output. A production decoder (JNI/FFI codec) drops into the same seam
+  * that exercises the real Spark-side contract: binary schema, batched
+  * `mapPartitions` signature, fixed-width float feature output. A production decoder (JNI/FFI codec) drops into the same seam
   * with zero plan changes. At 100 TB this stage is embarrassingly
   * parallel per-row map work; the only sizing concern is
   * `spark.sql.files.maxPartitionBytes` vs decoded-frame memory.
   */
 object Multimodal {
-  /** Typed metadata carried next to the bytes. */
-  def mediaStruct(bytes: Column, kind: Column, width: Column,
-                  height: Column): Column =
-    struct(bytes.as("data"), kind.as("kind"),
-      width.cast("int").as("width"), height.cast("int").as("height"))
-
   /** Pluggable decode/feature seam (the production codec goes here). */
   trait MediaDecoder extends Serializable {
     def dim: Int

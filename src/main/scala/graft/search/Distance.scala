@@ -28,21 +28,6 @@ object Distance {
       lit(0.0),
       (acc, v) => acc + v)
 
-  /** Dot product via zip_with/aggregate. */
-  def dotHof(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(a, b, (x, y) => x.cast(DoubleType) * y.cast(DoubleType)),
-      lit(0.0),
-      (acc, v) => acc + v)
-
-  /** Cosine similarity via HOFs (0.0 on zero norms). */
-  def cosineHof(a: Column, b: Column): Column = {
-    val d = dotHof(a, b)
-    val na = sqrt(dotHof(a, a))
-    val nb = sqrt(dotHof(b, b))
-    when(na === 0.0 || nb === 0.0, lit(0.0)).otherwise(d / (na * nb))
-  }
-
   /** The reference's score mapping (src/app.py:258). */
   def score(distance: Column): Column = lit(1.0) - distance
 }

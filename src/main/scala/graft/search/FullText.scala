@@ -38,8 +38,9 @@ object FullText {
   // job per read — three jobs on EVERY lexical serve's query side.
   // `statsQuerySchema` is deliberately a SUBSET (parquet reads by
   // name): the query side needs only (n_docs, avgdl), so the sealed_*
-  // debt counters stay invisible here and [[debt]] keeps its own
-  // inferred read.
+  // debt counters stay invisible here; [[debt]] reads those through
+  // `statsSealedSchema`, and an artifact sealed before the counters
+  // existed reads them as null.
   private val dictSchema = org.apache.spark.sql.types.StructType(Seq(
     org.apache.spark.sql.types.StructField("term",
       org.apache.spark.sql.types.StringType),
@@ -55,6 +56,12 @@ object FullText {
       org.apache.spark.sql.types.DoubleType),
     org.apache.spark.sql.types.StructField("avgdl",
       org.apache.spark.sql.types.DoubleType)))
+
+  private val statsSealedSchema = org.apache.spark.sql.types.StructType(Seq(
+    org.apache.spark.sql.types.StructField("sealed_rows",
+      org.apache.spark.sql.types.LongType),
+    org.apache.spark.sql.types.StructField("sealed_terms",
+      org.apache.spark.sql.types.LongType)))
 
   private def toks = TextAnalysis.wsTerms(col("__text"))
 
@@ -444,9 +451,10 @@ object FullText {
     val qterms = queries
       .flatMap { case (qid, ts) => ts.distinct.map(t => (qid, t)) }
       .toDF("qid", "term")
-    val dict = spark.read.parquet(dictDir(indexDir))
-    val dfreq = spark.read.parquet(dfDir(indexDir))
-    val stats = spark.read.parquet(statsDir(indexDir))
+    val dict = spark.read.schema(dictSchema).parquet(dictDir(indexDir))
+    val dfreq = spark.read.schema(dfSchema).parquet(dfDir(indexDir))
+    val stats = spark.read.schema(statsQuerySchema)
+      .parquet(statsDir(indexDir))
     broadcast(qterms).join(dict, "term").join(dfreq, "term")
       .crossJoin(broadcast(stats))
       .select(col("qid"), col("dim"),
@@ -492,15 +500,14 @@ object FullText {
     * metering from now). */
   def debt(spark: SparkSession, indexDir0: String): DataFrame = {
     val indexDir = AliasedIndex.resolveDir(spark, indexDir0)
-    val stats = spark.read.parquet(statsDir(indexDir))
+    val seal = spark.read.schema(statsSealedSchema)
+      .parquet(statsDir(indexDir)).first()
     val rows = SparseVec.readPostings(spark, indexDir).count()
-    val terms = spark.read.parquet(dictDir(indexDir)).count()
+    val terms = spark.read.schema(dictSchema).parquet(dictDir(indexDir))
+      .count()
     val (sr, st) =
-      if (stats.columns.contains("sealed_rows")) {
-        val r = stats.select(col("sealed_rows"), col("sealed_terms"))
-          .first()
-        (r.getLong(0), r.getLong(1))
-      } else (rows, terms)
+      if (seal.isNullAt(0)) (rows, terms)
+      else (seal.getLong(0), seal.getLong(1))
     import spark.implicits._
     // clamp at 0: a tombstone compaction physically DROPS posting rows,
     // which can push current counts below the sealed extent — negative

@@ -139,19 +139,20 @@ object IndexAudit {
       .unionByName(row("ivf_orphan_rows", orphanRows))
   }
 
-  /** Covering-radius invariant of an IVF layout (the
-    * [[IvfIndex.radiiDir]] table that range/exact-via-IVF serving
+  /** Covering-radius invariant of an IVF layout (the stored radii
+    * ([[IvfIndex.loadRadii]]) that range/exact-via-IVF serving
     * prunes with — [[IvfIndex.rangeSearch]]/[[IvfIndex.exactSearch]]):
     * `ivf_radius_violations` counts data rows whose distance to their
     * assigned centroid EXCEEDS the stored radius (each one is a row the
     * range prune can silently drop — the wrong-answer direction), and
     * `ivf_radius_missing` counts clusters holding rows but absent from
-    * the radii table (never used to prune — slow, not wrong — but a
+    * the stored radii (never used to prune — slow, not wrong — but a
     * sign the fold was skipped). Both artifact-derived plan-side
-    * aggregates; 0/0 on an index maintained only through
-    * build/append/upsert/rebalance, which all keep the invariant. The
-    * 1e-9 slack absorbs recompute drift on the boundary row (the max
-    * member sits EXACTLY at its cluster's radius). */
+    * aggregates over the nlist-row radii as a local frame; 0/0 on an
+    * index maintained only through build/append/upsert/rebalance, which
+    * all keep the invariant. The 1e-9 slack absorbs recompute drift on
+    * the boundary row (the max member sits EXACTLY at its cluster's
+    * radius). */
   def radiiChecks(spark: org.apache.spark.sql.SparkSession,
                   indexDir0: String, vecCol: String): DataFrame = {
     // audit the SERVED version (like segmentChecks): an aliased root has
@@ -159,12 +160,12 @@ object IndexAudit {
     // audit of anything but the serving version would be the wrong debt
     val indexDir = AliasedIndex.resolveDir(spark, indexDir0)
     val data = IvfIndex.readData(spark, indexDir)
-    // a PRE-radii index (no stored table — the loadRadii degradation
+    // a PRE-radii index (nothing stored — the loadRadii degradation
     // contract) is not corrupt, it is unmaintained: report every
     // populated cluster as missing (so Maintenance.planFull schedules
     // refresh_radii) and zero violations (nothing stored can be
-    // violated), instead of throwing on the absent dir
-    if (!IvfIndex.radiiTableExists(spark, indexDir)) {
+    // violated)
+    if (IvfIndex.storedRadii(spark, indexDir).isEmpty) {
       val missing = data.agg(
         countDistinct(col("cluster_id")).as("value"))
       return row("ivf_radius_missing", missing)
@@ -172,7 +173,7 @@ object IndexAudit {
           missing.select(lit(0L).as("value"))))
     }
     val cents = spark.read.parquet(IvfIndex.centroidsDir(indexDir))
-    val radii = IvfIndex.radiiTable(spark, indexDir)
+    val radii = IvfIndex.radiiFrame(spark, indexDir)
     val viol = data
       .join(broadcast(cents), Seq("cluster_id"))
       .join(broadcast(radii), Seq("cluster_id"))

@@ -32,7 +32,6 @@ object IvfIndex {
 
   def dataDir(indexDir: String): String = s"$indexDir/data"
   def centroidsDir(indexDir: String): String = s"$indexDir/centroids"
-  def radiiDir(indexDir: String): String = s"$indexDir/radii"
 
   /** Fit KMeans(nlist) on `vecCol`, assign cluster ids, write the corpus
     * partitioned by cluster_id plus a centroids table. Deterministic under
@@ -70,109 +69,134 @@ object IvfIndex {
     // recomputed by rebalance — so range/exact-via-IVF serving never
     // over-prunes after normal maintenance (the staleness hazard the
     // scaladoc on clusterRadiiTable documents). One extra linear pass
-    // over the just-written layout, build-time only.
+    // over the just-written layout, build-time only. A rebuild over a
+    // pre-sidecar index drops its radii table with the rest.
     refreshRadii(spark, m, vecCol)
+    val legacy = new Path(legacyRadiiDir(indexDir))
+    legacy.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .delete(legacy, true)
     m
   }
 
-  /** Recompute and (crash-safely) store the covering-radius table from
-    * the CURRENT layout — the manual refresh verb; [[build]] and
-    * [[rebalance]] call it, [[append]]/[[upsertBatch]] fold
-    * incrementally instead (O(batch), no corpus pass). */
+  /** Recompute and store the covering radii from the CURRENT layout —
+    * the manual refresh verb; [[build]] and [[rebalance]] call it,
+    * [[append]]/[[upsertBatch]] fold incrementally instead (O(batch), no
+    * corpus pass). */
   def refreshRadii(spark: SparkSession, model: Model,
                    vecCol: String): Unit =
-    writeRadiiTable(spark, model.indexDir,
-      clusterRadiiTable(spark, model, vecCol))
+    writeRadii(spark, model.indexDir,
+      clusterRadiiTable(spark, model, vecCol).collect()
+        .map(r => (r.getInt(0), r.getDouble(1))).toMap)
 
-  /** The readable radii table's path, WITHOUT mutating anything: the
-    * live dir when complete (_SUCCESS), else the `__old` aside copy a
-    * crashed [[writeRadiiTable]] left (read in place — renaming it back
-    * is the WRITER's recovery, run by [[foldRadii]]/[[refreshRadii]];
-    * a READER that renamed could race the single writer between its two
-    * renames and corrupt the swap), else None (pre-radii index). */
-  private def readableRadiiPath(spark: SparkSession,
-                                indexDir: String): Option[String] = {
-    val fs = new Path(radiiDir(indexDir))
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def complete(p: String): Boolean =
-      fs.exists(new Path(p, "_SUCCESS"))
-    if (complete(radiiDir(indexDir))) Some(radiiDir(indexDir))
-    else if (complete(radiiDir(indexDir) + "__old"))
-      Some(radiiDir(indexDir) + "__old")
-    else None
-  }
+  /** The covering radii's sidecar in the index directory: one
+    * `cluster_id<TAB>radius` line per cluster, the radius written by
+    * `java.lang.Double.toString`, which parses back bit-identical. */
+  private[graft] val RadiiFile = "_graft_radii.tsv"
 
-  /** True when a stored radii table is readable (live or aside). */
-  private[search] def radiiTableExists(spark: SparkSession,
-                                       indexDir: String): Boolean =
-    readableRadiiPath(spark, indexDir).isDefined
+  /** Where an index written before [[RadiiFile]] kept its radii, as a
+    * parquet table. Such an index is refused, not migrated. */
+  private def legacyRadiiDir(indexDir: String): String = s"$indexDir/radii"
 
-  /** The stored radii table as a DataFrame (live or crash-aside copy);
-    * callers must have checked [[radiiTableExists]]. Read-only. */
-  private[search] def radiiTable(spark: SparkSession,
-                                 indexDir: String): DataFrame =
-    spark.read.parquet(readableRadiiPath(spark, indexDir).get)
+  /** Store `radii` as the index's [[RadiiFile]]: one overwrite rename
+    * ([[Artifacts.writeSidecar]]), so a reader sees the old map or the
+    * new one, and a crashed write leaves the old one serving. */
+  private[graft] def writeRadii(spark: SparkSession, indexDir: String,
+                                radii: Map[Int, Double]): Unit =
+    Artifacts.writeSidecar(spark, indexDir, RadiiFile,
+      radii.toSeq.sortBy(_._1)
+        .map { case (c, r) => s"$c\t${java.lang.Double.toString(r)}\n" }
+        .mkString)
+
+  /** The stored covering radii — a file read, no Spark job, nothing
+    * mutated. None on an index built before radii existed (nothing
+    * stored, so nothing prunes); an index whose radii sit in the
+    * pre-sidecar [[legacyRadiiDir]] fails here, on its first use. */
+  private[search] def storedRadii(spark: SparkSession,
+                                  indexDir: String): Option[Map[Int, Double]] =
+    Artifacts.readSidecar(spark, indexDir, RadiiFile) match {
+      case Some(text) => Some(text.linesIterator.filter(_.nonEmpty).map { l =>
+        val tab = l.indexOf('\t')
+        (l.substring(0, tab).toInt,
+          java.lang.Double.parseDouble(l.substring(tab + 1)))
+      }.toMap)
+      case None =>
+        val legacy = new Path(legacyRadiiDir(indexDir))
+        if (legacy.getFileSystem(spark.sparkContext.hadoopConfiguration)
+            .exists(legacy))
+          throw new IllegalStateException(s"IVF index $indexDir keeps its " +
+            s"covering radii in $legacy, a layout this version no longer " +
+            "reads; rebuild the index (IvfIndex.build)")
+        None
+    }
 
   /** The stored covering radii, or an empty map when never written (a
     * pre-radii index): an absent radius is NEVER used to prune, so the
-    * fallback is slow-but-exact, not wrong. READ-ONLY — a serve path
-    * must not run rename recovery (it could race the single writer
-    * between writeRadiiTable's two renames); it reads the `__old`
-    * aside copy in place instead. */
+    * fallback is slow-but-exact, not wrong. */
   def loadRadii(spark: SparkSession, indexDir: String): Map[Int, Double] =
-    readableRadiiPath(spark, indexDir) match {
-      case None => Map.empty
-      case Some(p) => spark.read.parquet(p)
-        .collect().map(r => (r.getInt(0), r.getDouble(1))).toMap
-    }
+    storedRadii(spark, indexDir).getOrElse(Map.empty)
 
-  /** Crash-safe swap of the (nlist-row) radii table through
-    * `__tmp`/`__old` ([[Artifacts.replaceDir]]); readers serve a crashed
-    * swap's `__old` in place ([[readableRadiiPath]]). The table is
-    * materialized BEFORE the live dir moves, so the plan may read the
-    * live table it replaces. */
-  private def writeRadiiTable(spark: SparkSession, indexDir: String,
-                              radii: DataFrame): Unit = {
-    val d = new Path(radiiDir(indexDir))
-    Artifacts.replaceDir(
-      d.getFileSystem(spark.sparkContext.hadoopConfiguration), d,
-      new Path(radiiDir(indexDir) + "__tmp"),
-      new Path(radiiDir(indexDir) + "__old")) {
-      radii.coalesce(1).write.mode("overwrite").parquet(_)
+  /** [[loadRadii]] as a local (cluster_id, radius) frame, cluster-id
+    * ascending — for plans that join the radii. */
+  def radiiFrame(spark: SparkSession, indexDir: String): DataFrame = {
+    import spark.implicits._
+    loadRadii(spark, indexDir).toSeq.sortBy(_._1).toDF("cluster_id", "radius")
+  }
+
+  /** Fold an assigned batch (`__nc` = its [[nearestCentroid]] struct)
+    * into the stored radii: radius'(c) = max(radius(c), max over batch
+    * rows assigned to c of d(row, centroid_c)) — the append-time
+    * discipline that keeps the stored radii UPPER bounds under normal
+    * operation. ONE job: each partition folds its rows into at most
+    * nlist (cluster, max squared distance) pairs, and the driver merges
+    * them into the stored map. Max follows Spark's double ordering (NaN
+    * largest) and skips nulls, as the aggregate it replaces did. */
+  private def foldRadii(assigned: DataFrame,
+                        stored: Map[Int, Double]): Map[Int, Double] = {
+    val batchMax = assigned
+      .select(col("__nc.cluster_id"), col("__nc.d"))
+      .queryExecution.toRdd.mapPartitions { rows =>
+        val m = scala.collection.mutable.HashMap.empty[Int, Double]
+        rows.filterNot(_.isNullAt(1)).foreach { r =>
+          val (c, d) = (r.getInt(0), r.getDouble(1))
+          if (m.get(c).forall(java.lang.Double.compare(d, _) > 0)) m(c) = d
+        }
+        m.iterator
+      }.collect()
+    batchMax.foldLeft(stored) { case (acc, (c, d)) =>
+      val r = math.sqrt(d)
+      if (acc.get(c).forall(java.lang.Double.compare(r, _) > 0))
+        acc.updated(c, r)
+      else acc
     }
   }
 
-  /** Recovery probe for a [[writeRadiiTable]] that crashed between its
-    * renames — writers only (see [[readableRadiiPath]]). True when a
-    * stored radii table exists after recovery. */
-  private def recoverRadii(spark: SparkSession, indexDir: String): Boolean = {
-    val d = new Path(radiiDir(indexDir))
-    val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Artifacts.recoverAside(fs, d, new Path(radiiDir(indexDir) + "__old"))
-    fs.exists(d)
-  }
-
-  /** Fold a batch's contribution into the stored radii:
-    * radius'(c) = max(radius(c), max over batch rows assigned to c of
-    * d(row, centroid_c)) — the append-time discipline that keeps the
-    * stored radii UPPER bounds under normal operation. No-op on a
-    * pre-radii index (nothing stored to keep true). Runs BEFORE the
-    * data append: an enlarged radius whose rows never landed only
-    * weakens pruning; the reverse order is exactly the
-    * append-then-crash over-prune hazard this fold closes. */
-  private def foldRadii(batch: DataFrame, vecCol: String,
-                        model: Model): Unit = {
+  /** Land a batch in the layout: assign each row its nearest centroid,
+    * fold the batch into the stored radii, then append the rows (with
+    * `__ver` = `ver` when given), partitioned by cluster. The fold runs
+    * BEFORE the data append: an enlarged radius whose rows never landed
+    * only weakens pruning; the reverse order is exactly the
+    * append-then-crash over-prune hazard the fold closes. A pre-radii
+    * index skips the fold; a pre-sidecar one fails before anything is
+    * written. The schema is pinned next ([[pinFor]]). The assigned batch
+    * is persisted across its two passes, so the input is evaluated once;
+    * that memory is bounded by the batch and released before
+    * returning. */
+  private def land(batch: DataFrame, vecCol: String, model: Model,
+                   ver: Option[Long]): Unit = {
     val spark = batch.sparkSession
-    if (!recoverRadii(spark, model.indexDir)) return
-    val nearest = nearestCentroid(model, vecCol)
-    val batchRadii = batch.select(
-        nearest.getField("cluster_id").as("cluster_id"),
-        sqrt(nearest.getField("d")).as("radius"))
-      .groupBy(col("cluster_id")).agg(max(col("radius")).as("radius"))
-    val merged = spark.read.parquet(radiiDir(model.indexDir))
-      .unionByName(batchRadii)
-      .groupBy(col("cluster_id")).agg(max(col("radius")).as("radius"))
-    writeRadiiTable(spark, model.indexDir, merged)
+    val stored = storedRadii(spark, model.indexDir)
+    pinFor(batch, model.indexDir, versioned = ver.isDefined)
+    val assigned = batch.withColumn("__nc", nearestCentroid(model, vecCol))
+    stored.foreach(_ => assigned.persist())
+    try {
+      stored.foreach(r =>
+        writeRadii(spark, model.indexDir, foldRadii(assigned, r)))
+      val rows = assigned
+        .withColumn("cluster_id", col("__nc.cluster_id")).drop("__nc")
+      ver.fold(rows)(v => rows.withColumn("__ver", lit(v)))
+        .write.mode("append").partitionBy("cluster_id")
+        .parquet(dataDir(model.indexDir))
+    } finally if (stored.isDefined) assigned.unpersist()
   }
 
   /** Incremental index maintenance: assign NEW vectors to their nearest
@@ -186,15 +210,10 @@ object IvfIndex {
     * affects recall at partial nprobe, never correctness of what is
     * stored; rebuild when drift matters. */
   def append(newDf: DataFrame, vecCol: String, model: Model): Unit = {
-    // covering-radius fold FIRST (see foldRadii for the ordering
-    // argument) — the stored radii stay upper bounds through appends,
-    // so range/exact serving needs no manual refresh
-    pinFor(newDf, model.indexDir, versioned = false)
-    foldRadii(newDf, vecCol, model)
-    newDf.withColumn("cluster_id",
-        nearestCentroid(model, vecCol).getField("cluster_id"))
-      .write.mode("append").partitionBy("cluster_id")
-      .parquet(dataDir(model.indexDir))
+    // covering-radius fold first (see [[land]]) — the stored radii stay
+    // upper bounds through appends, so range/exact serving needs no
+    // manual refresh
+    land(newDf, vecCol, model, None)
   }
 
   /** The nearest centroid of `vecCol` as a `(d, cluster_id)` struct
@@ -501,7 +520,7 @@ object IvfIndex {
     * while it UPPER-bounds the true one, and APPENDS/UPSERTS can push
     * a new member past it (over-pruning = wrong answers). Since round
     * 10 that invariant is ENFORCED, not caller-managed: [[build]]
-    * writes the table ([[radiiDir]]), [[append]]/[[upsertBatch]] fold
+    * stores them ([[writeRadii]]), [[append]]/[[upsertBatch]] fold
     * max(old, d(new, centroid)) in BEFORE their data append, and
     * [[rebalance]] recomputes it — so the stored radii stay upper
     * bounds under every maintenance verb, and
@@ -645,16 +664,10 @@ object IvfIndex {
   def upsertBatch(batch: DataFrame, vecCol: String, model: Model,
                   idCol: String, ver: Long): Unit = {
     require(ver >= 1, s"upsertBatch: ver=$ver (base rows are version 0)")
-    pinFor(batch, model.indexDir, versioned = true)
-    // radius fold before the data append (the [[append]] discipline) —
-    // an upsert can move a key into a cluster whose stored radius does
-    // not yet cover its new vector
-    foldRadii(batch, vecCol, model)
-    batch.withColumn("cluster_id",
-        nearestCentroid(model, vecCol).getField("cluster_id"))
-      .withColumn("__ver", lit(ver))
-      .write.mode("append").partitionBy("cluster_id")
-      .parquet(dataDir(model.indexDir))
+    // radius fold before the data append ([[land]]) — an upsert can
+    // move a key into a cluster whose stored radius does not yet cover
+    // its new vector
+    land(batch, vecCol, model, Some(ver))
   }
 
   /** Latest-version-wins overlay over a (pruned) slice of a versioned
@@ -843,7 +856,7 @@ object IvfIndex {
     // are recomputed from the new layout (the scaladoc's "rebuild"
     // case, owned by the verb instead of the caller). Skipped on a
     // pre-radii index.
-    if (recoverRadii(spark, model.indexDir))
+    if (storedRadii(spark, model.indexDir).isDefined)
       refreshRadii(spark, refreshed, vecCol)
     refreshed
   }
@@ -891,14 +904,6 @@ object IvfIndex {
                             idCol: String): Unit =
     AliasedIndex.maintain(spark, root) { d =>
       compactTombstones(spark, load(spark, d), idCol)
-      ()
-    }
-
-  /** Alias-aware [[compactVersions]], addressed by root. */
-  def compactVersionsRoot(spark: SparkSession, root: String,
-                          idCol: String): Unit =
-    AliasedIndex.maintain(spark, root) { d =>
-      compactVersions(spark, load(spark, d), idCol)
       ()
     }
 

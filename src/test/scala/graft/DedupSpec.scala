@@ -335,6 +335,139 @@ class DedupSpec extends SparkSpec {
     assert(!r.contains(12L), "fresh content emits nothing")
   }
 
+  /** The explode/groupBy signature form the per-row kernel replaced,
+    * kept as its oracle: every shingle exploded into a row carrying
+    * ceil(numHashes/4) md5 hex digests, then one min(substring) per
+    * slice per id. */
+  private def explodeSignatures(df: org.apache.spark.sql.DataFrame,
+                                numHashes: Int, shingleN: Int) = {
+    val nDigests = (numHashes + 3) / 4
+    val digestConcat = concat((0 until nDigests).map { i =>
+      if (i == 0) md5(col("s")) else md5(concat(lit(s"$i:"), col("s")))
+    }: _*)
+    df.select(col("id"), Dedup.shingles(col("text"), shingleN).as("sh"))
+      .where(size(col("sh")) > 0)
+      .select(col("id"), explode(col("sh")).as("s"))
+      .withColumn("d", digestConcat)
+      .groupBy(col("id"))
+      .agg(array((0 until numHashes).map { h =>
+        min(substring(col("d"), h * 8 + 1, 8))
+      }: _*).as("sig"))
+  }
+
+  /** A seeded corpus over a small vocabulary: rows of 0 to 11 tokens
+    * (empty text and rows under n tokens included), irregular
+    * whitespace, and ids that repeat (a collection holding superseded
+    * rows of one id). */
+  private def seededCorpus(seed: Int, rows: Int, ids: Int) = {
+    val r = new scala.util.Random(seed)
+    val vocab = Seq("scan", "filter", "merge", "join", "sort", "hash",
+      "page", "index", "row", "köln", "日本")
+    (0 until rows).map { _ =>
+      val n = r.nextInt(12)
+      val sep = () => if (r.nextInt(6) == 0) "  " else " "
+      val text = (0 until n).map(_ => vocab(r.nextInt(vocab.size)))
+        .foldLeft("")((acc, t) => if (acc.isEmpty) t else acc + sep() + t)
+      (r.nextInt(ids).toLong, if (r.nextInt(10) == 0) " " + text else text)
+    } :+ ((ids + 1).toLong, "") :+ ((ids + 2).toLong, "scan filter")
+  }
+
+  test("minhashSignatures: the per-row kernel equals the explode/groupBy " +
+      "form, duplicate ids, short rows and empty text included") {
+    Seq((1, 16, 3), (2, 8, 2), (3, 10, 3), (4, 1, 1)).foreach {
+      case (seed, numHashes, n) =>
+        val df = seededCorpus(seed, 120, 40).toDF("id", "text")
+        val got = Dedup.minhashSignatures(df, "id", "text", numHashes, n)
+          .as[(Long, Seq[String])].collect().toMap
+        val want = explodeSignatures(df, numHashes, n)
+          .as[(Long, Seq[String])].collect().toMap
+        assert(got == want, s"seed $seed, numHashes $numHashes, n $n")
+        assert(got.values.forall(_.size == numHashes))
+        // split keeps one empty token, a 1-gram shingle of its own
+        assert(!got.contains(41L) || n == 1, "empty text signs nothing")
+        assert(!got.contains(42L) || n <= 2, "a row under n tokens signs nothing")
+    }
+  }
+
+  test("incremental dedup: equals the distinct + row_number form on " +
+      "seeded corpora with duplicate-id histories") {
+    Seq(5, 6, 7).foreach { seed =>
+      val histRows = seededCorpus(seed, 80, 30)
+      val hist = histRows.toDF("id", "text")
+      // fresh rows plus copies of history with one word appended: near
+      // duplicates, some of ids whose history holds several rows
+      val fresh = (seededCorpus(seed + 100, 40, 30)
+          .map { case (id, t) => (id + 1000, t) } ++
+        histRows.take(30).zipWithIndex.map { case ((_, t), i) =>
+          (2000L + i, t + " row") }).toDF("id", "text")
+      val got = Dedup.minhashIncrementalDupes(hist, fresh, "id", "text",
+          numHashes = 16, bandSize = 2, minEst = 0.25)
+        .as[(Long, Long, Double)].collect().toSet
+      // the previous pipeline over the oracle signatures
+      def bands(sig: org.apache.spark.sql.DataFrame, tag: String) =
+        sig.select(col("id").as(s"${tag}_id"), col("sig").as(s"${tag}_sig"),
+          posexplode(array((0 until 8).map(b => concat_ws("|",
+            col("sig").getItem(2 * b), col("sig").getItem(2 * b + 1))): _*))
+            .as(Seq("band", "band_key")))
+      val cand = bands(explodeSignatures(fresh, 16, 3), "n")
+        .join(bands(explodeSignatures(hist, 16, 3), "o"),
+          Seq("band", "band_key"))
+        .select(col("n_id"), col("o_id"),
+          Dedup.minhashSimilarity(col("n_sig"), col("o_sig"), 16).as("est"))
+        .distinct()
+      val w = org.apache.spark.sql.expressions.Window.partitionBy(col("n_id"))
+        .orderBy(col("est").desc, col("o_id").asc)
+      val want = cand.withColumn("rn", row_number().over(w))
+        .where(col("rn") === 1 && col("est") >= 0.25)
+        .select("n_id", "o_id", "est").as[(Long, Long, Double)].collect().toSet
+      assert(got == want, s"seed $seed")
+      assert(got.nonEmpty, s"seed $seed found no duplicate at all")
+    }
+  }
+
+  test("incremental dedup: an equal-est tie goes to the lower old id, " +
+      "est == minEst is kept, new docs never match each other") {
+    val base = "w0 w1 w2 w3 w4 w5 w6 w7 w8 w9 w10 w11 w12 w13 w14 w15"
+    val near = "w0 w1 w2 w3 w4 w5 w6 w7 w8 v9 v10 v11 v12 v13 v14 v15"
+    // ids 9 and 4 hold the same text: the match must name 4
+    val hist = Seq((9L, base), (4L, base), (7L, "z0 z1 z2 z3 z4 z5"))
+      .toDF("id", "text")
+    val fresh = Seq((20L, base), (21L, near),
+      // two identical new docs absent from history: no output for either
+      (22L, "q0 q1 q2 q3 q4 q5"), (23L, "q0 q1 q2 q3 q4 q5"))
+      .toDF("id", "text")
+    def run(minEst: Double) = Dedup.minhashIncrementalDupes(hist, fresh,
+        "id", "text", numHashes = 16, bandSize = 1, minEst = minEst)
+      .as[(Long, Long, Double)].collect().map(x => x._1 -> ((x._2, x._3)))
+      .toMap
+    val all = run(0.0)
+    assert(all(20L) == ((4L, 1.0)), all.toString)
+    assert(!all.contains(22L) && !all.contains(23L), all.toString)
+    val est = all(21L)._2
+    assert(all(21L)._1 == 4L && est > 0.0 && est < 1.0, all.toString)
+    assert(run(est).get(21L) == Some((4L, est)), "est == minEst is kept")
+    assert(!run(est + 1e-4).contains(21L), "est < minEst is dropped")
+  }
+
+  test("incremental dedup: a duplicate-id history signs the union of its " +
+      "rows, so either superseded text still matches that id") {
+    val a = "a0 a1 a2 a3 a4 a5 a6 a7"
+    val b = "b0 b1 b2 b3 b4 b5 b6 b7"
+    val hist = Seq((3L, a), (3L, b), (8L, "c0 c1 c2 c3")).toDF("id", "text")
+    val sig = Dedup.minhashSignatures(hist, "id", "text", 16)
+      .as[(Long, Seq[String])].collect().toMap
+    val sa = Dedup.minhashSignatures(Seq((3L, a)).toDF("id", "text"),
+      "id", "text", 16).as[(Long, Seq[String])].collect().head._2
+    val sb = Dedup.minhashSignatures(Seq((3L, b)).toDF("id", "text"),
+      "id", "text", 16).as[(Long, Seq[String])].collect().head._2
+    assert(sig(3L) == sa.zip(sb).map { case (x, y) => Ordering[String].min(x, y) })
+    val r = Dedup.minhashIncrementalDupes(hist,
+        Seq((30L, a), (31L, b)).toDF("id", "text"), "id", "text",
+        numHashes = 16, bandSize = 1, minEst = 0.0)
+      .as[(Long, Long, Double)].collect().map(x => x._1 -> x._2).toMap
+    assert(r == Map(30L -> 3L, 31L -> 3L), r.toString)
+  }
+
   test("semantic dedup: within-cluster prune keeps min id, respects cap") {
     val rnd = new scala.util.Random(11)
     def vec(): Seq[Float] = Seq.fill(8)(rnd.nextGaussian().toFloat)

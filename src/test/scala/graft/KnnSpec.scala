@@ -405,17 +405,127 @@ class KnnSpec extends SparkSpec {
       "ivf_radius_violations" -> 0L), healthy.toString)
     // corrupt one radius (shrink to 0): the violation counter fires for
     // exactly that cluster's members
-    val radii = spark.read.parquet(IvfIndex.radiiDir(dirA))
-      .as[(Int, Double)].collect().sortBy(_._1)
-    val corrupt = radii.map { case (cid, rad) =>
-      if (cid == radii.head._1) (cid, 0.0) else (cid, rad) }
-    val rp = new org.apache.hadoop.fs.Path(IvfIndex.radiiDir(dirA))
-    rp.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(rp, true)
-    corrupt.toSeq.toDF("cluster_id", "radius").coalesce(1)
-      .write.parquet(IvfIndex.radiiDir(dirA))
+    val radii = IvfIndex.loadRadii(spark, dirA)
+    val first = radii.keys.min
+    IvfIndex.writeRadii(spark, dirA, radii.updated(first, 0.0))
     val fired = IndexAudit.radiiChecks(spark, dirA, "embedding")
       .as[(String, Long)].collect().toMap
     assert(fired("ivf_radius_violations") > 0L, fired.toString)
+  }
+
+  test("radii sidecar: every radius parses back bit-identical to the " +
+      "recomputed table, and a batch fold only ever grows a radius") {
+    import graft.search.IvfIndex
+    val r = new scala.util.Random(83)
+    val rows = (0 until 80).map(i => (i.toLong,
+        Array.fill(4)((r.nextGaussian() * (1 + i % 5)).toFloat)))
+      .toDF("vec_id", "embedding")
+    val dir = "/tmp/graft_ivf_radii_sidecar_test"
+    val p = new org.apache.hadoop.fs.Path(dir)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+    val model = IvfIndex.build(rows, "embedding", dir, nlist = 4)
+    def recomputed() = IvfIndex.clusterRadiiTable(spark, model, "embedding")
+      .collect().map(x => (x.getInt(0), x.getDouble(1))).toMap
+    val stored = IvfIndex.loadRadii(spark, dir)
+    assert(stored.map { case (c, v) => c -> java.lang.Double.doubleToLongBits(v) }
+      == recomputed().map { case (c, v) =>
+        c -> java.lang.Double.doubleToLongBits(v) })
+    // a multi-partition batch: per-partition maxima merge on the driver
+    val batch = (100 until 140).map(i => (i.toLong,
+        Array.fill(4)((r.nextGaussian() * 9).toFloat)))
+      .toDF("vec_id", "embedding").repartition(3)
+    IvfIndex.append(batch, "embedding", model)
+    val folded = IvfIndex.loadRadii(spark, dir)
+    // the fold is exact: max(old, batch) per cluster IS the recompute
+    assert(folded == recomputed(), s"$folded vs ${recomputed()}")
+    assert(stored.forall { case (c, v) => folded(c) >= v })
+  }
+
+  test("radii fold runs before the data append: a batch whose append " +
+      "fails leaves the radii enlarged, and exactSearch stays exact") {
+    import graft.search.IvfIndex
+    val r = new scala.util.Random(89)
+    val rows = (0 until 40).map(i => (i.toLong,
+        Array.fill(4)((r.nextGaussian() * 0.3).toFloat)))
+      .toDF("vec_id", "embedding")
+    val dir = "/tmp/graft_ivf_radii_failed_append_test"
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(p, true)
+    val model = IvfIndex.build(rows, "embedding", dir, nlist = 2)
+    val before = IvfIndex.loadRadii(spark, dir)
+    // a plain file where the append's job dir must go: the assignment
+    // and the fold run, then the data append fails before any row lands
+    val blocker = new org.apache.hadoop.fs.Path(IvfIndex.dataDir(dir),
+      "_temporary")
+    fs.create(blocker, true).close()
+    val far = Seq((500L, Seq(6f, 6f, 6f, 6f))).toDF("vec_id", "embedding")
+    intercept[Exception](IvfIndex.upsertBatch(far, "embedding", model,
+      "vec_id", ver = 1))
+    fs.delete(blocker, false)
+    val after = IvfIndex.loadRadii(spark, dir)
+    assert(after.keySet == before.keySet &&
+      before.forall { case (c, v) => after(c) >= v } &&
+      after.exists { case (c, v) => v > before(c) },
+      s"the fold must have enlarged a radius: $before -> $after")
+    assert(IvfIndex.readData(spark, dir).count() == 40L,
+      "the failed append must not have landed rows")
+    val q = Array.fill(4)(0.1f)
+    val got = IvfIndex.exactSearch(spark, model, "embedding", "vec_id",
+        q, k = 7).as[(Long, Double)].collect().toSeq
+    val brute = rows
+      .withColumn("distance", round(VectorFunctions.l2Sq(col("embedding"),
+        typedlit(q.toSeq)), 4))
+      .orderBy(col("distance").asc, col("vec_id").asc).limit(7)
+      .select("vec_id", "distance").as[(Long, Double)].collect().toSeq
+    assert(got == brute)
+  }
+
+  test("an index with a pre-sidecar radii directory fails with a rebuild " +
+      "message; one with no radii at all serves unpruned; a rebuild heals") {
+    import graft.search.IvfIndex
+    val r = new scala.util.Random(97)
+    val rows = (0 until 30).map(i => (i.toLong,
+        Array.fill(4)(r.nextGaussian().toFloat))).toDF("vec_id", "embedding")
+    val dir = "/tmp/graft_ivf_radii_legacy_test"
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(p, true)
+    val model = IvfIndex.build(rows, "embedding", dir, nlist = 2)
+    val sidecar = new org.apache.hadoop.fs.Path(p, IvfIndex.RadiiFile)
+    val q = Array.fill(4)(0.2f)
+    val brute = rows
+      .withColumn("distance", round(VectorFunctions.l2Sq(col("embedding"),
+        typedlit(q.toSeq)), 4))
+      .orderBy(col("distance").asc, col("vec_id").asc).limit(5)
+      .select("vec_id", "distance").as[(Long, Double)].collect().toSeq
+    def exact() = IvfIndex.exactSearch(spark, model, "embedding", "vec_id",
+      q, k = 5).as[(Long, Double)].collect().toSeq
+    // neither sidecar nor radii dir: a pre-radii index, served unpruned
+    assert(fs.delete(sidecar, false))
+    assert(IvfIndex.loadRadii(spark, dir).isEmpty)
+    assert(exact() == brute)
+    // the pre-sidecar layout: radii as a parquet table under radii/
+    Seq((0, 1.0), (1, 1.0)).toDF("cluster_id", "radius")
+      .write.parquet(s"$dir/radii")
+    val batch = rows.where(col("vec_id") < 2)
+    Seq[(String, () => Any)](
+      "loadRadii" -> (() => IvfIndex.loadRadii(spark, dir)),
+      "exactSearch" -> (() => exact()),
+      "upsertBatch" -> (() => IvfIndex.upsertBatch(batch, "embedding",
+        model, "vec_id", ver = 1)),
+      "append" -> (() => IvfIndex.append(batch, "embedding", model))
+    ).foreach { case (verb, call) =>
+      val e = intercept[IllegalStateException](call())
+      assert(e.getMessage.contains("rebuild"), s"$verb: ${e.getMessage}")
+    }
+    assert(IvfIndex.readData(spark, dir).count() == 30L,
+      "a refused write must land nothing")
+    val rebuilt = IvfIndex.build(rows, "embedding", dir, nlist = 2)
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/radii")))
+    assert(IvfIndex.loadRadii(spark, dir).size == 2)
+    assert(IvfIndex.exactSearch(spark, rebuilt, "embedding", "vec_id", q,
+      k = 5).as[(Long, Double)].collect().toSeq == brute)
   }
 
   test("IVF exact kNN: two-phase bound skips clusters, equals brute force") {

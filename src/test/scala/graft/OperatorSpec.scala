@@ -519,13 +519,8 @@ class OperatorSpec extends SparkSpec {
       textDir, "doc_id")                                          // 25%
     live = corpus.where(col("vec_id") % 10 =!= 9)                 // drift
     // a violated radius (out-of-band corruption): shrink every radius
-    val rp = new org.apache.hadoop.fs.Path(IvfIndex.radiiDir(dir))
-    val shrunk = spark.read.parquet(IvfIndex.radiiDir(dir))
-      .as[(Int, Double)].collect().map { case (c, rad) => (c, rad / 4) }
-    rp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .delete(rp, true)
-    shrunk.toSeq.toDF("cluster_id", "radius").coalesce(1)
-      .write.parquet(IvfIndex.radiiDir(dir))
+    IvfIndex.writeRadii(spark, dir, IvfIndex.loadRadii(spark, dir)
+      .map { case (c, rad) => (c, rad / 4) })
     // segment debt: two violating-free appends push past the cap of 2
     graft.search.TermIndex.append(
       (20L until 25L).map(i => (i, s"tok$i more words")).toDF("doc_id",

@@ -151,6 +151,62 @@ class PlanSpec extends SparkSpec {
       s"the search after upsertBatch + delete ran $written jobs")
   }
 
+  test("IVF upsertBatch and append run at most two jobs each: one radii " +
+      "fold over the batch, one data append") {
+    import org.apache.spark.JobCounter
+    import spark.implicits._
+    import graft.search.IvfIndex
+    val idx = "/tmp/graft_test_plan_ivf_upsert_jobs"
+    val p = new org.apache.hadoop.fs.Path(idx)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+    val r = new scala.util.Random(7)
+    val corpus = (0L until 64L).map(i =>
+      (i, Array.fill(8)(r.nextGaussian().toFloat))).toDF("vec_id", "embedding")
+    val m = IvfIndex.build(corpus, "embedding", idx, nlist = 4)
+    // a local batch scans as several partitions: no single-partition
+    // shortcut applies
+    val batch = (100L until 140L).map(i =>
+        (i, Array.fill(8)(r.nextGaussian().toFloat)))
+      .toDF("vec_id", "embedding")
+    val (_, upsertJobs) = JobCounter.count(spark.sparkContext) {
+      IvfIndex.upsertBatch(batch, "embedding", m, "vec_id", ver = 1)
+    }
+    assert(upsertJobs <= 2, s"upsertBatch ran $upsertJobs jobs")
+    val (_, appendJobs) = JobCounter.count(spark.sparkContext) {
+      IvfIndex.append(batch.withColumn("vec_id", col("vec_id") + 100),
+        "embedding", m)
+    }
+    assert(appendJobs <= 2, s"append ran $appendJobs jobs")
+    assert(IvfIndex.readData(spark, idx).count() == 64L + 80L)
+  }
+
+  test("FullText bulk serve reads its query side with pinned schemas: " +
+      "the plan builds with no job, the serve runs only the query side's") {
+    import org.apache.spark.JobCounter
+    import spark.implicits._
+    import graft.search.FullText
+    val idx = "/tmp/graft_test_plan_fulltext_bulk_jobs"
+    val p = new org.apache.hadoop.fs.Path(idx)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+    FullText.build(Seq((0L, "scan the filter"), (1L, "merge filter join"),
+      (2L, "scan scan"), (3L, "window join")).toDF("doc_id", "text"),
+      "doc_id", "text", idx)
+    val queries = Seq((1L, Seq("scan", "filter")), (2L, Seq("join")))
+    val (qp, planJobs) = JobCounter.count(spark.sparkContext) {
+      FullText.bulkQueryPostings(spark, idx, queries)
+    }
+    assert(planJobs == 0, s"building the query side ran $planJobs jobs")
+    // searchBulk collects the (qid, dim, w) side to prune the postings
+    // buckets; those are its only jobs before the result's own action
+    val (_, sideJobs) = JobCounter.count(spark.sparkContext)(qp.collect())
+    val (res, serveJobs) = JobCounter.count(spark.sparkContext) {
+      FullText.searchBulk(spark, idx, queries, k = 2)
+    }
+    assert(serveJobs == sideJobs,
+      s"searchBulk ran $serveJobs jobs, its query side $sideJobs")
+    assert(res.select("qid").as[Long].collect().toSet == Set(1L, 2L))
+  }
+
   test("BM25 over a tombstoned term dir reads the deletes set without " +
       "inferring its schema") {
     import org.apache.spark.JobCounter
@@ -383,12 +439,33 @@ class PlanSpec extends SparkSpec {
   }
 
   test("fulltext sparse serve: query dims prune posting partitions") {
-    val p = plan("fulltext_sparse_masked")
-    assert(p.contains("PartitionFilters") && p.contains("dim"),
-      s"query dims did not prune the dim-partitioned postings:\n$p")
+    import graft.search.FullText
+    import spark.implicits._
+    val df = Queries.all("fulltext_sparse_masked")(spark, dir)
+    val p = df.queryExecution.executedPlan.toString()
     assert(p.contains("TakeOrderedAndProject"),
       s"fulltext top-k must stay bounded:\n$p")
     assert(!p.contains("CartesianProduct"))
+    // the entry's index and query terms
+    val idx = s"/tmp/graft_fulltext_b16_${math.abs(dir.hashCode)}"
+    val dims = spark.read.parquet(FullText.dictDir(idx))
+      .where(col("term").isin("scan", "filter", "merge"))
+      .select("dim").as[Int].collect().toSet
+    assert(dims.size == 3, s"query terms missing from the dictionary: $dims")
+    val postings = df.queryExecution.sparkPlan.collect {
+      case f: org.apache.spark.sql.execution.FileSourceScanExec
+        if f.relation.location.rootPaths
+          .exists(_.getName.startsWith("dim_bucket=")) => f
+    }
+    assert(postings.size == 1, s"expected one postings scan: $postings")
+    val read = postings.head.relation.location.rootPaths.map(_.getName).toSet
+    assert(read == dims.map(d => s"dim_bucket=${d % 16}"),
+      s"serve read other bucket directories than dims $dims: $read")
+    val pushed = postings.head.metadata.getOrElse("PushedFilters", "")
+    val inDims = """In\(dim, \[([0-9,]+)\]\)""".r.findFirstMatchIn(pushed)
+      .map(_.group(1).split(",").map(_.toInt).toSet)
+    assert(inDims.contains(dims),
+      s"dim IN list not pushed to the postings scan: $pushed")
   }
 
   test("stored sparse serve reads only the query dims' bucket directories, " +

@@ -238,33 +238,35 @@ class TombstonesSpec extends SparkSpec {
     assert(Tombstones.count(spark, dir) == 11L)
   }
 
-  test("radii read path is non-mutating: a reader in the crash window " +
-      "serves the aside table WITHOUT renaming it back") {
-    // ADVICE-r10: loadRadii (a SERVE path) used to run the rename-aside
-    // recovery probe — a reader resolving between writeRadiiTable's two
-    // renames could move __old back and corrupt the single writer's
-    // in-flight swap. Readers now read the aside copy in place; the
-    // rename recovery belongs to the next WRITER (foldRadii/refresh).
+  test("radii read path is non-mutating beside a crashed radii write") {
+    // loadRadii is a SERVE path: it must never repair or rename what a
+    // writer left behind. The radii sidecar is replaced by one overwrite
+    // rename, so the only crash leftover is the writer's tmp file; the
+    // next WRITER overwrites it.
     val dir = freshDir("radiiread")
     val rows = (0L until 30L).map(i =>
       (i, Array.fill(4)((i * 0.1).toFloat))).toDF("vec_id", "embedding")
     IvfIndex.build(rows, "embedding", dir, nlist = 2)
     val live = IvfIndex.loadRadii(spark, dir)
     assert(live.size == 2)
-    val rd = new org.apache.hadoop.fs.Path(IvfIndex.radiiDir(dir))
-    val fs = rd.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val old = new org.apache.hadoop.fs.Path(IvfIndex.radiiDir(dir) + "__old")
-    assert(fs.rename(rd, old), "simulate the crash window")
-    val aside = IvfIndex.loadRadii(spark, dir)
-    assert(aside == live, "reader must serve the aside table")
-    assert(!fs.exists(rd) && fs.exists(old),
-      "reader must NOT have renamed the aside table back")
-    // the next writer pass (a fold via append) recovers and proceeds
+    val d = new org.apache.hadoop.fs.Path(dir)
+    val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // a writer killed after writing its tmp file, before the rename
+    val tmp = new org.apache.hadoop.fs.Path(d, s".${IvfIndex.RadiiFile}.tmp")
+    val out = fs.create(tmp, true)
+    try out.write("0\t0.0\n".getBytes("UTF-8")) finally out.close()
+    def listing() = fs.listStatus(d).map(st =>
+      (st.getPath.getName, st.getLen, st.getModificationTime)).toSet
+    val before = listing()
+    assert(IvfIndex.loadRadii(spark, dir) == live,
+      "reader must serve the live radii, not the torn write")
+    assert(listing() == before, "reader must not mutate the index dir")
+    // the next writer pass (a fold via append) replaces the leftover
     IvfIndex.append(rows.where(col("vec_id") === 0)
         .withColumn("vec_id", lit(100L)),
       "embedding", IvfIndex.load(spark, dir))
-    assert(fs.exists(rd) && IvfIndex.loadRadii(spark, dir).size == 2,
-      "writer recovery restores the live table")
+    assert(!fs.exists(tmp) && IvfIndex.loadRadii(spark, dir) == live,
+      "writer replaces the leftover; a member already covered grows nothing")
   }
 
   test("bm25: masked search keeps stale stats, hides deleted docs") {
