@@ -189,27 +189,16 @@ object AnnJoin {
     // (rounded cosine desc, nbr asc) order the oracle replays. Without
     // the heap the window sorts every probed candidate row.
     val exactCand = ivfPairs.mapPartitions { it =>
-      // max-heap on (−cosine, nbr): root = worst kept candidate. IEEE
-      // comparison semantics (−0.0 == 0.0), NOT total ordering — the
-      // final per-id window treats −0.0 and 0.0 as equal and breaks the
-      // tie on nbr, and the heap must never evict the row the window
-      // would keep.
-      val ord: Ordering[(Double, Long)] = (x, y) =>
-        if (x._1 < y._1) -1
-        else if (x._1 > y._1) 1
+      // order (cosine desc, nbr asc); the heap root is the worst kept
+      // candidate. IEEE comparison semantics (−0.0 == 0.0), NOT total
+      // ordering — the final per-id window treats −0.0 and 0.0 as equal
+      // and breaks the tie on nbr, and the heap must never evict the row
+      // the window would keep.
+      val ord: Ordering[(Long, Long, Double)] = (x, y) =>
+        if (x._3 > y._3) -1
+        else if (x._3 < y._3) 1
         else java.lang.Long.compare(x._2, y._2)
-      val heaps = scala.collection.mutable.Map
-        .empty[Long, scala.collection.mutable.PriorityQueue[(Double, Long)]]
-      it.foreach { case (id, nbr, cos) =>
-        val h = heaps.getOrElseUpdate(id,
-          scala.collection.mutable.PriorityQueue.empty[(Double, Long)](ord))
-        val e = (-cos, nbr)
-        if (h.size < k) h.enqueue(e)
-        else if (ord.lt(e, h.head)) { h.dequeue(); h.enqueue(e) }
-      }
-      heaps.iterator.flatMap { case (id, h) =>
-        h.iterator.map { case (negCos, nbr) => (id, nbr, -negCos) }
-      }
+      Knn.topNPerKey(it)(_._1, _ => k.toLong)(ord).flatMap(_._2)
     }.toDF("id", "nbr", "cosine")
     lshKept.unionByName(topKPerId(exactCand, k))
   }

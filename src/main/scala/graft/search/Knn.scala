@@ -1,9 +1,12 @@
 package graft.search
 
 import graft.functions.VectorFunctions
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame}
+
+import scala.collection.mutable
 
 /** Exact k-nearest-neighbour search (reference `similarity_search`,
   * src/app.py:240-274 = V1→V6 in SURVEY §2.3).
@@ -95,19 +98,12 @@ object Knn {
         distCol(col(corpusVec), col(queryVec)))
       .as[(Long, Long, Double)]
     val candidates = joined.mapPartitions { it =>
-      // max-heap per query on (distance, id): root = current worst kept
-      val heaps = scala.collection.mutable.Map
-        .empty[Long, scala.collection.mutable.PriorityQueue[(Double, Long)]]
-      val ord = Ordering.Tuple2[Double, Long]
-      it.foreach { case (q, id, d) =>
-        val h = heaps.getOrElseUpdate(q,
-          scala.collection.mutable.PriorityQueue.empty[(Double, Long)](ord))
-        if (h.size < k) h.enqueue((d, id))
-        else if (ord.lt((d, id), h.head)) { h.dequeue(); h.enqueue((d, id)) }
+      // Spark's byDistance order on (distance, id)
+      val ord: Ordering[(Long, Long, Double)] = (x, y) => {
+        val c = SQLOrderingUtil.compareDoubles(x._3, y._3)
+        if (c != 0) c else java.lang.Long.compare(x._2, y._2)
       }
-      heaps.iterator.flatMap { case (q, h) =>
-        h.iterator.map { case (d, id) => (q, id, d) }
-      }
+      topNPerKey(it)(_._1, _ => k.toLong)(ord).flatMap(_._2)
     }.toDF(queryId, corpusId, "distance")
     val w = Window.partitionBy(col(queryId))
       .orderBy(col("distance").asc, col(corpusId).asc)
@@ -115,5 +111,22 @@ object Knn {
       .withColumn("rn", row_number().over(w))
       .where(col("rn") <= k)
       .drop("rn")
+  }
+
+  /** Per-key bounded top-n of a stream: for each key, the `n` least
+    * elements under `ord`, `n` read from the key's first element (n ≤ 0
+    * keeps none). Each key holds a max-heap whose root is its worst kept
+    * element, so memory is Σ n over the keys, whatever the stream's
+    * length. The kept elements come back unordered. */
+  private[search] def topNPerKey[K, T](it: Iterator[T])(key: T => K,
+      n: T => Long)(ord: Ordering[T]): Iterator[(K, Iterable[T])] = {
+    val heaps = mutable.HashMap.empty[K, (Long, mutable.PriorityQueue[T])]
+    it.foreach { t =>
+      val (cap, h) = heaps.getOrElseUpdate(key(t),
+        (n(t), mutable.PriorityQueue.empty[T](ord)))
+      if (h.size < cap) h.enqueue(t)
+      else if (h.nonEmpty && ord.lt(t, h.head)) { h.dequeue(); h.enqueue(t) }
+    }
+    heaps.iterator.map { case (k, (_, h)) => (k, h) }
   }
 }

@@ -8,8 +8,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Text-in search assembly (reference `answer_question` →
   * `multi_strategy_search`, src/app.py:276-330 and 370-384): fan one raw
   * question out into the direct / keyword-enhanced / chunk strategies,
-  * embed every sub-query with the corpus featurizer, and run the whole
-  * set as ONE [[MultiStrategy.search]] pass.
+  * embed every sub-query with the corpus featurizer, and rank the whole
+  * set with ONE [[MultiStrategy.search]]: a corpus scan with bounded
+  * per-partition heaps, one exchange, and one fused re-rank task.
   *
   * Scale shape: the sub-query list is tiny by construction (1 + ≤3
   * keywords + ≤2 chunks) and is split from the question on the driver
